@@ -933,131 +933,6 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_dataset_card",
-    oracle=r"""
-WITH feats AS (
-    SELECT doc_id, source, lang, text,
-           CAST(len(string_split(text, ' ')) AS DOUBLE)                    AS n_tok,
-           CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)     AS n_uniq,
-           CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS DOUBLE) AS n_punct,
-           CAST(length(text) AS DOUBLE)                                    AS n_chars
-    FROM documents
-),
-scored AS (
-    SELECT source, lang, text, CAST(n_tok AS BIGINT) AS n_tok,
-           (round((0.35 * least(n_tok / 100.0, 1.0)
-               + 0.35 * (n_uniq / CASE WHEN n_tok > 0 THEN n_tok ELSE 1 END)
-               + 0.30 * (1.0 - n_punct / CASE WHEN n_chars > 0 THEN n_chars ELSE 1 END))
-               * 1000000.0) / 1000000.0) AS q
-    FROM feats
-),
-base AS (
-    SELECT source,
-           CAST(count(*) AS BIGINT)  AS n_docs,
-           CAST(sum(n_tok) AS BIGINT) AS total_tokens,
-           (round(avg(q) * 1000000.0) / 1000000.0) AS avg_quality
-    FROM scored GROUP BY source
-),
-langs AS (
-    SELECT source, lang, CAST(count(*) AS BIGINT) AS nl FROM scored GROUP BY 1, 2
-),
-ent AS (
-    SELECT l.source,
-           (round((-sum((nl * 1.0 / b.n_docs) * ln(nl * 1.0 / b.n_docs)))
-                  * 1000000.0) / 1000000.0) AS lang_entropy,
-           (round((coalesce(max(CASE WHEN lang = 'en' THEN nl END), 0) * 1.0 / b.n_docs)
-                  * 1000000.0) / 1000000.0) AS en_share
-    FROM langs l JOIN base b ON b.source = l.source
-    GROUP BY l.source, b.n_docs
-),
-dup AS (
-    SELECT source,
-           CAST(coalesce(sum(CASE WHEN c > 1 THEN c END), 0) AS BIGINT) AS n_dup_docs
-    FROM (SELECT source, text, count(*) AS c FROM scored GROUP BY 1, 2)
-    GROUP BY source
-)
-SELECT b.source, b.n_docs, b.total_tokens, b.avg_quality,
-       e.lang_entropy, e.en_share,
-       d.n_dup_docs,
-       (round((d.n_dup_docs * 1.0 / b.n_docs) * 1000000.0) / 1000000.0) AS dup_doc_share
-FROM base b JOIN ent e ON e.source = b.source JOIN dup d ON d.source = b.source
-""",
-    description=(
-        "Dataset-card rollup per source — the one-page summary a data "
-        "release ships: document and token counts, mean quality score "
-        "(same composite as q_quality_score), language entropy and "
-        "English share (mixture diagnostics), and the exact-duplicate "
-        "document share (docs whose full text occurs more than once "
-        "within the source). Four source-keyed aggregates joined on the "
-        "sources-sized dimension; every metric reuses an operator "
-        "already verified on its own (quality composite, exact-dup "
-        "grouping), so the card is consistent with the per-operator "
-        "views by construction."
-    ),
-    tags=("corpus", "extension", "governance"),
-)
-def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from healthcare_etl_spark.functions.rounding import stable_round
-    from healthcare_etl_spark.operators.text_analysis import quality_score
-
-    docs = load_table(spark, sf_dir, "documents")
-    scored = quality_score(docs).select(
-        "source",
-        "lang",
-        "text",
-        F.size(F.split("text", " ")).cast("long").alias("n_tok"),
-        F.col("quality_score").alias("q"),
-    )
-    base = scored.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tok").alias("total_tokens"),
-        stable_round(F.avg("q"), 6).alias("avg_quality"),
-    )
-    langs = scored.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("nl"))
-    p = F.col("nl") * F.lit(1.0) / F.col("n_docs")
-    ent = (
-        langs.join(base.select("source", "n_docs"), "source")
-        .groupBy("source", "n_docs")
-        .agg(
-            stable_round(-F.sum(p * F.log(p)), 6).alias("lang_entropy"),
-            stable_round(
-                F.coalesce(F.max(F.when(F.col("lang") == "en", F.col("nl"))), F.lit(0))
-                * F.lit(1.0)
-                / F.col("n_docs"),
-                6,
-            ).alias("en_share"),
-        )
-        .drop("n_docs")
-    )
-    dup = (
-        scored.groupBy("source", "text")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("source")
-        .agg(
-            F.coalesce(F.sum(F.when(F.col("c") > 1, F.col("c"))), F.lit(0)).alias(
-                "n_dup_docs"
-            )
-        )
-    )
-    return (
-        base.join(ent, "source")
-        .join(dup, "source")
-        .select(
-            "source",
-            "n_docs",
-            "total_tokens",
-            "avg_quality",
-            "lang_entropy",
-            "en_share",
-            "n_dup_docs",
-            stable_round(F.col("n_dup_docs") * F.lit(1.0) / F.col("n_docs"), 6).alias(
-                "dup_doc_share"
-            ),
-        )
-    )
-
-
-@register(
     "q_mixture_epochs",
     oracle="""
 WITH src AS (

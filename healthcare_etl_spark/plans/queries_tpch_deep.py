@@ -559,146 +559,3 @@ def q_tpch_q2_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("s_acctbal").desc(), "n_name", "s_name", "p_partkey")
         .limit(100)
     )
-
-
-@register(
-    "q_tpch_q4_shape",
-    oracle="""
-SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-FROM orders
-WHERE o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
-  AND o_orderdate <  TIMESTAMP '1996-10-01 00:00:00'
-  AND EXISTS (
-      SELECT 1 FROM lineitem
-      WHERE l_orderkey = o_orderkey AND l_returnflag = 'R'
-  )
-GROUP BY o_orderpriority
-ORDER BY o_orderpriority
-""",
-    description=(
-        "TPC-H Q4 shape: order-priority checking — orders in a quarter with at "
-        "least one problem lineitem, counted by priority. The fixtures carry no "
-        "commitdate/receiptdate, so 'late' = l_returnflag = 'R' (same adaptation "
-        "as Q21). Oracle keeps the textbook EXISTS; the Spark plan is the "
-        "scale form — a LEFT SEMI join against the distinct late-order keys, so "
-        "no per-row subquery and the semi side deduplicates before the join."
-    ),
-    tags=("tpch", "parity"),
-)
-def q_tpch_q4_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-07-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-10-01 00:00:00").cast("timestamp"))
-    )
-    late = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_returnflag") == "R")
-        .select("l_orderkey")
-    )
-    return (
-        o.join(late, o.o_orderkey == late.l_orderkey, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).cast("long").alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
-
-
-@register(
-    "q_tpch_q13_shape",
-    oracle="""
-SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-FROM (
-    SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
-    FROM customer LEFT OUTER JOIN orders
-         ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-    GROUP BY c_custkey
-) c_orders
-GROUP BY c_count
-ORDER BY custdist DESC, c_count DESC
-""",
-    description=(
-        "TPC-H Q13 shape: customer order-count distribution — LEFT OUTER join "
-        "(customers with zero orders MUST appear as c_count=0) with a "
-        "join-side filter, then a two-level aggregation. The fixtures carry no "
-        "o_comment, so the textbook 'NOT LIKE %special%requests%' predicate "
-        "becomes o_orderpriority <> '1-URGENT' (same role: a non-key filter "
-        "that must stay INSIDE the outer join condition, not a WHERE — moving "
-        "it to WHERE silently drops the zero-order customers). Both "
-        "aggregations are hash aggs; the second runs on the customer-count "
-        "table (bounded by max orders per customer)."
-    ),
-    tags=("tpch", "parity"),
-)
-def q_tpch_q13_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") != "1-URGENT"
-    )
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left_outer")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").cast("long").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count(F.lit(1)).cast("long").alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
-    )
-
-
-@register(
-    "q_tpch_q18_shape",
-    oracle="""
-SELECT c_name, c_custkey, o_orderkey,
-       strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate, o_totalprice,
-       (round(sum(l_quantity) * 100.0) / 100.0) AS total_qty
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON o_orderkey = l_orderkey
-WHERE o_orderkey IN (
-    SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
-    HAVING sum(l_quantity) > 90.0
-)
-GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
-ORDER BY o_totalprice DESC, o_orderkey
-LIMIT 100
-""",
-    description=(
-        "TPC-H Q18 shape: large-volume orders — customers whose single order "
-        "moved > 90 units (threshold scaled to the fixture's ~6-line orders; "
-        "textbook is 300), top-100 by order value. Oracle keeps the textbook "
-        "IN-over-HAVING subquery; the Spark plan computes the qualifying keys "
-        "once (grouped HAVING set, tiny) and LEFT SEMI joins them back before "
-        "the wide customer join — the decorrelated form whose semi side "
-        "shrinks first, which is the only join order that survives at scale. "
-        "Quantity totals are 2dp-stable-rounded for cross-engine hashing."
-    ),
-    tags=("tpch", "parity"),
-)
-def q_tpch_q18_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("qty"))
-        .filter(F.col("qty") > 90.0)
-        .select("l_orderkey")
-    )
-    return (
-        li.join(F.broadcast(big), "l_orderkey", "left_semi")
-        .join(o, F.col("l_orderkey") == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .groupBy("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(stable_round(F.sum("l_quantity"), 2).alias("total_qty"))
-        .select(
-            "c_name",
-            "c_custkey",
-            "o_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"),
-            "o_totalprice",
-            "total_qty",
-        )
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(100)
-    )

@@ -38,17 +38,27 @@ def register(
     description: str = "",
     tags: tuple[str, ...] = (),
 ):
-    """Decorator registering a query program under ``name``."""
+    """Decorator registering a query program under ``name``. A name
+    registers once: a second registration raises instead of silently
+    replacing the first body."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
+        if name in REGISTRY:
+            raise ValueError(f"query {name!r} is already registered")
         REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, description=description, tags=tags)
         return fn
 
     return deco
 
 
+_LOADED = False
+
+
 def _load_all_modules() -> None:
-    """Import every query module so its @register calls run."""
+    """Import every query module so its @register calls run (once)."""
+    global _LOADED
+    if _LOADED:
+        return
     import healthcare_etl_spark.plans.healthcare  # noqa: F401
     import healthcare_etl_spark.plans.queries_core  # noqa: F401
     import healthcare_etl_spark.plans.queries_agg  # noqa: F401
@@ -84,6 +94,7 @@ def _load_all_modules() -> None:
     register_streaming_queries()
     register_stateful_queries()
     register_join_queries()
+    _LOADED = True
 
 
 # The driver's correctness gate oracle-checks the FIRST 50 registered

@@ -11,11 +11,13 @@ this layout.
 
 Scale shape: the transaction log is METADATA — real Delta readers replay
 it driver-side exactly as done here (the log is bounded by file count,
-not row count). The data read stays fully distributed: the resolved file
-list goes to one ``spark.read.parquet(*files)`` per partition-value
-group with an explicit schema, so column pruning and predicate pushdown
-reach the parquet scans unchanged, and partition-column equality
-predicates prune whole groups before any I/O.
+not row count). The replay becomes a ``sources.lakehouse.ScanPlan`` (live
+files grouped by partition value, the physical read schema, deletion
+vectors decoded into row masks) and every data read — the reader,
+``delete_rows``' row-index discovery, ``optimize_compact``'s rewrite —
+is ``lakehouse.to_dataframe`` over such a plan: one parquet scan per
+partition group with an explicit schema, so column pruning, predicate
+pushdown and partition pruning reach the scans unchanged.
 
 Honest scope (unsupported features raise, never misread):
 - JSON commits plus CLASSIC checkpoint parquet (``_last_checkpoint`` +
@@ -48,10 +50,13 @@ from __future__ import annotations
 
 import json
 import os
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from healthcare_etl_spark.sources import lakehouse
 
 _LOG_DIR = "_delta_log"
 
@@ -313,6 +318,76 @@ def _v2_checkpoint_rows(table_path: str, ckpt_path: str):
         yield from papq.read_table(sidecar_path).to_pylist()
 
 
+def _physical(f: T.StructField, mode: str) -> T.StructField:
+    """The data-file field of logical field ``f`` under COLUMN MAPPING
+    ``mode`` (PROTOCOL.md): 'name' and 'id' mode files carry the
+    delta.columnMapping.physicalName; 'id' mode files also carry the
+    delta.columnMapping.id as their parquet field id, and columns
+    resolve by that id, never by name."""
+    md = f.metadata or {}
+    name = md.get("delta.columnMapping.physicalName", f.name)
+    ids = {"parquet.field.id": md["delta.columnMapping.id"]} if mode == "id" else {}
+    return T.StructField(name, f.dataType, f.nullable, ids)
+
+
+def _mapping_mode(configuration: dict) -> str:
+    mode = configuration.get("delta.columnMapping.mode", "none")
+    if mode not in ("none", "name", "id"):
+        raise NotImplementedError(f"Delta columnMapping.mode={mode!r} not implemented")
+    return mode
+
+
+def _to_physical(df: DataFrame, fields: list[T.StructField], mode: str) -> DataFrame:
+    """Project the logical ``fields`` of ``df`` to their data-file layout."""
+    phys = [(f.name, _physical(f, mode)) for f in fields]
+    return df.select(*[F.col(name).alias(p.name, metadata=p.metadata) for name, p in phys])
+
+
+def _abs(table_path: str, rel: str) -> str:
+    return os.path.abspath(os.path.join(table_path, rel))
+
+
+def _scan_plan(
+    table_path: str,
+    adds: list[dict],
+    schema_string: str | None,
+    partition_columns: list[str],
+    configuration: dict,
+) -> lakehouse.ScanPlan:
+    """The ``ScanPlan`` of the live ``adds``: files grouped by their
+    partitionValues (keyed by physical name, cast to the declared types
+    on read), the physical read schema, and every deletion vector decoded
+    into (file, row index) masks. The output carries the logical schema."""
+    if schema_string is None:
+        raise ValueError(f"Delta log has no metaData action: {table_path}")
+    schema = T.StructType.fromJson(json.loads(schema_string))
+    mode = _mapping_mode(configuration)
+    phys = {f.name: _physical(f, mode) for f in schema.fields}
+    files = [
+        (
+            tuple(add["partitionValues"].get(phys[c].name) for c in partition_columns),
+            0,
+            _abs(table_path, add["path"]),
+        )
+        for add in adds
+    ]
+    return lakehouse.ScanPlan(
+        schema=T.StructType([T.StructField(f.name, f.dataType) for f in schema.fields]),
+        read_schema=T.StructType(
+            [p for name, p in phys.items() if name not in partition_columns]
+        ),
+        groups=lakehouse.group_files(files),
+        partition_columns=list(partition_columns),
+        physical={name: p.name for name, p in phys.items()},
+        positions=[
+            (_abs(table_path, add["path"]), pos)
+            for add in adds
+            if add.get("deletionVector")
+            for pos in _load_dv(table_path, add["deletionVector"])
+        ],
+    )
+
+
 def read_delta_table(
     spark: SparkSession, table_path: str, *, version: int | None = None
 ) -> DataFrame:
@@ -324,127 +399,11 @@ def read_delta_table(
     live, schema_string, partition_columns, _protocol, _v, configuration = _replay(
         table_path, version
     )
-    if schema_string is None:
-        raise ValueError(f"Delta log has no metaData action: {table_path}")
-    schema = T.StructType.fromJson(json.loads(schema_string))
-    if not live:
-        return spark.createDataFrame([], schema)
-    # COLUMN MAPPING (PROTOCOL.md): in 'name' mode the parquet files
-    # carry physical column names (field metadata
-    # delta.columnMapping.physicalName) and partitionValues are keyed by
-    # physical name; the scan uses physical names and the final select
-    # renames to the logical schema. 'id' mode (parquet field-id
-    # matching) is not implemented and raises.
-    mapping_mode = configuration.get("delta.columnMapping.mode", "none")
-    if mapping_mode not in ("none", "name", "id"):
-        raise NotImplementedError(
-            f"Delta columnMapping.mode={mapping_mode!r} not implemented"
-        )
-    phys = {
-        f.name: (f.metadata or {}).get("delta.columnMapping.physicalName", f.name)
-        for f in schema.fields
-    }
-    data_fields = [f for f in schema.fields if f.name not in partition_columns]
-    if mapping_mode == "id":
-        # ID mode: columns resolve by parquet FIELD ID, never by name
-        # (PROTOCOL.md) — the read schema carries delta.columnMapping.id
-        # as parquet.field.id metadata and the parquet reader matches on
-        # it (same mechanism as the Iceberg reader). The physical name
-        # in the schema is a display label only.
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        data_schema = T.StructType(
-            [
-                T.StructField(
-                    phys[f.name],
-                    f.dataType,
-                    f.nullable,
-                    {"parquet.field.id": (f.metadata or {})["delta.columnMapping.id"]},
-                )
-                for f in data_fields
-            ]
-        )
-    else:
-        data_schema = T.StructType(
-            [T.StructField(phys[f.name], f.dataType, f.nullable) for f in data_fields]
-        )
-    logical_select = [
-        F.col(phys[f.name]).alias(f.name) if f.name not in partition_columns
-        else F.col(f.name)
-        for f in schema.fields
-    ]
-
-    def _scan_plain(paths: list[str]) -> DataFrame:
-        return spark.read.schema(data_schema).parquet(*paths)
-
-    def _scan_with_dv(path: str, dv: dict) -> DataFrame:
-        # A deletion vector marks PHYSICAL row indexes of the parquet
-        # file as deleted; Spark's _metadata.row_index exposes exactly
-        # that index, so the masked read is scan -> broadcast anti-join
-        # against the (per-file, bounded-by-file-rows) position set —
-        # the same shape real DV readers use (the bitmap is per-file
-        # memory-resident there too).
-        positions = _load_dv(table_path, dv)
-        df = (
-            spark.read.schema(data_schema)
-            .parquet(path)
-            .withColumn("__dv_pos", F.col("_metadata.row_index"))
-        )
-        pos_df = spark.createDataFrame(
-            [(int(p),) for p in positions], T.StructType([T.StructField("__dv_pos", T.LongType())])
-        )
-        return df.join(F.broadcast(pos_df), "__dv_pos", "left_anti").drop("__dv_pos")
-
-    def _file_frames(adds: list[dict]) -> list[DataFrame]:
-        """One frame per contiguous plain-file run + one per DV'd file."""
-        frames: list[DataFrame] = []
-        plain: list[str] = []
-        for add in adds:
-            full = os.path.join(table_path, add["path"])
-            dv = add.get("deletionVector")
-            if dv:
-                if plain:
-                    frames.append(_scan_plain(plain))
-                    plain = []
-                frames.append(_scan_with_dv(full, dv))
-            else:
-                plain.append(full)
-        if plain:
-            frames.append(_scan_plain(plain))
-        return frames
-
-    if not partition_columns:
-        frames = _file_frames([live[p] for p in sorted(live)])
-        out = frames[0]
-        for fdf in frames[1:]:
-            out = out.unionByName(fdf)
-        return out.select(*logical_select)
-    # Partitioned: group live files by their partitionValues tuple; the
-    # group count is the live-partition count (metadata-scale), each
-    # group is ONE parquet scan with the partition values injected as
-    # cast literals (Delta stores them as strings in the log, typed by
-    # the table schema).
-    ptypes = {f.name: f.dataType for f in schema.fields if f.name in partition_columns}
-    groups: dict[tuple, list[dict]] = {}
-    for path, add in sorted(live.items()):
-        pv = add.get("partitionValues", {})
-        key = tuple(pv.get(phys[c]) for c in partition_columns)
-        groups.setdefault(key, []).append(add)
-    parts = []
-    # None-safe group order: null partition values (__HIVE_DEFAULT_
-    # PARTITION__ / JSON null) are legal Delta state and must not crash
-    # the str-vs-None comparison — nulls sort first, deterministically.
-    for key, adds in sorted(
-        groups.items(), key=lambda kv: tuple((v is not None, v or "") for v in kv[0])
-    ):
-        for df in _file_frames(adds):
-            for col, val in zip(partition_columns, key):
-                lit = F.lit(None) if val is None else F.lit(val)
-                df = df.withColumn(col, lit.cast(ptypes[col]))
-            parts.append(df.select(*logical_select))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    plan = _scan_plan(
+        table_path, [live[p] for p in sorted(live)], schema_string, partition_columns,
+        configuration,
+    )
+    return lakehouse.to_dataframe(spark, plan)
 
 
 def _load_dv(table_path: str, dv: dict) -> list[int]:
@@ -543,17 +502,7 @@ def write_delta_table(
             for i, f in enumerate(df.schema.fields)
         ]
         schema_json = T.StructType(fields).json()
-        df = df.select(
-            *[
-                F.col(f.name).alias(
-                    phys[f.name],
-                    metadata=(
-                        {"parquet.field.id": i + 1} if mode == "id" else {}
-                    ),
-                )
-                for i, f in enumerate(df.schema.fields)
-            ]
-        )
+        df = _to_physical(df, fields, mode)
         physical_partition_by = [phys[c] for c in partition_by]
         configuration = {
             "delta.columnMapping.mode": mode,
@@ -564,31 +513,6 @@ def write_delta_table(
     if physical_partition_by:
         writer = writer.partitionBy(*physical_partition_by)
     writer.parquet(table_path)
-    adds = []
-    for root, _dirs, files in os.walk(table_path):
-        if _LOG_DIR in root:
-            continue
-        for name in files:
-            if not name.endswith(".parquet"):
-                continue
-            full = os.path.join(root, name)
-            rel = os.path.relpath(full, table_path)
-            pv = {}
-            for piece in rel.split(os.sep)[:-1]:
-                if "=" in piece:
-                    k, v = piece.split("=", 1)
-                    pv[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
-            adds.append(
-                {
-                    "add": {
-                        "path": rel.replace(os.sep, "/"),
-                        "partitionValues": pv,
-                        "size": os.path.getsize(full),
-                        "modificationTime": 0,
-                        "dataChange": True,
-                    }
-                }
-            )
     actions = [
         {"protocol": protocol},
         {
@@ -601,9 +525,29 @@ def write_delta_table(
                 "createdTime": 0,
             }
         },
-        *sorted(adds, key=lambda a: a["add"]["path"]),
+        *_add_actions(table_path, table_path, data_change=True),
     ]
     _write_commit(table_path, 0, actions)
+
+
+def _add_actions(
+    table_path: str, out_dir: str, *, data_change: bool, partition_values: dict | None = None
+) -> list[dict]:
+    """``add`` actions for the parquet files a write left under
+    ``out_dir``, sorted by path; partition values come from the hive
+    directories unless ``partition_values`` is given."""
+    return [
+        {
+            "add": {
+                "path": os.path.relpath(full, table_path).replace(os.sep, "/"),
+                "partitionValues": parsed if partition_values is None else partition_values,
+                "size": os.path.getsize(full),
+                "modificationTime": 0,
+                "dataChange": data_change,
+            }
+        }
+        for full, parsed in lakehouse.written_files(out_dir)
+    ]
 
 
 def delete_partition(table_path: str, column: str, value: str) -> int:
@@ -626,9 +570,7 @@ def delete_partition(table_path: str, column: str, value: str) -> int:
     if schema_string is not None:
         for f in T.StructType.fromJson(json.loads(schema_string)).fields:
             if f.name == column:
-                pv_key = (f.metadata or {}).get(
-                    "delta.columnMapping.physicalName", column
-                )
+                pv_key = _physical(f, "none").name
     removes = [
         {"remove": {"path": p, "deletionTimestamp": 0, "dataChange": True}}
         for p, add in sorted(live.items())
@@ -904,8 +846,8 @@ def delete_rows(
 ) -> int:
     """Row-level DELETE via deletion vectors (fixture-grade writer for
     the reader above + any DV-capable reader): for every live file with
-    rows matching ``predicate`` (a Spark SQL boolean over the data
-    columns), append a commit that re-adds the file with a deletion
+    rows matching ``predicate`` (a Spark SQL boolean over the table's
+    logical columns), append a commit that re-adds the file with a deletion
     vector marking those physical row indexes and removes the old add —
     data files untouched, the Delta DV contract. Upgrades the protocol
     to table features (minReaderVersion 3 / minWriterVersion 7 with
@@ -924,61 +866,29 @@ def delete_rows(
     live, schema_string, partition_columns, protocol, current_version, conf = _replay(
         table_path
     )
-    if schema_string is None:
-        raise ValueError(f"Delta log has no metaData action: {table_path}")
-    schema = T.StructType.fromJson(json.loads(schema_string))
-    mapping_mode = conf.get("delta.columnMapping.mode", "none")
-    if mapping_mode not in ("none", "name"):
-        raise NotImplementedError(
-            f"Delta columnMapping.mode={mapping_mode!r} not implemented"
-        )
-    # column mapping: scan by physical name, rename to logical so the
-    # caller's predicate is written over the logical schema
-    phys = {
-        f.name: (f.metadata or {}).get("delta.columnMapping.physicalName", f.name)
-        for f in schema.fields
-    }
-    data_fields = [f for f in schema.fields if f.name not in partition_columns]
-    data_schema = T.StructType(
-        [T.StructField(phys[f.name], f.dataType, f.nullable) for f in data_fields]
-    )
     for path in sorted(live):
         if live[path].get("deletionVector"):
             raise NotImplementedError(
                 "fixture delete_rows does not merge with an existing DV"
             )
-    # Row-index discovery is ONE distributed scan over ALL live files
-    # (``_metadata.file_path`` attributes each matching row to its file)
-    # instead of one driver-sequenced job per file — the per-file loop
-    # was O(files) round trips of pure scheduling overhead and is the
-    # exact driver-side pattern guide §5 warns about; a real DV writer's
-    # touched-file pass is likewise one distributed job.
-    from urllib.parse import unquote, urlparse
-
-    # realpath on BOTH sides: Spark reports the filesystem-resolved path
-    # in _metadata.file_path, so a symlinked table_path would miss an
-    # abspath-keyed lookup (ADVICE r9).
-    rel_by_abs = {
-        os.path.realpath(os.path.join(table_path, p)): p for p in live
-    }
-    all_df = (
-        spark.read.schema(data_schema)
-        .parquet(*[os.path.join(table_path, p) for p in sorted(live)])
-        .withColumn("__ri", F.col("_metadata.row_index"))
-        .withColumn("__fp", F.col("_metadata.file_path"))
-        .select(
-            "__ri",
-            "__fp",
-            *[F.col(phys[f.name]).alias(f.name) for f in data_fields],
-        )
+    plan = _scan_plan(
+        table_path, [live[p] for p in sorted(live)], schema_string, partition_columns, conf
     )
+    # Row-index discovery is ONE distributed scan over ALL live files
+    # (the file path attributes each matching row to its file) instead
+    # of one driver-sequenced job per file; a real DV writer's
+    # touched-file pass is likewise one distributed job. The predicate
+    # is written over the logical schema.
+    rel_by_path = {_abs(table_path, p): p for p in live}
+    matched = lakehouse.to_dataframe(spark, plan, positions=True).filter(predicate)
     hits_by_file: dict[str, list[int]] = {}
-    for r in all_df.filter(predicate).select("__fp", "__ri").collect():
-        abs_path = os.path.realpath(unquote(urlparse(r["__fp"]).path))
-        rel = rel_by_abs.get(abs_path)
+    for path, pos in matched.select(
+        lakehouse.path_key(F.col(lakehouse.FILE_PATH)), lakehouse.POS
+    ).collect():
+        rel = rel_by_path.get(path)
         if rel is None:  # pragma: no cover - metadata path outside the log
-            raise ValueError(f"matched row in unknown file: {r['__fp']}")
-        hits_by_file.setdefault(rel, []).append(r["__ri"])
+            raise ValueError(f"matched row in unknown file: {path}")
+        hits_by_file.setdefault(rel, []).append(pos)
     actions: list[dict] = []
     for path in sorted(live):
         add = live[path]
@@ -1060,89 +970,41 @@ def optimize_compact(spark: SparkSession, table_path: str) -> int:
     live, schema_string, partition_columns, _protocol, version, configuration = (
         _replay(table_path)
     )
-    if schema_string is None:
-        raise ValueError(f"Delta log has no metaData action: {table_path}")
-    schema = T.StructType.fromJson(json.loads(schema_string))
-    phys = {
-        f.name: (f.metadata or {}).get("delta.columnMapping.physicalName", f.name)
-        for f in schema.fields
-    }
-    data_fields = [f for f in schema.fields if f.name not in partition_columns]
-    data_schema = T.StructType(
-        [T.StructField(phys[f.name], f.dataType, f.nullable) for f in data_fields]
+    plan = _scan_plan(
+        table_path, [live[p] for p in sorted(live)], schema_string, partition_columns,
+        configuration,
     )
-
-    groups: dict[tuple, list[tuple[str, dict]]] = {}
-    for path, add in sorted(live.items()):
-        pv = add.get("partitionValues", {})
-        key = tuple(sorted(pv.items()))
-        groups.setdefault(key, []).append((path, add))
-
+    mode = _mapping_mode(configuration)
+    data_fields = [
+        f
+        for f in T.StructType.fromJson(json.loads(schema_string)).fields
+        if f.name not in partition_columns
+    ]
+    rel_by_path = {_abs(table_path, p): p for p in live}
     new_version = version + 1
     actions: list[dict] = []
     n_written = 0
-    for key, members in sorted(groups.items()):
-        needs = len(members) > 1 or any(a.get("deletionVector") for _p, a in members)
-        if not needs:
+    for group in plan.groups:
+        members = [rel_by_path[p] for p in group.paths]
+        if len(members) == 1 and not live[members[0]].get("deletionVector"):
             continue
-        frames = []
-        plain = []
-        for path, add in members:
-            full = os.path.join(table_path, path)
-            dv = add.get("deletionVector")
-            if dv:
-                positions = _load_dv(table_path, dv)
-                df = (
-                    spark.read.schema(data_schema)
-                    .parquet(full)
-                    .withColumn("__dv_pos", F.col("_metadata.row_index"))
-                )
-                pos_df = spark.createDataFrame(
-                    [(int(p),) for p in positions],
-                    T.StructType([T.StructField("__dv_pos", T.LongType())]),
-                )
-                frames.append(
-                    df.join(F.broadcast(pos_df), "__dv_pos", "left_anti").drop(
-                        "__dv_pos"
-                    )
-                )
-            else:
-                plain.append(full)
-        if plain:
-            frames.append(spark.read.schema(data_schema).parquet(*plain))
-        merged = frames[0]
-        for fr in frames[1:]:
-            merged = merged.unionByName(fr)
+        # The group's rows with its deletion vectors applied, written
+        # back in the data-file layout (partition values stay in the log).
+        merged = _to_physical(
+            lakehouse.to_dataframe(spark, replace(plan, groups=[group])), data_fields, mode
+        )
         out_dir = os.path.join(table_path, f"compact-{new_version}", str(n_written))
         merged.coalesce(1).write.mode("overwrite").parquet(out_dir)
-        pv = dict(key)
-        for root, _dirs, names in os.walk(out_dir):
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                full = os.path.join(root, name)
-                rel = os.path.relpath(full, table_path).replace(os.sep, "/")
-                actions.append(
-                    {
-                        "add": {
-                            "path": rel,
-                            "partitionValues": pv,
-                            "size": os.path.getsize(full),
-                            "modificationTime": 0,
-                            "dataChange": False,
-                        }
-                    }
-                )
-        for path, _add in members:
-            actions.append(
-                {
-                    "remove": {
-                        "path": path,
-                        "deletionTimestamp": 0,
-                        "dataChange": False,
-                    }
-                }
-            )
+        actions += _add_actions(
+            table_path,
+            out_dir,
+            data_change=False,
+            partition_values=live[members[0]]["partitionValues"],
+        )
+        actions += [
+            {"remove": {"path": path, "deletionTimestamp": 0, "dataChange": False}}
+            for path in members
+        ]
         n_written += 1
     if not actions:
         return version
@@ -1165,61 +1027,18 @@ def append_delta_table(df: DataFrame, table_path: str) -> int:
     if schema_string is None:
         raise ValueError(f"Delta log has no metaData action: {table_path}")
     schema = T.StructType.fromJson(json.loads(schema_string))
-    mode = configuration.get("delta.columnMapping.mode", "none")
     missing = [f.name for f in schema.fields if f.name not in df.columns]
     if missing:
         raise ValueError(f"append is missing columns: {missing}")
-    phys = {
-        f.name: (f.metadata or {}).get("delta.columnMapping.physicalName", f.name)
-        for f in schema.fields
-    }
-    ids = {
-        f.name: (f.metadata or {}).get("delta.columnMapping.id")
-        for f in schema.fields
-    }
-    df = df.select(
-        *[
-            F.col(f.name).alias(
-                phys[f.name],
-                metadata=(
-                    {"parquet.field.id": ids[f.name]} if mode == "id" else {}
-                ),
-            )
-            for f in schema.fields
-        ]
-    )
+    mode = _mapping_mode(configuration)
     new_version = version + 1
-    sub = f"append-{new_version}"
-    out_dir = os.path.join(table_path, sub)
-    physical_partition_by = [phys[c] for c in partition_columns]
-    writer = df.write.mode("overwrite")
-    if physical_partition_by:
-        writer = writer.partitionBy(*physical_partition_by)
+    out_dir = os.path.join(table_path, f"append-{new_version}")
+    writer = _to_physical(df, schema.fields, mode).write.mode("overwrite")
+    if partition_columns:
+        fields = {f.name: f for f in schema.fields}
+        writer = writer.partitionBy(*[_physical(fields[c], mode).name for c in partition_columns])
     writer.parquet(out_dir)
-    adds = []
-    for root, _dirs, names in os.walk(out_dir):
-        for name in sorted(names):
-            if not name.endswith(".parquet"):
-                continue
-            full = os.path.join(root, name)
-            rel = os.path.relpath(full, table_path)
-            pv = {}
-            for piece in rel.split(os.sep)[1:-1]:
-                if "=" in piece:
-                    k, v = piece.split("=", 1)
-                    pv[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
-            adds.append(
-                {
-                    "add": {
-                        "path": rel.replace(os.sep, "/"),
-                        "partitionValues": pv,
-                        "size": os.path.getsize(full),
-                        "modificationTime": 0,
-                        "dataChange": True,
-                    }
-                }
-            )
     _write_commit(
-        table_path, new_version, sorted(adds, key=lambda a: a["add"]["path"])
+        table_path, new_version, _add_actions(table_path, out_dir, data_change=True)
     )
     return new_version

@@ -46,7 +46,11 @@ Scope is honest, fail-loud (misreading is worse than raising):
 
 All log/manifest handling is metadata-plane (bounded by file counts,
 exactly like real Iceberg readers, which also replay manifests on the
-driver); the data plane is one pruned ``spark.read.parquet`` per
+driver). Scale shape: the manifests become a ``sources.lakehouse.ScanPlan``
+(file groups, the field-id read schema, position-delete files and
+equality deletes) and every data read — the reader, ``delete_rows``'
+position discovery and, through the reader, ``optimize_compact`` — is
+``lakehouse.to_dataframe`` over it: one pruned parquet scan per
 partition group, so predicate pushdown and column pruning reach the
 files unchanged. The writer is fixture-grade by volume but spec-grade
 by format: data files + manifest + manifest list + metadata JSON that
@@ -66,6 +70,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from healthcare_etl_spark.sources import lakehouse
 from healthcare_etl_spark.sources.avro import read_avro_file, write_avro_file
 
 _META_DIR = "metadata"
@@ -373,6 +378,108 @@ def _live_entries(
     return data, pos_deletes, eq_deletes
 
 
+def _scan_plan(
+    meta: dict,
+    table_path: str,
+    entries: tuple[list[dict], list[dict], list[dict]],
+    partition_filter: dict | None = None,
+) -> lakehouse.ScanPlan:
+    """The ``ScanPlan`` of live manifest ``entries`` (data, position
+    deletes, equality deletes) under the current schema. Columns resolve
+    by FIELD ID (the Iceberg contract that makes renames metadata-only):
+    the read schema carries each field's id as parquet.field.id.
+    Identity-partition source columns are EXCLUDED from it — their
+    values reconstruct from the manifest partition struct (requesting
+    them from files that lack them would yield all-null columns);
+    bucket/truncate are lossy, so their source columns live in the
+    files. Data files group by identity values, and also by data
+    sequence number when equality deletes apply (those mask only files
+    with a strictly older number)."""
+    fields = _current_schema(meta)
+    pfields = _partition_fields(meta)
+    for pf in pfields:
+        if not _TRANSFORM_RE.match(pf.get("transform", "")):
+            raise NotImplementedError(
+                f"partition transform {pf.get('transform')!r} not supported "
+                "(identity/bucket[N]/truncate[W] only)"
+            )
+    field_by_id = {f["id"]: f for f in fields}
+    sources = [field_by_id[pf["source-id"]] for pf in pfields]
+    # identity source column -> its partition field name
+    identity = {
+        src["name"]: pf["name"]
+        for pf, src in zip(pfields, sources)
+        if pf["transform"] == "identity"
+    }
+
+    def _field(f: dict) -> T.StructField:
+        return T.StructField(f["name"], _spark_type(f["type"]), True, {"parquet.field.id": f["id"]})
+
+    data_e, pos_del_e, eq_del_e = entries
+    if partition_filter:
+        # Filter keys are SOURCE column names (or partition field
+        # names); each maps through its partition field's transform
+        # (identity passes through, bucket hashes, truncate truncates),
+        # so an equality predicate on the source column prunes
+        # bucket/truncate layouts too — metadata-plane pruning: pruned
+        # files are never handed to Spark.
+        psources = [src["name"] for src in sources]
+        pnames = [pf["name"] for pf in pfields]
+        unknown = set(partition_filter) - set(psources) - set(pnames)
+        if unknown:
+            raise ValueError(f"partition_filter on non-partition columns: {unknown}")
+        wanted = []
+        for k, v in partition_filter.items():
+            i = psources.index(k) if k in psources else pnames.index(k)
+            wanted.append(
+                (pnames[i], _apply_transform(pfields[i]["transform"], v, sources[i]["type"]))
+            )
+        data_e = [
+            e
+            for e in data_e
+            if all((e["data_file"].get("partition") or {}).get(n) == tv for n, tv in wanted)
+        ]
+    by_ids: dict[tuple, list[tuple[str, int]]] = {}
+    for e in eq_del_e:
+        ids = tuple(e["data_file"].get("equality_ids") or ())
+        if not ids:
+            raise ValueError(
+                "equality delete file without equality_ids: "
+                f"{e['data_file'].get('file_path')}"
+            )
+        by_ids.setdefault(ids, []).append(
+            (_local_path(e["data_file"]["file_path"], table_path), e.get("sequence_number") or 0)
+        )
+    files = [
+        (
+            tuple((e["data_file"].get("partition") or {}).get(n) for n in identity.values()),
+            (e.get("sequence_number") or 0) if by_ids else 0,
+            _local_path(e["data_file"]["file_path"], table_path),
+        )
+        for e in data_e
+    ]
+    return lakehouse.ScanPlan(
+        schema=T.StructType(
+            [
+                T.StructField(f["name"], _spark_type(f["type"]), not f.get("required", False))
+                for f in fields
+            ]
+        ),
+        read_schema=T.StructType([_field(f) for f in fields if f["name"] not in identity]),
+        groups=lakehouse.group_files(files),
+        partition_columns=list(identity),
+        position_files=sorted(
+            _local_path(e["data_file"]["file_path"], table_path) for e in pos_del_e
+        ),
+        equality_deletes=[
+            lakehouse.EqualityDelete(
+                T.StructType([_field(field_by_id[i]) for i in ids]), sorted(dels)
+            )
+            for ids, dels in sorted(by_ids.items())
+        ],
+    )
+
+
 def read_iceberg_table(
     spark: SparkSession,
     table_path: str,
@@ -387,190 +494,15 @@ def read_iceberg_table(
     so the scan job opens only matching files (the Iceberg contract —
     partition pruning without touching data)."""
     meta = _current_metadata(table_path)
-    fields = _current_schema(meta)
-    pfields = _partition_fields(meta)
-    for pf in pfields:
-        if not _TRANSFORM_RE.match(pf.get("transform", "")):
-            raise NotImplementedError(
-                f"partition transform {pf.get('transform')!r} not supported "
-                "(identity/bucket[N]/truncate[W] only)"
-            )
-    field_by_id = {f["id"]: f for f in fields}
-    pnames = [f["name"] for f in pfields]
-    ptypes = [
-        _spark_type(field_by_id[f["source-id"]]["type"]) for f in pfields
-    ]
-    psources = [field_by_id[f["source-id"]]["name"] for f in pfields]
-    ptransforms = [f["transform"] for f in pfields]
-    psrc_types = [field_by_id[f["source-id"]]["type"] for f in pfields]
-
     snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
     sid = snapshot_id if snapshot_id is not None else meta.get("current-snapshot-id")
-    schema = T.StructType(
-        [
-            T.StructField(f["name"], _spark_type(f["type"]), not f.get("required", False))
-            for f in fields
-        ]
-    )
-    if sid is None or sid == -1:
-        return spark.createDataFrame([], schema)
-    if sid not in snaps:
-        raise ValueError(f"snapshot {sid} not found in {table_path}")
-
-    data_e, pos_del_e, eq_del_e = _live_entries(meta, snaps[sid], table_path)
-    # (partition tuple, data sequence number, local path) — the seq
-    # rides along because EQUALITY deletes apply only to data files
-    # with a STRICTLY OLDER sequence number (spec).
-    files = [
-        (
-            tuple((e["data_file"].get("partition") or {}).get(n) for n in pnames),
-            e.get("sequence_number") or 0,
-            _local_path(e["data_file"]["file_path"], table_path),
-        )
-        for e in data_e
-    ]
-    delete_files = [
-        _local_path(e["data_file"]["file_path"], table_path) for e in pos_del_e
-    ]
-    if partition_filter:
-        # Filter keys are SOURCE column names; each maps through its
-        # partition field's transform (identity passes through, bucket
-        # hashes, truncate truncates), so an equality predicate on the
-        # source column prunes bucket/truncate layouts too — exactly
-        # the metadata-plane pruning real Iceberg readers do.
-        unknown = set(partition_filter) - set(psources) - set(pnames)
-        if unknown:
-            raise ValueError(f"partition_filter on non-partition columns: {unknown}")
-        wanted: list[tuple[int, object]] = []
-        for k, v in partition_filter.items():
-            idx = psources.index(k) if k in psources else pnames.index(k)
-            wanted.append(
-                (idx, _apply_transform(ptransforms[idx], v, psrc_types[idx]))
-            )
-        files = [
-            (pv, sq, p) for pv, sq, p in files if all(pv[i] == tv for i, tv in wanted)
-        ]
-    if not files:
-        return spark.createDataFrame([], schema)
-
-    # Group by (partition tuple, data seq): equality-delete masking
-    # needs each row to know its file's sequence number, attached as a
-    # per-group literal. Group count stays metadata-scale (partitions x
-    # snapshots at worst).
-    groups: dict[tuple, list[str]] = {}
-    for pv, sq, p in files:
-        groups.setdefault((pv, sq), []).append(p)
-
-    # Scheme-insensitive path key: position-delete rows carry
-    # 'file://...' URIs while _metadata.file_path reports 'file:///...'.
-    def _norm(col):
-        return F.regexp_replace(col, "^file:/+", "/")
-
-    names_only = [f["name"] for f in fields]
-    # FIELD-ID column resolution (the Iceberg contract: columns resolve
-    # by id, never by name, so renames are metadata-only): the read
-    # schema carries each field's id as parquet.field.id metadata and
-    # the parquet reader is told to match on it. Identity-partition
-    # source columns are EXCLUDED from the read schema (their values
-    # reconstruct from the manifest partition struct; requesting them
-    # from files that lack them would yield all-null columns instead).
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    identity_sources = {
-        src for src, tr in zip(psources, ptransforms) if tr == "identity"
-    }
-    read_schema = T.StructType(
-        [
-            T.StructField(
-                f["name"],
-                _spark_type(f["type"]),
-                True,
-                {"parquet.field.id": f["id"]},
-            )
-            for f in fields
-            if f["name"] not in identity_sources
-        ]
-    )
-    frames: list[DataFrame] = []
-    # None-safe deterministic group order (null partition values are
-    # legal Iceberg state — the sort key mirrors the delta reader fix).
-    for pv, sq in sorted(
-        groups, key=lambda t: (tuple((v is None, str(v)) for v in t[0]), t[1])
-    ):
-        part = spark.read.schema(read_schema).parquet(*sorted(groups[(pv, sq)]))
-        for src, typ, tr, val in zip(psources, ptypes, ptransforms, pv):
-            # Identity values reconstruct from metadata; bucket/truncate
-            # are lossy, so their source columns live in the data files.
-            if tr == "identity" and src not in part.columns:
-                part = part.withColumn(src, F.lit(val).cast(typ))
-        extra = []
-        if delete_files:
-            extra += [
-                _norm(F.col("_metadata.file_path")).alias("__fp"),
-                F.col("_metadata.row_index").alias("__ri"),
-            ]
-        if eq_del_e:
-            extra.append(F.lit(sq).cast("long").alias("__seq"))
-        part = part.select(*names_only, *extra)
-        frames.append(part)
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr)
-    if delete_files:
-        # Position-delete masking, the Spark-first shape (same as the
-        # Delta deletion-vector path): read the delete files as a frame
-        # of (file_path, pos) and LEFT ANTI join on the file identity +
-        # _metadata.row_index. Delete frames are per-snapshot bounded;
-        # at cluster scale AQE broadcasts small ones and shuffles big
-        # ones — never a driver-side materialization. Position deletes
-        # name exact immutable file paths, so path-scoped application
-        # is sequence-safe (a delete cannot name a future file).
-        dels = spark.read.parquet(*sorted(delete_files)).select(
-            _norm(F.col("file_path")).alias("__fp"),
-            F.col("pos").cast("long").alias("__ri"),
-        )
-        out = out.join(dels, ["__fp", "__ri"], "left_anti").drop("__fp", "__ri")
-    if eq_del_e:
-        # EQUALITY-delete masking (spec): a delete row removes every
-        # data row whose equality columns match (null matches null,
-        # hence <=>) in data files with a STRICTLY OLDER data sequence
-        # number — rows appended after the delete survive. One anti-
-        # join per distinct equality-id set; the seq comparison rides
-        # as an extra join condition (equi keys + range — SMJ/broadcast
-        # capable, never a Cartesian).
-        name_by_id = {f["id"]: f["name"] for f in fields}
-        by_ids: dict[tuple, list[dict]] = {}
-        for e in eq_del_e:
-            ids = tuple(e["data_file"].get("equality_ids") or ())
-            if not ids:
-                raise ValueError(
-                    "equality delete file without equality_ids: "
-                    f"{e['data_file'].get('file_path')}"
-                )
-            by_ids.setdefault(ids, []).append(e)
-        for ids, dele in sorted(by_ids.items()):
-            keys = [name_by_id[i] for i in ids]
-            dfs = []
-            for e in dele:
-                p = _local_path(e["data_file"]["file_path"], table_path)
-                dfs.append(
-                    spark.read.parquet(p).select(
-                        *[F.col(k).alias(f"__d_{k}") for k in keys],
-                        F.lit(e.get("sequence_number") or 0)
-                        .cast("long")
-                        .alias("__dseq"),
-                    )
-                )
-            dels = dfs[0]
-            for d in dfs[1:]:
-                dels = dels.unionByName(d)
-            cond = F.col("__dseq") > F.col("__seq")
-            for k in keys:
-                cond = cond & F.col(k).eqNullSafe(F.col(f"__d_{k}"))
-            out = out.join(dels, on=cond, how="left_anti")
-        out = out.drop("__seq")
-    # .to() casts to the DECLARED schema including nullability — the
-    # reconstructed partition literals are otherwise non-nullable.
-    return out.to(schema)
+    entries: tuple[list, list, list] = ([], [], [])
+    if sid is not None and sid != -1:
+        if sid not in snaps:
+            raise ValueError(f"snapshot {sid} not found in {table_path}")
+        entries = _live_entries(meta, snaps[sid], table_path)
+    plan = _scan_plan(meta, table_path, entries, partition_filter)
+    return lakehouse.to_dataframe(spark, plan)
 
 
 # ---------------------------------------------------------------- writer
@@ -805,7 +737,6 @@ def write_iceberg_table(
         for i, f in enumerate(df.schema.fields)
     ]
     fid = {f["name"]: f["id"] for f in fields}
-    ftype = {f["name"]: f["type"] for f in fields}
 
     def _pname(col: str, tr: str) -> str:
         if tr == "identity":
@@ -821,31 +752,6 @@ def write_iceberg_table(
         }
         for i, (c, tr) in enumerate(specs)
     ]
-    # Result type (what the partition DIRECTORY/manifest value is typed
-    # as): bucket -> int, truncate/identity -> source type.
-    ptype = {
-        _pname(c, tr): _transform_result_type(tr, ftype[c]) for c, tr in specs
-    }
-
-    # Stamp parquet field IDs (StructField metadata key
-    # ``parquet.field.id``; Spark's parquet writer emits them when
-    # present) — the mechanism that makes FIELD-ID column resolution,
-    # and therefore schema evolution, work on read.
-    df = df.select(
-        *[
-            F.col(f.name).alias(f.name, metadata={"parquet.field.id": fid[f.name]})
-            for f in df.schema.fields
-        ]
-    )
-    out, part_cols = _with_partition_cols(df, specs, ftype, _pname)
-
-    data_dir = os.path.join(table_path, "data")
-    writer = out.write.mode("overwrite")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(data_dir)
-
-    entries = _added_entries(data_dir, part_cols, ptype)
     meta = {
         "format-version": 2,
         "table-uuid": "00000000-0000-0000-0000-000000000000",
@@ -862,10 +768,9 @@ def write_iceberg_table(
         "snapshots": [],
         "current-snapshot-id": -1,
     }
+    entries = _write_spec_files(meta, df, os.path.join(table_path, "data"))
     os.makedirs(os.path.join(table_path, _META_DIR), exist_ok=True)
-    return _write_snapshot(table_path, meta, sorted(
-        entries, key=lambda e: e["data_file"]["file_path"]
-    ), operation="append")
+    return _write_snapshot(table_path, meta, entries, operation="append")
 
 
 def _with_partition_cols(df: DataFrame, specs, ftype, pname_fn):
@@ -891,40 +796,42 @@ def _with_partition_cols(df: DataFrame, specs, ftype, pname_fn):
     return out, part_cols
 
 
-def _added_entries(data_dir: str, part_cols: list[str], ptype: dict) -> list[dict]:
-    """ADDED manifest entries for every parquet file under ``data_dir``,
-    partition values parsed from the hive directory layout and typed by
-    the transform RESULT type."""
-    entries: list[dict] = []
-    for root, _dirs, names in os.walk(data_dir):
-        for name in sorted(names):
-            if not name.endswith(".parquet"):
-                continue
-            full = os.path.join(root, name)
-            rel_pieces = os.path.relpath(full, data_dir).split(os.sep)[:-1]
-            pv: dict = {p: None for p in part_cols}
-            for piece in rel_pieces:
-                if "=" in piece:
-                    k, v = piece.split("=", 1)
-                    raw = None if v == "__HIVE_DEFAULT_PARTITION__" else v
-                    pv[k] = _typed_partition_value(raw, ptype[k])
-            entries.append(
-                {
-                    "status": 1,
-                    "snapshot_id": None,
-                    "sequence_number": None,
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": 0,
-                        "file_path": "file://" + full,
-                        "file_format": "PARQUET",
-                        "partition": {p: pv[p] for p in part_cols},
-                        "record_count": _parquet_row_count(full),
-                        "file_size_in_bytes": os.path.getsize(full),
-                    },
-                }
-            )
-    return sorted(entries, key=lambda e: e["data_file"]["file_path"])
+def _added_entries(meta: dict, directory: str, *, content: int = 0, **extra) -> list[dict]:
+    """ADDED manifest entries for every parquet file under ``directory``
+    — data files, or delete files of ``content`` 1/2 — with partition
+    values parsed from the hive directory layout and typed by the
+    transform RESULT type (delete files are unpartitioned: all null)."""
+    field_by_id = {f["id"]: f for f in _current_schema(meta)}
+    ptype = {
+        pf["name"]: _transform_result_type(pf["transform"], field_by_id[pf["source-id"]]["type"])
+        for pf in _partition_fields(meta)
+    }
+    return [
+        {
+            "status": 1,
+            "snapshot_id": None,
+            "sequence_number": None,
+            "file_sequence_number": None,
+            "data_file": {
+                "content": content,
+                "file_path": "file://" + full,
+                "file_format": "PARQUET",
+                "partition": {
+                    n: _typed_partition_value(values.get(n), t) for n, t in ptype.items()
+                },
+                "record_count": _parquet_row_count(full),
+                "file_size_in_bytes": os.path.getsize(full),
+                **extra,
+            },
+        }
+        for full, values in lakehouse.written_files(directory)
+    ]
+
+
+def _current_entries(meta: dict, table_path: str) -> tuple[list[dict], list[dict], list[dict]]:
+    """``_live_entries`` of the current snapshot."""
+    snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
+    return _live_entries(meta, snaps[meta.get("current-snapshot-id")], table_path)
 
 
 def _carry(e: dict, *, status: int) -> dict:
@@ -948,9 +855,7 @@ def delete_partition(table_path: str, column: str, value) -> int:
     pnames = [f["name"] for f in _partition_fields(meta)]
     if column not in pnames:
         raise ValueError(f"{column!r} is not a partition column of {table_path}")
-    sid = meta.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
-    data_e, pos_e, eq_e = _live_entries(meta, snaps[sid], table_path)
+    data_e, pos_e, eq_e = _current_entries(meta, table_path)
     del_e = pos_e + eq_e
     entries = [
         _carry(
@@ -972,8 +877,10 @@ def delete_partition(table_path: str, column: str, value) -> int:
 
 def delete_rows(spark: SparkSession, table_path: str, predicate: str) -> int:
     """Row-level DELETE via an Iceberg POSITION delete file (table spec
-    v2): scan the live data files with ``_metadata`` to resolve the
-    (file_path, pos) of every row matching ``predicate``, write them as
+    v2): scan the table (current schema, deletes applied) with
+    ``_metadata`` to resolve the (file_path, pos) of every live row
+    matching ``predicate`` (a Spark SQL boolean over the current column
+    names), write them as
     a sorted parquet position-delete file, and commit a snapshot whose
     manifest list carries the data manifest (EXISTING), any prior
     delete manifests' files (EXISTING) and the new delete file (ADDED,
@@ -983,78 +890,30 @@ def delete_rows(spark: SparkSession, table_path: str, predicate: str) -> int:
 
     The position resolution is one distributed scan + filter (the same
     job a real engine runs for copy-on-write planning); nothing is
-    collected to the driver. Rows already masked by earlier delete
-    files may be re-recorded — position-delete semantics make that
-    idempotent (the anti-join masks a position once)."""
+    collected to the driver."""
     meta = _current_metadata(table_path)
-    fields = _current_schema(meta)
-    pfields = _partition_fields(meta)
-    field_by_id = {f["id"]: f for f in fields}
-    pnames = [f["name"] for f in pfields]
-    ptypes = [_spark_type(field_by_id[f["source-id"]]["type"]) for f in pfields]
-    psources = [field_by_id[f["source-id"]]["name"] for f in pfields]
-    ptransforms = [f["transform"] for f in pfields]
-    sid = meta.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
-    data_e, pos_e, eq_e = _live_entries(meta, snaps[sid], table_path)
-    del_e = pos_e + eq_e
-
-    groups: dict[tuple, list[str]] = {}
-    for e in data_e:
-        pv = tuple((e["data_file"].get("partition") or {}).get(n) for n in pnames)
-        groups.setdefault(pv, []).append(
-            _local_path(e["data_file"]["file_path"], table_path)
+    data_e, pos_e, eq_e = entries = _current_entries(meta, table_path)
+    matched = (
+        lakehouse.to_dataframe(spark, _scan_plan(meta, table_path, entries), positions=True)
+        .filter(predicate)
+        .select(
+            F.col(lakehouse.FILE_PATH).alias("file_path"),
+            F.col(lakehouse.POS).alias("pos"),
         )
-    frames = []
-    for pv in sorted(groups, key=lambda t: tuple((v is None, str(v)) for v in t)):
-        part = spark.read.parquet(*sorted(groups[pv]))
-        for src, typ, tr, val in zip(psources, ptypes, ptransforms, pv):
-            if tr == "identity" and src not in part.columns:
-                part = part.withColumn(src, F.lit(val).cast(typ))
-        frames.append(
-            part.filter(F.expr(predicate)).select(
-                F.col("_metadata.file_path").alias("file_path"),
-                F.col("_metadata.row_index").alias("pos"),
-            )
-        )
-    matched = frames[0]
-    for fr in frames[1:]:
-        matched = matched.unionByName(fr)
-
+    )
     version = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
     del_dir = os.path.join(table_path, "data", f"deletes-{version}")
     # Spec: position delete files are sorted by file_path then pos.
     matched.sort("file_path", "pos").coalesce(1).write.mode("overwrite").parquet(
         del_dir
     )
-    new_delete_entries: list[dict] = []
-    for root, _dirs, names in os.walk(del_dir):
-        for name in sorted(names):
-            if not name.endswith(".parquet"):
-                continue
-            full = os.path.join(root, name)
-            new_delete_entries.append(
-                {
-                    "status": 1,
-                    "snapshot_id": None,
-                    "sequence_number": None,
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": 1,
-                        "file_path": "file://" + full,
-                        "file_format": "PARQUET",
-                        "partition": {n: None for n in pnames},
-                        "record_count": _parquet_row_count(full),
-                        "file_size_in_bytes": os.path.getsize(full),
-                    },
-                }
-            )
     return _write_snapshot(
         table_path,
         meta,
         [_carry(e, status=0) for e in data_e],
         operation="delete",
-        delete_entries=[_carry(e, status=0) for e in del_e] + new_delete_entries,
+        delete_entries=[_carry(e, status=0) for e in pos_e + eq_e]
+        + _added_entries(meta, del_dir, content=1),
     )
 
 
@@ -1083,12 +942,13 @@ def rename_column(table_path: str, old: str, new: str) -> int:
 
 
 def _write_spec_files(
-    meta: dict, df: DataFrame, table_path: str, subdir: str, *, compact: bool = False
+    meta: dict, df: DataFrame, out_dir: str, *, compact: bool = False
 ) -> list[dict]:
     """Write ``df`` as new data files under the table's partition spec
-    (identity / bucket / truncate recomputed exactly as at create
-    time, parquet field ids stamped from the current schema) into
-    ``data/<subdir>``; returns the ADDED manifest entries."""
+    (identity / bucket / truncate computed per the spec, parquet field
+    ids stamped from the current schema — the mechanism that makes
+    FIELD-ID column resolution, and therefore schema evolution, work on
+    read) into ``out_dir``; returns the ADDED manifest entries."""
     fields = _current_schema(meta)
     pfields = _partition_fields(meta)
     field_by_id = {f["id"]: f for f in fields}
@@ -1118,13 +978,6 @@ def _write_spec_files(
     for (c, tr), name in pname_by_spec.items():
         if tr == "identity" and name != c:
             out = out.withColumn(name, F.col(c)).drop(c)
-    ptype = {
-        pf["name"]: _transform_result_type(
-            pf["transform"], ftype[field_by_id[pf["source-id"]]["name"]]
-        )
-        for pf in pfields
-    }
-    new_dir = os.path.join(table_path, "data", subdir)
     if compact:
         # Bin-pack: co-locate each partition value in one task so every
         # group writes one file (unpartitioned tables collapse to one).
@@ -1132,8 +985,8 @@ def _write_spec_files(
     writer = out.write.mode("overwrite")
     if part_cols:
         writer = writer.partitionBy(*part_cols)
-    writer.parquet(new_dir)
-    return _added_entries(new_dir, part_cols, ptype)
+    writer.parquet(out_dir)
+    return _added_entries(meta, out_dir)
 
 
 def append_rows(df: DataFrame, table_path: str) -> int:
@@ -1145,13 +998,13 @@ def append_rows(df: DataFrame, table_path: str) -> int:
     files' parquet field ids keep reads consistent across the rename
     boundary. Returns the new snapshot id."""
     meta = _current_metadata(table_path)
-    sid = meta.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
-    data_e, pos_e, eq_e = _live_entries(meta, snaps[sid], table_path)
+    data_e, pos_e, eq_e = _current_entries(meta, table_path)
     del_e = pos_e + eq_e
 
     version = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    new_entries = _write_spec_files(meta, df, table_path, f"append-{version}")
+    new_entries = _write_spec_files(
+        meta, df, os.path.join(table_path, "data", f"append-{version}")
+    )
     return _write_snapshot(
         table_path,
         meta,
@@ -1176,20 +1029,18 @@ def optimize_compact(spark: SparkSession, table_path: str) -> int:
     partitioned write; the commit is metadata — the same contract as
     ``sources.delta.optimize_compact``."""
     meta = _current_metadata(table_path)
-    sid = meta.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
-    data_e, pos_e, eq_e = _live_entries(meta, snaps[sid], table_path)
+    data_e, pos_e, eq_e = _current_entries(meta, table_path)
     pnames = [f["name"] for f in _partition_fields(meta)]
     pv_counts: dict[tuple, int] = {}
     for e in data_e:
         pv = tuple((e["data_file"].get("partition") or {}).get(n) for n in pnames)
         pv_counts[pv] = pv_counts.get(pv, 0) + 1
     if not (pos_e or eq_e) and all(c <= 1 for c in pv_counts.values()):
-        return sid
+        return meta["current-snapshot-id"]
     current = read_iceberg_table(spark, table_path)
     version = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
     new_entries = _write_spec_files(
-        meta, current, table_path, f"rewrite-{version}", compact=True
+        meta, current, os.path.join(table_path, "data", f"rewrite-{version}"), compact=True
     )
     return _write_snapshot(
         table_path,
@@ -1221,10 +1072,7 @@ def delete_rows_equality(spark: SparkSession, table_path: str, keys_df: DataFram
     if unknown:
         raise ValueError(f"equality columns not in schema: {unknown}")
     ids = [by_name[c]["id"] for c in keys_df.columns]
-    pnames = [f["name"] for f in _partition_fields(meta)]
-    sid = meta.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
-    data_e, pos_e, eq_e = _live_entries(meta, snaps[sid], table_path)
+    data_e, pos_e, eq_e = _current_entries(meta, table_path)
 
     version = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
     del_dir = os.path.join(table_path, "data", f"eqdeletes-{version}")
@@ -1240,34 +1088,11 @@ def delete_rows_equality(spark: SparkSession, table_path: str, keys_df: DataFram
         .write.mode("overwrite")
         .parquet(del_dir)
     )
-    new_delete_entries: list[dict] = []
-    for root, _dirs, names in os.walk(del_dir):
-        for name in sorted(names):
-            if not name.endswith(".parquet"):
-                continue
-            full = os.path.join(root, name)
-            new_delete_entries.append(
-                {
-                    "status": 1,
-                    "snapshot_id": None,
-                    "sequence_number": None,
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": 2,
-                        "file_path": "file://" + full,
-                        "file_format": "PARQUET",
-                        "partition": {n: None for n in pnames},
-                        "record_count": _parquet_row_count(full),
-                        "file_size_in_bytes": os.path.getsize(full),
-                        "equality_ids": ids,
-                    },
-                }
-            )
     return _write_snapshot(
         table_path,
         meta,
         [_carry(e, status=0) for e in data_e],
         operation="delete",
         delete_entries=[_carry(e, status=0) for e in pos_e + eq_e]
-        + new_delete_entries,
+        + _added_entries(meta, del_dir, content=2, equality_ids=ids),
     )

@@ -264,22 +264,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:  # pragma: no cover - non-settable on some builds
         pass
-    try:
-        df = _read_parquet(spark, path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(_epoch_to_micros(spark, path, df)))
-        return _normalize_timestamps(df)
-    except Exception:
-        # Fallback for sessions where neither conf is available AND the
-        # file is nanos-typed: decode through Arrow on the driver. Only
-        # acceptable because the events fixture is small; the conf path
-        # above is the scale path.
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(path)
-        pdf = tbl.to_pandas()
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        return spark.createDataFrame(pdf)
+    df = _read_parquet(spark, path)
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(_epoch_to_micros(spark, path, df)))
+    return _normalize_timestamps(df)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:

@@ -4,13 +4,16 @@ library must self-configure through ``configure_session``), at an
 arbitrary scale directory. This is the same compare the external
 driver runs on its 50-query window, extended to the whole surface;
 results are recorded per round in BASELINE.md's parity table.
+``--queries`` narrows the sweep to the named queries, the per-change
+equivalence check. Exits non-zero on any mismatch or error.
 
 Usage:
-    python scripts/full_sweep.py [sf_dir] [out_json]
+    python scripts/full_sweep.py [sf_dir] [out_json] [--queries NAME ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import sys
 import time
@@ -25,7 +28,15 @@ TABLES = [
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    import __spark_entry__ as entry
+
+    ap = argparse.ArgumentParser()
+    # default: the sf0.01 fixtures beside __spark_entry__.SMOKE_SF_DIR
+    ap.add_argument("sf_dir", nargs="?", default=str(Path(entry.SMOKE_SF_DIR).with_name("sf0.01")))
+    ap.add_argument("out_json", nargs="?")
+    ap.add_argument("--queries", nargs="+", metavar="NAME")
+    args = ap.parse_args()
+    sf_dir = args.sf_dir
     import duckdb
     from pyspark.sql import SparkSession
 
@@ -41,9 +52,12 @@ def main() -> None:
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    import __spark_entry__ as entry
-
     qs, osql = entry.queries(), entry.oracle_sql()
+    if args.queries:
+        unknown = sorted(set(args.queries) - set(qs))
+        if unknown:
+            raise SystemExit(f"unknown queries: {unknown}")
+        qs = {name: qs[name] for name in args.queries}
     results: dict[str, dict] = {}
     n_match = n_mismatch = n_err = n_rows_only = 0
     t_start = time.time()
@@ -100,8 +114,9 @@ def main() -> None:
     }
     print(json.dumps(summary))
     out = {"summary": summary, "results": results}
-    if len(sys.argv) > 2:
-        Path(sys.argv[2]).write_text(json.dumps(out, indent=1))
+    if args.out_json:
+        Path(args.out_json).write_text(json.dumps(out, indent=1))
+    sys.exit(1 if n_mismatch or n_err else 0)
 
 
 if __name__ == "__main__":

@@ -455,6 +455,17 @@ class TestIcebergSchemaEvolution:
         exp = nation.filter("(n_nationkey < 20 and n_nationkey % 2 <> 0) or n_nationkey >= 20")
         assert sorted(cur.collect()) == sorted(exp.collect())
 
+    def test_delete_rows_after_rename(self, spark, tmp_path):
+        # The delete predicate names the CURRENT schema: the position
+        # scan resolves columns by field id, like the reader.
+        df = spark.createDataFrame([(i, f"n{i}") for i in range(6)], "id long, name string")
+        tbl = str(tmp_path / "se7")
+        write_iceberg_table(df, tbl)
+        rename_column(tbl, "name", "label")
+        delete_rows(spark, tbl, "label = 'n3'")
+        cur = read_iceberg_table(spark, tbl)
+        assert sorted(r["label"] for r in cur.collect()) == ["n0", "n1", "n2", "n4", "n5"]
+
     def test_append_missing_column_raises(self, spark, tmp_path, nation):
         tbl = str(tmp_path / "se5")
         write_iceberg_table(nation, tbl)

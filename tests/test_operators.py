@@ -368,6 +368,21 @@ def test_jdbc_retry_wrappers_live_derby(spark, tmp_path, sf_smoke):
     assert delays == [0.5]
 
 
+def test_load_table_events_error_propagates(spark, sf_smoke, monkeypatch):
+    """A failing events read raises the original error; it is never
+    swallowed into a driver-side decode of the whole file."""
+    import pytest
+
+    from healthcare_etl_spark.sources import load_table, readers
+
+    def broken(*_args, **_kwargs):
+        raise RuntimeError("scan failed")
+
+    monkeypatch.setattr(readers, "_read_parquet", broken)
+    with pytest.raises(RuntimeError, match="scan failed"):
+        load_table(spark, sf_smoke, "events")
+
+
 def test_bigint_epoch_granularity_detection(spark, tmp_path):
     """The raw-BIGINT ts fallback must detect the producer's epoch
     granularity from data magnitude instead of assuming nanos (the

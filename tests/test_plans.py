@@ -802,3 +802,16 @@ def test_psi_drift_grid_joins_stay_broadcast(spark, sf_smoke):
     plan = plan_of(spark, sf_smoke, "q_psi_drift")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" in plan
+
+
+def test_duplicate_registration_raises():
+    """A query name registers once: a second body under the same name
+    raises instead of silently replacing the first."""
+    from healthcare_etl_spark.plans.registry import register
+
+    registry = get_registry()
+    name = next(iter(registry))
+    original = registry[name].fn
+    with pytest.raises(ValueError, match="already registered"):
+        register(name)(lambda spark, sf_dir: None)
+    assert get_registry()[name].fn is original
