@@ -18,14 +18,15 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+def array_sum(arr: Column) -> Column:
+    """Sum of an array<double> column, folded strictly left-to-right."""
+    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
+
+
 def dot(a: Column | str, b: Column | str) -> Column:
     """Dot product of two array<numeric> columns, folded left-to-right."""
     a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    return array_sum(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")))
 
 
 def l2_norm(a: Column | str) -> Column:
@@ -85,15 +86,13 @@ def l2_sq(a: Column | str, b: Column | str) -> Column:
     rounding step). Squared form on purpose — monotone in L2, so
     nearest-neighbor argmins are identical and the sqrt is saved."""
     a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
-    return F.aggregate(
+    return array_sum(
         F.zip_with(
             a,
             b,
             lambda x, y: (x.cast("double") - y.cast("double"))
             * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+        )
     )
 
 

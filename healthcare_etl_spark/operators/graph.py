@@ -1,4 +1,5 @@
-"""Iterative graph operators: connected components for dedup clustering.
+"""Iterative graph operators: connected components for dedup clustering,
+PageRank, BFS hop distances, label propagation and k-truss.
 
 Near-dup detection emits *pairs*; the pipeline step that actually drops
 documents needs *clusters* (transitively connected groups) with one
@@ -13,6 +14,23 @@ so rounds stay in the single digits. For billion-edge graphs the
 large-star/small-star variant halves rounds; the propagation skeleton is
 the same.
 
+Iteration discipline, shared by every operator here through four
+building blocks — ``_symmetric_edges``, ``_fixpoint``,
+``_power_iteration`` and ``_bfs``:
+
+- **Edges checkpointed once.** The edge set is re-read every round and
+  its upstream (e.g. the full MinHash pipeline) must not re-execute per
+  round, so it is eagerly ``localCheckpoint``-ed up front.
+- **Bounded lineage.** Round state feeds several branches of the next
+  round, so its lineage would double every round; a lazy
+  ``localCheckpoint`` every few rounds truncates it (the round's action,
+  if any, materializes the blocks, so the checkpoint costs no extra
+  job). On a real cluster use reliable ``checkpoint()``/staging tables;
+  local block storage is the single-JVM equivalent.
+- **At most one action per round.** A convergence check compares this
+  round's signature with last round's, which is remembered on the driver
+  instead of re-executing the previous DAG.
+
 Why not Spark 4's native ``WITH RECURSIVE``: recursive CTEs currently
 allow only UNION ALL between the anchor and recursive terms
 (``UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE``, probed on 4.1.2). Transitive
@@ -26,8 +44,62 @@ support recursive UNION) verify their results exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Any, Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+# PageRank damping and teleport weight. TELEPORT is the literal 0.15, not
+# ``1.0 - DAMPING``: the Python expression ``1.0 - 0.85`` is the IEEE
+# double 0.15000000000000002, and the oracle SQL interpolates the literal
+# 0.15 — per-round rounding can land exactly on a half boundary where
+# that last-ulp difference flips the result.
+DAMPING = 0.85
+TELEPORT = 0.15
+
+
+def _symmetric_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
+    """(u, v) in both directions, distinct, eagerly checkpointed."""
+    return (
+        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def _fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    *,
+    rounds: int,
+    checkpoint_every: int,
+    signature: Callable[[DataFrame], Any] | None = None,
+    prev: Any = None,
+    limit_error: str | None = None,
+) -> DataFrame:
+    """Run ``state = step(state)`` for at most ``rounds`` rounds.
+
+    Every ``checkpoint_every`` rounds the new state takes a lazy
+    ``localCheckpoint``. With a ``signature`` (one driver action over the
+    new state), the loop returns as soon as a round's signature equals
+    the previous one; ``prev`` is the signature of the input state when
+    the caller already knows it. Running out of rounds returns the last
+    state, or raises ``RuntimeError(limit_error)`` when that is given.
+    """
+    for i in range(rounds):
+        state = step(state)
+        if (i + 1) % checkpoint_every == 0:
+            state = state.localCheckpoint(eager=False)
+        if signature is not None:
+            sig = signature(state)
+            if sig == prev:
+                return state
+            prev = sig
+    if limit_error is not None:
+        raise RuntimeError(limit_error)
+    return state
 
 
 def connected_components(
@@ -36,35 +108,16 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 50,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Label every node of the pair graph with its component's min id.
 
     Returns (node, component). Deterministic: min-label propagation has
     a unique fixpoint. Raises if not converged within ``max_iter``
-    (diameter bound exceeded — raise the bound, not the stakes).
-
-    Iteration discipline (the two classic iterative-Spark traps):
-
-    - **One action per round.** The convergence check needs this round's
-      label sum and last round's — last round's is remembered on the
-      driver instead of re-executing the previous DAG a second time.
-    - **Bounded lineage.** ``labels`` feeds two branches of the next
-      round (the neighbor aggregate and the join), so its lineage would
-      double every round; ``localCheckpoint`` every ``checkpoint_every``
-      rounds truncates it (the convergence action materializes the
-      blocks, so the lazy checkpoint costs no extra job). ``edges`` is
-      checkpointed once up front — it is re-read every round and its
-      upstream (e.g. the full MinHash pipeline) must not re-execute per
-      round. On a real cluster use reliable ``checkpoint()``/staging
-      tables; local block storage is the single-JVM equivalent.
+    (diameter bound exceeded — raise the bound, not the stakes). The
+    convergence signature is the label sum, which strictly decreases
+    until the fixpoint; labels checkpoint every third round.
     """
-    edges = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges = _symmetric_edges(pairs, src, dst)
     # Fused first round: with component(v) initialized to v, round 1's
     # neighbor-min is just min(neighbor id), so the initial labels can be
     # computed directly as least(node, min(neighbor)) in ONE aggregate —
@@ -73,31 +126,32 @@ def connected_components(
     labels = edges.groupBy(F.col("u").alias("node")).agg(
         F.least(F.col("u"), F.min("v")).alias("component")
     )
-    prev_sum = labels.agg(F.sum("component")).first()[0]
-    for i in range(max_iter):
+
+    def step(labels: DataFrame) -> DataFrame:
         nbr_min = (
             edges.join(labels, edges.v == labels.node)
             .groupBy("u")
             .agg(F.min("component").alias("nbr_component"))
         )
-        new_labels = (
-            labels.join(nbr_min, labels.node == nbr_min.u, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_component", F.col("component"))
-                ).alias("component"),
-            )
+        return labels.join(nbr_min, labels.node == nbr_min.u, "left").select(
+            "node",
+            F.least(
+                F.col("component"), F.coalesce("nbr_component", F.col("component"))
+            ).alias("component"),
         )
-        if (i + 1) % checkpoint_every == 0:
-            new_labels = new_labels.localCheckpoint(eager=False)
-        # convergence: component sum strictly decreases until fixpoint
-        new_sum = new_labels.agg(F.sum("component")).first()[0]
-        labels = new_labels
-        if new_sum == prev_sum:
-            return labels
-        prev_sum = new_sum
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+
+    def label_sum(labels: DataFrame):
+        return labels.agg(F.sum("component")).first()[0]
+
+    return _fixpoint(
+        labels,
+        step,
+        rounds=max_iter,
+        checkpoint_every=3,
+        signature=label_sum,
+        prev=label_sum(labels),
+        limit_error=f"connected_components did not converge in {max_iter} rounds",
+    )
 
 
 def dedup_clusters(pairs: DataFrame) -> DataFrame:
@@ -121,7 +175,6 @@ def connected_components_two_phase(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 50,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Alternating large-star / small-star connected components
     (Kiveris et al. 2014, "Connected Components in MapReduce and
@@ -153,8 +206,8 @@ def connected_components_two_phase(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    prev_sig = None
-    for i in range(max_iter):
+
+    def step(e: DataFrame) -> DataFrame:
         # ---- large-star: symmetric view, group on u
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
@@ -170,7 +223,7 @@ def connected_components_two_phase(
         # ---- small-star over large-star's output (edges stored big->small)
         e2 = large.select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
         small_mins = e2.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
+        return (
             e2.join(small_mins, "u")
             .select(F.col("v").alias("a"), F.col("m").alias("b"))
             .union(small_mins.select(F.col("u").alias("a"), F.col("m").alias("b")))
@@ -178,26 +231,29 @@ def connected_components_two_phase(
             .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
             .distinct()
         )
-        if (i + 1) % checkpoint_every == 0:
-            small = small.localCheckpoint(eager=False)
-        # Checkpoint default is EVERY round: the convergence action below
-        # materializes the round's plan regardless, so skipping the
-        # checkpoint only means the NEXT round's action recomputes this
-        # round's two shuffles from scratch (measured 6.8s -> 2.8s at
-        # sf0.1 switching checkpoint_every from 2 to 1).
-        # one action per round: edge count + order-insensitive signature
-        # (bit_xor, not sum — hash sums overflow under ANSI arithmetic)
-        row = small.agg(
+
+    def edge_signature(e: DataFrame):
+        # edge count + order-insensitive signature (bit_xor, not sum —
+        # hash sums overflow under ANSI arithmetic)
+        row = e.agg(
             F.count(F.lit(1)).alias("n"),
             F.expr("bit_xor(xxhash64(u, v))").alias("sig"),
         ).first()
-        sig = (row["n"], row["sig"])
-        e = small
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    else:
-        raise RuntimeError(f"two-phase CC did not converge in {max_iter} rounds")
+        return (row["n"], row["sig"])
+
+    # Checkpoint EVERY round: the signature action materializes the
+    # round's plan regardless, so skipping the checkpoint only means the
+    # NEXT round's action recomputes this round's two shuffles from
+    # scratch (measured 6.8s -> 2.8s at sf0.1 going from every 2nd round
+    # to every round).
+    e = _fixpoint(
+        e,
+        step,
+        rounds=max_iter,
+        checkpoint_every=1,
+        signature=edge_signature,
+        limit_error=f"two-phase CC did not converge in {max_iter} rounds",
+    )
     # stars: every edge is (node -> component min); nodes that are
     # centers appear only on the v side
     nodes = e.select(F.col("u").alias("node"), F.col("v").alias("component")).union(
@@ -206,66 +262,27 @@ def connected_components_two_phase(
     return nodes.groupBy("node").agg(F.min("component").alias("component"))
 
 
-def pagerank(
-    pairs: DataFrame,
-    *,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    iterations: int = 5,
-    damping: float = 0.85,
-    teleport_weight: float | None = None,
-    round_digits: int = 10,
+def _rnd(c: Column) -> Column:
+    """Per-round 10-digit stable rounding (multiply-round-divide)."""
+    return F.round(c * 1e10) / 1e10
+
+
+def _power_iteration(
+    edges: DataFrame, base: DataFrame, init: Column, teleport: Column, iterations: int
 ) -> DataFrame:
-    """PageRank over the symmetrized pair graph → (node, rank).
+    """Fixed-iteration power method over symmetric ``edges`` → (node, rank).
 
-    ``teleport_weight`` defaults to ``1.0 - damping`` but can be passed
-    explicitly (e.g. the literal ``0.15``) so callers whose oracle SQL
-    interpolates the same literal stay bit-identical — the Python
-    expression ``1.0 - 0.85`` is the IEEE double 0.15000000000000002,
-    NOT the literal 0.15, and per-round rounding can land exactly on a
-    half boundary where that last-ulp difference flips the result.
-
-    Fixed-iteration power method: contribution = rank/out-degree pushed
-    along edges (join), summed per target (hash agg), damped teleport
-    added back — the canonical iterative-join Spark shape, same
-    discipline as ``connected_components`` (edges checkpointed once and
-    re-read per round, rank lineage truncated periodically, the driver
-    never touches row data). Symmetrization guarantees every node has
-    out-degree ≥ 1, so no dangling-mass correction term is needed and
-    total rank stays 1.
-
-    Ranks are stable-rounded (multiply-round-divide, ``round_digits``)
-    after EVERY iteration so the per-node double is bit-identical to the
-    unrolled-CTE oracle — cross-engine drift cannot compound across
-    rounds.
-
-    Scale: each round is one shuffle on the node id; degree and the node
-    count ride along as columns (the count is a 1-row broadcast). At
-    100 TB edge scale, pre-partition ``edges`` by ``u`` (bucketed
-    staging table) so the per-round join is exchange-free on one side.
+    ``base`` holds one row per node with its out-degree ``d`` plus the
+    columns ``init`` and ``teleport`` read. Each round pushes
+    contribution = rank/out-degree along the edges (join), sums it per
+    target (hash agg) and adds the teleport term back. Ranks are
+    stable-rounded after EVERY iteration so the per-node double is
+    bit-identical to the unrolled-CTE oracle — cross-engine drift cannot
+    compound across rounds.
     """
-    tw = teleport_weight if teleport_weight is not None else (1.0 - damping)
-    scale = float(10**round_digits)
+    cols = base.columns
 
-    def rnd(c):
-        return F.round(c * scale) / scale
-
-    edges = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    n_df = deg.agg(F.count(F.lit(1)).alias("n"))
-    # (node, d, n) — the loop-invariant base every round rejoins against.
-    base = (
-        deg.select(F.col("u").alias("node"), "d")
-        .crossJoin(F.broadcast(n_df))
-        .localCheckpoint(eager=True)
-    )
-    ranks = base.select("node", "d", "n", rnd(F.lit(1.0) / F.col("n")).alias("rank"))
-    for i in range(iterations):
+    def step(ranks: DataFrame) -> DataFrame:
         contrib = (
             edges.join(
                 ranks.select(
@@ -276,21 +293,152 @@ def pagerank(
             .groupBy("v")
             .agg(F.sum("c").alias("s"))
         )
-        ranks = (
-            base.join(contrib, base.node == contrib.v, "left")
-            .select(
-                "node",
-                "d",
-                "n",
-                rnd(
-                    F.lit(tw) / F.col("n")
-                    + damping * F.coalesce("s", F.lit(0.0))
-                ).alias("rank"),
-            )
+        return base.join(contrib, base.node == contrib.v, "left").select(
+            *cols, _rnd(teleport + DAMPING * F.coalesce("s", F.lit(0.0))).alias("rank")
         )
-        if (i + 1) % 2 == 0:
-            ranks = ranks.localCheckpoint(eager=False)
+
+    ranks = base.select(*cols, _rnd(init).alias("rank"))
+    ranks = _fixpoint(ranks, step, rounds=iterations, checkpoint_every=2)
     return ranks.select("node", "rank")
+
+
+def pagerank(
+    pairs: DataFrame,
+    *,
+    src: str = "doc_a",
+    dst: str = "doc_b",
+    iterations: int = 5,
+) -> DataFrame:
+    """PageRank over the symmetrized pair graph → (node, rank).
+
+    Fixed-iteration power method with damping ``DAMPING`` and uniform
+    teleport ``TELEPORT / n``. Symmetrization guarantees every node has
+    out-degree ≥ 1, so no dangling-mass correction term is needed and
+    total rank stays 1.
+
+    Scale: each round is one shuffle on the node id; degree and the node
+    count ride along as columns (the count is a 1-row broadcast). At
+    100 TB edge scale, pre-partition ``edges`` by ``u`` (bucketed
+    staging table) so the per-round join is exchange-free on one side.
+    """
+    edges = _symmetric_edges(pairs, src, dst)
+    deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+    n_df = deg.agg(F.count(F.lit(1)).alias("n"))
+    # (node, d, n) — the loop-invariant base every round rejoins against.
+    base = (
+        deg.select(F.col("u").alias("node"), "d")
+        .crossJoin(F.broadcast(n_df))
+        .localCheckpoint(eager=True)
+    )
+    return _power_iteration(
+        edges,
+        base,
+        F.lit(1.0) / F.col("n"),
+        F.lit(TELEPORT) / F.col("n"),
+        iterations,
+    )
+
+
+def personalized_pagerank(
+    pairs: DataFrame,
+    seeds: DataFrame,
+    *,
+    src: str = "doc_a",
+    dst: str = "doc_b",
+    seed_col: str = "node",
+    iterations: int = 5,
+) -> DataFrame:
+    """Personalized PageRank: teleport mass restarts at the SEED set
+    instead of uniformly — rank becomes proximity TO the seeds, the
+    similar-item / recommendation primitive (vs :func:`pagerank`'s
+    global centrality). Seeds not present in the graph are ignored; an
+    empty effective seed set yields all-zero ranks rather than an error.
+    """
+    edges = _symmetric_edges(pairs, src, dst)
+    deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+    seed_nodes = seeds.select(F.col(seed_col).alias("node")).distinct()
+    marked = deg.select(F.col("u").alias("node"), "d").join(
+        seed_nodes.withColumn("is_seed", F.lit(True)), "node", "left"
+    ).select("node", "d", F.coalesce("is_seed", F.lit(False)).alias("is_seed"))
+    ns_df = marked.agg(
+        F.sum(F.when(F.col("is_seed"), 1).otherwise(0)).cast("long").alias("ns")
+    )
+    base = marked.crossJoin(F.broadcast(ns_df)).localCheckpoint(eager=True)
+    teleport = F.when(
+        F.col("is_seed") & (F.col("ns") > 0), F.lit(1.0) / F.col("ns")
+    ).otherwise(F.lit(0.0))
+    return _power_iteration(
+        edges, base, teleport, F.lit(TELEPORT) * teleport, iterations
+    )
+
+
+def _bfs(
+    pairs: DataFrame,
+    seeds: DataFrame | None,
+    keys: list[str],
+    *,
+    src: str,
+    dst: str,
+    seed_col: str,
+    max_iter: int,
+    seed_filter,
+) -> DataFrame:
+    """Frontier BFS over the symmetrized pair graph → (*keys, hops).
+
+    ``keys`` is ``["node"]`` (one BFS from the whole seed set) or
+    ``["seed", "node"]`` (one BFS per seed, all sharing each round's
+    join). Every round expands the frontier by one join, anti-joins the
+    settled labels away, checkpoints the new frontier eagerly and stops
+    when it is empty (``isEmpty`` is the round's one action).
+    """
+    edges = _symmetric_edges(pairs, src, dst)
+    if seed_filter is not None:
+        # Derive seeds from the checkpointed edges so the pair pipeline
+        # runs exactly once.
+        seeds = edges.select(F.col("u").alias(seed_col)).distinct().filter(
+            seed_filter(F.col(seed_col))
+        )
+    labels = (
+        seeds.select(F.col(seed_col).alias(keys[0]))
+        .distinct()
+        .select(*[F.col(keys[0]).alias(k) for k in keys], F.lit(0).cast("long").alias("hops"))
+        .localCheckpoint(eager=True)
+    )
+    frontier = labels
+    prev_frontier = None
+    for _ in range(max_iter):
+        neighbors = (
+            edges.join(frontier.withColumnRenamed("node", "u"), "u")
+            .select(*keys[:-1], F.col("v").alias("node"), (F.col("hops") + 1).alias("hops"))
+            .distinct()
+        )
+        # Two-frontier anti-join (r10, guide §1.2/§2.3): in an undirected
+        # graph a neighbor of a distance-r node has distance r-1, r or
+        # r+1 (per seed, for per-seed keys), so the only SETTLED labels
+        # `neighbors` can contain are in the current or previous
+        # frontier — anti-joining against those two (frontier-sized)
+        # frames is exactly equivalent to anti-joining against the full
+        # accumulated label set, and shuffles O(frontier) instead of
+        # O(all labels) per round.
+        seen = (
+            frontier if prev_frontier is None else frontier.union(prev_frontier)
+        )
+        new = neighbors.join(seen.select(*keys), keys, "left_anti").localCheckpoint(
+            eager=True
+        )
+        if new.isEmpty():
+            break
+        # Labels are APPEND-ONLY: every constituent (seed labels + each
+        # round's `new`) is already an eagerly-checkpointed RDD, so the
+        # accumulator can stay a LAZY union of those checkpoints — no
+        # recompute is possible through it, and re-checkpointing the
+        # union each round re-materialized the entire accumulated label
+        # set every round (O(labels) per round, quadratic across the
+        # BFS; guide §1.2: don't compute things you throw away).
+        labels = labels.union(new)
+        prev_frontier = frontier
+        frontier = new
+    return labels
 
 
 def bfs_hops(
@@ -309,9 +457,7 @@ def bfs_hops(
     hops (seeds at 0). Classic distributed BFS: the frontier expands one
     join per round, already-labelled nodes are anti-joined away so each
     node is visited exactly once — total work is O(edges) across all
-    rounds, not O(edges x rounds). Same iteration discipline as
-    ``connected_components``: edges checkpointed once, labels lineage
-    truncated as it accumulates, one (empty?) action per round.
+    rounds, not O(edges x rounds).
 
     Seeds come either as a frame (``seeds``) or as ``seed_filter``, a
     predicate over the node column applied to the node set of the
@@ -323,131 +469,36 @@ def bfs_hops(
     r9-clean-bench-movers) once the band-frame checkpoint that used to
     absorb the recompute was (correctly) removed.
     """
-    edges = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    return _bfs(
+        pairs, seeds, ["node"], src=src, dst=dst, seed_col=seed_col,
+        max_iter=max_iter, seed_filter=seed_filter,
     )
-    if seed_filter is not None:
-        seeds = edges.select(F.col("u").alias(seed_col)).distinct().filter(
-            seed_filter(F.col(seed_col))
-        )
-    labels = (
-        seeds.select(F.col(seed_col).alias("node"))
-        .distinct()
-        .withColumn("hops", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = labels
-    prev_frontier = None
-    for _ in range(max_iter):
-        neighbors = (
-            edges.join(frontier.withColumnRenamed("node", "u"), "u")
-            .select(F.col("v").alias("node"), (F.col("hops") + 1).alias("hops"))
-            .distinct()
-        )
-        # Two-frontier anti-join (r10, guide §1.2/§2.3): in an undirected
-        # graph a neighbor of a distance-r node has distance r-1, r or
-        # r+1, so the only SETTLED nodes `neighbors` can contain are in
-        # the current or previous frontier — anti-joining against those
-        # two (frontier-sized) frames is exactly equivalent to anti-
-        # joining against the full accumulated label set, and shuffles
-        # O(frontier) instead of O(all labels) per round.
-        seen = (
-            frontier if prev_frontier is None else frontier.union(prev_frontier)
-        )
-        new = neighbors.join(seen.select("node"), "node", "left_anti").localCheckpoint(
-            eager=True
-        )
-        if new.isEmpty():
-            break
-        # Labels are APPEND-ONLY: every constituent (seed labels + each
-        # round's `new`) is already an eagerly-checkpointed RDD, so the
-        # accumulator can stay a LAZY union of those checkpoints — no
-        # recompute is possible through it, and re-checkpointing the
-        # union each round re-materialized the entire accumulated label
-        # set every round (O(labels) per round, quadratic across the
-        # BFS; guide §1.2: don't compute things you throw away).
-        labels = labels.union(new)
-        prev_frontier = frontier
-        frontier = new
-    return labels
 
 
-def personalized_pagerank(
+def bfs_hops_per_seed(
     pairs: DataFrame,
-    seeds: DataFrame,
+    seeds: DataFrame | None = None,
     *,
     src: str = "doc_a",
     dst: str = "doc_b",
     seed_col: str = "node",
-    iterations: int = 5,
-    damping: float = 0.85,
-    teleport_weight: float | None = None,
-    round_digits: int = 10,
+    max_iter: int = 20,
+    seed_filter=None,
 ) -> DataFrame:
-    """Personalized PageRank: teleport mass restarts at the SEED set
-    instead of uniformly — rank becomes proximity TO the seeds, the
-    similar-item / recommendation primitive (vs :func:`pagerank`'s
-    global centrality). Same iterative-join discipline: edges
-    checkpointed once, one shuffle per round on the node id, per-round
-    stable rounding keeps both engines on bit-identical iterates.
-    Seeds not present in the graph are ignored; an empty effective seed
-    set yields all-zero ranks rather than an error.
+    """Per-seed hop distances over the symmetrized pair graph: returns
+    (seed, node, hops) for every (seed, reachable node) pair within
+    ``max_iter`` hops — ``bfs_hops`` generalized from "min distance to
+    the seed SET" to independent single-source BFS runs sharing one
+    frontier pipeline (state keyed by (seed, node), so all sources
+    expand in the same per-round join; the classic multi-source trick
+    that makes k centrality probes cost one BFS, not k). Each (seed,
+    node) is expanded exactly once. Feeds closeness / harmonic
+    centrality estimates from a hash-chosen probe set.
     """
-    tw = teleport_weight if teleport_weight is not None else (1.0 - damping)
-    scale = float(10**round_digits)
-
-    def rnd(c):
-        return F.round(c * scale) / scale
-
-    edges = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    return _bfs(
+        pairs, seeds, ["seed", "node"], src=src, dst=dst, seed_col=seed_col,
+        max_iter=max_iter, seed_filter=seed_filter,
     )
-    deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    seed_nodes = seeds.select(F.col(seed_col).alias("node")).distinct()
-    marked = deg.select(F.col("u").alias("node"), "d").join(
-        seed_nodes.withColumn("is_seed", F.lit(True)), "node", "left"
-    ).select("node", "d", F.coalesce("is_seed", F.lit(False)).alias("is_seed"))
-    ns_df = marked.agg(
-        F.sum(F.when(F.col("is_seed"), 1).otherwise(0)).cast("long").alias("ns")
-    )
-    base = marked.crossJoin(F.broadcast(ns_df)).localCheckpoint(eager=True)
-    teleport = F.when(
-        F.col("is_seed") & (F.col("ns") > 0), F.lit(1.0) / F.col("ns")
-    ).otherwise(F.lit(0.0))
-    ranks = base.select("node", "d", "is_seed", "ns", rnd(teleport).alias("rank"))
-    for i in range(iterations):
-        contrib = (
-            edges.join(
-                ranks.select(
-                    F.col("node").alias("u"), (F.col("rank") / F.col("d")).alias("c")
-                ),
-                "u",
-            )
-            .groupBy("v")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            base.join(contrib, base.node == contrib.v, "left")
-            .select(
-                "node",
-                "d",
-                "is_seed",
-                "ns",
-                rnd(
-                    F.lit(tw) * teleport
-                    + damping * F.coalesce("s", F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % 2 == 0:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks.select("node", "rank")
 
 
 def label_propagation_communities(
@@ -475,18 +526,15 @@ def label_propagation_communities(
     neighbor id, then a (node, label) count aggregate and a per-node
     argmax via the partitioned window (WindowGroupLimit prunes to one
     row per node before the final exchange). Labels are checkpointed
-    per round so lineage stays bounded. Returns (node, community).
+    every round. Returns (node, community).
     """
-    fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    e = fwd.union(
-        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-    ).distinct().localCheckpoint(eager=True)
+    e = _symmetric_edges(edges, src, dst)
     labels = e.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
-    from pyspark.sql.window import Window
+    w = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("lbl"))
 
-    for _ in range(rounds):
+    def step(labels: DataFrame) -> DataFrame:
         nbr = e.join(labels, e.v == labels.node).select(
             F.col("u").alias("node"), "lbl"
         )
@@ -495,13 +543,13 @@ def label_propagation_communities(
             .groupBy("node", "lbl")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        w = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("lbl"))
-        labels = (
+        return (
             votes.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .select("node", "lbl")
-            .localCheckpoint(eager=False)
         )
+
+    labels = _fixpoint(labels, step, rounds=rounds, checkpoint_every=1)
     return labels.select("node", F.col("lbl").alias("community"))
 
 
@@ -541,8 +589,9 @@ def ktruss_edges(
         .localCheckpoint(eager=True)
     )
     min_sup = k - 2
-    out = None
-    for _ in range(rounds):
+
+    def step(scored: DataFrame) -> DataFrame:
+        e = scored.select("u", "v")
         e2 = e.select(F.col("u").alias("b2"), F.col("v").alias("c"))
         wedges = e.alias("e1").join(e2, F.col("e1.v") == F.col("b2")).select(
             F.col("e1.u").alias("a"), F.col("e1.v").alias("b"), "c"
@@ -561,80 +610,6 @@ def ktruss_edges(
         scored = e.join(sup, ["u", "v"], "left").select(
             "u", "v", F.coalesce("support", F.lit(0)).alias("support")
         )
-        out = scored.filter(F.col("support") >= min_sup).localCheckpoint(eager=False)
-        e = out.select("u", "v")
-    return out
+        return scored.filter(F.col("support") >= min_sup)
 
-
-def bfs_hops_per_seed(
-    pairs: DataFrame,
-    seeds: DataFrame | None = None,
-    *,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    seed_col: str = "node",
-    max_iter: int = 20,
-    seed_filter=None,
-) -> DataFrame:
-    """Per-seed hop distances over the symmetrized pair graph: returns
-    (seed, node, hops) for every (seed, reachable node) pair within
-    ``max_iter`` hops — ``bfs_hops`` generalized from "min distance to
-    the seed SET" to independent single-source BFS runs sharing one
-    frontier pipeline (state keyed by (seed, node), so all sources
-    expand in the same per-round join; the classic multi-source trick
-    that makes k centrality probes cost one BFS, not k).
-
-    Same iteration discipline as ``connected_components``: edges
-    checkpointed once, per-round anti-join against settled labels so
-    each (seed, node) is expanded exactly once, lineage truncated with
-    localCheckpoint, one (empty?) action per round. Feeds closeness /
-    harmonic centrality estimates from a hash-chosen probe set.
-    """
-    edges = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if seed_filter is not None:
-        # Derive seeds from the checkpointed edges so the pair pipeline
-        # runs exactly once (see bfs_hops docstring).
-        seeds = edges.select(F.col("u").alias(seed_col)).distinct().filter(
-            seed_filter(F.col(seed_col))
-        )
-    labels = (
-        seeds.select(F.col(seed_col).alias("seed"))
-        .distinct()
-        .select("seed", F.col("seed").alias("node"), F.lit(0).cast("long").alias("hops"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = labels
-    prev_frontier = None
-    for _ in range(max_iter):
-        neighbors = (
-            edges.join(frontier.withColumnRenamed("node", "u"), "u")
-            .select("seed", F.col("v").alias("node"), (F.col("hops") + 1).alias("hops"))
-            .distinct()
-        )
-        # Two-frontier anti-join (r10): per seed, a neighbor of a
-        # distance-r node has distance r-1, r or r+1, so the settled
-        # (seed, node) pairs reachable from this round's frontier all
-        # sit in the current or previous frontier — anti-joining those
-        # two is equivalent to anti-joining the whole label set and
-        # keeps the per-round shuffle O(frontier), not O(labels)
-        # (see bfs_hops).
-        seen = (
-            frontier if prev_frontier is None else frontier.union(prev_frontier)
-        )
-        new = neighbors.join(
-            seen.select("seed", "node"), ["seed", "node"], "left_anti"
-        ).localCheckpoint(eager=True)
-        if new.isEmpty():
-            break
-        # Append-only accumulator over already-checkpointed rounds: keep
-        # the union LAZY (see bfs_hops — re-checkpointing it was a full
-        # re-materialization of all settled labels every round).
-        labels = labels.union(new)
-        prev_frontier = frontier
-        frontier = new
-    return labels
+    return _fixpoint(e, step, rounds=rounds, checkpoint_every=1)

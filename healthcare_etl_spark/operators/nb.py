@@ -37,10 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from healthcare_etl_spark.functions.rounding import stable_round
-
-
-def _fold_sum(arr) -> F.Column:
-    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
+from healthcare_etl_spark.functions.vectors import array_sum
 
 
 def nb_lang_confusion(
@@ -126,7 +123,7 @@ def nb_lang_confusion(
     )
     scores = (
         cand_rows.groupBy(id_col, "actual", "cand")
-        .agg(_fold_sum(F.array_sort(F.collect_list("tok_lp"))).alias("s"))
+        .agg(array_sum(F.array_sort(F.collect_list("tok_lp"))).alias("s"))
         .join(F.broadcast(priors), F.col("cand") == F.col("p_lang"))
         .select(id_col, "actual", "cand", (F.col("s") + F.col("prior_lp")).alias("score"))
     )

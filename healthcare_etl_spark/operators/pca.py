@@ -35,10 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from healthcare_etl_spark.functions.rounding import stable_round
-
-
-def _fold_sum(arr) -> F.Column:
-    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
+from healthcare_etl_spark.functions.vectors import array_sum
 
 
 def covariance_rows(
@@ -147,7 +144,7 @@ def pca_power_projection(
     v_df = spark.range(1).select(F.array(*[F.lit(x) for x in v]).alias("v"))
     mean_v = _as_array(means, "i", "mean", "mv")
     centered = F.zip_with(vec_col, "mv", lambda x, m: x.cast("double") - m)
-    proj = _fold_sum(F.zip_with(centered, F.col("v"), lambda d, vi: d * vi))
+    proj = array_sum(F.zip_with(centered, F.col("v"), lambda d, vi: d * vi))
     return (
         emb.select(id_col, vec_col)
         .crossJoin(F.broadcast(mean_v))

@@ -1,12 +1,8 @@
-"""Scale-pattern operators: skew mitigation, upserts, snapshots.
+"""Scale-pattern operators: upserts, snapshots, global ranks.
 
 These are the patterns that keep the 100 TB plans healthy when the
 built-in machinery needs help:
 
-- ``salted_join``: explicit key-salting for joins whose hot keys exceed
-  what AQE's skew-join splitting handles (AQE splits skewed *partitions*
-  of a sort-merge join; a single monster key still lands in one task —
-  salting spreads it over N).
 - ``latest_snapshot``: upsert/compaction semantics — keep the newest row
   per key (the batch equivalent of MERGE INTO ... WHEN MATCHED UPDATE).
 - ``scd2_merge``: slowly-changing-dimension type-2 emulation without
@@ -26,43 +22,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    on: str,
-    n_salts: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with the left side's hot keys spread across ``n_salts``
-    shuffle partitions.
-
-    Left rows get a random-ish deterministic salt (hash of a unique-ish
-    row fingerprint mod n_salts); the right side is replicated once per
-    salt value (explode of a literal range — cheap for dimension-sized
-    rights). The join key becomes (key, salt), so one hot key occupies
-    ``n_salts`` tasks instead of one.
-
-    Only left-preserving join types are supported: the right side is
-    replicated ``n_salts`` times, so right/full-outer would emit each
-    unmatched right row once per salt.
-    """
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi", "semi", "left_anti", "leftanti", "anti"}
-    if how not in allowed:
-        raise ValueError(
-            f"salted_join: how={how!r} not supported — the salted right side is "
-            f"replicated {n_salts}x, which duplicates unmatched right rows under "
-            f"right/full joins. Use one of {sorted(allowed)}."
-        )
-    salt = (F.xxhash64(*[F.col(c) for c in left.columns]) % n_salts + n_salts) % n_salts
-    l_salted = left.withColumn("__salt", salt.cast("int"))
-    r_salted = right.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    out = l_salted.join(r_salted, on=[on, "__salt"], how=how)
-    return out.drop("__salt")
 
 
 def latest_snapshot(

@@ -492,7 +492,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(docs, threshold=0.5).select("doc_a", "doc_b")
-    return pagerank(pairs, iterations=5, teleport_weight=0.15).select(
+    return pagerank(pairs, iterations=5).select(
         F.col("node").alias("doc_id"), "rank"
     )
 

@@ -1204,48 +1204,40 @@ e0 AS MATERIALIZED (
         "Each round is one degree aggregate + two semi-join-shaped "
         "edge filters, all keyed on the node id; rounds are fixed on "
         "both engines so the unrolled oracle matches without a "
-        "convergence handshake; edge lineage localCheckpoints every "
-        "other round (the q_dedup_clusters discipline)."
+        "convergence handshake; the Spark peel checkpoints its edge "
+        "lineage every round and stops once a round removes no edge."
     ),
     tags=("dedup", "extension", "iterative", "graph"),
 )
 def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
+    from healthcare_etl_spark.operators.graph import _fixpoint, _symmetric_edges
+
     docs = load_table(spark, sf_dir, "documents")
     pairs = jaccard_pairs(docs, threshold=0.5).select("doc_a", "doc_b")
-    e = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .union(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # Convergence-checked peel (the connected_components discipline:
-    # one action per round, bounded lineage). Peeling is MONOTONE — once
-    # a round removes no edge, the keep set is stable and every later
-    # round is a no-op — so breaking on an unchanged edge count returns
-    # exactly what the fixed 8 rounds returned, while skipping the
-    # rounds that did nothing (guide §1.2: don't compute things you
-    # throw away). The count rides the same materialization the lazy
-    # checkpoint needs anyway, so each round still costs one action.
-    prev_n = None
-    for _i in range(8):
+
+    def peel(e: DataFrame) -> DataFrame:
         keep = (
             e.groupBy("u")
             .agg(F.count(F.lit(1)).alias("d"))
             .filter(F.col("d") >= 2)
             .select("u")
         )
-        e = (
-            e.join(keep, "u")
-            .join(keep.withColumnRenamed("u", "v"), "v")
-            .select("u", "v")
-            .localCheckpoint(eager=False)
-        )
-        n = e.count()
-        if n == prev_n:
-            break
-        prev_n = n
+        return e.join(keep, "u").join(keep.withColumnRenamed("u", "v"), "v").select("u", "v")
+
+    # Peeling is MONOTONE — once a round removes no edge, the keep set is
+    # stable and every later round is a no-op — so stopping on an
+    # unchanged edge count returns exactly what the fixed 8 rounds
+    # returned, while skipping the rounds that did nothing. The count
+    # rides the same materialization the lazy checkpoint needs anyway.
+    e = _fixpoint(
+        _symmetric_edges(pairs, "doc_a", "doc_b"),
+        peel,
+        rounds=8,
+        checkpoint_every=1,
+        signature=lambda e: e.count(),
+    )
     return e.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("degree")
     )

@@ -2732,7 +2732,7 @@ def _register_ppr() -> None:
         seeds = docs.filter(F.col("source") == "src0").select(
             F.col("doc_id").alias("node")
         )
-        return personalized_pagerank(pairs, seeds, iterations=5, teleport_weight=0.15).select(
+        return personalized_pagerank(pairs, seeds, iterations=5).select(
             F.col("node").alias("doc_id"), F.col("rank").alias("ppr_rank")
         )
 

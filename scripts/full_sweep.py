@@ -27,6 +27,16 @@ TABLES = [
 ]
 
 
+def _row_strings(pdf) -> list[str]:
+    """Rows as sorted '|'-joined strings over the sorted columns; an empty
+    frame gives an empty list (pandas' row-wise ``agg`` returns a frame,
+    not a series, when there are no rows)."""
+    cols = sorted(pdf.columns)
+    return sorted(
+        "|".join(row) for row in pdf[cols].astype(str).itertuples(index=False, name=None)
+    )
+
+
 def main() -> None:
     import __spark_entry__ as entry
 
@@ -69,21 +79,7 @@ def main() -> None:
                 results[name] = {"rows_only": len(spdf)}
                 continue
             odf = con.sql(osql[name]).df()
-            s = (
-                spdf[sorted(spdf.columns)]
-                .astype(str)
-                .agg("|".join, axis=1)
-                .sort_values()
-                .reset_index(drop=True)
-            )
-            o = (
-                odf[sorted(odf.columns)]
-                .astype(str)
-                .agg("|".join, axis=1)
-                .sort_values()
-                .reset_index(drop=True)
-            )
-            ok = bool(s.equals(o))
+            ok = _row_strings(spdf) == _row_strings(odf)
             results[name] = {"match": ok, "rows": len(spdf)}
             n_match += ok
             n_mismatch += not ok

@@ -728,6 +728,22 @@ def test_connected_components_long_path_bounded_lineage(spark):
     assert comp == {i: 0 for i in range(n)}
 
 
+def test_connected_components_raise_at_round_limit(spark):
+    """Both connected-components variants raise, rather than return
+    partial labels, when the round limit is hit before the fixpoint: a
+    31-node path needs ~30 propagation rounds and ~5 star rounds."""
+    from healthcare_etl_spark.operators.graph import (
+        connected_components,
+        connected_components_two_phase,
+    )
+
+    path = spark.createDataFrame([(i, i + 1) for i in range(30)], ["doc_a", "doc_b"])
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(path, max_iter=2)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components_two_phase(path, max_iter=1)
+
+
 def test_stream_stream_funnel_equals_batch(spark, sf_smoke):
     from healthcare_etl_spark.streaming.joins import batch_funnel, run_stream_stream_funnel
 
@@ -1665,9 +1681,14 @@ def test_operators_handle_empty_input(spark):
     from healthcare_etl_spark.operators.asof import asof_join
     from healthcare_etl_spark.operators.dedup import exact_dedup, jaccard_pairs
     from healthcare_etl_spark.operators.graph import (
+        bfs_hops,
+        bfs_hops_per_seed,
         connected_components,
         connected_components_two_phase,
+        ktruss_edges,
+        label_propagation_communities,
         pagerank,
+        personalized_pagerank,
     )
     from healthcare_etl_spark.operators.rangejoin import banded_range_join
     from healthcare_etl_spark.operators.sessionize import session_stats
@@ -1677,12 +1698,18 @@ def test_operators_handle_empty_input(spark):
         [], "event_id long, ts timestamp, user_id long, event_type string, value double"
     )
     empty_pairs = spark.createDataFrame([], "doc_a long, doc_b long")
+    empty_seeds = spark.createDataFrame([], "node long")
 
     assert exact_dedup(empty_docs).count() == 0
     assert jaccard_pairs(empty_docs, threshold=0.5).count() == 0
     assert connected_components(empty_pairs).count() == 0
     assert connected_components_two_phase(empty_pairs).count() == 0
     assert pagerank(empty_pairs).count() == 0
+    assert personalized_pagerank(empty_pairs, empty_seeds).count() == 0
+    assert bfs_hops(empty_pairs, empty_seeds).count() == 0
+    assert bfs_hops_per_seed(empty_pairs, empty_seeds).count() == 0
+    assert label_propagation_communities(empty_pairs, src="doc_a", dst="doc_b").count() == 0
+    assert ktruss_edges(empty_pairs, src="doc_a", dst="doc_b").count() == 0
     assert session_stats(empty_events).count() == 0
     assert (
         banded_range_join(

@@ -503,8 +503,9 @@ def test_salted_join_spreads_and_guards(spark):
         .select("k", "__salt").distinct().count()
     )
     assert n_groups > 2
-    with pytest.raises(ValueError):
-        salted_join(facts, dim, "k", "dk", how="full")
+    for how in ("right", "right_outer", "full", "full_outer", "cross"):
+        with pytest.raises(ValueError):
+            salted_join(facts, dim, "k", "dk", how=how)
 
 
 def test_missing_input_raises_clear_error(spark, tmp_path):

@@ -1,5 +1,5 @@
-"""Scale-pattern tests: salting, upserts, SCD2, partition pruning,
-bucketed shuffle-free joins."""
+"""Scale-pattern tests: upserts, SCD2, partition pruning, bucketed
+shuffle-free joins."""
 
 from __future__ import annotations
 
@@ -16,49 +16,6 @@ def _plan(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
-
-
-def test_salted_join_matches_plain_join(spark, sf_smoke):
-    from healthcare_etl_spark.operators.scale import salted_join
-    from healthcare_etl_spark.sources import load_table
-
-    o = load_table(spark, sf_smoke, "orders").withColumnRenamed("o_custkey", "custkey")
-    c = load_table(spark, sf_smoke, "customer").withColumnRenamed("c_custkey", "custkey")
-    plain = o.join(c, "custkey").count()
-    salted = salted_join(o, c, on="custkey", n_salts=8).count()
-    assert salted == plain
-
-
-def test_salted_join_spreads_hot_key(spark):
-    from healthcare_etl_spark.operators.scale import salted_join
-
-    # one monster key: 10k rows on 'hot'
-    left = spark.range(10_000).select(F.lit("hot").alias("k"), F.col("id").alias("v"))
-    right = spark.createDataFrame([("hot", 1)], ["k", "r"])
-    out = salted_join(left, right, on="k", n_salts=8)
-    assert out.count() == 10_000
-    # the salt column must actually take multiple values pre-join
-    n_salts_used = (
-        left.withColumn(
-            "s", (F.xxhash64(*[F.col(c) for c in left.columns]) % 8 + 8) % 8
-        )
-        .select("s")
-        .distinct()
-        .count()
-    )
-    assert n_salts_used == 8
-
-
-def test_salted_join_rejects_right_preserving(spark):
-    import pytest
-
-    from healthcare_etl_spark.operators.scale import salted_join
-
-    left = spark.createDataFrame([("a", 1)], ["k", "v"])
-    right = spark.createDataFrame([("a", 1), ("b", 2)], ["k", "r"])
-    for how in ("right", "right_outer", "full", "full_outer", "cross"):
-        with pytest.raises(ValueError, match="not supported"):
-            salted_join(left, right, on="k", how=how)
 
 
 def test_latest_snapshot(spark):

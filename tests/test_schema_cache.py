@@ -8,18 +8,29 @@ from __future__ import annotations
 import os
 import time
 
+from pyspark.sql import DataFrameReader
 from pyspark.sql import functions as F
 
 from healthcare_etl_spark.sources import readers
 from healthcare_etl_spark.sources.readers import load_table
 
 
-def test_repeat_load_hits_memo_and_matches(spark, sf_smoke):
+def test_repeat_load_hits_memo_and_matches(spark, sf_smoke, monkeypatch):
     readers._SCHEMA_CACHE.clear()
     readers._RELATION_CACHE.clear()
+    calls = []
+    real_parquet = DataFrameReader.parquet
+
+    def counting_parquet(self, *paths, **options):
+        calls.append(paths)
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting_parquet)
     a = load_table(spark, sf_smoke, "lineitem")
     assert len(readers._SCHEMA_CACHE) == 1
+    assert len(calls) == 1
     b = load_table(spark, sf_smoke, "lineitem")
+    assert len(calls) == 1  # the repeat load never reached the reader
     assert a.schema == b.schema
     assert a.count() == b.count()
 
