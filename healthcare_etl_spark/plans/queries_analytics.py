@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from healthcare_etl_spark.functions.rounding import stable_round
 from healthcare_etl_spark.plans.registry import register
-from healthcare_etl_spark.sources import load_table, spread
+from healthcare_etl_spark.sources import load_table, local_frame, spread
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
@@ -1273,7 +1273,7 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         counts.select("event_type")
         .distinct()
         .crossJoin(F.broadcast(spark.range(10).select(F.col("id").alias("bucket"))))
-        .crossJoin(F.broadcast(spark.createDataFrame([("ref",), ("cur",)], ["period"])))
+        .crossJoin(F.broadcast(local_frame(spark, [("ref",), ("cur",)], "period string")))
     )
     filled = grid.join(counts, ["event_type", "bucket", "period"], "left").select(
         "event_type", "bucket", "period", F.coalesce("n", F.lit(0)).alias("n")

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from healthcare_etl_spark.plans.registry import register
-from healthcare_etl_spark.sources import load_table, spread
+from healthcare_etl_spark.sources import load_table, local_frame, spread
 
 
 @register(
@@ -323,7 +323,7 @@ def q_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("cell.i", "cell.bucket")
     sketch = cells.groupBy("i", "bucket").agg(F.count(F.lit(1)).alias("c"))
     probe_rows = [(t, i) for t in _CMS_PROBES for i in range(_CMS_DEPTH)]
-    probes = spark.createDataFrame(probe_rows, ["token", "i"]).select(
+    probes = local_frame(spark, probe_rows, "token string, i long").select(
         "token",
         "i",
         (
@@ -1708,7 +1708,8 @@ def q_submodular_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
         covered = cov_now
         picked.append((k, int(row["doc_id"]), int(row["gain"]), cov_now.count()))
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [(k, d, g, c, total) for k, d, g, c in picked],
         "k long, doc_id long, gain long, covered long, total long",
     )

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from healthcare_etl_spark.functions.rounding import stable_round
 from healthcare_etl_spark.plans.registry import register
-from healthcare_etl_spark.sources import load_table, spread
+from healthcare_etl_spark.sources import load_table, local_frame, spread
 
 
 @register(
@@ -1114,7 +1114,7 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
             nxt[s] = _markov_round6(acc)
         v = nxt
     out = [(s, float(v[s])) for s in states]
-    return spark.createDataFrame(out, "state string, stationary_p double")
+    return local_frame(spark, out, "state string, stationary_p double")
 
 
 def _association_rules_cte() -> str:
@@ -2513,7 +2513,7 @@ def _register_trigram_search() -> None:
             .select("doc_id", F.expr("substring(text, i, 3)").alias("g"))
             .distinct()
         )
-        qgrams = spark.createDataFrame([(g,) for g in _TRIGRAMS], ["g"])
+        qgrams = local_frame(spark, [(g,) for g in _TRIGRAMS], "g string")
         cand = (
             doc_grams.join(F.broadcast(qgrams), "g")
             .groupBy("doc_id")

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from healthcare_etl_spark.functions.rounding import stable_round
 from healthcare_etl_spark.plans.registry import register
-from healthcare_etl_spark.sources import load_table
+from healthcare_etl_spark.sources import load_table, local_frame
 
 from healthcare_etl_spark.plans.queries_mlops import (  # noqa: F401
     _logistic_features_sql,
@@ -553,7 +553,8 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 float(_markov_round6(max(effs[c], 0.0) / tot_eff)),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "channel string, p_full double, p_removed double, "
         "removal_effect double, attribution_share double",
@@ -897,7 +898,8 @@ def q_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
     k = len(states)
     h = _markov_round6(sq / 1000000000.0)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 k,

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from healthcare_etl_spark.functions.rounding import stable_round
 from healthcare_etl_spark.plans.registry import register
-from healthcare_etl_spark.sources import load_table
+from healthcare_etl_spark.sources import load_table, local_frame
 
 from healthcare_etl_spark.plans.queries_mlops import (  # noqa: F401
     _logistic_features_sql,
@@ -942,7 +942,8 @@ def _register_partial_dependence() -> None:
         ).persist()
         try:
             b0, b1, b2 = logistic_fit(feat, rounds=4)
-            grid = spark.createDataFrame(
+            grid = local_frame(
+                spark,
                 [(g,) for g in _PD_GRID], "g double"
             )
             eta = F.lit(b0) + F.lit(b1) * F.col("g") + F.lit(b2) * F.col("x2")
@@ -1375,7 +1376,8 @@ def _register_raking() -> None:
             (et, wd, cells[(et, wd)], float(aq[(et, wd)]))
             for (et, wd) in sorted(cells)
         ]
-        res = spark.createDataFrame(
+        res = local_frame(
+            spark,
             out_rows, "event_type string, weekday long, n long, aq double"
         )
         return res.select(

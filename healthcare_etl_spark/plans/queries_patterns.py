@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from healthcare_etl_spark.functions.rounding import stable_round
 from healthcare_etl_spark.plans.registry import register
-from healthcare_etl_spark.sources import load_table, spread
+from healthcare_etl_spark.sources import load_table, local_frame, spread
 from healthcare_etl_spark.plans.queries_dedup import _MD5H, _shingles_sql
 from healthcare_etl_spark.plans.queries_similarity import _COS
 
@@ -408,7 +408,7 @@ def q_ransac_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         out_col="rk",
     ).select("x", "y", "rk")
     nn = pts.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    hc = spark.createDataFrame(_ransac_hashes(), "cand long, ha long, hb long")
+    hc = local_frame(spark, _ransac_hashes(), "cand long, ha long, hb long")
     cands = hc.crossJoin(F.broadcast(nn)).select(
         "cand",
         (F.col("ha") % F.col("n") + 1).alias("ra"),
@@ -1521,7 +1521,7 @@ def q_bloom_size_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round((F.col("m") / F.col("n")) * F.lit(ln2)).cast("long"),
         ).alias("k"),
     )
-    hc = spark.createDataFrame([(i,) for i in range(16)], "i long")
+    hc = local_frame(spark, [(i,) for i in range(16)], "i long")
 
     def probe_hash(uid_col):
         return md5_hash31(
@@ -1857,7 +1857,7 @@ def q_rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     both = ra.join(rb, "doc_id").select(
         "doc_id", F.greatest("rka", "rkb").alias("first_common_depth")
     )
-    wts = spark.createDataFrame(_rbo_weights(), "d long, w_nano long")
+    wts = local_frame(spark, _rbo_weights(), "d long, w_nano long")
     xd = (
         F.broadcast(wts)
         .join(both, both.first_common_depth <= wts.d, "left")
@@ -2226,7 +2226,7 @@ def q_sessionize_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
         for g in _SESS_GAPS_MIN
     ]
     agg = gaps.agg(*aggs)
-    thr = spark.createDataFrame([(g,) for g in _SESS_GAPS_MIN], "gap_minutes long")
+    thr = local_frame(spark, [(g,) for g in _SESS_GAPS_MIN], "gap_minutes long")
     brk = None
     for g in _SESS_GAPS_MIN:
         cond = F.when(F.col("gap_minutes") == g, F.col(f"brk{g}"))
@@ -2377,7 +2377,7 @@ def q_lsh_s_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_candidates"),
         )
     )
-    theory = spark.createDataFrame(_lsh_theory_rows(), "jb long, p_theory double")
+    theory = local_frame(spark, _lsh_theory_rows(), "jb long, p_theory double")
     return (
         F.broadcast(theory)
         .join(joined, "jb", "left")
@@ -2622,7 +2622,7 @@ def q_chunk_size_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         exclusive=True,
         out_col="s",
     )
-    grid = spark.createDataFrame([(c,) for c in _CHUNK_SIZES], "c long")
+    grid = local_frame(spark, [(c,) for c in _CHUNK_SIZES], "c long")
     per_doc = pref.crossJoin(F.broadcast(grid)).select(
         "c", "n_tok",
         F.expr("(s + n_tok - 1) div c - s div c").alias("n_splits"),

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from healthcare_etl_spark.functions.rounding import stable_round
 from healthcare_etl_spark.plans.registry import register
-from healthcare_etl_spark.sources import load_table, spread
+from healthcare_etl_spark.sources import load_table, local_frame, spread
 from healthcare_etl_spark.plans.queries_patterns import (
     _WOE_THRESH,
     _ppl_tertiles,
@@ -444,7 +444,7 @@ def q_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.size(F.split("text", " "))).cast("long").alias("tok")
     )
     tot = src.agg(F.sum("tok").cast("long").alias("t"))
-    alphas = spark.createDataFrame([(a,) for a in _MIX_ALPHAS], "alpha_tenths long")
+    alphas = local_frame(spark, [(a,) for a in _MIX_ALPHAS], "alpha_tenths long")
     powed = (
         src.crossJoin(F.broadcast(tot))
         .crossJoin(F.broadcast(alphas))
@@ -1165,7 +1165,7 @@ def q_quantile_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").over(w_cum).cast("long").alias("cum"),
         F.sum("n").over(w_tot).cast("long").alias("nt"),
     )
-    qs = spark.createDataFrame(_QSK_QS, "qn long, qd long")
+    qs = local_frame(spark, _QSK_QS, "qn long, qd long")
     tgt = cum.crossJoin(F.broadcast(qs)).withColumn(
         # integer ceil-division via `div` (exact at any corpus size; a
         # double `/` would be exact only below 2^53)

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from healthcare_etl_spark.operators.similarity import cosine_topk, lsh_ann_topk, neardup_pairs
 from healthcare_etl_spark.plans.registry import register
-from healthcare_etl_spark.sources import load_table
+from healthcare_etl_spark.sources import load_table, local_frame
 
 # DuckDB fragments mirroring functions.vectors (fold order preserved).
 _DOT = (
@@ -2121,7 +2121,8 @@ def q_cluster_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     exp = s_a * 1.0 * s_b / s_n
     ari = r6((s_ij - exp) / ((s_a + s_b) / 2.0 - exp))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 nn,
@@ -2344,7 +2345,7 @@ def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             (int(pick["vec_id"]), [float(v) for v in pick["embedding"]], int(pick["dq"]))
         )
     rows = [(i, cid, dq / 1000000.0) for i, (cid, _, dq) in enumerate(chosen)]
-    out = spark.createDataFrame(rows, "k long, vec_id long, sel_d2 double")
+    out = local_frame(spark, rows, "k long, vec_id long, sel_d2 double")
     return out.select("k", "vec_id", stable_round(F.col("sel_d2"), 6).alias("sel_d2")).orderBy("k")
 
 

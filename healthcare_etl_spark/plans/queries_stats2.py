@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from healthcare_etl_spark.functions.rounding import stable_round
 from healthcare_etl_spark.plans.registry import register
-from healthcare_etl_spark.sources import load_table
+from healthcare_etl_spark.sources import load_table, local_frame
 
 
 def _arm_a(col: str = "user_id"):
@@ -3012,7 +3012,8 @@ def q_regression_discontinuity(spark: SparkSession, sf_dir: str) -> DataFrame:
         if ab is None or be is None
         else r6((ab["intercept_at_cutoff"] - be["intercept_at_cutoff"]) / 100.0)
     )
-    return u.sparkSession.createDataFrame(
+    return local_frame(
+        u.sparkSession,
         [
             (
                 None if ab is None else int(ab["n"]),
@@ -3341,7 +3342,7 @@ def q_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         r_stat = o["dev"] / (n * math.sqrt((n * s2 - s * s) * 1.0 / (n * (n - 1))))
         rows.append((k, o["day"].strftime("%Y-%m-%d"), o["x"] / 100.0, r_stat))
         d = d.filter(F.col("day") != F.lit(o["day"])).localCheckpoint(eager=True)
-    out = spark.createDataFrame(rows, "k long, day string, revenue double, r_stat double")
+    out = local_frame(spark, rows, "k long, day string, revenue double, r_stat double")
     return out.select(
         "k",
         "day",

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from healthcare_etl_spark.functions.rounding import stable_round
 from healthcare_etl_spark.plans.registry import register
-from healthcare_etl_spark.sources import load_table
+from healthcare_etl_spark.sources import load_table, local_frame
 
 _DEC = "decimal(38,0)"
 
@@ -142,7 +142,7 @@ def q_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     dev = series.crossJoin(F.broadcast(mu)).select(
         "t", (F.col("y") - F.col("sy").cast("double") / F.col("n")).alias("d"), "n"
     )
-    fac = spark.createDataFrame(_FACTORS, "period int, t long, c double, s double")
+    fac = local_frame(spark, _FACTORS, "period int, t long, c double, s double")
     terms = F.broadcast(fac).join(dev, "t").select(
         "period",
         F.round(F.col("d") * F.col("c") * 1000000.0).cast("long").alias("ct"),

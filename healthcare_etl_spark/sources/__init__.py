@@ -2,6 +2,7 @@ from healthcare_etl_spark.sources.readers import (
     TABLE_NAMES,
     MissingInputError,
     load_table,
+    local_frame,
     spread,
     spread_count,
     read_csv,
@@ -25,6 +26,7 @@ __all__ = [
     "SyntheticDocsDataSource",
     "jdbc_config_from_env",
     "load_table",
+    "local_frame",
     "spread",
     "spread_count",
     "materialize",

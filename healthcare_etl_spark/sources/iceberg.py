@@ -903,10 +903,13 @@ def delete_rows(spark: SparkSession, table_path: str, predicate: str) -> int:
     )
     version = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
     del_dir = os.path.join(table_path, "data", f"deletes-{version}")
-    # Spec: position delete files are sorted by file_path then pos.
-    matched.sort("file_path", "pos").coalesce(1).write.mode("overwrite").parquet(
-        del_dir
-    )
+    # Spec: position delete files are sorted by file_path then pos. One
+    # partition sorted locally writes that one sorted file without the
+    # sampling job a global sort's range exchange runs; the masked scan
+    # upstream of the exchange keeps its own parallelism.
+    matched.repartition(1).sortWithinPartitions("file_path", "pos").write.mode(
+        "overwrite"
+    ).parquet(del_dir)
     return _write_snapshot(
         table_path,
         meta,

@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from healthcare_etl_spark.sources.readers import local_frame
+
 # Columns ``to_dataframe(..., positions=True)`` appends: the data file as
 # Spark reports it (``_metadata.file_path``, a percent-encoded URI) and
 # the physical row index inside it.
@@ -131,7 +133,7 @@ def to_dataframe(spark: SparkSession, plan: ScanPlan, *, positions: bool = False
     extra = [T.StructField(FILE_PATH, T.StringType()), T.StructField(POS, T.LongType())]
     out_schema = T.StructType(plan.schema.fields + (extra if positions else []))
     if not plan.groups:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     schemas = [plan.read_schema] + [eq.read_schema for eq in plan.equality_deletes]
     if any("parquet.field.id" in f.metadata for s in schemas for f in s.fields):
         spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
@@ -158,12 +160,16 @@ def to_dataframe(spark: SparkSession, plan: ScanPlan, *, positions: bool = False
     if masked:
         masks = []
         if plan.positions:
-            # Decoded on the driver, so small — but a frame built from
-            # local rows carries no size estimate the planner could use.
+            # Decoded on the driver into an Arrow LocalRelation (no Python
+            # worker). Above the local-relation threshold it is an Arrow
+            # batch RDD with no size estimate, so the hint keeps the
+            # anti-join a broadcast at every mask size.
             masks.append(
                 F.broadcast(
-                    spark.createDataFrame(
-                        [(p, int(i)) for p, i in plan.positions], f"{_KEY} string, {POS} long"
+                    local_frame(
+                        spark,
+                        [(p, int(i)) for p, i in plan.positions],
+                        f"{_KEY} string, {POS} long",
                     )
                 )
             )

@@ -77,23 +77,62 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
     return df.withColumns({c: F.col(c).cast("timestamp") for c in ntz_cols})
 
 
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples, in ``schema`` field
+    order) — the one way this package builds a frame from local data.
+
+    The rows go to the JVM as one Arrow table, built column by column and
+    typed by ``schema`` (a DDL string or a ``StructType``; no type
+    inference). Spark keeps a table under 48 MB
+    (``spark.sql.execution.arrow.localRelationThreshold``) as a
+    ``LocalRelation`` and turns a larger one into Arrow batches; neither
+    starts a Python worker, while ``createDataFrame`` over a list of
+    tuples pickles the rows into a ``PythonRDD`` that does. The result's
+    schema, nullability included, is ``schema``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    columns = []
+    for i, field in enumerate(arrow_schema):
+        column = pa.array([r[i] for r in rows], type=field.type)
+        if column.null_count and not field.nullable:
+            raise ValueError(f"field {field.name}: None in a non-nullable column")
+        columns.append(column)
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow_schema), schema)
+
+
 # Per-path cache of the detected epoch granularity for bigint ts columns
 # (one tiny sampling job per distinct file, not per query).
 _EPOCH_UNIT_CACHE: dict[str, int] = {}
 
-# Memo of INFERRED PARQUET SCHEMAS (metadata only — never rows; every
-# action still scans the files). Without it each load_table call re-reads
-# parquet footers (~100 ms per call on local fixtures, a listing+footer
-# job on object stores) — a query composing 20 table reads pays seconds
-# of pure metadata work at plan build. This is what a catalog/metastore
-# provides in production; keying on (path, mtime_ns, size, reader confs)
-# keeps it exactly as fresh as re-inference: any rewrite/append touches
-# the file or directory signature and misses the cache.
-_SCHEMA_CACHE: dict[tuple, T.StructType] = {}
+# Memo of the lazy parquet RELATION HANDLE (the unexecuted DataFrame)
+# per local path. Metadata only — never rows; every action still scans
+# the files. Building a handle costs a listing plus a footer read to
+# infer the schema (~100 ms per call on local fixtures, a listing+footer
+# job on object stores) and a dozen Py4J round trips; a query composing
+# 20 table reads would pay seconds of it at plan build. A DataFrame is an
+# immutable logical plan, so handing the same one back is semantically
+# identical to rebuilding it. Exactly as fresh as rebuilding: the key is
+# the path's full signature (``_local_file_sig``) plus the reader confs,
+# and a handle is only returned to the session that owns it.
+_PARQUET_MEMO: dict[tuple, DataFrame] = {}
 
 
-def _local_file_sig(path: str) -> tuple[int, int] | None:
-    """(mtime_ns, size) for plain local paths; None for remote URIs."""
+def _local_file_sig(path: str) -> tuple | None:
+    """What a rewrite of a plain local path must change, or None for
+    remote URIs and missing paths.
+
+    A file: (mtime_ns, size, inode) — a rewrite that restores both size
+    and mtime (``os.utime``, or a coarse mtime tick) still lands on a new
+    inode. A directory: the sorted (relative path, size, mtime_ns, inode)
+    of every file under it, so a part-file added or rewritten inside a
+    partition directory (``t.parquet/k=v/part-*``), which leaves the
+    root's own stat unchanged, changes the signature."""
     import os
 
     p = path[len("file:"):] if path.startswith("file:") else path
@@ -103,30 +142,31 @@ def _local_file_sig(path: str) -> tuple[int, int] | None:
         st = os.stat(p)
     except OSError:
         return None
-    return (st.st_mtime_ns, st.st_size)
-
-
-# Memo of the lazy RELATION HANDLE itself (the unexecuted DataFrame):
-# building one costs a fresh file listing + a dozen Py4J round trips
-# (~34 ms even with the schema known). A DataFrame is an immutable
-# logical plan — handing the same handle back is semantically identical
-# to rebuilding it, and no rows are ever cached. Guarded by object
-# IDENTITY of the owning SparkSession (weakref), so a stopped or new
-# session can never receive a handle bound to an old one.
-_RELATION_CACHE: dict[tuple, tuple] = {}
+    if not os.path.isdir(p):
+        return (st.st_mtime_ns, st.st_size, st.st_ino)
+    entries = []
+    for root, _dirs, names in os.walk(p):
+        for name in names:
+            full = os.path.join(root, name)
+            try:
+                fst = os.stat(full)
+            except OSError:  # removed mid-walk: the next call sees it gone
+                continue
+            entries.append((os.path.relpath(full, p), fst.st_size, fst.st_mtime_ns, fst.st_ino))
+    return tuple(sorted(entries))
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet`` with inferred schema and relation handle
-    memoized per (file signature, reader confs, session identity).
+    """``spark.read.parquet`` memoized per (path signature, reader confs)
+    for the owning session.
 
     The schema depends on the two parquet reader confs load_table
     manages (NTZ inference, nanos-as-long), so they are part of the key;
     a session where they differ re-infers rather than trusting a schema
-    inferred under other settings.
+    inferred under other settings. A handle owned by another session is
+    rebuilt; entries whose session has stopped are dropped, so a stopped
+    session's JVM objects are not pinned by the memo.
     """
-    import weakref
-
     sig = _local_file_sig(path)
     if sig is None:
         return spark.read.parquet(path)
@@ -139,27 +179,19 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
 
     key = (
         path,
-        *sig,
+        sig,
         conf("spark.sql.parquet.inferTimestampNTZ.enabled"),
         conf("spark.sql.legacy.parquet.nanosAsLong"),
     )
-    hit = _RELATION_CACHE.get(key)
-    if hit is not None and hit[0]() is spark:
-        return hit[1]
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is not None:
-        df = spark.read.schema(schema).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        if len(_SCHEMA_CACHE) > 512:
-            _SCHEMA_CACHE.clear()
-        _SCHEMA_CACHE[key] = df.schema
-    if len(_RELATION_CACHE) > 512:
-        _RELATION_CACHE.clear()
-    try:
-        _RELATION_CACHE[key] = (weakref.ref(spark), df)
-    except TypeError:  # pragma: no cover - non-weakref-able session stub
-        pass
+    hit = _PARQUET_MEMO.get(key)
+    if hit is not None and hit.sparkSession is spark:
+        return hit
+    for k, df in list(_PARQUET_MEMO.items()):
+        if df.sparkSession.sparkContext._jsc is None:  # its session stopped
+            del _PARQUET_MEMO[k]
+    if len(_PARQUET_MEMO) > 512:
+        _PARQUET_MEMO.clear()
+    df = _PARQUET_MEMO[key] = spark.read.parquet(path)
     return df
 
 

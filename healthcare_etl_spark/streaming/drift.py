@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from healthcare_etl_spark.functions.rounding import stable_round
+from healthcare_etl_spark.sources import local_frame
 from healthcare_etl_spark.streaming.windows import streaming_events
 
 _REF_CUTOFF = "2024-01-16"
@@ -53,7 +54,7 @@ def psi_from_counts(spark: SparkSession, counts: DataFrame) -> DataFrame:
         counts.select("event_type")
         .distinct()
         .crossJoin(spark.range(10).select(F.col("id").alias("bucket")))
-        .crossJoin(spark.createDataFrame([("ref",), ("cur",)], ["period"]))
+        .crossJoin(local_frame(spark, [("ref",), ("cur",)], "period string"))
     )
     filled = grid.join(counts, ["event_type", "bucket", "period"], "left").select(
         "event_type", "bucket", "period", F.coalesce("n", F.lit(0)).alias("n")
@@ -112,5 +113,5 @@ def run_streaming_psi_drift(
     # MemoryPlan), and the grid is dimension-sized by design, so a
     # driver-side copy is metadata-scale, not data-scale.
     sunk = spark.table(query_name)
-    counts = spark.createDataFrame(sunk.collect(), sunk.schema)
+    counts = local_frame(spark, sunk.collect(), sunk.schema)
     return psi_from_counts(spark, counts)
