@@ -11,20 +11,31 @@ weighted vocabulary, which is orders of magnitude smaller (Heaps' law:
 
 Engine mapping:
 
-- corpus scan -> one `groupBy(word)` shuffle (partial-aggregated);
-- per round: adjacent-pair counts come from a codegen'd
-  ``zip_with(syms, slice(syms, 2, ...))`` explode over the vocabulary,
-  aggregated with map-side combine; the winning pair is a
-  TakeOrdered(1) (count desc, pair asc tie-break — fully
-  deterministic);
-- the merge itself is a stateful left-to-right ``aggregate`` fold per
-  word, replacing non-overlapping occurrences greedily (exact BPE
-  semantics: in ``a a a`` the pair ``(a, a)`` merges once, leaving
-  ``aa a``) — the 1-row winner is broadcast-joined onto the vocabulary,
-  never collected to the driver;
-- the vocabulary frame is ``localCheckpoint``-ed per round (same
-  iteration discipline as ``operators.graph`` / ``similarity.
-  kmeans_lloyd``) so lineage stays bounded over many merges.
+- corpus scan -> one `groupBy(word)` shuffle (partial-aggregated) and a
+  TakeOrdered(``vocab_size``) by (count desc, word asc); Spark also
+  splits each kept word into its characters (``substr`` per code
+  point), so the symbol semantics are Spark's;
+- the ``(syms, cnt)`` rows are collected once — at most ``vocab_size``
+  of them, the same bound the vocabulary's ``limit`` already sets — and
+  every merge round runs on the driver: adjacent-pair counts weighted
+  by ``cnt``, the winner by (count desc, left asc, right asc) — Python
+  string order is code-point order, the same as Spark's UTF-8 byte
+  order — and the greedy left-to-right non-overlapping merge (in
+  ``a a a`` the pair ``(a, a)`` merges once, leaving ``aa a``);
+- the merge table goes back to the JVM as one Arrow ``LocalRelation``.
+
+Why the rounds stay off Spark: they never touch the corpus, only a
+frame of at most ``vocab_size`` rows. As Spark jobs, each round needed
+two eager materializations (a shuffle + TakeOrdered to pick the winner,
+a cross-join fold to apply it): 200-300 ms of job overhead a round
+for microseconds of work. On the driver, a call runs the same 2 Spark
+jobs (the vocabulary's shuffle and its collect) whatever ``n_merges``
+is.
+
+Applying a learned table (``bpe_token_counts``) does touch the corpus,
+so it stays one codegen'd Spark expression: every merge is a stateful
+``aggregate`` fold with the same greedy semantics, nested in training
+order.
 
 Determinism / oracle parity: counts are exact integers, tie-breaks are
 total orders, and the greedy fold has identical semantics in DuckDB's
@@ -34,30 +45,26 @@ decision exactly, so the whole training loop is hash-checkable.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections import Counter
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-# Greedy non-overlapping merge of the (l, r) pair carried on the row:
-# fold symbols left-to-right; when the accumulator's last symbol is l
-# and the incoming symbol is r, replace the tail with the merged token.
-# Seeded with a '' sentinel so element_at(acc, -1) is always defined;
-# the finish lambda drops it.
-_MERGE_FOLD = """
-aggregate(
-    syms,
-    array(''),
-    (acc, x) -> CASE
-        WHEN element_at(acc, -1) = l AND x = r
-        THEN concat(slice(acc, 1, size(acc) - 1), array(concat(l, r)))
-        ELSE concat(acc, array(x))
-    END,
-    acc -> slice(acc, 2, size(acc) - 1)
-)
-"""
+from healthcare_etl_spark.sources.readers import local_frame
 
-_ADJACENT_PAIRS = (
-    "zip_with(slice(syms, 1, size(syms) - 1), slice(syms, 2, size(syms) - 1), "
-    "(a, b) -> struct(a AS l, b AS r))"
+# A word split into one symbol per character (code point).
+_CHARS = "transform(sequence(1, length(word)), i -> substr(word, i, 1))"
+
+# left/right are SQL keywords; _sym suffix keeps the oracle SQL clean
+_MERGES_SCHEMA = T.StructType(
+    [
+        T.StructField("round", T.IntegerType(), False),
+        T.StructField("left_sym", T.StringType(), True),
+        T.StructField("right_sym", T.StringType(), True),
+        T.StructField("merged", T.StringType(), True),
+        T.StructField("pair_count", T.LongType(), True),
+    ]
 )
 
 
@@ -78,6 +85,18 @@ def word_vocabulary(
     )
 
 
+def _merge(syms: list[str], left: str, right: str) -> list[str]:
+    """Greedy left-to-right non-overlapping merge of ``(left, right)``:
+    the driver-side twin of ``_merge_fold``."""
+    out: list[str] = []
+    for x in syms:
+        if out and out[-1] == left and x == right:
+            out[-1] = left + right
+        else:
+            out.append(x)
+    return out
+
+
 def bpe_merges(
     docs: DataFrame,
     *,
@@ -86,48 +105,49 @@ def bpe_merges(
     text_col: str = "text",
 ) -> DataFrame:
     """Learn the first ``n_merges`` BPE merges. Returns one row per
-    merge round: (round, left, right, merged, pair_count) — the merge
-    table a downstream tokenizer would apply in order.
+    merge round: (round, left_sym, right_sym, merged, pair_count) — the
+    merge table a downstream tokenizer would apply in order. Fewer rows
+    come back when the vocabulary runs out of adjacent pairs.
 
     ``vocab_size`` bounds the weighted word vocabulary the rounds
-    operate on (top words by count — at production scale you keep the
-    full distinct-word table; it is still corpus-scan-free after round
-    zero)."""
+    operate on (top words by count). It is also the bound on what the
+    driver holds: the rounds run in memory over the at most
+    ``vocab_size`` collected ``(syms, cnt)`` rows, after one Spark pass
+    over the corpus."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    vocab = word_vocabulary(docs, text_col=text_col, vocab_size=vocab_size).withColumn(
-        "syms",
-        F.expr("transform(sequence(1, length(word)), i -> substr(word, i, 1))"),
-    )
-    winners: list[DataFrame] = []
-    for r in range(1, n_merges + 1):
-        pair_counts = (
-            vocab.select("cnt", F.explode(F.expr(_ADJACENT_PAIRS)).alias("p"))
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("cnt").alias("pair_count"))
-        )
-        winner = (
-            pair_counts.orderBy(F.desc("pair_count"), F.asc("l"), F.asc("r"))
-            .limit(1)
-            .localCheckpoint(eager=True)
-        )
-        winners.append(winner.select(F.lit(r).cast("int").alias("round"), "l", "r", "pair_count"))
-        if r < n_merges:
-            vocab = (
-                vocab.crossJoin(F.broadcast(winner.select("l", "r")))
-                .select("word", "cnt", F.expr(_MERGE_FOLD).alias("syms"))
-                .localCheckpoint(eager=True)
-            )
-    out = winners[0]
-    for w in winners[1:]:
-        out = out.unionByName(w)
-    # left/right are SQL keywords; _sym suffix keeps the oracle SQL clean
-    return out.select(
-        "round",
-        F.col("l").alias("left_sym"),
-        F.col("r").alias("right_sym"),
-        F.concat("l", "r").alias("merged"),
-        "pair_count",
+    vocab = word_vocabulary(docs, text_col=text_col, vocab_size=vocab_size)
+    rows = vocab.select(F.expr(_CHARS).alias("syms"), "cnt").collect()
+    words = [(r["syms"], r["cnt"]) for r in rows]
+    merges = []
+    for rnd in range(1, n_merges + 1):
+        pair_counts: Counter[tuple[str, str]] = Counter()
+        for syms, cnt in words:
+            for pair in zip(syms, syms[1:]):
+                pair_counts[pair] += cnt
+        if not pair_counts:
+            break
+        (left, right), count = min(pair_counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append((rnd, left, right, left + right, count))
+        words = [(_merge(syms, left, right), cnt) for syms, cnt in words]
+    return local_frame(docs.sparkSession, merges, _MERGES_SCHEMA)
+
+
+def _merge_fold(syms: Column, left: str, right: str) -> Column:
+    """Greedy non-overlapping merge of ``(left, right)`` over an array of
+    symbols: fold left-to-right; when the accumulator's last symbol is
+    ``left`` and the incoming symbol is ``right``, replace the tail with
+    the merged token. Seeded with a '' sentinel so ``element_at(acc,
+    -1)`` is always defined; the finish lambda drops it. The symbols are
+    literals, never SQL text, so any character is safe."""
+    return F.aggregate(
+        syms,
+        F.array(F.lit("")),
+        lambda acc, x: F.when(
+            (F.element_at(acc, -1) == F.lit(left)) & (x == F.lit(right)),
+            F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(left + right))),
+        ).otherwise(F.concat(acc, F.array(x))),
+        lambda acc: F.slice(acc, 2, F.size(acc) - 1),
     )
 
 
@@ -142,30 +162,14 @@ def bpe_token_counts(
     plain row dicts: [{'left_sym': ..., 'right_sym': ...}, ...] in
     training order). One corpus scan, all folds nested in a single
     codegen'd expression — no shuffle beyond the per-doc aggregate."""
-
-    def esc(s: str) -> str:
-        return s.replace("'", "''")
-
-    expr = "transform(sequence(1, length(word)), i -> substr(word, i, 1))"
+    syms = F.expr(_CHARS)
     for m in merges_rows:
-        l, r = esc(m["left_sym"]), esc(m["right_sym"])
-        expr = f"""
-aggregate(
-    {expr},
-    array(''),
-    (acc, x) -> CASE
-        WHEN element_at(acc, -1) = '{l}' AND x = '{r}'
-        THEN concat(slice(acc, 1, size(acc) - 1), array(concat('{l}', '{r}')))
-        ELSE concat(acc, array(x))
-    END,
-    acc -> slice(acc, 2, size(acc) - 1)
-)
-"""
+        syms = _merge_fold(syms, m["left_sym"], m["right_sym"])
     words = docs.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("word")
     ).filter(F.length("word") > 0)
     return (
-        words.select(id_col, F.size(F.expr(expr)).cast("long").alias("n_tok"))
+        words.select(id_col, F.size(syms).cast("long").alias("n_tok"))
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_words"),

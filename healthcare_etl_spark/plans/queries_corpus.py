@@ -622,7 +622,8 @@ def _bpe_oracle(n_merges: int = 4, vocab_size: int = 200) -> str:
     adjacent-pair count table, the argmax winner, and the greedy
     left-to-right merge fold (DuckDB ``list_reduce`` with a
     ''-sentinel-seeded accumulator — identical non-overlapping-merge
-    semantics to the Spark ``aggregate`` fold)."""
+    semantics to the driver-side merge of ``bpe_merges`` and to the
+    Spark ``aggregate`` fold of ``bpe_token_counts``)."""
     fold = (
         "list_reduce("
         "list_prepend([''], list_transform(v.syms, x -> [x])), "
@@ -676,12 +677,13 @@ winner{r} AS (
     "q_bpe_merges",
     oracle=_bpe_oracle(),
     description=(
-        "BPE tokenizer training (Sennrich 2016), first 4 merges: one corpus "
-        "scan builds the weighted word vocabulary; each round counts adjacent "
-        "symbol pairs over the vocab (never the corpus), takes the "
-        "deterministic argmax, and applies the greedy non-overlapping merge "
-        "via a stateful fold. Every merge decision hash-matches the "
-        "unrolled-CTE oracle."
+        "BPE tokenizer training (Sennrich 2016), first 4 merges: one Spark "
+        "corpus scan builds the weighted word vocabulary (top 200 words, split "
+        "into characters by Spark) and collects it; the rounds then run on "
+        "the driver over those at most 200 rows (never the corpus): count "
+        "adjacent symbol pairs, take the deterministic argmax, apply the "
+        "greedy non-overlapping merge. 2 Spark jobs whatever the merge count. "
+        "Every merge decision hash-matches the unrolled-CTE oracle."
     ),
     tags=("corpus", "extension", "iterative"),
 )

@@ -669,9 +669,7 @@ def q_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = jaccard_pairs(docs, threshold=0.5).select("doc_a", "doc_b")
-    sym = pairs.select(F.col("doc_a").alias("node")).unionAll(
-        pairs.select(F.col("doc_b").alias("node"))
-    )
+    sym = pairs.select(F.explode(F.array("doc_a", "doc_b")).alias("node"))
     deg = sym.groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
     return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_nodes"))
 

@@ -1944,6 +1944,101 @@ def test_bpe_token_counts_bounds(spark, sf_smoke):
     assert agg["words"] <= agg["tok"] < agg["chars"]
 
 
+def test_bpe_merges_spark_jobs_independent_of_rounds(spark, sf_smoke):
+    """The merge rounds run on the driver over the collected vocabulary,
+    so a call and its collect start as many Spark jobs for 8 merges as
+    for 1."""
+    from healthcare_etl_spark.operators.bpe import bpe_merges
+    from healthcare_etl_spark.sources import load_table
+
+    docs = load_table(spark, sf_smoke, "documents")
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+
+    # Job ids are sequential: the max retained id counts jobs started
+    # even after spark.ui.retainedJobs evicts old entries.
+    def max_job_id():
+        ids = tracker.getJobIdsForGroup(None)
+        return max(ids) if ids else -1
+
+    def run(n_merges):
+        before = max_job_id()
+        rows = bpe_merges(docs, n_merges=n_merges, vocab_size=200).collect()
+        return max_job_id() - before, sorted(rows)
+
+    jobs_1, rows_1 = run(1)
+    jobs_8, rows_8 = run(8)
+    assert jobs_1 == jobs_8
+    assert len(rows_8) == 8 and rows_8[:1] == rows_1
+
+
+def test_bpe_merges_stop_when_no_pairs_left(spark):
+    """A vocabulary with fewer distinct pairs than n_merges returns the
+    shorter merge table; one-character words carry no pairs."""
+    from healthcare_etl_spark.operators.bpe import bpe_merges
+
+    docs = spark.createDataFrame([(1, "ab ab a b")], "doc_id long, text string")
+    rows = [tuple(r) for r in bpe_merges(docs, n_merges=3).collect()]
+    assert rows == [(1, "a", "b", "ab", 2)]
+
+
+def test_bpe_merges_non_ascii_tie_break(spark):
+    """Ties break by left symbol in Spark's string order (UTF-8 bytes,
+    i.e. code points): 'z' (U+007A) sorts before 'é' (U+00E9)."""
+    from healthcare_etl_spark.operators.bpe import bpe_merges
+
+    docs = spark.createDataFrame([(1, "éa éa za za zb éb")], "doc_id long, text string")
+    rows = [tuple(r) for r in bpe_merges(docs, n_merges=2).orderBy("round").collect()]
+    assert rows == [(1, "z", "a", "za", 2), (2, "é", "a", "éa", 2)]
+
+
+def test_bpe_merges_schema(spark):
+    """The merge table's JVM schema, nullability included, is the one
+    downstream code and the oracle compare against; it holds for an
+    empty table too."""
+    from pyspark.sql import types as T
+
+    from healthcare_etl_spark.operators.bpe import bpe_merges
+
+    expected = T.StructType(
+        [
+            T.StructField("round", T.IntegerType(), False),
+            T.StructField("left_sym", T.StringType(), True),
+            T.StructField("right_sym", T.StringType(), True),
+            T.StructField("merged", T.StringType(), True),
+            T.StructField("pair_count", T.LongType(), True),
+        ]
+    )
+    for text in ["low lower newest", "a b c"]:
+        docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
+        out = bpe_merges(docs, n_merges=2)
+        assert out.schema == expected  # parsed from the JVM's schema
+
+
+def test_bpe_train_and_apply_backslash_and_quote_symbols(spark):
+    """Merge symbols are passed to the apply fold as literals, not SQL
+    text: a learned merge on a backslash or a quote applies like any
+    other."""
+    from healthcare_etl_spark.operators.bpe import bpe_merges, bpe_token_counts
+
+    docs = spark.createDataFrame(
+        [(1, "a\\b a\\b x\\y"), (2, "it's it's 'q'")], "doc_id long, text string"
+    )
+    merges = [r.asDict() for r in bpe_merges(docs, n_merges=4).orderBy("round").collect()]
+    # ties at count 2 break by left symbol: ' (U+0027) < \ (U+005C) < a < i
+    assert [(m["left_sym"], m["right_sym"]) for m in merges] == [
+        ("'", "s"),
+        ("\\", "b"),
+        ("a", "\\b"),
+        ("i", "t"),
+    ]
+    out = {
+        r["doc_id"]: (r["n_words"], r["n_tokens"])
+        for r in bpe_token_counts(docs, merges).collect()
+    }
+    assert out[1] == (3, 5)  # a\b | a\b | x \ y
+    assert out[2] == (3, 7)  # it 's | it 's | ' q '
+
+
 def test_mmr_skips_redundant_candidate(spark):
     """The defining MMR behavior: with a near-duplicate of the best hit
     in the pool, step 2 must pick the DIVERSE lower-relevance candidate,
