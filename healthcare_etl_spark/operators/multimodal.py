@@ -19,13 +19,21 @@ formats keep dimensions in fixed header layouts, which need no codec —
 ``encode_png_media`` writes byte-valid PNG containers (signature +
 IHDR + CRC-32) and ``parse_image_dims`` parses PNG/JPEG/GIF headers
 (magic bytes, endian fields, JPEG marker walk) to recover dimensions.
+
+Every codec pass is a row kernel run by :func:`_map_rows`, the one Arrow
+map in this module: a kernel takes one input row's values (the selected
+columns, in order, as Python objects) and returns an iterable of output
+tuples in the field order of the pass's declared ``*_SCHEMA``. A 1:1
+kernel returns one tuple; a row-expanding kernel (frame sampling, the
+per-frame MJPEG decoders) returns zero or more. Output columns are typed
+from that schema alone, so no pass spells its types twice, and NULL or
+undecodable input yields NULL fields (1:1) or no rows (row-expanding),
+never an exception inside the Arrow task.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -51,6 +59,37 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("feature_norm", T.DoubleType(), True),
     ]
 )
+
+
+def _map_rows(
+    df: DataFrame, kernel: Callable[..., Iterable[tuple]], schema: T.StructType
+) -> DataFrame:
+    """Run ``kernel`` over every row of ``df`` in one Arrow map pass.
+
+    Each Arrow batch's columns become Python lists; ``kernel(*row)``
+    yields the output tuples of one input row, in ``schema`` order. The
+    output batch is built column by column with the Arrow types of
+    ``schema`` (``from_pandas=True``: a NaN arrives as NULL). The batch
+    size is Spark's ``spark.sql.execution.arrow.maxRecordsPerBatch``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+
+    def run(batches):
+        for batch in batches:
+            columns = [c.to_pylist() for c in batch.columns]
+            rows = [out for row in zip(*columns) for out in kernel(*row)]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([r[i] for r in rows], type=field.type, from_pandas=True)
+                    for i, field in enumerate(arrow_schema)
+                ],
+                schema=arrow_schema,
+            )
+
+    return df.mapInArrow(run, schema)
 
 
 def attach_media(df: DataFrame, *, id_col: str, text_col: str) -> DataFrame:
@@ -106,8 +145,8 @@ REAL_FEATURE_SCHEMA = T.StructType(
 
 
 def featurize_media_real(media: DataFrame, *, payload_col: str = "payload") -> DataFrame:
-    """REAL generic decode-and-featurize: one Arrow ``mapInPandas``
-    kernel that sniffs each payload's magic bytes and dispatches to the
+    """REAL generic decode-and-featurize: one Arrow row kernel that
+    sniffs each payload's magic bytes and dispatches to the
     matching from-scratch codec — PNG inflate+unfilter, baseline JPEG
     Huffman+IDCT, GIF LZW, RIFF int16 PCM. Emits exact integer decode
     moments (``n_units`` 8-bit channel values summed into ``sum_v``;
@@ -148,33 +187,19 @@ def featurize_media_real(media: DataFrame, *, payload_col: str = "payload") -> D
             return (kind, nb, None, None, None, None)
         return (kind, nb, None, None, None, None)
 
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [one(b) for b in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "kind": [p[0] for p in parsed],
-                    "n_bytes": pd.array([p[1] for p in parsed], dtype="Int64"),
-                    "width": pd.array([p[2] for p in parsed], dtype="Int32"),
-                    "height": pd.array([p[3] for p in parsed], dtype="Int32"),
-                    "n_units": pd.array([p[4] for p in parsed], dtype="Int64"),
-                    "sum_v": pd.array([p[5] for p in parsed], dtype="Int64"),
-                }
-            )
-
-    return media.select("media_id", F.col(payload_col)).mapInPandas(
-        featurize, schema=REAL_FEATURE_SCHEMA
+    return _map_rows(
+        media.select("media_id", F.col(payload_col)),
+        lambda mid, b: [(mid, *one(b))],
+        REAL_FEATURE_SCHEMA,
     )
 
 
 def decode_and_featurize(media: DataFrame, *, decode_stub: bool = True) -> DataFrame:
-    """Decode payloads and emit per-item features via ``mapInPandas``.
+    """Decode payloads and emit per-item features in one Arrow row pass.
 
-    Arrow-batched: each Python task receives pandas batches, vectorizes
-    over them, yields feature frames. ``decode_stub=True`` keeps the
-    historical deterministic fake kernel (schema/partitioning plumbing
-    only); ``decode_stub=False`` is the REAL path — it dispatches to
+    ``decode_stub=True`` keeps the historical deterministic fake kernel
+    (schema/partitioning plumbing only; a NULL ``n_bytes`` gives NULL
+    features); ``decode_stub=False`` is the REAL path — it dispatches to
     :func:`featurize_media_real` (PNG/JPEG/GIF/WAV from-scratch codecs)
     and computes ``feature_norm`` engine-side from the exact integer
     decode moments (mean 8-bit channel value / 255, or mean int16
@@ -196,25 +221,16 @@ def decode_and_featurize(media: DataFrame, *, decode_stub: bool = True) -> DataF
             ).alias("feature_norm"),
         )
 
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = pdf["n_bytes"].astype("int64")
-            # Deterministic fake decode: dimensions/features derived from
-            # payload length. A real kernel would do
-            # PIL.Image.open(io.BytesIO(b)) here.
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": n,
-                    "width": (n % 640 + 1).astype("int32"),
-                    "height": (n % 480 + 1).astype("int32"),
-                    "feature_norm": (n % 997).astype("float64") / 997.0,
-                }
-            )
+    def featurize(mid, media_type, n):
+        # Deterministic fake decode: dimensions/features derived from
+        # payload length. A real kernel would do
+        # PIL.Image.open(io.BytesIO(b)) here.
+        if n is None:
+            return [(mid, media_type, None, None, None, None)]
+        return [(mid, media_type, n, n % 640 + 1, n % 480 + 1, (n % 997) / 997.0)]
 
     src = media.select("media_id", "media_type", "n_bytes")
-    return src.mapInPandas(featurize, schema=FEATURE_SCHEMA)
+    return _map_rows(src, featurize, FEATURE_SCHEMA)
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -236,7 +252,7 @@ def resize_media(
     target_h: int = 64,
     decode_stub: bool = True,
 ) -> DataFrame:
-    """Resize pass: binary-in / binary-out ``mapInPandas``.
+    """Resize pass: binary-in / binary-out Arrow row kernel.
 
     The production shape for thumbnailing 100 TB of images: payloads
     stream through Arrow batches, each Python task emits transformed
@@ -249,66 +265,41 @@ def resize_media(
     re-encode. Non-PNG payloads pass through as NULL (re-encoding JPEG
     or GIF is out of scope for the from-scratch codecs; documented).
     """
-    if not decode_stub:
-        def resize_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            def one(b):
-                decoded = _png_decode_raw(b)
-                if decoded is None:
-                    return None
-                w, h, lines = decoded
-                out_lines = []
-                for y in range(target_h):
-                    sy = y * h // target_h
-                    src = lines[sy]
-                    row = bytearray()
-                    for x in range(target_w):
-                        sx = x * w // target_w
-                        row.extend(src[3 * sx : 3 * sx + 3])
-                    out_lines.append(bytes(row))
-                return _png_encode_from_lines(target_w, target_h, out_lines)
+    if decode_stub:
+        cap = int(target_w) * int(target_h)
 
-            for pdf in batches:
-                payload = [one(b) for b in pdf["payload"]]
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf["media_id"].astype("int64"),
-                        "media_type": pdf["media_type"],
-                        "out_w": pd.array([target_w] * len(pdf), dtype="Int32"),
-                        "out_h": pd.array([target_h] * len(pdf), dtype="Int32"),
-                        "payload": payload,
-                        "n_bytes_out": pd.array(
-                            [None if b is None else len(b) for b in payload],
-                            dtype="Int64",
-                        ),
-                    }
-                )
+        def one(b):
+            return None if b is None else b[:cap]
 
-        cols = ["media_id", "media_type", "payload"]
-        src_real = media.select(*cols) if "media_type" in media.columns else (
-            media.select("media_id", F.lit(None).cast("string").alias("media_type"), "payload")
+        src = media.select("media_id", "media_type", "payload")
+    else:
+        def one(b):
+            decoded = _png_decode_raw(b)
+            if decoded is None:
+                return None
+            w, h, lines = decoded
+            out_lines = []
+            for y in range(target_h):
+                line = lines[y * h // target_h]
+                row = bytearray()
+                for x in range(target_w):
+                    sx = x * w // target_w
+                    row.extend(line[3 * sx : 3 * sx + 3])
+                out_lines.append(bytes(row))
+            return _png_encode_from_lines(target_w, target_h, out_lines)
+
+        media_type = "media_type" if "media_type" in media.columns else (
+            F.lit(None).cast("string").alias("media_type")
         )
-        return src_real.mapInPandas(resize_real, schema=RESIZED_SCHEMA)
+        src = media.select("media_id", media_type, "payload")
 
-    cap = int(target_w) * int(target_h)
+    def resize(mid, media_type, b):
+        # NULL payloads pass through as NULL (with NULL n_bytes_out)
+        # rather than raising inside the Arrow task.
+        out = one(b)
+        return [(mid, media_type, target_w, target_h, out, None if out is None else len(out))]
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # NULL payloads pass through as NULL (with NULL n_bytes_out)
-            # rather than raising inside the Arrow task.
-            payload = pdf["payload"].map(lambda b: None if b is None else bytes(b)[:cap])
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "out_w": pd.Series([target_w] * len(pdf), dtype="int32"),
-                    "out_h": pd.Series([target_h] * len(pdf), dtype="int32"),
-                    "payload": payload,
-                    "n_bytes_out": payload.map(lambda b: None if b is None else len(b)),
-                }
-            )
-
-    src = media.select("media_id", "media_type", "payload")
-    return src.mapInPandas(resize, schema=RESIZED_SCHEMA)
+    return _map_rows(src, resize, RESIZED_SCHEMA)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -326,9 +317,8 @@ def sample_frames(
     media: DataFrame, *, max_frames: int = 4, decode_stub: bool = True
 ) -> DataFrame:
     """Frame sampling: one video row expands to ``n_frames`` frame rows —
-    the row-expanding ``mapInPandas`` shape (a Python-side explode over
-    Arrow batches), which is how video corpora become frame datasets at
-    scale.
+    the row-expanding kernel shape (a Python-side explode over Arrow
+    batches), which is how video corpora become frame datasets at scale.
 
     ``decode_stub=False`` is the REAL path (r8): MJPEG-in-MP4 payloads
     are sliced at their stbl sample boundaries (``_mp4_mjpeg_samples``),
@@ -339,68 +329,26 @@ def sample_frames(
     tests: ``n_frames = n_bytes % max_frames + 1``, uniform fake
     timestamps, 16-byte payload strides.
     """
-    if not decode_stub:
-        def frames_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = {k: [] for k in (
-                    "media_id", "frame_idx", "n_frames", "frame_ts", "frame_bytes",
-                )}
-                for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                    samples = _mp4_mjpeg_samples(payload)
-                    if samples is None:
-                        continue
-                    timing = _mp4_video_timing(bytes(payload))
-                    timescale, delta = timing if timing else (_MJPEG_TIMESCALE, _MJPEG_SAMPLE_DELTA)
-                    for k, frame in enumerate(samples):
-                        rows["media_id"].append(int(mid))
-                        rows["frame_idx"].append(k)
-                        rows["n_frames"].append(len(samples))
-                        rows["frame_ts"].append(k * delta / timescale)
-                        rows["frame_bytes"].append(frame)
-                yield pd.DataFrame(
-                    {
-                        "media_id": pd.array(rows["media_id"], dtype="int64"),
-                        "frame_idx": pd.array(rows["frame_idx"], dtype="int32"),
-                        "n_frames": pd.array(rows["n_frames"], dtype="int32"),
-                        "frame_ts": pd.array(rows["frame_ts"], dtype="float64"),
-                        "frame_bytes": rows["frame_bytes"],
-                    }
-                )
+    def frames_real(mid, payload):
+        samples = _mp4_mjpeg_samples(payload)
+        if samples is None:
+            return
+        timing = _mp4_video_timing(payload)
+        timescale, delta = timing if timing else (_MJPEG_TIMESCALE, _MJPEG_SAMPLE_DELTA)
+        for k, frame in enumerate(samples):
+            yield (mid, k, len(samples), k * delta / timescale, frame)
 
-        return media.select("media_id", "payload").mapInPandas(
-            frames_real, schema=FRAME_SCHEMA
-        )
-
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # NULL payloads behave as empty media (one empty frame) rather
-            # than raising inside the Arrow task.
-            pdf = pdf.assign(payload=pdf["payload"].map(lambda b: b"" if b is None else b))
-            n_bytes = pdf["payload"].map(len).astype("int64")
-            n_frames = (n_bytes % max_frames + 1).astype("int32")
-            rep = pdf.loc[pdf.index.repeat(n_frames)]
-            rep_n = n_frames.loc[rep.index]
-            frame_idx = rep.groupby(level=0).cumcount().astype("int32")
-            duration_s = rep["payload"].map(len).astype("int64") / 1000.0
-            yield pd.DataFrame(
-                {
-                    "media_id": rep["media_id"].to_numpy(),
-                    "frame_idx": frame_idx.to_numpy(),
-                    "n_frames": rep_n.to_numpy(),
-                    "frame_ts": (
-                        frame_idx.to_numpy() * duration_s.to_numpy() / rep_n.to_numpy()
-                    ),
-                    "frame_bytes": [
-                        bytes(b)[i * 16 : i * 16 + 16]
-                        for b, i in zip(rep["payload"], frame_idx)
-                    ],
-                }
-            )
+    def frames(mid, payload):
+        # NULL payloads behave as empty media (one empty frame) rather
+        # than raising inside the Arrow task.
+        payload = b"" if payload is None else payload
+        n_frames = len(payload) % max_frames + 1
+        duration_s = len(payload) / 1000.0
+        for k in range(n_frames):
+            yield (mid, k, n_frames, k * duration_s / n_frames, payload[k * 16 : k * 16 + 16])
 
     src = media.select("media_id", "payload")
-    return src.mapInPandas(frames, schema=FRAME_SCHEMA)
+    return _map_rows(src, frames if decode_stub else frames_real, FRAME_SCHEMA)
 
 
 PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
@@ -444,30 +392,23 @@ def encode_png_media(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "
     import struct
     import zlib
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(mid: int, text: str) -> bytes:
-            body = ("" if text is None else text).encode("utf-8")
-            n = len(body)
-            w, h = n % 640 + 1, n % 480 + 1
-            ihdr_data = struct.pack(">II", w, h) + b"\x08\x02\x00\x00\x00"
-            ihdr = (
-                struct.pack(">I", len(ihdr_data))
-                + b"IHDR"
-                + ihdr_data
-                + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr_data) & 0xFFFFFFFF)
-            )
-            return PNG_SIGNATURE + ihdr + body
+    def one(text: str) -> bytes:
+        body = ("" if text is None else text).encode("utf-8")
+        n = len(body)
+        w, h = n % 640 + 1, n % 480 + 1
+        ihdr_data = struct.pack(">II", w, h) + b"\x08\x02\x00\x00\x00"
+        ihdr = (
+            struct.pack(">I", len(ihdr_data))
+            + b"IHDR"
+            + ihdr_data
+            + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr_data) & 0xFFFFFFFF)
+        )
+        return PNG_SIGNATURE + ihdr + body
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "payload": [one(m, t) for m, t in zip(pdf[id_col], pdf[text_col])],
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        encode, schema=PNG_MEDIA_SCHEMA
+    return _map_rows(
+        df.select(F.col(id_col), F.col(text_col)),
+        lambda mid, text: [(mid, one(text))],
+        PNG_MEDIA_SCHEMA,
     )
 
 
@@ -509,27 +450,16 @@ def _parse_dims(b) -> tuple[str, int | None, int | None]:
 
 
 def parse_image_dims(media: DataFrame, *, payload_col: str = "payload") -> DataFrame:
-    """Extract (format, width, height) from binary payload headers via
-    ``mapInPandas`` — the real metadata-extraction kernel for a 100 TB
+    """Extract (format, width, height) from binary payload headers in
+    one Arrow row pass — the real metadata-extraction kernel for a 100 TB
     image corpus (header inspection only; bytes never parse on the JVM
     and the compressed stream is never decoded, so throughput is
     I/O-bound, not codec-bound).
     """
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [_parse_dims(b) for b in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "format": [p[0] for p in parsed],
-                    "width": pd.array([p[1] for p in parsed], dtype="Int32"),
-                    "height": pd.array([p[2] for p in parsed], dtype="Int32"),
-                }
-            )
-
-    return media.select("media_id", F.col(payload_col)).mapInPandas(
-        parse, schema=IMAGE_DIMS_SCHEMA
+    return _map_rows(
+        media.select("media_id", F.col(payload_col)),
+        lambda mid, b: [(mid, *_parse_dims(b))],
+        IMAGE_DIMS_SCHEMA,
     )
 
 
@@ -560,34 +490,27 @@ def encode_wav_media(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "
     """
     import struct
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(text: str) -> bytes:
-            body = ("" if text is None else text).encode("utf-8")
-            n = len(body)
-            rate = _WAV_RATES[n % 5]
-            channels = n % 2 + 1
-            bits = 16
-            block_align = channels * bits // 8
-            fmt = struct.pack(
-                "<HHIIHH", 1, channels, rate, rate * block_align, block_align, bits
-            )
-            chunks = (
-                b"WAVE"
-                + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                + b"data" + struct.pack("<I", n) + body
-            )
-            return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
+    def one(text: str) -> bytes:
+        body = ("" if text is None else text).encode("utf-8")
+        n = len(body)
+        rate = _WAV_RATES[n % 5]
+        channels = n % 2 + 1
+        bits = 16
+        block_align = channels * bits // 8
+        fmt = struct.pack(
+            "<HHIIHH", 1, channels, rate, rate * block_align, block_align, bits
+        )
+        chunks = (
+            b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", n) + body
+        )
+        return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "payload": [one(t) for t in pdf[text_col]],
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        encode, schema=PNG_MEDIA_SCHEMA
+    return _map_rows(
+        df.select(F.col(id_col), F.col(text_col)),
+        lambda mid, text: [(mid, one(text))],
+        PNG_MEDIA_SCHEMA,
     )
 
 
@@ -623,22 +546,10 @@ def parse_wav_meta(media: DataFrame, *, payload_col: str = "payload") -> DataFra
         frames = None if (n_data is None or not block_align) else n_data // block_align
         return ("wav", rate, channels, bits, frames)
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_one(b) for b in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "format": [p[0] for p in parsed],
-                    "sample_rate": pd.array([p[1] for p in parsed], dtype="Int32"),
-                    "channels": pd.array([p[2] for p in parsed], dtype="Int32"),
-                    "bits_per_sample": pd.array([p[3] for p in parsed], dtype="Int32"),
-                    "n_frames": pd.array([p[4] for p in parsed], dtype="Int64"),
-                }
-            )
-
-    return media.select("media_id", F.col(payload_col)).mapInPandas(
-        parse, schema=WAV_META_SCHEMA
+    return _map_rows(
+        media.select("media_id", F.col(payload_col)),
+        lambda mid, b: [(mid, *parse_one(b))],
+        WAV_META_SCHEMA,
     )
 
 
@@ -673,46 +584,39 @@ def encode_mp4_media(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "
     """
     import struct
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def box(btype: bytes, payload: bytes) -> bytes:
-            return struct.pack(">I", 8 + len(payload)) + btype + payload
+    def box(btype: bytes, payload: bytes) -> bytes:
+        return struct.pack(">I", 8 + len(payload)) + btype + payload
 
-        def one(text: str) -> bytes:
-            body = ("" if text is None else text).encode("utf-8")
-            n = len(body)
-            timescale = _MP4_TIMESCALES[n % 5]
-            duration = n * 100
-            ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2mp41")
-            # mvhd v0: version+flags, creation, modification, timescale,
-            # duration, rate (1.0 fixed-point), volume, reserved block +
-            # identity matrix + predefineds + next_track_id (spec layout,
-            # zero-filled where the parser doesn't need real values)
-            mvhd_payload = (
-                struct.pack(">BBBB", 0, 0, 0, 0)
-                + struct.pack(">II", 0, 0)
-                + struct.pack(">I", timescale)
-                + struct.pack(">I", duration)
-                + struct.pack(">i", 0x00010000)
-                + struct.pack(">h", 0x0100)
-                + b"\x00" * 10
-                + b"\x00" * 36
-                + b"\x00" * 24
-                + struct.pack(">I", 1)
-            )
-            moov = box(b"moov", box(b"mvhd", mvhd_payload))
-            mdat = box(b"mdat", body)
-            return ftyp + moov + mdat
+    def one(text: str) -> bytes:
+        body = ("" if text is None else text).encode("utf-8")
+        n = len(body)
+        timescale = _MP4_TIMESCALES[n % 5]
+        duration = n * 100
+        ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2mp41")
+        # mvhd v0: version+flags, creation, modification, timescale,
+        # duration, rate (1.0 fixed-point), volume, reserved block +
+        # identity matrix + predefineds + next_track_id (spec layout,
+        # zero-filled where the parser doesn't need real values)
+        mvhd_payload = (
+            struct.pack(">BBBB", 0, 0, 0, 0)
+            + struct.pack(">II", 0, 0)
+            + struct.pack(">I", timescale)
+            + struct.pack(">I", duration)
+            + struct.pack(">i", 0x00010000)
+            + struct.pack(">h", 0x0100)
+            + b"\x00" * 10
+            + b"\x00" * 36
+            + b"\x00" * 24
+            + struct.pack(">I", 1)
+        )
+        moov = box(b"moov", box(b"mvhd", mvhd_payload))
+        mdat = box(b"mdat", body)
+        return ftyp + moov + mdat
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "payload": [one(t) for t in pdf[text_col]],
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        encode, schema=PNG_MEDIA_SCHEMA
+    return _map_rows(
+        df.select(F.col(id_col), F.col(text_col)),
+        lambda mid, text: [(mid, one(text))],
+        PNG_MEDIA_SCHEMA,
     )
 
 
@@ -724,7 +628,7 @@ def parse_mp4_meta(media: DataFrame, *, payload_col: str = "payload") -> DataFra
     one level to find ``mvhd`` (version 0: timescale at offset +12,
     duration at +16; version 1 uses 64-bit times and is handled).
     Unknown payloads come back ('unknown', nulls); None ('missing').
-    Arrow-batched ``mapInPandas`` like every multimodal kernel — at
+    An Arrow row kernel like every multimodal pass — at
     100 TB the payload bytes stream batch-wise through Python while all
     planning stays JVM-side.
     """
@@ -767,22 +671,10 @@ def parse_mp4_meta(media: DataFrame, *, payload_col: str = "payload") -> DataFra
             return ("unknown", None, None, None, None)
         return ("mp4", brand, timescale, duration, mdat_bytes)
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_one(b) for b in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "format": [p[0] for p in parsed],
-                    "brand": [p[1] for p in parsed],
-                    "timescale": pd.array([p[2] for p in parsed], dtype="Int32"),
-                    "duration": pd.array([p[3] for p in parsed], dtype="Int64"),
-                    "mdat_bytes": pd.array([p[4] for p in parsed], dtype="Int64"),
-                }
-            )
-
-    return media.select("media_id", F.col(payload_col)).mapInPandas(
-        parse, schema=MP4_META_SCHEMA
+    return _map_rows(
+        media.select("media_id", F.col(payload_col)),
+        lambda mid, b: [(mid, *parse_one(b))],
+        MP4_META_SCHEMA,
     )
 
 
@@ -918,19 +810,10 @@ def encode_png_pixels(
             raw_lines.append(bytes(row))
         return _png_encode_from_lines(w, h, raw_lines)
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "payload": [
-                        one(int(m), t) for m, t in zip(pdf[id_col], pdf[text_col])
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        encode, schema=PNG_MEDIA_SCHEMA
+    return _map_rows(
+        df.select(F.col(id_col), F.col(text_col)),
+        lambda mid, text: [(mid, one(mid, text))],
+        PNG_MEDIA_SCHEMA,
     )
 
 
@@ -1061,23 +944,10 @@ def decode_png_pixel_stats(
     as Spark expressions so all float rounding happens engine-side
     (stable_round), keeping the kernel integer-pure. Truncated or
     non-PNG payloads yield NULL stats rather than poisoning the batch."""
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [_png_decode_stats_one(b) for b in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "width": pd.array([p[0] for p in parsed], dtype="Int32"),
-                    "height": pd.array([p[1] for p in parsed], dtype="Int32"),
-                    "n_px": pd.array([p[2] for p in parsed], dtype="Int64"),
-                    "sum_r": pd.array([p[3] for p in parsed], dtype="Int64"),
-                    "sum_g": pd.array([p[4] for p in parsed], dtype="Int64"),
-                    "sum_b": pd.array([p[5] for p in parsed], dtype="Int64"),
-                }
-            )
-
-    return media.select("media_id", F.col(payload_col)).mapInPandas(
-        parse, schema=PNG_PIXEL_STATS_SCHEMA
+    return _map_rows(
+        media.select("media_id", F.col(payload_col)),
+        lambda mid, b: [(mid, *_png_decode_stats_one(b))],
+        PNG_PIXEL_STATS_SCHEMA,
     )
 
 
@@ -1116,19 +986,10 @@ def encode_wav_pcm(
         )
         return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "payload": [
-                        one(int(m), t) for m, t in zip(pdf[id_col], pdf[text_col])
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        encode, schema=PNG_MEDIA_SCHEMA
+    return _map_rows(
+        df.select(F.col(id_col), F.col(text_col)),
+        lambda mid, text: [(mid, one(mid, text))],
+        PNG_MEDIA_SCHEMA,
     )
 
 
@@ -1168,21 +1029,10 @@ def decode_wav_sample_stats(
     squares, peak |s|). Mean/RMS are computed engine-side from the
     integer moments so float rounding is identical cross-engine."""
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [_wav_decode_stats_one(b) for b in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "n_samples": pd.array([p[0] for p in parsed], dtype="Int64"),
-                    "sum_s": pd.array([p[1] for p in parsed], dtype="Int64"),
-                    "sum_s2": pd.array([p[2] for p in parsed], dtype="Int64"),
-                    "peak": pd.array([p[3] for p in parsed], dtype="Int32"),
-                }
-            )
-
-    return media.select("media_id", F.col(payload_col)).mapInPandas(
-        parse, schema=WAV_SAMPLE_STATS_SCHEMA
+    return _map_rows(
+        media.select("media_id", F.col(payload_col)),
+        lambda mid, b: [(mid, *_wav_decode_stats_one(b))],
+        WAV_SAMPLE_STATS_SCHEMA,
     )
 
 
@@ -1341,19 +1191,10 @@ def encode_gif_media(
             + b"\x3b"
         )
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "payload": [
-                        one(int(m), t) for m, t in zip(pdf[id_col], pdf[text_col])
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        encode, schema=PNG_MEDIA_SCHEMA
+    return _map_rows(
+        df.select(F.col(id_col), F.col(text_col)),
+        lambda mid, text: [(mid, one(mid, text))],
+        PNG_MEDIA_SCHEMA,
     )
 
 
@@ -1412,23 +1253,10 @@ def decode_gif_index_stats(
     exact integer channel sums (palette channels are index arithmetic,
     so sums derive from decoded indices without materializing pixels)."""
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [_gif_decode_stats_one(b) for b in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "width": pd.array([p[0] for p in parsed], dtype="Int32"),
-                    "height": pd.array([p[1] for p in parsed], dtype="Int32"),
-                    "n_px": pd.array([p[2] for p in parsed], dtype="Int64"),
-                    "sum_idx": pd.array([p[3] for p in parsed], dtype="Int64"),
-                    "sum_g": pd.array([p[4] for p in parsed], dtype="Int64"),
-                    "sum_b": pd.array([p[5] for p in parsed], dtype="Int64"),
-                }
-            )
-
-    return media.select("media_id", F.col(payload_col)).mapInPandas(
-        parse, schema=GIF_INDEX_STATS_SCHEMA
+    return _map_rows(
+        media.select("media_id", F.col(payload_col)),
+        lambda mid, b: [(mid, *_gif_decode_stats_one(b))],
+        GIF_INDEX_STATS_SCHEMA,
     )
 
 
@@ -1622,21 +1450,10 @@ def encode_jpeg_gray(
     real DPCM: per block the DC *difference* is Huffman-coded as a
     magnitude category + extend bits (negatives in one's complement),
     followed by the AC EOB code."""
-    one = _jpeg_encode_one
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "payload": [
-                        one(int(m), t) for m, t in zip(pdf[id_col], pdf[text_col])
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        encode, schema=PNG_MEDIA_SCHEMA
+    return _map_rows(
+        df.select(F.col(id_col), F.col(text_col)),
+        lambda mid, text: [(mid, _jpeg_encode_one(mid, text))],
+        PNG_MEDIA_SCHEMA,
     )
 
 
@@ -1837,23 +1654,10 @@ def decode_jpeg_pixel_stats(
     dequantize -> separable 2-D IDCT (numpy float64) -> level shift +
     clip -> exact integer pixel stats."""
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [_jpeg_decode_stats_one(p) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "width": pd.array([p[0] for p in parsed], dtype="Int32"),
-                    "height": pd.array([p[1] for p in parsed], dtype="Int32"),
-                    "n_px": pd.array([p[2] for p in parsed], dtype="Int64"),
-                    "sum_v": pd.array([p[3] for p in parsed], dtype="Int64"),
-                    "min_v": pd.array([p[4] for p in parsed], dtype="Int32"),
-                    "max_v": pd.array([p[5] for p in parsed], dtype="Int32"),
-                }
-            )
-
-    return media.select("media_id", F.col(payload_col)).mapInPandas(
-        parse, schema=JPEG_PIXEL_STATS_SCHEMA
+    return _map_rows(
+        media.select("media_id", F.col(payload_col)),
+        lambda mid, b: [(mid, *_jpeg_decode_stats_one(b))],
+        JPEG_PIXEL_STATS_SCHEMA,
     )
 
 
@@ -1908,16 +1712,9 @@ def encode_png_family(
             raw_lines.append(bytes(row))
         return _png_encode_from_lines(w, h, raw_lines)
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "payload": [one(int(m)) for m in pdf[id_col]],
-                }
-            )
-
-    return df.select(F.col(id_col)).mapInPandas(encode, schema=PNG_MEDIA_SCHEMA)
+    return _map_rows(
+        df.select(F.col(id_col)), lambda mid: [(mid, one(mid))], PNG_MEDIA_SCHEMA
+    )
 
 
 def decode_png_blockhash(
@@ -1958,20 +1755,10 @@ def decode_png_blockhash(
                     hash_v |= 1 << (by * gx + bx)
         return (w, h, hash_v)
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [one(b) for b in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "width": pd.array([p[0] for p in parsed], dtype="Int32"),
-                    "height": pd.array([p[1] for p in parsed], dtype="Int32"),
-                    "phash": pd.array([p[2] for p in parsed], dtype="Int64"),
-                }
-            )
-
-    return media.select("media_id", F.col(payload_col)).mapInPandas(
-        parse, schema=BLOCKHASH_SCHEMA
+    return _map_rows(
+        media.select("media_id", F.col(payload_col)),
+        lambda mid, b: [(mid, *one(b))],
+        BLOCKHASH_SCHEMA,
     )
 
 
@@ -2014,16 +1801,9 @@ def encode_wav_family(
         )
         return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "payload": [one(int(m)) for m in pdf[id_col]],
-                }
-            )
-
-    return df.select(F.col(id_col)).mapInPandas(encode, schema=PNG_MEDIA_SCHEMA)
+    return _map_rows(
+        df.select(F.col(id_col)), lambda mid: [(mid, one(mid))], PNG_MEDIA_SCHEMA
+    )
 
 
 def decode_wav_fingerprint(
@@ -2070,19 +1850,10 @@ def decode_wav_fingerprint(
                 fp |= 1 << bnd
         return (n, fp)
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [one(b) for b in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "n_samples": pd.array([p[0] for p in parsed], dtype="Int64"),
-                    "fp": pd.array([p[1] for p in parsed], dtype="Int64"),
-                }
-            )
-
-    return media.select("media_id", F.col(payload_col)).mapInPandas(
-        parse, schema=AUDIOHASH_SCHEMA
+    return _map_rows(
+        media.select("media_id", F.col(payload_col)),
+        lambda mid, b: [(mid, *one(b))],
+        AUDIOHASH_SCHEMA,
     )
 
 
@@ -2236,24 +2007,13 @@ def _mjpeg_mp4_encode_one(mid: int, text: str) -> bytes:
 def encode_mjpeg_mp4(
     df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Encode one MJPEG-in-MP4 video per row (Arrow ``mapInPandas``,
+    """Encode one MJPEG-in-MP4 video per row (an Arrow row kernel,
     like every multimodal encoder — payload bytes never touch the JVM
     planner)."""
-    one = _mjpeg_mp4_encode_one
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "payload": [
-                        one(int(m), t) for m, t in zip(pdf[id_col], pdf[text_col])
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        encode, schema=PNG_MEDIA_SCHEMA
+    return _map_rows(
+        df.select(F.col(id_col), F.col(text_col)),
+        lambda mid, text: [(mid, _mjpeg_mp4_encode_one(mid, text))],
+        PNG_MEDIA_SCHEMA,
     )
 
 
@@ -2401,45 +2161,14 @@ def decode_mp4_mjpeg_frames(
 ) -> DataFrame:
     """REAL video decode, one row per frame: ISO BMFF walk to the
     sample tables, per-sample slice, full baseline-JPEG entropy decode
-    + dequant + IDCT per frame (row-expanding ``mapInPandas`` — the
+    + dequant + IDCT per frame (row-expanding kernel — the
     same Python-side explode shape as :func:`sample_frames`, now over
     genuinely decoded pixels).  Non-MJPEG payloads expand to zero rows
     (filtered, not faked)."""
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "media_id", "frame_idx", "width", "height",
-                "n_px", "sum_v", "min_v", "max_v",
-            )}
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                frames = _mp4_mjpeg_frames_one(payload)
-                if frames is None:
-                    continue
-                for k, w, h, n_px, sv, mn, mx in frames:
-                    rows["media_id"].append(int(mid))
-                    rows["frame_idx"].append(k)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["n_px"].append(n_px)
-                    rows["sum_v"].append(sv)
-                    rows["min_v"].append(mn)
-                    rows["max_v"].append(mx)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(rows["media_id"], dtype="int64"),
-                    "frame_idx": pd.array(rows["frame_idx"], dtype="Int32"),
-                    "width": pd.array(rows["width"], dtype="Int32"),
-                    "height": pd.array(rows["height"], dtype="Int32"),
-                    "n_px": pd.array(rows["n_px"], dtype="Int64"),
-                    "sum_v": pd.array(rows["sum_v"], dtype="Int64"),
-                    "min_v": pd.array(rows["min_v"], dtype="Int32"),
-                    "max_v": pd.array(rows["max_v"], dtype="Int32"),
-                }
-            )
-
-    return media.select("media_id", F.col(payload_col)).mapInPandas(
-        parse, schema=MJPEG_FRAME_STATS_SCHEMA
+    return _map_rows(
+        media.select("media_id", F.col(payload_col)),
+        lambda mid, b: [(mid, *frame) for frame in _mp4_mjpeg_frames_one(b) or ()],
+        MJPEG_FRAME_STATS_SCHEMA,
     )
 
 
@@ -2505,18 +2234,13 @@ def encode_mjpeg_family(
     df: DataFrame, *, id_col: str = "doc_id", group: int = 4
 ) -> DataFrame:
     """Encode the near-duplicate MJPEG video corpus (one video per row,
-    Arrow ``mapInPandas``)."""
+    Arrow row kernel)."""
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "payload": [_mjpeg_family_video(int(i), group) for i in pdf[id_col]],
-                }
-            )
-
-    return df.select(F.col(id_col)).mapInPandas(encode, schema=PNG_MEDIA_SCHEMA)
+    return _map_rows(
+        df.select(F.col(id_col)),
+        lambda mid: [(mid, _mjpeg_family_video(mid, group))],
+        PNG_MEDIA_SCHEMA,
+    )
 
 
 def decode_mp4_mjpeg_frame_hashes(
@@ -2528,38 +2252,15 @@ def decode_mp4_mjpeg_frame_hashes(
     100 TB this is one Arrow map pass over the video bytes; everything
     downstream (set-distinct, the fingerprint equi-join) is JVM-side."""
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "frame_idx", "width", "height", "fhash")}
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                samples = _mp4_mjpeg_samples(b)
-                if samples is None:
-                    continue
-                for k, frame in enumerate(samples):
-                    decoded = _jpeg_decode_blocks_one(frame)
-                    if decoded is None:
-                        continue
-                    w, h, blocks = decoded
-                    rows["media_id"].append(int(mid))
-                    rows["frame_idx"].append(k)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["fhash"].append(_frame_fingerprint(blocks))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(rows["media_id"], dtype="int64"),
-                    "frame_idx": pd.array(rows["frame_idx"], dtype="Int32"),
-                    "width": pd.array(rows["width"], dtype="Int32"),
-                    "height": pd.array(rows["height"], dtype="Int32"),
-                    "fhash": pd.array(rows["fhash"], dtype="Int64"),
-                }
-            )
+    def frame_hashes(mid, b):
+        for k, frame in enumerate(_mp4_mjpeg_samples(b) or ()):
+            decoded = _jpeg_decode_blocks_one(frame)
+            if decoded is not None:
+                w, h, blocks = decoded
+                yield (mid, k, w, h, _frame_fingerprint(blocks))
 
-    return media.select("media_id", F.col(payload_col)).mapInPandas(
-        parse, schema=FRAME_HASH_SCHEMA
+    return _map_rows(
+        media.select("media_id", F.col(payload_col)), frame_hashes, FRAME_HASH_SCHEMA
     )
 
 
@@ -2675,19 +2376,10 @@ def encode_bmp_pixels(
         header = b"BM" + struct.pack("<IHHI", 54 + stride * h, 0, 0, 54)
         return header + info + pixels
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "payload": [
-                        one(int(m), t) for m, t in zip(pdf[id_col], pdf[text_col])
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        encode, schema=PNG_MEDIA_SCHEMA
+    return _map_rows(
+        df.select(F.col(id_col), F.col(text_col)),
+        lambda mid, text: [(mid, one(mid, text))],
+        PNG_MEDIA_SCHEMA,
     )
 
 
@@ -2740,22 +2432,8 @@ def decode_bmp_pixel_stats(
     row-order handling, exact integer channel sums (the uncompressed
     sibling of :func:`decode_png_pixel_stats`; same output schema so
     downstream stats expressions are codec-agnostic)."""
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [_bmp_decode_stats_one(b) for b in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "width": pd.array([p[0] for p in parsed], dtype="Int32"),
-                    "height": pd.array([p[1] for p in parsed], dtype="Int32"),
-                    "n_px": pd.array([p[2] for p in parsed], dtype="Int64"),
-                    "sum_r": pd.array([p[3] for p in parsed], dtype="Int64"),
-                    "sum_g": pd.array([p[4] for p in parsed], dtype="Int64"),
-                    "sum_b": pd.array([p[5] for p in parsed], dtype="Int64"),
-                    "wsum_r": pd.array([p[6] for p in parsed], dtype="Int64"),
-                }
-            )
-
-    return media.select("media_id", F.col(payload_col)).mapInPandas(
-        parse, schema=BMP_PIXEL_STATS_SCHEMA
+    return _map_rows(
+        media.select("media_id", F.col(payload_col)),
+        lambda mid, b: [(mid, *_bmp_decode_stats_one(b))],
+        BMP_PIXEL_STATS_SCHEMA,
     )

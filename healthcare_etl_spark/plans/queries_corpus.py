@@ -756,9 +756,10 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.operators.bpe import bpe_merges, bpe_token_counts
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = [
-        r.asDict() for r in bpe_merges(docs, n_merges=4, vocab_size=200).orderBy("round").collect()
-    ]
+    # The merge table is a LocalRelation of at most n_merges rows: sort it
+    # on the driver (a Spark orderBy would plan a sampled range sort).
+    rows = bpe_merges(docs, n_merges=4, vocab_size=200).collect()
+    merges = sorted((r.asDict() for r in rows), key=lambda m: m["round"])
     return bpe_token_counts(docs, merges)
 
 

@@ -74,7 +74,7 @@ SELECT media_type,
 FROM media GROUP BY media_type
 """,
     description=(
-        "Decode/featurize via mapInPandas (Arrow batches) with a clearly-marked stub "
+        "Decode/featurize via an Arrow row kernel (mapInArrow) with a clearly-marked stub "
         "decode kernel — real schema/partitioning/batch plumbing, fake pixels. "
         "Oracle-checked: the stub's deterministic arithmetic is mirrored in SQL, so "
         "the Arrow round-trip itself is verified end-to-end."
@@ -109,7 +109,7 @@ SELECT media_type,
 FROM media GROUP BY media_type
 """,
     description=(
-        "Resize pass: binary-in/binary-out mapInPandas over Arrow batches with a "
+        "Resize pass: binary-in/binary-out Arrow row kernel (mapInArrow) with a "
         "stub kernel capping payloads at 64x64 bytes — the thumbnailing shape for "
         "100 TB image corpora. Oracle mirrors the deterministic byte-cap arithmetic, "
         "verifying the binary Arrow round-trip end-to-end."
@@ -151,7 +151,7 @@ FROM fr
 """,
     description=(
         "Video frame sampling: one row expands to n_frames rows inside a "
-        "row-expanding mapInPandas (Python-side explode over Arrow batches) — how "
+        "row-expanding Arrow row kernel (Python-side explode over Arrow batches) — how "
         "video corpora become frame datasets. Stub kernel, deterministic frame "
         "count/timestamps mirrored in SQL via unnest(range(...))."
     ),
@@ -561,7 +561,7 @@ FROM blk GROUP BY doc_id, frame_idx
         "the box tree to the sample tables, slices every sample out of "
         "mdat, and runs the full T.81 entropy decode + dequant + IDCT "
         "per frame, one output row per frame (the row-expanding "
-        "mapInPandas shape — how video corpora become frame datasets "
+        "Arrow kernel shape — how video corpora become frame datasets "
         "at 100 TB). Frame k's DC content is pure (doc_id*4+k, block) "
         "integer arithmetic, so the oracle regenerates every decoded "
         "pixel of every frame; a sample-table or entropy bug cannot "

@@ -227,6 +227,10 @@ def _epoch_to_micros(spark: SparkSession, path: str, df: DataFrame):
     return F.col("ts") * F.lit(-unit)
 
 
+# Raw input bytes per task for a fixture spread (``spread_count``).
+SPREAD_KB_PER_TASK = 64
+
+
 def spread_count(df: DataFrame, *, kb_per_task: int | None = None) -> int:
     """Size-derived partition count for spreading a narrow fixture scan
     ahead of a CPU-heavy explode/codec path.
@@ -237,25 +241,32 @@ def spread_count(df: DataFrame, *, kb_per_task: int | None = None) -> int:
     pinned 32 partitions onto kilobyte inputs, and the r9 scaling block
     showed per-task overhead dominating (8 cores beat 32 across the
     board at sf0.1). The count is now derived from the scan's input
-    bytes (~64 KiB of raw input per task by default, tunable via
-    ``SPARK_GRAFT_SPREAD_KB``), capped at ``defaultParallelism`` —
+    bytes (``SPREAD_KB_PER_TASK`` KiB of raw input per task unless
+    ``kb_per_task`` says otherwise), capped at ``defaultParallelism`` —
     scale-adaptive in both directions: kilobyte fixtures get a handful
     of tasks, and any input big enough to saturate the cluster hits the
     cap (where a real multi-split table's scan would already be
     parallel and the spread is only a co-partitioning choice).
+
+    Input on remote storage (any URI scheme but ``file``) is not sized:
+    it gets the cap. A local input file that no longer exists raises
+    :class:`MissingInputError`.
     """
     import os
+    from urllib.parse import unquote, urlparse
 
-    if kb_per_task is None:
-        kb_per_task = int(os.environ.get("SPARK_GRAFT_SPREAD_KB", "64"))
+    budget = (SPREAD_KB_PER_TASK if kb_per_task is None else kb_per_task) * 1024
     cap = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        from urllib.parse import urlparse
-
-        size = sum(os.path.getsize(urlparse(u).path) for u in df.inputFiles())
-    except Exception:  # pragma: no cover - non-local storage
-        return cap
-    return max(1, min(cap, (size + kb_per_task * 1024 - 1) // (kb_per_task * 1024)))
+    size = 0
+    for uri in df.inputFiles():
+        parts = urlparse(uri)
+        if parts.scheme not in ("", "file"):
+            return cap
+        path = unquote(parts.path)
+        if not os.path.exists(path):
+            raise MissingInputError(f"spread input not found: {uri!r} does not exist.")
+        size += os.path.getsize(path)
+    return max(1, min(cap, (size + budget - 1) // budget))
 
 
 def spread(df: DataFrame, *, kb_per_task: int | None = None) -> DataFrame:

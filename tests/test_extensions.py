@@ -456,8 +456,17 @@ def test_kmeans_seeds_from_lowest_ids_and_guards_n_iter(spark):
 
 def test_multimodal_null_payloads_pass_through(spark):
     """NULL payloads must not raise inside the Arrow kernels: resize
-    propagates NULL, frame sampling treats NULL as empty media."""
-    from healthcare_etl_spark.operators.multimodal import resize_media, sample_frames
+    propagates NULL, frame sampling treats NULL as empty media, the stub
+    featurizer gives NULL features; each stub pass keeps its declared
+    schema."""
+    from healthcare_etl_spark.operators.multimodal import (
+        FEATURE_SCHEMA,
+        FRAME_SCHEMA,
+        RESIZED_SCHEMA,
+        decode_and_featurize,
+        resize_media,
+        sample_frames,
+    )
 
     from pyspark.sql import types as T
 
@@ -471,6 +480,14 @@ def test_multimodal_null_payloads_pass_through(spark):
     df = spark.createDataFrame(
         [(1, "image", bytearray(b"abcdef" * 20)), (2, "image", None)], schema
     )
+    assert resize_media(df).schema == RESIZED_SCHEMA
+    assert sample_frames(df).schema == FRAME_SCHEMA
+    with_len = df.withColumn("n_bytes", F.octet_length("payload").cast("long"))
+    feats = decode_and_featurize(with_len)
+    assert feats.schema == FEATURE_SCHEMA
+    null_feats = [r for r in feats.collect() if r.media_id == 2]
+    assert [tuple(r)[2:] for r in null_feats] == [(None, None, None, None)]
+
     resized = {r.media_id: r for r in resize_media(df, target_w=2, target_h=2).collect()}
     assert bytes(resized[1].payload) == b"abcd" and resized[1].n_bytes_out == 4
     assert resized[2].payload is None and resized[2].n_bytes_out is None
@@ -1969,6 +1986,29 @@ def test_bpe_merges_spark_jobs_independent_of_rounds(spark, sf_smoke):
     jobs_8, rows_8 = run(8)
     assert jobs_1 == jobs_8
     assert len(rows_8) == 8 and rows_8[:1] == rows_1
+
+
+def test_bpe_token_counts_build_runs_only_the_merge_jobs(spark, sf_smoke):
+    """Building q_bpe_token_counts runs no Spark job beyond learning the
+    merge table: the (at most n_merges rows) table is ordered on the
+    driver, not by a sampled range sort."""
+    from healthcare_etl_spark.operators.bpe import bpe_merges
+    from healthcare_etl_spark.plans.registry import get_registry
+    from healthcare_etl_spark.sources import load_table
+
+    docs = load_table(spark, sf_smoke, "documents")
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+
+    def jobs(build):
+        ids = tracker.getJobIdsForGroup(None)
+        before = max(ids) if ids else -1
+        build()
+        return max(tracker.getJobIdsForGroup(None)) - before
+
+    merge_jobs = jobs(lambda: bpe_merges(docs, n_merges=4, vocab_size=200).collect())
+    build_jobs = jobs(lambda: get_registry()["q_bpe_token_counts"].fn(spark, sf_smoke))
+    assert merge_jobs == 2
+    assert build_jobs == merge_jobs
 
 
 def test_bpe_merges_stop_when_no_pairs_left(spark):

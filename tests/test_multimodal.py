@@ -6,6 +6,8 @@ direct recomputation of the deterministic pixel/sample rules."""
 
 from __future__ import annotations
 
+import pytest
+
 
 def test_png_codec_roundtrip_exercises_all_filters(spark):
     """encode_png_pixels cycles scanline filters 0-4 (h up to 8 rows),
@@ -641,3 +643,99 @@ def test_bmp_codec_round_trip_row_orders(spark, sf_smoke):
     assert _bmp_decode_stats_one(b"") == (None,) * 7
     assert _bmp_decode_stats_one(b"BM" + b"\x00" * 10) == (None,) * 7
     assert _bmp_decode_stats_one(b"PNG whatever") == (None,) * 7
+
+
+def test_multimodal_module_has_one_arrow_map_and_no_pandas():
+    """Every codec pass runs through the one row-kernel primitive: the
+    module holds exactly one ``mapInArrow`` call, no ``mapInPandas`` and
+    no pandas import."""
+    import ast
+    import inspect
+
+    from healthcare_etl_spark.operators import multimodal
+
+    src = inspect.getsource(multimodal)
+    tree = ast.parse(src)
+    assert "mapInPandas" not in src
+    imported = [a.name for n in ast.walk(tree) if isinstance(n, ast.Import) for a in n.names]
+    imported += [n.module or "" for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)]
+    assert not [m for m in imported if m.split(".")[0] == "pandas"], imported
+    arrow_maps = [
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "mapInArrow"
+    ]
+    assert len(arrow_maps) == 1
+
+
+def _kernel_cases():
+    from healthcare_etl_spark.operators import multimodal as mm
+
+    # (decoder, encoder making its valid rows, declared output schema,
+    #  fields a NULL/junk row keeps non-NULL; None = row-expanding)
+    return {
+        "parse_image_dims": (mm.parse_image_dims, mm.encode_png_media,
+                             mm.IMAGE_DIMS_SCHEMA, {"format"}),
+        "parse_wav_meta": (mm.parse_wav_meta, mm.encode_wav_media,
+                           mm.WAV_META_SCHEMA, {"format"}),
+        "parse_mp4_meta": (mm.parse_mp4_meta, mm.encode_mp4_media,
+                           mm.MP4_META_SCHEMA, {"format"}),
+        "decode_png_pixel_stats": (mm.decode_png_pixel_stats, mm.encode_png_pixels,
+                                   mm.PNG_PIXEL_STATS_SCHEMA, set()),
+        "decode_wav_sample_stats": (mm.decode_wav_sample_stats, mm.encode_wav_pcm,
+                                    mm.WAV_SAMPLE_STATS_SCHEMA, set()),
+        "decode_gif_index_stats": (mm.decode_gif_index_stats, mm.encode_gif_media,
+                                   mm.GIF_INDEX_STATS_SCHEMA, set()),
+        "decode_jpeg_pixel_stats": (mm.decode_jpeg_pixel_stats, mm.encode_jpeg_gray,
+                                    mm.JPEG_PIXEL_STATS_SCHEMA, set()),
+        "decode_bmp_pixel_stats": (mm.decode_bmp_pixel_stats, mm.encode_bmp_pixels,
+                                   mm.BMP_PIXEL_STATS_SCHEMA, set()),
+        "decode_png_blockhash": (mm.decode_png_blockhash, mm.encode_png_family,
+                                 mm.BLOCKHASH_SCHEMA, set()),
+        "decode_wav_fingerprint": (mm.decode_wav_fingerprint, mm.encode_wav_family,
+                                   mm.AUDIOHASH_SCHEMA, set()),
+        "featurize_media_real": (mm.featurize_media_real, mm.encode_png_pixels,
+                                 mm.REAL_FEATURE_SCHEMA, {"kind", "n_bytes"}),
+        "resize_media_real": (
+            lambda m: mm.resize_media(m, target_w=3, target_h=2, decode_stub=False),
+            mm.encode_png_pixels, mm.RESIZED_SCHEMA, {"media_type", "out_w", "out_h"},
+        ),
+        "decode_mp4_mjpeg_frames": (mm.decode_mp4_mjpeg_frames, mm.encode_mjpeg_mp4,
+                                    mm.MJPEG_FRAME_STATS_SCHEMA, None),
+        "decode_mp4_mjpeg_frame_hashes": (mm.decode_mp4_mjpeg_frame_hashes,
+                                          mm.encode_mjpeg_family, mm.FRAME_HASH_SCHEMA, None),
+        "sample_frames_real": (lambda m: mm.sample_frames(m, decode_stub=False),
+                               mm.encode_mjpeg_mp4, mm.FRAME_SCHEMA, None),
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_kernel_cases()))
+def test_kernel_schema_and_null_junk_rows(spark, case):
+    """Every public kernel over a small corpus: ids 1-2 are valid media
+    from the matching encoder (id 2 encodes a NULL text), id 3 is a NULL
+    payload, id 4 junk bytes. Encoder and kernel results carry their
+    declared schemas, nullability included; NULL/junk rows come back with
+    NULL stats (1:1 kernels) or as no rows (row-expanding kernels)."""
+    from healthcare_etl_spark.operators import multimodal as mm
+
+    kernel, encoder, schema, keeps = _kernel_cases()[case]
+    docs = spark.createDataFrame([(1, "a fixture text"), (2, None)], "doc_id long, text string")
+    encoded = encoder(docs)
+    assert encoded.schema == mm.PNG_MEDIA_SCHEMA
+    bad = spark.createDataFrame([(3, None), (4, bytearray(b"\x00junk\xff" * 9))], mm.PNG_MEDIA_SCHEMA)
+    out = kernel(encoded.unionByName(bad))
+    assert out.schema == schema
+    rows = out.collect()
+    ids = [r["media_id"] for r in rows]
+    if keeps is None:
+        assert set(ids) == {1, 2}
+        assert all(v is not None for r in rows for v in r)
+        return
+    assert sorted(ids) == [1, 2, 3, 4]
+    for r in rows:
+        stats = {k: v for k, v in r.asDict().items() if k != "media_id" and k not in keeps}
+        if r["media_id"] <= 2:
+            assert None not in stats.values(), (r["media_id"], stats)
+        else:
+            assert set(stats.values()) == {None}, (r["media_id"], stats)

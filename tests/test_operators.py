@@ -1296,3 +1296,36 @@ def test_spread_count_is_size_derived(spark, sf_smoke):
     assert spread(docs).rdd.getNumPartitions() == n
     # a frame with no file lineage falls back to a single partition
     assert spread_count(spark.range(10)) == 1
+
+
+def test_spread_count_remote_input_gets_the_cap(spark):
+    """Input on remote storage is not sized: the spread is the cap."""
+    from healthcare_etl_spark.sources import spread_count
+
+    class RemoteScan:
+        sparkSession = spark
+
+        def inputFiles(self):
+            return ["s3a://bucket/t/part-0.parquet", "hdfs://nn:8020/t/part-1.parquet"]
+
+    assert spread_count(RemoteScan()) == spark.sparkContext.defaultParallelism
+
+
+def test_spread_count_local_paths(spark, tmp_path):
+    """A local path with a space and a percent sign is sized (the URI is
+    percent-decoded); a local input file deleted after the scan was
+    planned raises instead of silently taking the cap."""
+    import os
+
+    from healthcare_etl_spark.sources import spread_count
+    from healthcare_etl_spark.sources.readers import MissingInputError
+
+    path = str(tmp_path / "a b%20c" / "t.parquet")
+    spark.range(10).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert spread_count(df) == 1
+    for name in os.listdir(path):
+        if name.endswith(".parquet"):
+            os.remove(os.path.join(path, name))
+    with pytest.raises(MissingInputError, match="t.parquet"):
+        spread_count(df)

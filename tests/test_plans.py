@@ -207,9 +207,9 @@ def test_minhash_no_python_in_plan(spark, sf_smoke):
 
 def test_multimodal_uses_arrow_python(spark, sf_smoke):
     """The featurize kernel is the one sanctioned Python operator — it
-    must go through Arrow (MapInPandas), never row-at-a-time python UDF."""
+    must go through Arrow (MapInArrow), never row-at-a-time python UDF."""
     plan = plan_of(spark, sf_smoke, "q_multimodal_features")
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "BatchEvalPython" not in plan
 
 
