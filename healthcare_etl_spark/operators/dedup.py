@@ -193,10 +193,15 @@ def jaccard_pairs(
     # its shuffle stages at call time, so plan build on a 100 TB corpus
     # would run a corpus-sized job before any action (measured r8/r9),
     # and persist's columnar re-encode of the big index measured slower
-    # than the recompute it saves (AB_RUNS.jsonl r9-dedup-*). The
-    # shared shingle-index subtree dedupes via ReuseExchange: its
-    # distinct's shuffle is written once and every consumer (sizes +
-    # both self-join sides) reads the same shuffle files.
+    # than the recompute it saves (AB_RUNS.jsonl r9-dedup-*). Of the
+    # shingle index, ReuseExchange shares between its consumers (sizes +
+    # both self-join sides) only the bottom doc_id spread exchange of
+    # _shingle_text_rows: its shuffle files are written once (the sizes
+    # broadcast is reused by both join sides too). The distinct has no
+    # shuffle of its own to share (the doc_id partitioning satisfies
+    # it), so the posexplode -> md5 -> distinct pipeline above the
+    # spread runs once per consumer: three times in the executed
+    # adaptive plan of q_degree_distribution at sf0.01.
     inv = hashed_shingle_rows(df, text_col, id_col, k)
     sizes = inv.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     inv_sized = inv.join(sizes, "doc_id")
@@ -234,10 +239,14 @@ def hashed_shingle_rows(
     Single-exchange: the doc_id partitioning from ``_shingle_text_rows``
     satisfies both this distinct and the signature ``groupBy(doc_id)``
     downstream, so scan -> shingle -> distinct -> signatures is one
-    shuffle total. Sharing across the 3-4 consumers (sizes /
-    doc-frequency / ranked join / verify sets) comes from ReuseExchange
-    on that bottom shuffle; r9 measured the alternatives and kept this
-    form — ``persist`` pays a columnar re-encode of the ~26M-row index
+    shuffle total. Across the 3-4 consumers (sizes / doc-frequency /
+    ranked join / verify sets) ReuseExchange shares only that bottom
+    spread shuffle; there is no distinct shuffle to share, so the
+    posexplode -> md5 -> distinct pipeline above it runs once per
+    consumer (the executed adaptive plan of q_degree_distribution at
+    sf0.01: two ReusedExchange of the spread, the pipeline in three
+    codegen stages). r9 measured the alternatives and kept this form —
+    ``persist`` pays a columnar re-encode of the ~26M-row index
     that exceeds the recompute it saves, an explicit top
     ``repartition`` adds a second full shuffle of the index for no
     measured win (AB_RUNS.jsonl r9-dedup-{persist,top-exchange,

@@ -39,16 +39,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("media_type", T.StringType(), True),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("n_bytes", T.LongType(), True),
-        T.StructField("checksum", T.StringType(), True),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),

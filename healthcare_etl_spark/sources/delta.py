@@ -951,22 +951,23 @@ def delete_rows(
 
 
 def optimize_compact(spark: SparkSession, table_path: str) -> int:
-    """OPTIMIZE (bin-packing compaction): rewrite every live partition
-    group that has more than one file — or any file carrying a deletion
-    vector — into a single compacted file, and commit the swap with
-    ``dataChange=false`` adds/removes (the Delta contract for
-    compaction: readers see identical rows, streaming readers skip the
-    rewrite). Deletion vectors are APPLIED during the rewrite (masked
-    rows physically dropped), so compacted files carry no DV — exactly
-    what engine OPTIMIZE does. Old files stay on disk for time travel.
-    Returns the new version, or the current one if nothing needed
-    compaction.
+    """OPTIMIZE (size-tiered compaction): in each live partition group,
+    rewrite ``lakehouse.rewrite_set`` of its files — the small files and
+    every file carrying a deletion vector — into one file, and commit
+    the swap with ``dataChange=false`` adds/removes (the Delta contract
+    for compaction: readers see identical rows, streaming readers skip
+    the rewrite). Files large against the rest of their group stay in
+    place and get no action. Deletion vectors are APPLIED during the
+    rewrite (masked rows physically dropped), so compacted files carry
+    no DV — exactly what engine OPTIMIZE does. Old files stay on disk
+    for time travel. Returns the new version, or the current one if
+    nothing needed compaction.
 
+    Sizes and DVs come from the replayed add actions (no file stat).
     Scale shape: the rewrite is per partition group (one distributed
-    masked scan + one write each); the commit is metadata. A production
-    OPTIMIZE adds a target file size and bin-packs within the group —
-    at fixture scale every multi-file group packs to one file, which is
-    the same code path."""
+    masked scan of the rewrite set + one write each); the commit is
+    metadata. A production OPTIMIZE also caps the output file size; the
+    tiering keeps each rewrite at most half the smallest kept file."""
     live, schema_string, partition_columns, _protocol, version, configuration = (
         _replay(table_path)
     )
@@ -980,18 +981,28 @@ def optimize_compact(spark: SparkSession, table_path: str) -> int:
         for f in T.StructType.fromJson(json.loads(schema_string)).fields
         if f.name not in partition_columns
     ]
-    rel_by_path = {_abs(table_path, p): p for p in live}
+    add_by_path = {_abs(table_path, p): add for p, add in live.items()}
     new_version = version + 1
     actions: list[dict] = []
     n_written = 0
     for group in plan.groups:
-        members = [rel_by_path[p] for p in group.paths]
-        if len(members) == 1 and not live[members[0]].get("deletionVector"):
+        rewrite = lakehouse.rewrite_set(
+            [
+                (p, add_by_path[p]["size"], bool(add_by_path[p].get("deletionVector")))
+                for p in group.paths
+            ]
+        )
+        if not rewrite:
             continue
-        # The group's rows with its deletion vectors applied, written
-        # back in the data-file layout (partition values stay in the log).
+        # The rewrite set's rows with their deletion vectors applied,
+        # written back in the data-file layout (partition values stay in
+        # the log).
         merged = _to_physical(
-            lakehouse.to_dataframe(spark, replace(plan, groups=[group])), data_fields, mode
+            lakehouse.to_dataframe(
+                spark, replace(plan, groups=[replace(group, paths=sorted(rewrite))])
+            ),
+            data_fields,
+            mode,
         )
         out_dir = os.path.join(table_path, f"compact-{new_version}", str(n_written))
         merged.coalesce(1).write.mode("overwrite").parquet(out_dir)
@@ -999,11 +1010,17 @@ def optimize_compact(spark: SparkSession, table_path: str) -> int:
             table_path,
             out_dir,
             data_change=False,
-            partition_values=live[members[0]]["partitionValues"],
+            partition_values=add_by_path[rewrite[0]]["partitionValues"],
         )
         actions += [
-            {"remove": {"path": path, "deletionTimestamp": 0, "dataChange": False}}
-            for path in members
+            {
+                "remove": {
+                    "path": add_by_path[p]["path"],
+                    "deletionTimestamp": 0,
+                    "dataChange": False,
+                }
+            }
+            for p in sorted(rewrite)
         ]
         n_written += 1
     if not actions:

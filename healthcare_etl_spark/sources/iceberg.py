@@ -49,7 +49,7 @@ exactly like real Iceberg readers, which also replay manifests on the
 driver). Scale shape: the manifests become a ``sources.lakehouse.ScanPlan``
 (file groups, the field-id read schema, position-delete files and
 equality deletes) and every data read — the reader, ``delete_rows``'
-position discovery and, through the reader, ``optimize_compact`` — is
+position discovery and ``optimize_compact``'s rewrite — is
 ``lakehouse.to_dataframe`` over it: one pruned parquet scan per
 partition group, so predicate pushdown and column pruning reach the
 files unchanged. The writer is fixture-grade by volume but spec-grade
@@ -1017,38 +1017,88 @@ def append_rows(df: DataFrame, table_path: str) -> int:
     )
 
 
-def optimize_compact(spark: SparkSession, table_path: str) -> int:
-    """OPTIMIZE / rewrite: materialize the fully-masked table (both
-    delete-file kinds applied), write it back as fresh data files under
-    the table's partition spec, and commit a REPLACE snapshot — old
-    data files DELETED, all delete files purged, rewritten files ADDED
-    at the new sequence number. Read amplification accrued by streaming
-    equality/position deletes drops to zero; old snapshots stay
-    time-travelable. Returns the new snapshot id. No-op (returns the
-    current snapshot id) when the table carries no delete files and no
-    multi-file partition group.
+def _position_delete_targets(pos_e: list[dict], data_paths, table_path: str) -> set[str]:
+    """The live data files (local paths, out of ``data_paths``) that the
+    position-delete files ``pos_e`` can touch, read from each delete
+    file's parquet footer: a file whose ``file_path`` column has min ==
+    max in every row group names one data file (decoded like
+    ``lakehouse.path_key``: Spark writes ``file:/a%20b``, manifests hold
+    ``file:///a b``); an empty file touches none. Any other file counts
+    as touching every data file — decoded values do not keep the
+    encoded byte order, so a min/max range cannot be narrowed safely,
+    and a named file that is not live means the footer is not trusted."""
+    import pyarrow.parquet as pq
 
-    Scale shape: the rewrite is one distributed masked scan + one
-    partitioned write; the commit is metadata — the same contract as
+    data_paths = set(data_paths)
+    touched: set[str] = set()
+    for e in pos_e:
+        meta = pq.ParquetFile(_local_path(e["data_file"]["file_path"], table_path)).metadata
+        if meta.num_rows == 0:
+            continue
+        column = meta.schema.names.index("file_path")
+        names = set()
+        for i in range(meta.num_row_groups):
+            stats = meta.row_group(i).column(column).statistics
+            if stats is None or not stats.has_min_max:
+                return data_paths
+            names |= {stats.min, stats.max}
+        named = lakehouse.local_path(names.pop()) if len(names) == 1 else None
+        if named not in data_paths:
+            return data_paths
+        touched.add(named)
+    return touched
+
+
+def optimize_compact(spark: SparkSession, table_path: str) -> int:
+    """OPTIMIZE / rewrite (size-tiered): in each partition group, rewrite
+    ``lakehouse.rewrite_set`` of its data files — the small files and
+    every file a delete applies to — under the table's partition spec
+    (one file per group), and commit a REPLACE snapshot: rewrite-set
+    files DELETED, files large against the rest of their group carried
+    as EXISTING with their sequence numbers, rewritten files ADDED at
+    the new sequence number, all delete files purged. Every file a
+    delete applies to is in a rewrite set, so the purge loses no
+    delete; read amplification accrued by streaming equality/position
+    deletes drops to zero. Old snapshots stay time-travelable. Returns
+    the new snapshot id, or the current one when there is nothing to
+    rewrite and no delete file.
+
+    A data file has deletes against it when a position-delete file's
+    footer names it (``_position_delete_targets``) or an equality
+    delete has a higher sequence number. Sizes come from the manifests
+    (``file_size_in_bytes``). Scale shape: the rewrite is one
+    distributed masked scan of the rewrite files only + one partitioned
+    write; the commit is metadata — the same contract as
     ``sources.delta.optimize_compact``."""
     meta = _current_metadata(table_path)
     data_e, pos_e, eq_e = _current_entries(meta, table_path)
     pnames = [f["name"] for f in _partition_fields(meta)]
-    pv_counts: dict[tuple, int] = {}
-    for e in data_e:
-        pv = tuple((e["data_file"].get("partition") or {}).get(n) for n in pnames)
-        pv_counts[pv] = pv_counts.get(pv, 0) + 1
-    if not (pos_e or eq_e) and all(c <= 1 for c in pv_counts.values()):
+    by_path = {_local_path(e["data_file"]["file_path"], table_path): e for e in data_e}
+    touched = _position_delete_targets(pos_e, by_path, table_path)
+    eq_seq = max((e.get("sequence_number") or 0 for e in eq_e), default=-1)
+    groups: dict[tuple, list[tuple[str, int, bool]]] = {}
+    for path, e in by_path.items():
+        dfile = e["data_file"]
+        pv = tuple((dfile.get("partition") or {}).get(n) for n in pnames)
+        deleted = path in touched or (e.get("sequence_number") or 0) < eq_seq
+        groups.setdefault(pv, []).append((path, dfile["file_size_in_bytes"], deleted))
+    rewrite = {p for files in groups.values() for p in lakehouse.rewrite_set(files)}
+    if not rewrite and not (pos_e or eq_e):
         return meta["current-snapshot-id"]
-    current = read_iceberg_table(spark, table_path)
     version = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    new_entries = _write_spec_files(
-        meta, current, os.path.join(table_path, "data", f"rewrite-{version}"), compact=True
-    )
+    new_entries = []
+    if rewrite:
+        rows = lakehouse.to_dataframe(
+            spark,
+            _scan_plan(meta, table_path, ([by_path[p] for p in sorted(rewrite)], pos_e, eq_e)),
+        )
+        new_entries = _write_spec_files(
+            meta, rows, os.path.join(table_path, "data", f"rewrite-{version}"), compact=True
+        )
     return _write_snapshot(
         table_path,
         meta,
-        [_carry(e, status=2) for e in data_e] + new_entries,
+        [_carry(e, status=2 if p in rewrite else 0) for p, e in by_path.items()] + new_entries,
         operation="replace",
         delete_entries=[_carry(e, status=2) for e in pos_e + eq_e] or None,
     )

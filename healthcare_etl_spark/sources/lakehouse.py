@@ -5,9 +5,19 @@ Each format replays its own metadata (the Delta log, the Iceberg
 manifests) into a ``ScanPlan``: which data files to read, grouped by
 partition value, with what read schema, and which rows are deleted.
 ``to_dataframe`` is the one place that turns a plan into rows — both
-readers, the row-position discovery of both ``delete_rows`` and Delta's
-``optimize_compact`` go through it. ``written_files`` is the one walker
-over the parquet files a Spark write just produced.
+readers, the row-position discovery of both ``delete_rows`` and both
+``optimize_compact`` rewrites go through it. ``written_files`` is the one
+walker over the parquet files a Spark write just produced.
+
+Compaction is size-tiered, one rule for both formats (``rewrite_set``):
+within a partition group, files are walked from the largest down, and
+each stays in place while it has no deletes against it and is at least
+``TIER_RATIO`` (2) times the combined size of every smaller file of the
+group; the first file that fails and every file below it are rewritten
+into one. A kept file is thus more than the whole rewrite below it, so a
+byte is rewritten O(log n) times over a table's life instead of on
+every OPTIMIZE, and OPTIMIZE after a small append rewrites the append,
+not the table.
 
 Scale shape: the plan is metadata (bounded by file count, not row
 count). The data plane is one ``spark.read.parquet`` per file group with
@@ -21,8 +31,10 @@ materialization.
 from __future__ import annotations
 
 import os
+import re
 from dataclasses import dataclass, field
 from functools import reduce
+from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +53,9 @@ _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 _POSITION_DELETE_SCHEMA = T.StructType(
     [T.StructField("file_path", T.StringType()), T.StructField("pos", T.LongType())]
 )
+# A file stays in place during compaction only while it is at least this
+# many times the combined size of the smaller files of its group.
+TIER_RATIO = 2
 
 
 @dataclass
@@ -104,6 +119,28 @@ def group_files(files) -> list[FileGroup]:
     ]
 
 
+def rewrite_set(files) -> list[str]:
+    """The paths OPTIMIZE rewrites among one partition group's
+    ``(path, size, has_deletes)`` triples, largest first.
+
+    The files are walked by size, descending (path breaks ties); each is
+    kept while it has no deletes against it and its size is at least
+    ``TIER_RATIO`` times the combined size of all smaller files. The
+    first file that fails and everything after it are the rewrite set.
+    The smallest file always passes the size test (nothing is below it),
+    so a one-file set is a file with deletes: a lone file without
+    deletes is never rewritten into itself."""
+    ordered = sorted(files, key=lambda f: (-f[1], f[0]))
+    below = sum(size for _path, size, _deleted in ordered)
+    kept = 0
+    for _path, size, deleted in ordered:
+        below -= size
+        if deleted or size < TIER_RATIO * below:
+            break
+        kept += 1
+    return [path for path, _size, _deleted in ordered[kept:]]
+
+
 def path_key(col: Column) -> Column:
     """The local path a file URI names — the mask key. Spark reports
     ``_metadata.file_path`` as ``file:/a%20b/...``; the scheme is
@@ -112,6 +149,11 @@ def path_key(col: Column) -> Column:
     through a link is keyed by the link path on both sides."""
     stripped = F.regexp_replace(col, "^file:/+", "/")
     return F.url_decode(F.regexp_replace(stripped, r"\+", "%2B"))
+
+
+def local_path(uri: str) -> str:
+    """``path_key`` of one path string, on the driver."""
+    return unquote(re.sub("^file:/+", "/", uri))
 
 
 def _scan(spark: SparkSession, schema: T.StructType, paths: list[str]) -> DataFrame:

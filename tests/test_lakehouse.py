@@ -35,3 +35,156 @@ def test_position_masks_across_space_and_symlink(spark, tmp_path, fmt, write_via
     mod.optimize_compact(spark, other)
     for path in (one, other):
         assert sorted(map(tuple, read(spark, path).collect())) == expected
+
+
+# ------------------------------------------------------ tiered compaction
+
+
+@pytest.mark.parametrize(
+    "files, rewritten",
+    [
+        ([], []),
+        ([("a", 10, False)], []),
+        ([("a", 10, True)], ["a"]),
+        # the large file is at least twice everything below it
+        ([("s1", 10, False), ("big", 100, False), ("s2", 10, False)], ["s1", "s2"]),
+        ([("big", 40, False), ("s", 20, False)], []),  # exactly 2x keeps both
+        ([("big", 100, False), ("mid", 60, False)], ["big", "mid"]),
+        ([("big", 1000, False), ("m", 100, False), ("s", 30, False), ("t", 20, False)], ["s", "t"]),
+        # a delete on the large file pulls it, and all below it, in
+        ([("big", 100, True), ("s", 10, False)], ["big", "s"]),
+        ([("big", 100, False), ("m", 40, True), ("s", 1, False)], ["m", "s"]),
+        # equal sizes: the path breaks the tie
+        ([("b", 10, False), ("a", 10, False)], ["a", "b"]),
+    ],
+)
+def test_rewrite_set(files, rewritten):
+    from healthcare_etl_spark.sources.lakehouse import rewrite_set
+
+    assert rewrite_set(files) == rewritten
+
+
+def test_local_path_decodes_like_path_key():
+    from healthcare_etl_spark.sources.lakehouse import local_path
+
+    assert local_path("file:/lake%20dir/a+b.parquet") == "/lake dir/a+b.parquet"
+    assert local_path("file:///lake dir/x.parquet") == "/lake dir/x.parquet"
+    assert local_path("/plain/x.parquet") == "/plain/x.parquet"
+
+
+_WRITE = {"delta": delta.write_delta_table, "iceberg": iceberg.write_iceberg_table}
+_APPEND = {"delta": delta.append_delta_table, "iceberg": iceberg.append_rows}
+_MOD = {"delta": delta, "iceberg": iceberg}
+
+
+def _read(spark, fmt, path, version=None):
+    if fmt == "delta":
+        return delta.read_delta_table(spark, path, version=version)
+    return iceberg.read_iceberg_table(spark, path, snapshot_id=version)
+
+
+def _live(fmt, path):
+    """(live data files keyed by path, their add action / manifest entry;
+    the deletion vectors or delete files still live)."""
+    if fmt == "delta":
+        live = delta._replay(path)[0]
+        return live, [a for a in live.values() if a.get("deletionVector")]
+    meta = iceberg._current_metadata(path)
+    data_e, pos_e, eq_e = iceberg._current_entries(meta, path)
+    return {e["data_file"]["file_path"]: e for e in data_e}, pos_e + eq_e
+
+
+def _same_file(fmt, before, after):
+    if fmt == "delta":
+        return before == after
+    keys = ("snapshot_id", "sequence_number", "file_sequence_number", "data_file")
+    return all(before[k] == after[k] for k in keys) and after["status"] == 0
+
+
+def _large_plus_small(spark, sf_smoke, path, fmt, n_small=3):
+    """One large file (1000 orders rows) and ``n_small`` appends of 5
+    rows each; returns the large file's key in ``_live``."""
+    from healthcare_etl_spark.sources import load_table
+
+    orders = load_table(spark, sf_smoke, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
+    )
+    _WRITE[fmt](orders.filter("o_orderkey < 1000").coalesce(1), path)
+    (large,) = _live(fmt, path)[0]
+    for i in range(n_small):
+        lo = 1000 + 5 * i
+        _APPEND[fmt](orders.filter(f"o_orderkey >= {lo} AND o_orderkey < {lo + 5}"), path)
+    return large
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_tiered_compaction_keeps_the_large_file(spark, sf_smoke, tmp_path, fmt):
+    """OPTIMIZE after small appends merges the appends into one file and
+    leaves the large file live as it was; rows are unchanged, time travel
+    sees the old layout and a second OPTIMIZE is a no-op."""
+    path = str(tmp_path / "t")
+    large = _large_plus_small(spark, sf_smoke, path, fmt)
+    files_before, _ = _live(fmt, path)
+    assert len(files_before) == 4
+    expected = sorted(_read(spark, fmt, path).collect())
+    v = _MOD[fmt].optimize_compact(spark, path)
+    files_after, deletes = _live(fmt, path)
+    assert len(files_after) == 2 and large in files_after and not deletes
+    assert _same_file(fmt, files_before[large], files_after[large])
+    assert sorted(_read(spark, fmt, path).collect()) == expected
+    old = _read(spark, fmt, path, version=v - 1)
+    assert len(old.inputFiles()) == 4
+    assert sorted(old.collect()) == expected
+    assert _MOD[fmt].optimize_compact(spark, path) == v
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_delete_on_the_large_file_forces_its_rewrite(spark, sf_smoke, tmp_path, fmt):
+    """A deletion vector / position delete against the large file puts
+    it in the rewrite set, and no DV or delete file survives OPTIMIZE."""
+    path = str(tmp_path / "t")
+    large = _large_plus_small(spark, sf_smoke, path, fmt, n_small=2)
+    _MOD[fmt].delete_rows(spark, path, "o_orderkey < 1000 AND o_orderkey % 7 = 0")
+    assert _live(fmt, path)[1]
+    expected = sorted(_read(spark, fmt, path).collect())
+    _MOD[fmt].optimize_compact(spark, path)
+    files_after, deletes = _live(fmt, path)
+    assert large not in files_after and len(files_after) == 1 and not deletes
+    assert sorted(_read(spark, fmt, path).collect()) == expected
+
+
+def test_iceberg_equality_delete_forces_a_full_rewrite(spark, sf_smoke, tmp_path):
+    """An equality delete applies to every older data file, so all of
+    them are rewritten and the delete file is purged."""
+    path = str(tmp_path / "t")
+    _large_plus_small(spark, sf_smoke, path, "iceberg", n_small=2)
+    iceberg.delete_rows_equality(
+        spark, path, spark.createDataFrame([(1001,), (3,)], "o_orderkey long")
+    )
+    expected = sorted(_read(spark, "iceberg", path).collect())
+    iceberg.optimize_compact(spark, path)
+    files_after, deletes = _live("iceberg", path)
+    assert len(files_after) == 1 and not deletes
+    assert sorted(_read(spark, "iceberg", path).collect()) == expected
+
+
+@pytest.mark.parametrize("write_via", ["dir", "link"])
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_delete_on_a_small_file_keeps_the_large_one(spark, sf_smoke, tmp_path, fmt, write_via):
+    """Under a directory name with a space and through a symlink: a
+    position delete that touches only a small file leaves the large file
+    in place. For Iceberg this pins the footer path decoding (Spark
+    writes ``file:/lake%20dir/...``, the manifests ``file:///lake dir/...``)."""
+    real = tmp_path / "lake dir"
+    real.mkdir()
+    (tmp_path / "lake_link").symlink_to(real)
+    paths = {"dir": str(real / "t"), "link": str(tmp_path / "lake_link" / "t")}
+    one = paths[write_via]
+    other = paths["link" if write_via == "dir" else "dir"]
+    large = _large_plus_small(spark, sf_smoke, one, fmt, n_small=2)
+    _MOD[fmt].delete_rows(spark, one, "o_orderkey = 1007")
+    expected = sorted(_read(spark, fmt, one).collect())
+    _MOD[fmt].optimize_compact(spark, other)
+    files_after, deletes = _live(fmt, one)
+    assert len(files_after) == 2 and large in files_after and not deletes
+    assert sorted(_read(spark, fmt, other).collect()) == expected
