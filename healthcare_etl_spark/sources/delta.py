@@ -986,11 +986,13 @@ def optimize_compact(spark: SparkSession, table_path: str) -> int:
     actions: list[dict] = []
     n_written = 0
     for group in plan.groups:
-        rewrite = lakehouse.rewrite_set(
-            [
-                (p, add_by_path[p]["size"], bool(add_by_path[p].get("deletionVector")))
-                for p in group.paths
-            ]
+        rewrite = sorted(
+            lakehouse.rewrite_set(
+                [
+                    (p, add_by_path[p]["size"], bool(add_by_path[p].get("deletionVector")))
+                    for p in group.paths
+                ]
+            )
         )
         if not rewrite:
             continue
@@ -999,7 +1001,7 @@ def optimize_compact(spark: SparkSession, table_path: str) -> int:
         # the log).
         merged = _to_physical(
             lakehouse.to_dataframe(
-                spark, replace(plan, groups=[replace(group, paths=sorted(rewrite))])
+                spark, replace(plan, groups=[replace(group, paths=rewrite)])
             ),
             data_fields,
             mode,
@@ -1020,7 +1022,7 @@ def optimize_compact(spark: SparkSession, table_path: str) -> int:
                     "dataChange": False,
                 }
             }
-            for p in sorted(rewrite)
+            for p in rewrite
         ]
         n_written += 1
     if not actions:
