@@ -4,7 +4,6 @@ from healthcare_etl_spark.functions.text import (
     punct_count,
     token_count_bpe,
     tokens,
-    word_shingles,
 )
 from healthcare_etl_spark.functions.timeutils import ts_micros, ts_seconds
 from healthcare_etl_spark.functions.zorder import morton_key, morton_key_sql
@@ -16,7 +15,6 @@ __all__ = [
     "l2_norm",
     "cosine_similarity",
     "tokens",
-    "word_shingles",
     "token_count_bpe",
     "punct_count",
     "char_fingerprint",

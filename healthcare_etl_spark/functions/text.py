@@ -1,7 +1,7 @@
 """Text-analysis column helpers — built-in expressions only.
 
 These power the LLM-data-pipeline operators (quality scoring, token
-counting, shingling for dedup, fingerprinting). All stay JVM-side; the
+counting, fingerprinting). All stay JVM-side; the
 regexes use constructs with identical semantics in Java regex (Spark)
 and RE2 (DuckDB) so oracle queries can mirror them.
 """
@@ -21,26 +21,9 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def tokens(text: Column | str, sep: str = " ") -> Column:
+def tokens(text: Column | str) -> Column:
     """Whitespace tokenization (single-space convention of the fixtures)."""
-    return F.split(_c(text), sep)
-
-
-def word_shingles(text: Column | str, k: int = 3) -> Column:
-    """Distinct word k-shingles ('w1 w2 w3' strings) of a text column.
-
-    Built from ``transform(sequence(...))`` over the token array —
-    higher-order functions, no UDF. Texts shorter than ``k`` tokens
-    yield a single shingle of the whole text so they still participate
-    in dedup.
-    """
-    t = tokens(text)
-    n = F.size(t)
-    shingled = F.transform(
-        F.sequence(F.lit(1), n - k + 1),
-        lambda i: F.concat_ws(" ", *[F.element_at(t, i + j) for j in range(k)]),
-    )
-    return F.array_distinct(F.when(n >= k, shingled).otherwise(F.array(F.concat_ws(" ", t))))
+    return F.split(_c(text), " ")
 
 
 def token_count_bpe(text: Column | str) -> Column:

@@ -96,12 +96,12 @@ def l2_sq(a: Column | str, b: Column | str) -> Column:
     )
 
 
-def sign_bit_words(arr_sql: str, *, dim: int, word_bits: int = 32) -> Column:
+def sign_bit_words(arr_sql: str, *, dim: int) -> Column:
     """Binary (1-bit) vector quantization: pack the sign bits of an
-    ``array<numeric>`` column into ``ceil(dim/word_bits)`` BIGINT words.
+    ``array<numeric>`` column into ``ceil(dim/32)`` BIGINT words.
 
-    Bit ``i`` of word ``w`` is 1 iff ``element[w*word_bits + i] > 0``
-    (ties-at-zero map to 0, deterministically). The default 32-bit words
+    Bit ``i`` of word ``w`` is 1 iff ``element[w*32 + i] > 0``
+    (ties-at-zero map to 0, deterministically). The 32-bit words
     keep every packed value strictly positive — no BIGINT sign-bit edge
     cases on either engine — while a 64-dim float32 vector (256 B)
     collapses to two longs (16 B at rest, 8 B of payload bits): the
@@ -112,10 +112,10 @@ def sign_bit_words(arr_sql: str, *, dim: int, word_bits: int = 32) -> Column:
     ``arr_sql`` is a SQL expression string (the packing needs the
     element *index*, which only the SQL lambda form exposes portably).
     """
-    n_words = -(-dim // word_bits)
+    n_words = -(-dim // 32)
     return F.expr(
         f"transform(sequence(0, {n_words - 1}), w -> "
-        f"aggregate(transform(slice({arr_sql}, w * {word_bits} + 1, {word_bits}), "
+        f"aggregate(transform(slice({arr_sql}, w * 32 + 1, 32), "
         f"(x, i) -> IF(CAST(x AS DOUBLE) > 0.0D, shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))), "
         f"CAST(0 AS BIGINT), (acc, b) -> acc + b))"
     )

@@ -42,12 +42,13 @@ def morton_key(x: Column | str, y: Column | str, *, bits: int = DEFAULT_BITS) ->
     return key
 
 
-def morton_key_sql(x: str, y: str, *, bits: int = DEFAULT_BITS) -> str:
-    """ANSI-SQL mirror of ``morton_key`` (unrolled shift-and-add) for
-    DuckDB oracles: textually the same arithmetic, bit for bit."""
-    mask = (1 << bits) - 1
+def morton_key_sql(x: str, y: str) -> str:
+    """ANSI-SQL mirror of ``morton_key`` at ``DEFAULT_BITS`` (unrolled
+    shift-and-add) for DuckDB oracles: textually the same arithmetic,
+    bit for bit."""
+    mask = (1 << DEFAULT_BITS) - 1
     terms = []
-    for i in range(bits):
+    for i in range(DEFAULT_BITS):
         terms.append(f"(((({x}) & {mask}) >> {i}) & 1) * {1 << (2 * i)}")
         terms.append(f"(((({y}) & {mask}) >> {i}) & 1) * {1 << (2 * i + 1)}")
     return "(" + " + ".join(terms) + ")"

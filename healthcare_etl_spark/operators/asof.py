@@ -44,8 +44,6 @@ def asof_join(
     by: list[str] | None = None,
     value_cols: list[str] | None = None,
     direction: str = "backward",
-    bucket_seconds: float = 86400.0,
-    bucket_width: float | None = None,
 ) -> DataFrame:
     """For each left row, attach the right row with the greatest
     ``right[on] <= left[on]`` (direction='backward') or the smallest
@@ -56,10 +54,9 @@ def asof_join(
     exact same time IS visible (<= / >=), matching ``pd.merge_asof``
     and DuckDB ``ASOF JOIN`` defaults.
 
-    The keyless form buckets the time axis (``bucket_seconds`` for
-    temporal ``on``; ``bucket_width`` in column units for numeric
-    ``on``, default 1.0) — size buckets so one bucket's rows fit an
-    executor partition at the target scale.
+    The keyless form buckets the time axis (one day for temporal
+    ``on``; width 1.0 in column units for numeric ``on``) — size buckets
+    so one bucket's rows fit an executor partition at the target scale.
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be 'backward' or 'forward', got {direction!r}")
@@ -102,8 +99,6 @@ def asof_join(
             on=on,
             value_cols=value_cols,
             direction=direction,
-            bucket_seconds=bucket_seconds,
-            bucket_width=bucket_width,
             on_dtype=dict(left.dtypes)[on],
         )
     for c in value_cols:
@@ -117,8 +112,6 @@ def _keyless_bucketed_carry(
     on: str,
     value_cols: list[str],
     direction: str,
-    bucket_seconds: float,
-    bucket_width: float | None,
     on_dtype: str,
 ) -> DataFrame:
     """Two-phase keyless carry: per-bucket window + cross-bucket fix-up.
@@ -129,10 +122,10 @@ def _keyless_bucketed_carry(
     temporal = any(on_dtype.startswith(t) for t in _TEMPORAL_TYPES)
     if temporal:
         ord_raw: Column = ts_micros(on).cast("double")
-        width = float(bucket_seconds) * 1_000_000.0
+        width = 86400.0 * 1_000_000.0
     else:
         ord_raw = F.col(on).cast("double")
-        width = float(bucket_width if bucket_width is not None else 1.0)
+        width = 1.0
 
     sign = F.lit(1.0) if direction == "backward" else F.lit(-1.0)
     u = unioned.withColumn("__mord", ord_raw * sign).withColumn(

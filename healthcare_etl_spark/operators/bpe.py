@@ -68,13 +68,11 @@ _MERGES_SCHEMA = T.StructType(
 )
 
 
-def word_vocabulary(
-    docs: DataFrame, *, text_col: str = "text", vocab_size: int = 200
-) -> DataFrame:
-    """One corpus scan -> the top-``vocab_size`` (word, cnt) rows by
+def word_vocabulary(docs: DataFrame, *, vocab_size: int = 200) -> DataFrame:
+    """One ``text`` scan -> the top-``vocab_size`` (word, cnt) rows by
     count (word asc tie-break). Space tokenization matches the corpus
     queries' convention (plans.queries_corpus)."""
-    words = docs.select(F.explode(F.split(F.col(text_col), " ")).alias("word")).filter(
+    words = docs.select(F.explode(F.split(F.col("text"), " ")).alias("word")).filter(
         F.length("word") > 0
     )
     return (
@@ -102,7 +100,6 @@ def bpe_merges(
     *,
     n_merges: int = 4,
     vocab_size: int = 200,
-    text_col: str = "text",
 ) -> DataFrame:
     """Learn the first ``n_merges`` BPE merges. Returns one row per
     merge round: (round, left_sym, right_sym, merged, pair_count) — the
@@ -116,7 +113,7 @@ def bpe_merges(
     over the corpus."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    vocab = word_vocabulary(docs, text_col=text_col, vocab_size=vocab_size)
+    vocab = word_vocabulary(docs, vocab_size=vocab_size)
     rows = vocab.select(F.expr(_CHARS).alias("syms"), "cnt").collect()
     words = [(r["syms"], r["cnt"]) for r in rows]
     merges = []
@@ -151,14 +148,8 @@ def _merge_fold(syms: Column, left: str, right: str) -> Column:
     )
 
 
-def bpe_token_counts(
-    docs: DataFrame,
-    merges_rows: list[dict],
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-document token counts under a learned merge table (passed as
+def bpe_token_counts(docs: DataFrame, merges_rows: list[dict]) -> DataFrame:
+    """Per-``doc_id`` token counts of ``text`` under a learned merge table (passed as
     plain row dicts: [{'left_sym': ..., 'right_sym': ...}, ...] in
     training order). One corpus scan, all folds nested in a single
     codegen'd expression — no shuffle beyond the per-doc aggregate."""
@@ -166,11 +157,11 @@ def bpe_token_counts(
     for m in merges_rows:
         syms = _merge_fold(syms, m["left_sym"], m["right_sym"])
     words = docs.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("word")
+        F.col("doc_id"), F.explode(F.split(F.col("text"), " ")).alias("word")
     ).filter(F.length("word") > 0)
     return (
-        words.select(id_col, F.size(syms).cast("long").alias("n_tok"))
-        .groupBy(id_col)
+        words.select("doc_id", F.size(syms).cast("long").alias("n_tok"))
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_words"),
             F.sum("n_tok").alias("n_tokens"),

@@ -15,8 +15,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def coerce_numeric(df: DataFrame, columns: list[str], target_type: str = "double") -> DataFrame:
-    """Cast each column to ``target_type`` with NULL on parse failure.
+def coerce_numeric(df: DataFrame, columns: list[str]) -> DataFrame:
+    """Cast each column to double with NULL on parse failure.
 
     Like the reference (etl_script.py:81), columns absent from the
     DataFrame are skipped silently.
@@ -25,7 +25,7 @@ def coerce_numeric(df: DataFrame, columns: list[str], target_type: str = "double
     out = df
     for c in columns:
         if c in existing:
-            out = out.withColumn(c, F.expr(f"try_cast(`{c}` as {target_type})"))
+            out = out.withColumn(c, F.expr(f"try_cast(`{c}` as double)"))
     return out
 
 

@@ -58,15 +58,16 @@ N_BANDS = 8
 BAND_R = N_PERM // N_BANDS
 
 
-def minhash_coefficients(n: int = N_PERM, seed: int = 12345) -> list[tuple[int, int]]:
-    """Deterministic (a, b) pairs for h_i(x) = (a*x + b) mod P.
+def minhash_coefficients() -> list[tuple[int, int]]:
+    """Deterministic (a, b) pairs for h_i(x) = (a*x + b) mod P, one per
+    permutation.
 
-    A plain LCG keeps this reproducible anywhere (the DuckDB oracle SQL
-    embeds the same literals).
+    A plain LCG from seed 12345 keeps this reproducible anywhere (the
+    DuckDB oracle SQL embeds the same literals).
     """
-    state = seed
+    state = 12345
     out = []
-    for _ in range(n):
+    for _ in range(N_PERM):
         state = (state * 1103515245 + 12345) % (2**31)
         a = state % (P - 1) + 1
         state = (state * 1103515245 + 12345) % (2**31)
@@ -86,22 +87,20 @@ def md5_hash31(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long") % P
 
 
-def exact_dedup(df: DataFrame, content_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep one representative (min id) per identical content value.
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """Keep one representative (min doc_id) per identical text.
 
-    Returns (keeper_id, n_copies, <content_col>). At scale, group on
+    Returns (text, keeper_id, n_copies). At scale, group on
     ``xxhash64(content)`` first so the shuffle key is 8 bytes; the full
     content comparison then only runs within hash buckets.
     """
-    return df.groupBy(content_col).agg(
-        F.min(id_col).alias("keeper_id"),
+    return df.groupBy("text").agg(
+        F.min("doc_id").alias("keeper_id"),
         F.count(F.lit(1)).alias("n_copies"),
     )
 
 
-def _shingle_text_rows(
-    df: DataFrame, text_col: str, id_col: str, k: int
-) -> DataFrame:
+def _shingle_text_rows(df: DataFrame, k: int) -> DataFrame:
     """(doc_id, shingle) rows (NOT distinct) — the exploded zip form.
 
     Word k-shingles as ``arrays_zip`` over shifted ``slice`` calls on the
@@ -120,10 +119,10 @@ def _shingle_text_rows(
     """
     from healthcare_etl_spark.sources.readers import spread_count
 
-    df = df.repartition(spread_count(df), F.col(id_col))
-    toks = F.split(F.col(text_col), " ")
+    df = df.repartition(spread_count(df), F.col("doc_id"))
+    toks = F.split(F.col("text"), " ")
     base = df.select(
-        F.col(id_col).alias("doc_id"), toks.alias("t"), F.size(toks).alias("n_tok")
+        F.col("doc_id"), toks.alias("t"), F.size(toks).alias("n_tok")
     )
     zipped = F.arrays_zip(
         F.col("t").alias("w0"),
@@ -149,25 +148,31 @@ def _shingle_text_rows(
     )
 
 
-def shingle_rows(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
-) -> DataFrame:
-    """Distinct (doc_id, shingle) rows — see ``_shingle_text_rows``.
+def _shared_shingle_counts(df: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, na, nb, n_common) for every pair doc_a < doc_b
+    sharing at least one hashed 3-shingle: the inverted-index
+    self-join on the 8-byte shingle hash, with the shared count folded
+    into the join's immediate ``groupBy``."""
+    inv = hashed_shingle_rows(df)
+    sizes = inv.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    inv_sized = inv.join(sizes, "doc_id")
+    return (
+        inv_sized.alias("x")
+        .join(
+            inv_sized.alias("y"),
+            (F.col("x.hsh") == F.col("y.hsh")) & (F.col("x.doc_id") < F.col("y.doc_id")),
+        )
+        .groupBy(
+            F.col("x.doc_id").alias("doc_a"),
+            F.col("y.doc_id").alias("doc_b"),
+            F.col("x.n_sh").alias("na"),
+            F.col("y.n_sh").alias("nb"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
 
-    The distinct is exchange-free: the input is already hash-partitioned
-    by doc_id, which satisfies the (doc_id, shingle) clustering.
-    """
-    return _shingle_text_rows(df, text_col, id_col, k).distinct()
 
-
-def jaccard_pairs(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    k: int = 3,
-) -> DataFrame:
+def jaccard_pairs(df: DataFrame, *, threshold: float = 0.5) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via shared-shingle join.
 
     Pairs are generated only for documents sharing >= 1 shingle (the
@@ -202,23 +207,7 @@ def jaccard_pairs(
     # it), so the posexplode -> md5 -> distinct pipeline above the
     # spread runs once per consumer: three times in the executed
     # adaptive plan of q_degree_distribution at sf0.01.
-    inv = hashed_shingle_rows(df, text_col, id_col, k)
-    sizes = inv.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inv_sized = inv.join(sizes, "doc_id")
-    common = (
-        inv_sized.alias("x")
-        .join(
-            inv_sized.alias("y"),
-            (F.col("x.hsh") == F.col("y.hsh")) & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .groupBy(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.col("x.n_sh").alias("na"),
-            F.col("y.n_sh").alias("nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    common = _shared_shingle_counts(df)
     jac = F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
     return (
         common.select("doc_a", "doc_b", stable_round(jac, 6).alias("jaccard"))
@@ -226,10 +215,9 @@ def jaccard_pairs(
     )
 
 
-def hashed_shingle_rows(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
-) -> DataFrame:
-    """Distinct (doc_id, hsh) rows: md5-derived 31-bit shingle hashes.
+def hashed_shingle_rows(df: DataFrame) -> DataFrame:
+    """Distinct (doc_id, hsh) rows: md5-derived 31-bit hashes of the word
+    3-shingles of ``text``.
 
     Hashing *before* the distinct keeps every downstream shuffle numeric
     (8-byte keys instead of shingle strings) and needs only one dedup
@@ -254,7 +242,7 @@ def hashed_shingle_rows(
     AQE it executes corpus-sized shuffle stages at PLAN BUILD time.
     """
     return (
-        _shingle_text_rows(df, text_col, id_col, k)
+        _shingle_text_rows(df, 3)
         .select("doc_id", md5_hash31("shingle").alias("hsh"))
         .distinct()
     )
@@ -272,12 +260,6 @@ def minhash_signatures_from(inv_h: DataFrame) -> DataFrame:
     return inv_h.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"), *aggs)
 
 
-def minhash_signatures(
-    df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id", k: int = 3
-) -> DataFrame:
-    return minhash_signatures_from(hashed_shingle_rows(df, text_col, id_col, k))
-
-
 def _band_key(band: int) -> Column:
     """Fold band ``band``'s R signature columns into one 64-bit bucket key."""
     fold = F.lit(0).cast("long")
@@ -287,13 +269,10 @@ def _band_key(band: int) -> Column:
 
 
 def _pruned_hashed_rows(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int,
-    max_shingle_doc_frac: float | None,
+    df: DataFrame, k: int, max_shingle_doc_frac: float | None
 ) -> DataFrame:
-    """(doc_id, hsh) rows (non-distinct), optionally dropping boilerplate.
+    """(doc_id, hsh) rows (non-distinct) of the word k-shingles,
+    optionally dropping boilerplate.
 
     With ``max_shingle_doc_frac`` set, shingle hashes whose *document
     frequency* exceeds that fraction of the corpus are dropped before
@@ -306,11 +285,11 @@ def _pruned_hashed_rows(
     verify sets too — i.e. similarity is computed over the
     de-boilerplated shingle sets, the standard semantic.
     """
-    raw = _shingle_text_rows(df, text_col, id_col, k).select(
+    raw = _shingle_text_rows(df, k).select(
         "doc_id", md5_hash31("shingle").alias("hsh")
     )
     if max_shingle_doc_frac is not None:
-        n_docs = df.select(F.count_distinct(F.col(id_col)).alias("n_docs"))
+        n_docs = df.select(F.count_distinct(F.col("doc_id")).alias("n_docs"))
         hot = (
             raw.groupBy("hsh")
             .agg(F.count_distinct("doc_id").alias("doc_freq"))
@@ -322,15 +301,8 @@ def _pruned_hashed_rows(
     return raw
 
 
-def minhash_band_frame(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    max_shingle_doc_frac: float | None = None,
-) -> DataFrame:
-    """(doc_id, hs, n_sh, bks): shingle-hash set, its size, and the
+def minhash_band_frame(df: DataFrame, *, max_shingle_doc_frac: float | None = None) -> DataFrame:
+    """(doc_id, hs, n_sh, bks): 3-shingle-hash set, its size, and the
     N_BANDS LSH bucket keys — ONE aggregation pass over the shingle
     rows. NOT checkpointed and NOT persisted (r9 adjudication): under
     AQE, ``localCheckpoint`` — eager OR lazy — finalizes the plan and
@@ -357,7 +329,7 @@ def minhash_band_frame(
     ``distinct`` disappears as well. Measured at sf0.1 this halves the
     end-to-end wall time vs the exploded-verify form.
     """
-    raw = _pruned_hashed_rows(df, text_col, id_col, k, max_shingle_doc_frac)
+    raw = _pruned_hashed_rows(df, 3, max_shingle_doc_frac)
     aggs = [
         F.min((F.col("hsh") * a + b) % P).alias(f"s{i}")
         for i, (a, b) in enumerate(minhash_coefficients())
@@ -392,22 +364,14 @@ def lsh_candidate_pairs(band_frame: DataFrame) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    k: int = 3,
-    max_shingle_doc_frac: float | None = None,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, *, max_shingle_doc_frac: float | None = None) -> DataFrame:
     """MinHash-LSH candidate pairs, verified with exact Jaccard.
 
     Candidate generation is the banded bucket join (linear-ish in corpus
     size); only candidates pay the exact set comparison, which runs as
     ``array_intersect`` over the carried shingle-hash sets (see
     ``minhash_band_frame``). Returns (doc_a, doc_b, jaccard) with
-    doc_a < doc_b, jaccard >= threshold.
+    doc_a < doc_b, jaccard >= 0.5.
 
     32 permutations / 8 bands of 4 rows: r=4 keeps false candidates
     quartically suppressed (a random pair must agree on 4 consecutive
@@ -416,13 +380,7 @@ def minhash_lsh_pairs(
     factor — asserted by tests. ``max_shingle_doc_frac`` enables the
     boilerplate skew guard (``_pruned_hashed_rows``).
     """
-    ba = minhash_band_frame(
-        df,
-        text_col=text_col,
-        id_col=id_col,
-        k=k,
-        max_shingle_doc_frac=max_shingle_doc_frac,
-    )
+    ba = minhash_band_frame(df, max_shingle_doc_frac=max_shingle_doc_frac)
     cand = lsh_candidate_pairs(ba)
     sa = ba.select(
         F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"), F.col("n_sh").alias("na")
@@ -435,19 +393,19 @@ def minhash_lsh_pairs(
     jac = n_common.cast("double") / (F.col("na") + F.col("nb") - n_common)
     return (
         joined.select("doc_a", "doc_b", stable_round(jac, 6).alias("jaccard"))
-        .filter(stable_round(jac, 6) >= threshold)
+        .filter(stable_round(jac, 6) >= 0.5)
     )
 
 
-def simhash(df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """31-bit SimHash per document from md5-derived word hashes.
 
     bit_i(doc) = sign of sum over word occurrences of (2*((h>>i)&1) - 1).
     Exploded form: one codegen'd 31-column aggregate.
     """
     words = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("w"),
+        F.col("doc_id"),
+        F.explode(F.split(F.col("text"), " ")).alias("w"),
     ).withColumn("hsh", md5_hash31("w"))
     sums = words.groupBy("doc_id").agg(
         *[
@@ -463,20 +421,14 @@ def simhash(df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id") ->
     return sums.select("doc_id", fp.alias("simhash"))
 
 
-def simhash_pairs(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_pairs(df: DataFrame, *, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs with hamming(simhash) <= max_hamming.
 
     Candidates come from a 4-band split of the fingerprint (pigeonhole:
     any pair within hamming 3 shares at least one exact band), then the
     exact popcount check verifies.
     """
-    fp = simhash(df, text_col=text_col, id_col=id_col)
+    fp = simhash(df)
     bands = fp.select(
         "doc_id",
         "simhash",
@@ -512,49 +464,14 @@ def simhash_pairs(
     )
 
 
-def minhash_lsh_pairs_cross(
-    new_df: DataFrame,
-    corpus_df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    k: int = 3,
-) -> DataFrame:
-    """Incremental dedup: MinHash-LSH candidates between a NEW batch and
-    an EXISTING corpus only — never within either side.
-
-    The continuous-ingestion form of ``minhash_lsh_pairs``: when a daily
-    batch lands, in-batch duplicates are handled by the self form while
-    this checks the batch against everything already accepted. Cost is
-    |new| x |corpus| restricted to shared LSH buckets — candidate
-    generation joins the (small) new band frame against the corpus band
-    frame on the bucket key, so the corpus is never self-joined and the
-    new side is typically broadcastable. At 100 TB the corpus band frame
-    is a maintained TABLE (append bands of accepted docs per batch), so
-    each increment pays only its own shingling plus one bucket join.
-
-    Returns (doc_id, dup_of, jaccard): new-batch doc, the corpus doc it
-    duplicates, exact verified Jaccard >= threshold.
-    """
-    bn = minhash_band_frame(new_df, text_col=text_col, id_col=id_col, k=k)
-    bc = minhash_band_frame(corpus_df, text_col=text_col, id_col=id_col, k=k)
-    return cross_pairs_from_band_frames(bn, bc, threshold=threshold)
-
-
-def cross_pairs_from_band_frames(
-    bn: DataFrame,
-    bc: DataFrame,
-    *,
-    threshold: float = 0.5,
-) -> DataFrame:
+def cross_pairs_from_band_frames(bn: DataFrame, bc: DataFrame) -> DataFrame:
     """Cross-set candidate join + exact verify over two PRE-BUILT band
     frames (``minhash_band_frame`` outputs). Split out so callers that
     already hold a band frame — a maintained corpus band table, or one
     frame over all docs filtered into new/old sides (one shingling pass
     instead of two) — pay only the bucket join.
     """
-    bands_new = bn.select(F.col("doc_id").alias("doc_id"), F.explode("bks").alias("bk"))
+    bands_new = bn.select(F.col("doc_id"), F.explode("bks").alias("bk"))
     bands_cor = bc.select(F.col("doc_id").alias("dup_of"), F.explode("bks").alias("bk"))
     cand = bands_new.join(bands_cor, "bk").select("doc_id", "dup_of").distinct()
     sa = bn.select(F.col("doc_id"), F.col("hs").alias("hs_a"), F.col("n_sh").alias("na"))
@@ -566,18 +483,11 @@ def cross_pairs_from_band_frames(
     jac = n_common.cast("double") / (F.col("na") + F.col("nb") - n_common)
     return (
         joined.select("doc_id", "dup_of", stable_round(jac, 6).alias("jaccard"))
-        .filter(stable_round(jac, 6) >= threshold)
+        .filter(stable_round(jac, 6) >= 0.5)
     )
 
 
-def containment_pairs(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-    k: int = 3,
-) -> DataFrame:
+def containment_pairs(df: DataFrame, *, threshold: float = 0.8) -> DataFrame:
     """Asymmetric near-dup detection: shingle-set *containment*.
 
     ``containment = |A ∩ B| / min(|A|, |B|)`` — 1.0 when the smaller
@@ -596,23 +506,7 @@ def containment_pairs(
     metrics so consumers can separate subset-dups (high containment,
     low Jaccard) from near-identical pairs (both high).
     """
-    inv = hashed_shingle_rows(df, text_col, id_col, k)
-    sizes = inv.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inv_sized = inv.join(sizes, "doc_id")
-    common = (
-        inv_sized.alias("x")
-        .join(
-            inv_sized.alias("y"),
-            (F.col("x.hsh") == F.col("y.hsh")) & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .groupBy(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.col("x.n_sh").alias("na"),
-            F.col("y.n_sh").alias("nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    common = _shared_shingle_counts(df)
     cont = F.col("n_common").cast("double") / F.least("na", "nb")
     jac = F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
     return (
@@ -706,15 +600,7 @@ def prefix_filter_candidates(
     )
 
 
-def prefix_filter_jaccard_pairs(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    t_num: int = 3,
-    t_den: int = 5,
-    k: int = 3,
-) -> DataFrame:
+def prefix_filter_jaccard_pairs(df: DataFrame, *, t_num: int = 3, t_den: int = 5) -> DataFrame:
     """EXACT Jaccard-threshold similarity join via PREFIX FILTERING
     (SSJoin/PPJoin family: Chaudhuri et al. ICDE'06, Xiao et al.
     WWW'08) — the third candidate-generation strategy next to the full
@@ -746,7 +632,7 @@ def prefix_filter_jaccard_pairs(
     f^2 candidate pairs only if it survives into prefixes, and frequent
     tokens are ordered OUT of prefixes.
     """
-    inv = hashed_shingle_rows(df, text_col, id_col, k)
+    inv = hashed_shingle_rows(df)
     cand = prefix_filter_candidates(inv, t_num=t_num, t_den=t_den)
     # Verify via carried shingle-hash SETS — the minhash verify shape
     # (array_intersect over two per-doc arrays), doc-count-sized frames

@@ -268,9 +268,9 @@ def _rnd(c: Column) -> Column:
 
 
 def _power_iteration(
-    edges: DataFrame, base: DataFrame, init: Column, teleport: Column, iterations: int
+    edges: DataFrame, base: DataFrame, init: Column, teleport: Column
 ) -> DataFrame:
-    """Fixed-iteration power method over symmetric ``edges`` → (node, rank).
+    """Five-iteration power method over symmetric ``edges`` → (node, rank).
 
     ``base`` holds one row per node with its out-degree ``d`` plus the
     columns ``init`` and ``teleport`` read. Each round pushes
@@ -298,20 +298,14 @@ def _power_iteration(
         )
 
     ranks = base.select(*cols, _rnd(init).alias("rank"))
-    ranks = _fixpoint(ranks, step, rounds=iterations, checkpoint_every=2)
+    ranks = _fixpoint(ranks, step, rounds=5, checkpoint_every=2)
     return ranks.select("node", "rank")
 
 
-def pagerank(
-    pairs: DataFrame,
-    *,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    iterations: int = 5,
-) -> DataFrame:
+def pagerank(pairs: DataFrame, *, src: str = "doc_a", dst: str = "doc_b") -> DataFrame:
     """PageRank over the symmetrized pair graph → (node, rank).
 
-    Fixed-iteration power method with damping ``DAMPING`` and uniform
+    Five-iteration power method with damping ``DAMPING`` and uniform
     teleport ``TELEPORT / n``. Symmetrization guarantees every node has
     out-degree ≥ 1, so no dangling-mass correction term is needed and
     total rank stays 1.
@@ -335,28 +329,20 @@ def pagerank(
         base,
         F.lit(1.0) / F.col("n"),
         F.lit(TELEPORT) / F.col("n"),
-        iterations,
     )
 
 
-def personalized_pagerank(
-    pairs: DataFrame,
-    seeds: DataFrame,
-    *,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    seed_col: str = "node",
-    iterations: int = 5,
-) -> DataFrame:
-    """Personalized PageRank: teleport mass restarts at the SEED set
+def personalized_pagerank(pairs: DataFrame, seeds: DataFrame) -> DataFrame:
+    """Personalized PageRank (five iterations over the symmetrized
+    (doc_a, doc_b) graph): teleport mass restarts at the ``node`` SEED set
     instead of uniformly — rank becomes proximity TO the seeds, the
     similar-item / recommendation primitive (vs :func:`pagerank`'s
     global centrality). Seeds not present in the graph are ignored; an
     empty effective seed set yields all-zero ranks rather than an error.
     """
-    edges = _symmetric_edges(pairs, src, dst)
+    edges = _symmetric_edges(pairs, "doc_a", "doc_b")
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    seed_nodes = seeds.select(F.col(seed_col).alias("node")).distinct()
+    seed_nodes = seeds.select("node").distinct()
     marked = deg.select(F.col("u").alias("node"), "d").join(
         seed_nodes.withColumn("is_seed", F.lit(True)), "node", "left"
     ).select("node", "d", F.coalesce("is_seed", F.lit(False)).alias("is_seed"))
@@ -367,23 +353,12 @@ def personalized_pagerank(
     teleport = F.when(
         F.col("is_seed") & (F.col("ns") > 0), F.lit(1.0) / F.col("ns")
     ).otherwise(F.lit(0.0))
-    return _power_iteration(
-        edges, base, teleport, F.lit(TELEPORT) * teleport, iterations
-    )
+    return _power_iteration(edges, base, teleport, F.lit(TELEPORT) * teleport)
 
 
-def _bfs(
-    pairs: DataFrame,
-    seeds: DataFrame | None,
-    keys: list[str],
-    *,
-    src: str,
-    dst: str,
-    seed_col: str,
-    max_iter: int,
-    seed_filter,
-) -> DataFrame:
-    """Frontier BFS over the symmetrized pair graph → (*keys, hops).
+def _bfs(pairs: DataFrame, seeds: DataFrame | None, keys: list[str], seed_filter) -> DataFrame:
+    """Frontier BFS over the symmetrized (doc_a, doc_b) pair graph from
+    the ``node`` seeds, at most 20 hops → (*keys, hops).
 
     ``keys`` is ``["node"]`` (one BFS from the whole seed set) or
     ``["seed", "node"]`` (one BFS per seed, all sharing each round's
@@ -391,22 +366,22 @@ def _bfs(
     settled labels away, checkpoints the new frontier eagerly and stops
     when it is empty (``isEmpty`` is the round's one action).
     """
-    edges = _symmetric_edges(pairs, src, dst)
+    edges = _symmetric_edges(pairs, "doc_a", "doc_b")
     if seed_filter is not None:
         # Derive seeds from the checkpointed edges so the pair pipeline
         # runs exactly once.
-        seeds = edges.select(F.col("u").alias(seed_col)).distinct().filter(
-            seed_filter(F.col(seed_col))
+        seeds = edges.select(F.col("u").alias("node")).distinct().filter(
+            seed_filter(F.col("node"))
         )
     labels = (
-        seeds.select(F.col(seed_col).alias(keys[0]))
+        seeds.select(F.col("node").alias(keys[0]))
         .distinct()
         .select(*[F.col(keys[0]).alias(k) for k in keys], F.lit(0).cast("long").alias("hops"))
         .localCheckpoint(eager=True)
     )
     frontier = labels
     prev_frontier = None
-    for _ in range(max_iter):
+    for _ in range(20):
         neighbors = (
             edges.join(frontier.withColumnRenamed("node", "u"), "u")
             .select(*keys[:-1], F.col("v").alias("node"), (F.col("hops") + 1).alias("hops"))
@@ -442,18 +417,11 @@ def _bfs(
 
 
 def bfs_hops(
-    pairs: DataFrame,
-    seeds: DataFrame | None = None,
-    *,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    seed_col: str = "node",
-    max_iter: int = 20,
-    seed_filter=None,
+    pairs: DataFrame, seeds: DataFrame | None = None, *, seed_filter=None
 ) -> DataFrame:
     """Minimum hop count from a seed set over the symmetrized pair graph.
 
-    Returns (node, hops) for every node reachable within ``max_iter``
+    Returns (node, hops) for every node reachable within 20
     hops (seeds at 0). Classic distributed BFS: the frontier expands one
     join per round, already-labelled nodes are anti-joined away so each
     node is visited exactly once — total work is O(edges) across all
@@ -469,25 +437,15 @@ def bfs_hops(
     r9-clean-bench-movers) once the band-frame checkpoint that used to
     absorb the recompute was (correctly) removed.
     """
-    return _bfs(
-        pairs, seeds, ["node"], src=src, dst=dst, seed_col=seed_col,
-        max_iter=max_iter, seed_filter=seed_filter,
-    )
+    return _bfs(pairs, seeds, ["node"], seed_filter)
 
 
 def bfs_hops_per_seed(
-    pairs: DataFrame,
-    seeds: DataFrame | None = None,
-    *,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    seed_col: str = "node",
-    max_iter: int = 20,
-    seed_filter=None,
+    pairs: DataFrame, seeds: DataFrame | None = None, *, seed_filter=None
 ) -> DataFrame:
     """Per-seed hop distances over the symmetrized pair graph: returns
     (seed, node, hops) for every (seed, reachable node) pair within
-    ``max_iter`` hops — ``bfs_hops`` generalized from "min distance to
+    20 hops — ``bfs_hops`` generalized from "min distance to
     the seed SET" to independent single-source BFS runs sharing one
     frontier pipeline (state keyed by (seed, node), so all sources
     expand in the same per-round join; the classic multi-source trick
@@ -495,10 +453,7 @@ def bfs_hops_per_seed(
     node) is expanded exactly once. Feeds closeness / harmonic
     centrality estimates from a hash-chosen probe set.
     """
-    return _bfs(
-        pairs, seeds, ["seed", "node"], src=src, dst=dst, seed_col=seed_col,
-        max_iter=max_iter, seed_filter=seed_filter,
-    )
+    return _bfs(pairs, seeds, ["seed", "node"], seed_filter)
 
 
 def label_propagation_communities(
@@ -559,7 +514,6 @@ def ktruss_edges(
     src: str = "u",
     dst: str = "v",
     k: int = 4,
-    rounds: int = 3,
 ) -> DataFrame:
     """k-truss peel over an undirected graph (Cohen 2008): iteratively
     drop every edge supported by fewer than ``k - 2`` triangles among
@@ -568,7 +522,7 @@ def ktruss_edges(
     removes the bridge/chance edges a near-dup graph accumulates while
     preserving genuine duplicate cliques.
 
-    Fixed ``rounds`` (no data-dependent stop) keeps the op oracle-
+    Three fixed rounds (no data-dependent stop) keep the op oracle-
     expressible as an unrolled SQL chain; a 4-clique stabilizes in one
     round, chains of bridges peel one layer per round. Returns the
     surviving canonical edges (u < v) with the support computed on the
@@ -612,4 +566,4 @@ def ktruss_edges(
         )
         return scored.filter(F.col("support") >= min_sup)
 
-    return _fixpoint(e, step, rounds=rounds, checkpoint_every=1)
+    return _fixpoint(e, step, rounds=3, checkpoint_every=1)

@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 
 from healthcare_etl_spark.functions.rounding import stable_round
 
+ROUNDS = 4  # IRLS rounds of every fit and of its unrolled SQL mirror
+
 
 def _solve3(a00, a01, a02, a11, a12, a22, b0, b1, b2):
     """Cramer's-rule solve of the symmetric 3x3 system A beta = b.
@@ -58,10 +60,8 @@ def _solve3(a00, a01, a02, a11, a12, a22, b0, b1, b2):
     return d0 / det, d1 / det, d2 / det
 
 
-def logistic_fit(
-    features: DataFrame, *, rounds: int = 4, weight: str | None = None
-) -> tuple[float, float, float]:
-    """Run the IRLS rounds and return the fitted (b0, b1, b2).
+def logistic_fit(features: DataFrame, *, weight: str | None = None) -> tuple[float, float, float]:
+    """Run the ``ROUNDS`` IRLS rounds and return the fitted (b0, b1, b2).
 
     One moment aggregate per round; the 3-coefficient state crosses the
     driver as three rounded doubles (metadata, like k-means centroids).
@@ -76,7 +76,7 @@ def logistic_fit(
     6dp rounding that already absorbs partition-order nondeterminism).
     """
     beta = (0.0, 0.0, 0.0)
-    for _ in range(rounds):
+    for _ in range(ROUNDS):
         b0l, b1l, b2l = (F.lit(float(v)) for v in beta)
         eta = b0l + b1l * F.col("x1") + b2l * F.col("x2")
         p = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
@@ -110,16 +110,14 @@ def logistic_fit(
     return beta
 
 
-def logistic_irls(
-    features: DataFrame, *, rounds: int = 4, weight: str | None = None
-) -> DataFrame:
+def logistic_irls(features: DataFrame, *, weight: str | None = None) -> DataFrame:
     """Fit y ~ sigmoid(b0 + b1*x1 + b2*x2) by IRLS (see
     :func:`logistic_fit`) and return a 1-row DataFrame with the fitted
     coefficients, the final-model log-likelihood, and training accuracy
     at the 0.5 threshold. ``features`` must have columns ``x1``, ``x2``
     (double) and ``y`` (0/1 integer); ``weight`` optionally names a
     row-multiplicity count (see :func:`logistic_fit`)."""
-    beta = logistic_fit(features, rounds=rounds, weight=weight)
+    beta = logistic_fit(features, weight=weight)
     b0l, b1l, b2l = (F.lit(float(v)) for v in beta)
     eta = b0l + b1l * F.col("x1") + b2l * F.col("x2")
     p = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
@@ -142,7 +140,7 @@ def logistic_irls(
     )
 
 
-def irls_beta_ctes(features_cte: str, *, rounds: int = 4) -> tuple[list[str], str]:
+def irls_beta_ctes(features_cte: str) -> tuple[list[str], str]:
     """Build the unrolled IRLS CTE parts mirroring :func:`logistic_fit`.
 
     ``features_cte`` is SQL producing columns (x1, x2, y). Each round
@@ -155,7 +153,7 @@ def irls_beta_ctes(features_cte: str, *, rounds: int = 4) -> tuple[list[str], st
     """
     r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
     parts = [f"feat AS ({features_cte})", "beta_0 AS (SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2)"]
-    for r in range(1, rounds + 1):
+    for r in range(1, ROUNDS + 1):
         prev = f"beta_{r - 1}"
         parts.append(
             f"""pts_{r} AS (
@@ -203,14 +201,14 @@ def irls_beta_ctes(features_cte: str, *, rounds: int = 4) -> tuple[list[str], st
     FROM agg_{r}
 )"""
         )
-    return parts, f"beta_{rounds}"
+    return parts, f"beta_{ROUNDS}"
 
 
-def irls_oracle_sql(features_cte: str, *, rounds: int = 4) -> str:
+def irls_oracle_sql(features_cte: str) -> str:
     """Full DuckDB mirror of :func:`logistic_irls` (fit + final scoring
     pass), built on :func:`irls_beta_ctes`."""
     r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
-    parts, final = irls_beta_ctes(features_cte, rounds=rounds)
+    parts, final = irls_beta_ctes(features_cte)
     joined = ",\n".join(parts)
     return f"""WITH {joined},
 scored AS (
@@ -228,9 +226,7 @@ FROM scored
 """
 
 
-def poisson_fit(
-    features: DataFrame, *, rounds: int = 4, weight: str | None = None
-) -> tuple[float, float, float]:
+def poisson_fit(features: DataFrame, *, weight: str | None = None) -> tuple[float, float, float]:
     """Poisson GLM (log link) by IRLS: y ~ Poisson(exp(b0 + b1*x1 +
     b2*x2)). Identical machinery to :func:`logistic_fit` with the
     Poisson working weight/response: w = mu, z = eta + (y - mu)/mu —
@@ -239,7 +235,7 @@ def poisson_fit(
     optionally names a row-multiplicity count (see
     :func:`logistic_fit`)."""
     beta = (0.0, 0.0, 0.0)
-    for _ in range(rounds):
+    for _ in range(ROUNDS):
         b0l, b1l, b2l = (F.lit(float(v)) for v in beta)
         eta = b0l + b1l * F.col("x1") + b2l * F.col("x2")
         mu = F.exp(eta)
@@ -273,7 +269,7 @@ def poisson_fit(
     return beta
 
 
-def poisson_beta_ctes(features_cte: str, *, rounds: int = 4) -> tuple[list[str], str]:
+def poisson_beta_ctes(features_cte: str) -> tuple[list[str], str]:
     """Unrolled DuckDB mirror of :func:`poisson_fit` (see
     :func:`irls_beta_ctes` for the structure; only w/z differ)."""
     r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
@@ -281,7 +277,7 @@ def poisson_beta_ctes(features_cte: str, *, rounds: int = 4) -> tuple[list[str],
         f"feat AS ({features_cte})",
         "beta_0 AS (SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2)",
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, ROUNDS + 1):
         prev = f"beta_{r - 1}"
         parts.append(
             f"""pts_{r} AS (
@@ -329,4 +325,4 @@ def poisson_beta_ctes(features_cte: str, *, rounds: int = 4) -> tuple[list[str],
     FROM agg_{r}
 )"""
         )
-    return parts, f"beta_{rounds}"
+    return parts, f"beta_{ROUNDS}"

@@ -82,19 +82,20 @@ def _map_rows(
     return df.mapInArrow(run, schema)
 
 
-def attach_media(df: DataFrame, *, id_col: str, text_col: str) -> DataFrame:
-    """Build a media table from any source by treating a column's UTF-8
-    bytes as the opaque payload (the fixtures ship no real media).
+def attach_media(df: DataFrame) -> DataFrame:
+    """Build a media table from a documents frame by treating each
+    ``text``'s UTF-8 bytes as the opaque payload, keyed by ``doc_id``
+    (the fixtures ship no real media).
 
     Checksum/size are computed JVM-side (``md5``/``octet_length``) —
     metadata extraction never leaves codegen.
     """
-    payload = F.encode(F.col(text_col), "UTF-8")
+    payload = F.encode(F.col("text"), "UTF-8")
     return df.select(
-        F.col(id_col).cast("long").alias("media_id"),
+        F.col("doc_id").cast("long").alias("media_id"),
         F.element_at(
             F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-            (F.col(id_col) % 3 + 1).cast("int"),
+            (F.col("doc_id") % 3 + 1).cast("int"),
         ).alias("media_type"),
         payload.alias("payload"),
         F.octet_length(payload).cast("long").alias("n_bytes"),
@@ -134,7 +135,7 @@ REAL_FEATURE_SCHEMA = T.StructType(
 )
 
 
-def featurize_media_real(media: DataFrame, *, payload_col: str = "payload") -> DataFrame:
+def featurize_media_real(media: DataFrame) -> DataFrame:
     """REAL generic decode-and-featurize: one Arrow row kernel that
     sniffs each payload's magic bytes and dispatches to the
     matching from-scratch codec — PNG inflate+unfilter, baseline JPEG
@@ -178,7 +179,7 @@ def featurize_media_real(media: DataFrame, *, payload_col: str = "payload") -> D
         return (kind, nb, None, None, None, None)
 
     return _map_rows(
-        media.select("media_id", F.col(payload_col)),
+        media.select("media_id", "payload"),
         lambda mid, b: [(mid, *one(b))],
         REAL_FEATURE_SCHEMA,
     )
@@ -303,9 +304,7 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def sample_frames(
-    media: DataFrame, *, max_frames: int = 4, decode_stub: bool = True
-) -> DataFrame:
+def sample_frames(media: DataFrame, *, decode_stub: bool = True) -> DataFrame:
     """Frame sampling: one video row expands to ``n_frames`` frame rows —
     the row-expanding kernel shape (a Python-side explode over Arrow
     batches), which is how video corpora become frame datasets at scale.
@@ -316,7 +315,7 @@ def sample_frames(
     T.81 kernel), and ``frame_ts`` comes from the container's real
     timing (stts sample delta over the mdhd timescale). Non-MJPEG
     payloads expand to zero rows. The stub kernel remains for plumbing
-    tests: ``n_frames = n_bytes % max_frames + 1``, uniform fake
+    tests: ``n_frames = n_bytes % 4 + 1``, uniform fake
     timestamps, 16-byte payload strides.
     """
     def frames_real(mid, payload):
@@ -332,7 +331,7 @@ def sample_frames(
         # NULL payloads behave as empty media (one empty frame) rather
         # than raising inside the Arrow task.
         payload = b"" if payload is None else payload
-        n_frames = len(payload) % max_frames + 1
+        n_frames = len(payload) % 4 + 1
         duration_s = len(payload) / 1000.0
         for k in range(n_frames):
             yield (mid, k, n_frames, k * duration_s / n_frames, payload[k * 16 : k * 16 + 16])
@@ -366,7 +365,7 @@ _JPEG_SOF_MARKERS = frozenset(
 ) - {0xC4, 0xC8, 0xCC}
 
 
-def encode_png_media(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def encode_png_media(df: DataFrame) -> DataFrame:
     """Wrap each row's UTF-8 text bytes in a REAL PNG container.
 
     The header is byte-valid PNG: 8-byte signature, then an IHDR chunk
@@ -396,7 +395,7 @@ def encode_png_media(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "
         return PNG_SIGNATURE + ihdr + body
 
     return _map_rows(
-        df.select(F.col(id_col), F.col(text_col)),
+        df.select("doc_id", "text"),
         lambda mid, text: [(mid, one(text))],
         PNG_MEDIA_SCHEMA,
     )
@@ -439,7 +438,7 @@ def _parse_dims(b) -> tuple[str, int | None, int | None]:
     return ("unknown", None, None)
 
 
-def parse_image_dims(media: DataFrame, *, payload_col: str = "payload") -> DataFrame:
+def parse_image_dims(media: DataFrame) -> DataFrame:
     """Extract (format, width, height) from binary payload headers in
     one Arrow row pass — the real metadata-extraction kernel for a 100 TB
     image corpus (header inspection only; bytes never parse on the JVM
@@ -447,7 +446,7 @@ def parse_image_dims(media: DataFrame, *, payload_col: str = "payload") -> DataF
     I/O-bound, not codec-bound).
     """
     return _map_rows(
-        media.select("media_id", F.col(payload_col)),
+        media.select("media_id", "payload"),
         lambda mid, b: [(mid, *_parse_dims(b))],
         IMAGE_DIMS_SCHEMA,
     )
@@ -467,7 +466,7 @@ WAV_META_SCHEMA = T.StructType(
 _WAV_RATES = (8000, 16000, 22050, 44100, 48000)
 
 
-def encode_wav_media(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def encode_wav_media(df: DataFrame) -> DataFrame:
     """Wrap each row's UTF-8 text bytes in a REAL RIFF/WAVE container.
 
     Byte-valid WAV: RIFF header with correct little-endian total size,
@@ -498,13 +497,13 @@ def encode_wav_media(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "
         return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
 
     return _map_rows(
-        df.select(F.col(id_col), F.col(text_col)),
+        df.select("doc_id", "text"),
         lambda mid, text: [(mid, one(text))],
         PNG_MEDIA_SCHEMA,
     )
 
 
-def parse_wav_meta(media: DataFrame, *, payload_col: str = "payload") -> DataFrame:
+def parse_wav_meta(media: DataFrame) -> DataFrame:
     """Extract (sample_rate, channels, bits, n_frames) by WALKING the
     RIFF chunk list — real little-endian binary parsing, no audio
     library. Frames = data-chunk bytes / block_align. Unknown payloads
@@ -537,7 +536,7 @@ def parse_wav_meta(media: DataFrame, *, payload_col: str = "payload") -> DataFra
         return ("wav", rate, channels, bits, frames)
 
     return _map_rows(
-        media.select("media_id", F.col(payload_col)),
+        media.select("media_id", "payload"),
         lambda mid, b: [(mid, *parse_one(b))],
         WAV_META_SCHEMA,
     )
@@ -560,7 +559,7 @@ MP4_META_SCHEMA = T.StructType(
 _MP4_TIMESCALES = (600, 1000, 12288, 24000, 90000)
 
 
-def encode_mp4_media(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def encode_mp4_media(df: DataFrame) -> DataFrame:
     """Wrap each row's UTF-8 text bytes in a REAL ISO BMFF (MP4) shell.
 
     Byte-valid box structure — the video sibling of ``encode_png_media``
@@ -604,13 +603,13 @@ def encode_mp4_media(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "
         return ftyp + moov + mdat
 
     return _map_rows(
-        df.select(F.col(id_col), F.col(text_col)),
+        df.select("doc_id", "text"),
         lambda mid, text: [(mid, one(text))],
         PNG_MEDIA_SCHEMA,
     )
 
 
-def parse_mp4_meta(media: DataFrame, *, payload_col: str = "payload") -> DataFrame:
+def parse_mp4_meta(media: DataFrame) -> DataFrame:
     """Recover (brand, timescale, duration, mdat size) by WALKING the
     ISO BMFF box tree — real big-endian binary parsing, no codec.
 
@@ -662,7 +661,7 @@ def parse_mp4_meta(media: DataFrame, *, payload_col: str = "payload") -> DataFra
         return ("mp4", brand, timescale, duration, mdat_bytes)
 
     return _map_rows(
-        media.select("media_id", F.col(payload_col)),
+        media.select("media_id", "payload"),
         lambda mid, b: [(mid, *parse_one(b))],
         MP4_META_SCHEMA,
     )
@@ -775,9 +774,7 @@ def _png_encode_from_lines(w: int, h: int, raw_lines: list[bytes]) -> bytes:
     )
 
 
-def encode_png_pixels(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def encode_png_pixels(df: DataFrame) -> DataFrame:
     """Encode a fully VALID RGB PNG per row — signature, IHDR, one
     zlib-compressed IDAT of filtered scanlines, IEND, all CRCs.
 
@@ -801,7 +798,7 @@ def encode_png_pixels(
         return _png_encode_from_lines(w, h, raw_lines)
 
     return _map_rows(
-        df.select(F.col(id_col), F.col(text_col)),
+        df.select("doc_id", "text"),
         lambda mid, text: [(mid, one(mid, text))],
         PNG_MEDIA_SCHEMA,
     )
@@ -924,9 +921,7 @@ def _png_decode_stats_one(b):
     return (w, h, w * h, sums[0], sums[1], sums[2])
 
 
-def decode_png_pixel_stats(
-    media: DataFrame, *, payload_col: str = "payload"
-) -> DataFrame:
+def decode_png_pixel_stats(media: DataFrame) -> DataFrame:
     """REAL PNG decode over Arrow batches: walk the chunk list, inflate
     the concatenated IDAT stream (zlib — stdlib, no codec library),
     reverse all five scanline filters, and reduce the recovered pixels
@@ -935,7 +930,7 @@ def decode_png_pixel_stats(
     (stable_round), keeping the kernel integer-pure. Truncated or
     non-PNG payloads yield NULL stats rather than poisoning the batch."""
     return _map_rows(
-        media.select("media_id", F.col(payload_col)),
+        media.select("media_id", "payload"),
         lambda mid, b: [(mid, *_png_decode_stats_one(b))],
         PNG_PIXEL_STATS_SCHEMA,
     )
@@ -947,9 +942,7 @@ def _wav_sample(mid: int, k: int) -> int:
     return ((mid * 31 + k * 7) % 4096) - 2048
 
 
-def encode_wav_pcm(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def encode_wav_pcm(df: DataFrame) -> DataFrame:
     """Encode a valid RIFF/WAVE file with REAL little-endian int16 PCM
     in the data chunk (frames = n%200+50, channels = n%2+1, rate from
     the standard table by n%5; samples follow :func:`_wav_sample`) —
@@ -977,7 +970,7 @@ def encode_wav_pcm(
         return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
 
     return _map_rows(
-        df.select(F.col(id_col), F.col(text_col)),
+        df.select("doc_id", "text"),
         lambda mid, text: [(mid, one(mid, text))],
         PNG_MEDIA_SCHEMA,
     )
@@ -1011,16 +1004,14 @@ def _wav_decode_stats_one(b):
     return (n, s1, s2, peak)
 
 
-def decode_wav_sample_stats(
-    media: DataFrame, *, payload_col: str = "payload"
-) -> DataFrame:
+def decode_wav_sample_stats(media: DataFrame) -> DataFrame:
     """REAL PCM decode: walk the RIFF chunks, unpack the data chunk as
     little-endian int16, reduce to exact integer moments (sum, sum of
     squares, peak |s|). Mean/RMS are computed engine-side from the
     integer moments so float rounding is identical cross-engine."""
 
     return _map_rows(
-        media.select("media_id", F.col(payload_col)),
+        media.select("media_id", "payload"),
         lambda mid, b: [(mid, *_wav_decode_stats_one(b))],
         WAV_SAMPLE_STATS_SCHEMA,
     )
@@ -1046,7 +1037,7 @@ def _gif_index(mid: int, x: int, y: int) -> int:
     return (mid * 7 + x * 3 + y * 5) % 256
 
 
-def gif_lzw_encode(indices: bytes, min_code_size: int = 8) -> bytes:
+def gif_lzw_encode(indices: bytes, min_code_size: int) -> bytes:
     """REAL GIF LZW compression (variable-width codes, LSB-first bit
     packing, CLEAR/EOI bookkeeping, 12-bit cap with dictionary reset).
     Width bumps when (next_code - 1) reaches the current capacity —
@@ -1144,9 +1135,7 @@ def gif_lzw_decode(data: bytes, min_code_size: int = 8) -> list[int]:
     return list(out)
 
 
-def encode_gif_media(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def encode_gif_media(df: DataFrame) -> DataFrame:
     """Encode a fully VALID GIF89a per row: logical screen descriptor,
     256-entry global color table (index i -> (i, i*3%256, i*7%256)),
     image descriptor, REAL LZW-compressed index stream in 255-byte
@@ -1182,7 +1171,7 @@ def encode_gif_media(
         )
 
     return _map_rows(
-        df.select(F.col(id_col), F.col(text_col)),
+        df.select("doc_id", "text"),
         lambda mid, text: [(mid, one(mid, text))],
         PNG_MEDIA_SCHEMA,
     )
@@ -1234,9 +1223,7 @@ def _gif_decode_stats_one(b):
     return (w, h, len(idx), sm, sg, sb)
 
 
-def decode_gif_index_stats(
-    media: DataFrame, *, payload_col: str = "payload"
-) -> DataFrame:
+def decode_gif_index_stats(media: DataFrame) -> DataFrame:
     """REAL GIF decode: parse the screen/image descriptors, skip the
     color table, reassemble the LZW sub-blocks, run
     :func:`gif_lzw_decode`, and reduce the recovered palette indices to
@@ -1244,7 +1231,7 @@ def decode_gif_index_stats(
     so sums derive from decoded indices without materializing pixels)."""
 
     return _map_rows(
-        media.select("media_id", F.col(payload_col)),
+        media.select("media_id", "payload"),
         lambda mid, b: [(mid, *_gif_decode_stats_one(b))],
         GIF_INDEX_STATS_SCHEMA,
     )
@@ -1429,9 +1416,7 @@ def _jpeg_encode_one(mid: int, text: str) -> bytes:
     )
 
 
-def encode_jpeg_gray(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def encode_jpeg_gray(df: DataFrame) -> DataFrame:
     """Encode a byte-valid baseline JFIF grayscale JPEG per row.
 
     Dimensions are exact block multiples (w = 8*(n%3+1), h = 8*(n%2+1)
@@ -1441,7 +1426,7 @@ def encode_jpeg_gray(
     magnitude category + extend bits (negatives in one's complement),
     followed by the AC EOB code."""
     return _map_rows(
-        df.select(F.col(id_col), F.col(text_col)),
+        df.select("doc_id", "text"),
         lambda mid, text: [(mid, _jpeg_encode_one(mid, text))],
         PNG_MEDIA_SCHEMA,
     )
@@ -1635,9 +1620,7 @@ def _jpeg_decode_stats_one(b):
     return (w, h, w * h, total, mn, mx)
 
 
-def decode_jpeg_pixel_stats(
-    media: DataFrame, *, payload_col: str = "payload"
-) -> DataFrame:
+def decode_jpeg_pixel_stats(media: DataFrame) -> DataFrame:
     """REAL baseline JPEG decode: marker walk -> DQT (un-zigzag) ->
     SOF0 dims -> DHT canonical Huffman rebuild -> scan entropy decode
     (DPCM DC with EXTEND, general run/size AC loop with EOB/ZRL) ->
@@ -1645,7 +1628,7 @@ def decode_jpeg_pixel_stats(
     clip -> exact integer pixel stats."""
 
     return _map_rows(
-        media.select("media_id", F.col(payload_col)),
+        media.select("media_id", "payload"),
         lambda mid, b: [(mid, *_jpeg_decode_stats_one(b))],
         JPEG_PIXEL_STATS_SCHEMA,
     )
@@ -1678,19 +1661,17 @@ def _png_family_dims(base: int) -> tuple[int, int]:
     return (base % 4 + 2) * 8, (base % 4 + 2) * 4
 
 
-def encode_png_family(
-    df: DataFrame, *, id_col: str = "doc_id", group: int = 8
-) -> DataFrame:
-    """Near-duplicate image corpus: every ``group`` consecutive ids share
+def encode_png_family(df: DataFrame) -> DataFrame:
+    """Near-duplicate image corpus: every 8 consecutive doc_ids share
     a base image (pixels = ``_png_pixel(base, x, y)``); each member
-    perturbs ONLY the top-left pixel's red channel by ``(id % group) *
+    perturbs ONLY the top-left pixel's red channel by ``(id % 8) *
     8`` — the classic re-export/watermark near-dup. Fully valid PNGs
     (same filter cycle + zlib IDAT as ``encode_png_pixels``)."""
 
     def one(mid: int) -> bytes:
-        base = mid // group
+        base = mid // 8
         w, h = _png_family_dims(base)
-        bump = (mid % group) * 8
+        bump = (mid % 8) * 8
         raw_lines = []
         for y in range(h):
             row = bytearray()
@@ -1703,21 +1684,20 @@ def encode_png_family(
         return _png_encode_from_lines(w, h, raw_lines)
 
     return _map_rows(
-        df.select(F.col(id_col)), lambda mid: [(mid, one(mid))], PNG_MEDIA_SCHEMA
+        df.select("doc_id"), lambda mid: [(mid, one(mid))], PNG_MEDIA_SCHEMA
     )
 
 
-def decode_png_blockhash(
-    media: DataFrame, *, payload_col: str = "payload", gx: int = 8, gy: int = 4
-) -> DataFrame:
+def decode_png_blockhash(media: DataFrame) -> DataFrame:
     """Block-mean perceptual hash over REALLY decoded PNG pixels: full
     decode (chunk walk, IDAT inflate, filter reversal), then a gx x gy
-    grid of integer luminance-sum blocks (block b spans columns
+    = 8 x 4 grid of integer luminance-sum blocks (block b spans columns
     ``[bx*w//gx, (bx+1)*w//gx)`` — exact integer splits), bit i set iff
     ``S_b * C_total > S_total * C_b`` (cross-multiplied BIGINTs: the
     block's mean exceeds the image mean with NO float anywhere, so the
     hash is bit-identical to the oracle's arithmetic regeneration).
     Bit order: ``i = by*gx + bx``. NULL for undecodable payloads."""
+    gx, gy = 8, 4
 
     def one(b):
         decoded = _png_decode_raw(b)
@@ -1746,7 +1726,7 @@ def decode_png_blockhash(
         return (w, h, hash_v)
 
     return _map_rows(
-        media.select("media_id", F.col(payload_col)),
+        media.select("media_id", "payload"),
         lambda mid, b: [(mid, *one(b))],
         BLOCKHASH_SCHEMA,
     )
@@ -1767,21 +1747,19 @@ AUDIOHASH_SCHEMA = T.StructType(
 )
 
 
-def encode_wav_family(
-    df: DataFrame, *, id_col: str = "doc_id", group: int = 8
-) -> DataFrame:
-    """Near-duplicate audio corpus: every ``group`` consecutive ids
+def encode_wav_family(df: DataFrame) -> DataFrame:
+    """Near-duplicate audio corpus: every 8 consecutive doc_ids
     share a base clip (samples = ``_wav_sample(base, k)``, length
     ``base % 320 + 64`` samples); each member perturbs ONLY sample 0 by
-    ``(id % group) * 16`` — the re-encode/level-tweak near-dup. Fully
+    ``(id % 8) * 16`` — the re-encode/level-tweak near-dup. Fully
     valid RIFF/WAVE int16 PCM files."""
     import struct
 
     def one(mid: int) -> bytes:
-        base = mid // group
+        base = mid // 8
         ns = base % 320 + 64
         samples = [_wav_sample(base, k) for k in range(ns)]
-        samples[0] += (mid % group) * 16
+        samples[0] += (mid % 8) * 16
         pcm = struct.pack(f"<{ns}h", *samples)
         fmt = struct.pack("<HHIIHH", 1, 1, 16000, 32000, 2, 16)
         chunks = (
@@ -1792,20 +1770,20 @@ def encode_wav_family(
         return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
 
     return _map_rows(
-        df.select(F.col(id_col)), lambda mid: [(mid, one(mid))], PNG_MEDIA_SCHEMA
+        df.select("doc_id"), lambda mid: [(mid, one(mid))], PNG_MEDIA_SCHEMA
     )
 
 
-def decode_wav_fingerprint(
-    media: DataFrame, *, payload_col: str = "payload", n_bands: int = 32
-) -> DataFrame:
+def decode_wav_fingerprint(media: DataFrame) -> DataFrame:
     """Energy-band audio fingerprint over REALLY decoded PCM: unpack the
-    int16 data chunk, split into ``n_bands`` contiguous sample blocks
+    int16 data chunk, split into ``n_bands`` = 32 contiguous sample blocks
     (block b spans ``[b*n//32, (b+1)*n//32)`` — exact integer splits),
     bit b set iff the block's energy beats its share of the total:
     ``E_b * n > E_tot * c_b`` (cross-multiplied BIGINTs, no float), the
     exact analogue of the image block-mean hash. NULL for non-WAV."""
     import struct
+
+    n_bands = 32
 
     def one(b):
         if b is None:
@@ -1841,7 +1819,7 @@ def decode_wav_fingerprint(
         return (n, fp)
 
     return _map_rows(
-        media.select("media_id", F.col(payload_col)),
+        media.select("media_id", "payload"),
         lambda mid, b: [(mid, *one(b))],
         AUDIOHASH_SCHEMA,
     )
@@ -1994,14 +1972,12 @@ def _mjpeg_mp4_encode_one(mid: int, text: str) -> bytes:
     return _mp4_mjpeg_container(frames, w, h)
 
 
-def encode_mjpeg_mp4(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def encode_mjpeg_mp4(df: DataFrame) -> DataFrame:
     """Encode one MJPEG-in-MP4 video per row (an Arrow row kernel,
     like every multimodal encoder — payload bytes never touch the JVM
     planner)."""
     return _map_rows(
-        df.select(F.col(id_col), F.col(text_col)),
+        df.select("doc_id", "text"),
         lambda mid, text: [(mid, _mjpeg_mp4_encode_one(mid, text))],
         PNG_MEDIA_SCHEMA,
     )
@@ -2146,9 +2122,7 @@ def _mp4_mjpeg_frames_one(b) -> list[tuple] | None:
     return [(k, *_jpeg_decode_stats_one(s)) for k, s in enumerate(samples)]
 
 
-def decode_mp4_mjpeg_frames(
-    media: DataFrame, *, payload_col: str = "payload"
-) -> DataFrame:
+def decode_mp4_mjpeg_frames(media: DataFrame) -> DataFrame:
     """REAL video decode, one row per frame: ISO BMFF walk to the
     sample tables, per-sample slice, full baseline-JPEG entropy decode
     + dequant + IDCT per frame (row-expanding kernel — the
@@ -2156,7 +2130,7 @@ def decode_mp4_mjpeg_frames(
     genuinely decoded pixels).  Non-MJPEG payloads expand to zero rows
     (filtered, not faked)."""
     return _map_rows(
-        media.select("media_id", F.col(payload_col)),
+        media.select("media_id", "payload"),
         lambda mid, b: [(mid, *frame) for frame in _mp4_mjpeg_frames_one(b) or ()],
         MJPEG_FRAME_STATS_SCHEMA,
     )
@@ -2196,19 +2170,19 @@ def _frame_fingerprint(blocks) -> int:
     return fh
 
 
-def _mjpeg_family_video(doc_id: int, group: int = 4) -> bytes:
+def _mjpeg_family_video(doc_id: int) -> bytes:
     """One member of a near-duplicate video family.
 
-    Every ``group`` consecutive ids share a base video (dims, frame
+    Every 4 consecutive ids share a base video (dims, frame
     count, and all frame DCs derive from the family index ``fam =
-    doc_id // group``); member ``m = doc_id % group`` perturbs ONLY
+    doc_id // 4``); member ``m = doc_id % 4`` perturbs ONLY
     frame 0's first block DC by ``+m``, so members share all frames
     except the first — the shot-level overlap a frame-fingerprint
     matcher must find (single-frame families share nothing: honest
     non-dups). DC stays within Huffman category 6 (base DC in
     [-30, 30], +m <= +3 -> [-30, 33]; worst DPCM diff 63)."""
-    fam = doc_id // group
-    m = doc_id % group
+    fam = doc_id // 4
+    m = doc_id % 4
     nf = fam % 4 + 1
     bw, bh = fam % 3 + 1, fam % 2 + 1
     frames = []
@@ -2220,22 +2194,18 @@ def _mjpeg_family_video(doc_id: int, group: int = 4) -> bytes:
     return _mp4_mjpeg_container(frames, 8 * bw, 8 * bh)
 
 
-def encode_mjpeg_family(
-    df: DataFrame, *, id_col: str = "doc_id", group: int = 4
-) -> DataFrame:
+def encode_mjpeg_family(df: DataFrame) -> DataFrame:
     """Encode the near-duplicate MJPEG video corpus (one video per row,
     Arrow row kernel)."""
 
     return _map_rows(
-        df.select(F.col(id_col)),
-        lambda mid: [(mid, _mjpeg_family_video(mid, group))],
+        df.select("doc_id"),
+        lambda mid: [(mid, _mjpeg_family_video(mid))],
         PNG_MEDIA_SCHEMA,
     )
 
 
-def decode_mp4_mjpeg_frame_hashes(
-    media: DataFrame, *, payload_col: str = "payload"
-) -> DataFrame:
+def decode_mp4_mjpeg_frame_hashes(media: DataFrame) -> DataFrame:
     """REAL per-frame fingerprinting: stbl-indexed sample slicing, full
     T.81 decode per frame, then the base-257 block-mean fingerprint —
     one row per frame. Non-MJPEG payloads expand to zero rows. At
@@ -2250,7 +2220,7 @@ def decode_mp4_mjpeg_frame_hashes(
                 yield (mid, k, w, h, _frame_fingerprint(blocks))
 
     return _map_rows(
-        media.select("media_id", F.col(payload_col)), frame_hashes, FRAME_HASH_SCHEMA
+        media.select("media_id", "payload"), frame_hashes, FRAME_HASH_SCHEMA
     )
 
 
@@ -2330,9 +2300,7 @@ def _bmp_pixel(mid: int, x: int, y: int) -> tuple[int, int, int]:
     )
 
 
-def encode_bmp_pixels(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def encode_bmp_pixels(df: DataFrame) -> DataFrame:
     """Encode a fully VALID 24-bit BI_RGB Windows bitmap per row —
     BITMAPFILEHEADER ('BM', file size, bfOffBits=54) +
     BITMAPINFOHEADER (biSize=40) + BGR pixel rows with the mandatory
@@ -2367,7 +2335,7 @@ def encode_bmp_pixels(
         return header + info + pixels
 
     return _map_rows(
-        df.select(F.col(id_col), F.col(text_col)),
+        df.select("doc_id", "text"),
         lambda mid, text: [(mid, one(mid, text))],
         PNG_MEDIA_SCHEMA,
     )
@@ -2415,15 +2383,13 @@ def _bmp_decode_stats_one(b):
     return (w, h, w * h, sr, sg, sb, wsum_r)
 
 
-def decode_bmp_pixel_stats(
-    media: DataFrame, *, payload_col: str = "payload"
-) -> DataFrame:
+def decode_bmp_pixel_stats(media: DataFrame) -> DataFrame:
     """REAL BMP decode over Arrow batches — header walk, stride and
     row-order handling, exact integer channel sums (the uncompressed
     sibling of :func:`decode_png_pixel_stats`; same output schema so
     downstream stats expressions are codec-agnostic)."""
     return _map_rows(
-        media.select("media_id", F.col(payload_col)),
+        media.select("media_id", "payload"),
         lambda mid, b: [(mid, *_bmp_decode_stats_one(b))],
         BMP_PIXEL_STATS_SCHEMA,
     )

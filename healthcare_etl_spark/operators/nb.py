@@ -40,94 +40,81 @@ from healthcare_etl_spark.functions.rounding import stable_round
 from healthcare_etl_spark.functions.vectors import array_sum
 
 
-def nb_lang_confusion(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    label_col: str = "lang",
-    id_col: str = "doc_id",
-    test_pct: int = 20,
-    alpha: float = 1.0,
-    split_salt: str = "",
-) -> DataFrame:
-    """Train/evaluate the NB classifier; returns (actual, predicted,
-    n_docs) — the held-out confusion matrix."""
+def nb_lang_confusion(docs: DataFrame) -> DataFrame:
+    """Train/evaluate the NB classifier of ``lang`` from ``text``, holding
+    out the 20% of ``doc_id``s whose md5 bucket is below 20, with
+    Laplace smoothing alpha = 1; returns (actual, predicted, n_docs) —
+    the held-out confusion matrix."""
     doc_hash = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(split_salt), F.col(id_col).cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
+        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("long")
         % 100
     )
-    split = docs.select(
-        id_col, text_col, label_col, (doc_hash < test_pct).alias("is_test")
-    )
+    split = docs.select("doc_id", "text", "lang", (doc_hash < 20).alias("is_test"))
     toks = split.select(
-        id_col, label_col, "is_test", F.explode(F.split(text_col, " ")).alias("tok")
+        "doc_id", "lang", "is_test", F.explode(F.split("text", " ")).alias("tok")
     ).filter(F.length("tok") > 0)
 
     # -- train: counts, totals, vocabulary, priors
     tc = (
         toks.filter(~F.col("is_test"))
-        .groupBy(label_col, "tok")
+        .groupBy("lang", "tok")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    nl = tc.groupBy(label_col).agg(F.sum("c").alias("n"))
+    nl = tc.groupBy("lang").agg(F.sum("c").alias("n"))
     vocab = tc.select("tok").distinct()
     vsize = vocab.agg(F.count(F.lit(1)).alias("v"))
     tr_docs = split.filter(~F.col("is_test"))
     tot = tr_docs.agg(F.count(F.lit(1)).alias("nd_tot"))
     priors = (
-        tr_docs.groupBy(label_col)
+        tr_docs.groupBy("lang")
         .agg(F.count(F.lit(1)).alias("nd"))
         .crossJoin(F.broadcast(tot))
         .select(
-            F.col(label_col).alias("p_lang"),
+            F.col("lang").alias("p_lang"),
             stable_round(F.log(F.col("nd") / F.col("nd_tot")), 6).alias("prior_lp"),
         )
     )
     # -- model: Laplace-smoothed log-likelihood per (lang, token), plus
     #    the per-lang default for in-vocab tokens unseen in that lang
     logp = (
-        tc.join(nl, label_col)
+        tc.join(nl, "lang")
         .crossJoin(F.broadcast(vsize))
         .select(
-            F.col(label_col).alias("m_lang"),
+            F.col("lang").alias("m_lang"),
             F.col("tok").alias("m_tok"),
             stable_round(
-                F.log((F.col("c") + F.lit(alpha)) / (F.col("n") + F.lit(alpha) * F.col("v"))), 6
+                F.log((F.col("c") + F.lit(1.0)) / (F.col("n") + F.lit(1.0) * F.col("v"))), 6
             ).alias("lp"),
         )
     )
     missing = (
         nl.crossJoin(F.broadcast(vsize)).select(
-            F.col(label_col).alias("x_lang"),
+            F.col("lang").alias("x_lang"),
             stable_round(
-                F.log(F.lit(alpha) / (F.col("n") + F.lit(alpha) * F.col("v"))), 6
+                F.log(F.lit(1.0) / (F.col("n") + F.lit(1.0) * F.col("v"))), 6
             ).alias("lp0"),
         )
     )
-    langs = nl.select(F.col(label_col).alias("cand"))
+    langs = nl.select(F.col("lang").alias("cand"))
 
     # -- score the held-out split: every in-vocab token occurrence
     #    contributes its (rounded) log-likelihood under each candidate
     cand_rows = (
         toks.filter(F.col("is_test"))
-        .select(id_col, F.col(label_col).alias("actual"), "tok")
+        .select("doc_id", F.col("lang").alias("actual"), "tok")
         .join(vocab, "tok")
         .crossJoin(F.broadcast(langs))
         .join(logp, (F.col("tok") == F.col("m_tok")) & (F.col("cand") == F.col("m_lang")), "left")
         .join(F.broadcast(missing), F.col("cand") == F.col("x_lang"))
-        .select(id_col, "actual", "cand", F.coalesce("lp", "lp0").alias("tok_lp"))
+        .select("doc_id", "actual", "cand", F.coalesce("lp", "lp0").alias("tok_lp"))
     )
     scores = (
-        cand_rows.groupBy(id_col, "actual", "cand")
+        cand_rows.groupBy("doc_id", "actual", "cand")
         .agg(array_sum(F.array_sort(F.collect_list("tok_lp"))).alias("s"))
         .join(F.broadcast(priors), F.col("cand") == F.col("p_lang"))
-        .select(id_col, "actual", "cand", (F.col("s") + F.col("prior_lp")).alias("score"))
+        .select("doc_id", "actual", "cand", (F.col("s") + F.col("prior_lp")).alias("score"))
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("score"), F.asc("cand"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("cand"))
     pred = (
         scores.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)

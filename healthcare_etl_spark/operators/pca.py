@@ -38,28 +38,27 @@ from healthcare_etl_spark.functions.rounding import stable_round
 from healthcare_etl_spark.functions.vectors import array_sum
 
 
-def covariance_rows(
-    emb: DataFrame, *, dim: int = 64, vec_col: str = "embedding"
-) -> tuple[DataFrame, DataFrame]:
-    """One corpus pass -> (full d x d covariance rows (i, j, cov),
+def covariance_rows(emb: DataFrame, *, dim: int = 64) -> tuple[DataFrame, DataFrame]:
+    """One ``embedding`` pass -> (full d x d covariance rows (i, j, cov),
     per-dimension means (i, mean)), both 6dp-stable-rounded. The full
     grid (not just the upper triangle) keeps the matvec join-free of a
     mirroring step; production at higher d would mirror the triangle.
     """
-    pi = emb.select(vec_col, F.posexplode(vec_col).alias("i", "xi")).select(
-        F.col("i").cast("long").alias("i"), F.col("xi").cast("double").alias("xi"), vec_col
+    pi = emb.select("embedding", F.posexplode("embedding").alias("i", "xi")).select(
+        F.col("i").cast("long").alias("i"), F.col("xi").cast("double").alias("xi"), "embedding"
     )
     pij = pi.select(
         "i",
         F.explode(F.sequence(F.lit(0).cast("long"), F.lit(dim - 1).cast("long"))).alias("j"),
         "xi",
-        vec_col,
+        "embedding",
     ).select(
         "i",
         "j",
-        (F.col("xi") * F.element_at(vec_col, (F.col("j") + 1).cast("int")).cast("double")).alias(
-            "prod"
-        ),
+        (
+            F.col("xi")
+            * F.element_at("embedding", (F.col("j") + 1).cast("int")).cast("double")
+        ).alias("prod"),
     )
     pa = pij.groupBy("i", "j").agg(F.count(F.lit(1)).alias("n"), F.sum("prod").alias("sp"))
     m = pi.groupBy("i").agg(F.sum("xi").alias("s"), F.count(F.lit(1)).alias("n"))
@@ -95,10 +94,8 @@ def pca_power_projection(
     *,
     dim: int = 64,
     n_iter: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Project every vector onto the top principal component learned by
+    """Project every ``embedding`` onto the top principal component learned by
     ``n_iter`` power-iteration rounds over the covariance matrix.
 
     Convergence is ``(lambda2/lambda1)^t`` — near-isotropic corpora
@@ -118,12 +115,12 @@ def pca_power_projection(
     CTEs use — in IEEE doubles, so the learned component and all
     projections stay bit-identical cross-engine.
 
-    Returns (id_col, pc1) — the mean-centered dot product with the
+    Returns (vec_id, pc1) — the mean-centered dot product with the
     learned component, 6dp-rounded.
     """
     import math
 
-    cov, means = covariance_rows(emb, dim=dim, vec_col=vec_col)
+    cov, means = covariance_rows(emb, dim=dim)
     C = [[0.0] * dim for _ in range(dim)]
     for r in cov.collect():
         C[r["i"]][r["j"]] = r["cov"]
@@ -143,11 +140,11 @@ def pca_power_projection(
     spark = emb.sparkSession
     v_df = spark.range(1).select(F.array(*[F.lit(x) for x in v]).alias("v"))
     mean_v = _as_array(means, "i", "mean", "mv")
-    centered = F.zip_with(vec_col, "mv", lambda x, m: x.cast("double") - m)
+    centered = F.zip_with("embedding", "mv", lambda x, m: x.cast("double") - m)
     proj = array_sum(F.zip_with(centered, F.col("v"), lambda d, vi: d * vi))
     return (
-        emb.select(id_col, vec_col)
+        emb.select("vec_id", "embedding")
         .crossJoin(F.broadcast(mean_v))
         .crossJoin(F.broadcast(v_df))
-        .select(id_col, stable_round(proj, 6).alias("pc1"))
+        .select("vec_id", stable_round(proj, 6).alias("pc1"))
     )

@@ -49,10 +49,12 @@ from pyspark.sql.window import Window
 from healthcare_etl_spark.functions.rounding import stable_round
 from healthcare_etl_spark.functions.vectors import cosine_similarity, l2_sq
 
+M = 8  # subspaces per 64-dim vector
+KSUB = 16  # centroids per subspace codebook
+SUB_DIM = 8  # dims per subspace
 
-def _subvectors(
-    df: DataFrame, *, id_out: str, id_col: str, vec_col: str, m: int, sub_dim: int
-) -> DataFrame:
+
+def _subvectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """Long-form (id, j, sub) subvector frame: one row per subspace.
 
     ``inline`` over a literal array of slices is a narrow (no-shuffle)
@@ -63,12 +65,12 @@ def _subvectors(
         *[
             F.struct(
                 F.lit(j).alias("j"),
-                F.slice(F.col(vec_col), j * sub_dim + 1, sub_dim).alias("sub"),
+                F.slice(F.col(vec_col), j * SUB_DIM + 1, SUB_DIM).alias("sub"),
             )
-            for j in range(m)
+            for j in range(M)
         ]
     )
-    return df.select(F.col(id_col).alias(id_out), F.inline(slices))
+    return df.select(id_col, F.inline(slices))
 
 
 def _argmin_code(
@@ -94,15 +96,29 @@ def _argmin_code(
     )
 
 
-def pq_codebook(
-    corpus: DataFrame,
-    *,
-    m: int = 8,
-    ksub: int = 16,
-    sub_dim: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def _rerank_top10(corpus: DataFrame, cand: DataFrame, q: DataFrame) -> DataFrame:
+    """Exact-cosine rerank of the (query_id, neighbor_id) candidates
+    ``cand`` against the query vectors ``q`` (query_id, q_vec): only
+    candidates touch the float column. Returns the top 10 per query as
+    (query_id, neighbor_id, cosine, rank)."""
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec"))
+    rer = (
+        c.join(F.broadcast(cand), "neighbor_id")
+        .join(F.broadcast(q), "query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            stable_round(cosine_similarity("q_vec", "c_vec"), 6).alias("cosine"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        rer.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= 10)
+    )
+
+
+def pq_codebook(corpus: DataFrame, *, vec_col: str = "embedding") -> DataFrame:
     """Train per-subspace codebooks: seed each subspace's ``ksub``
     centroids from the ``ksub`` lowest-id corpus vectors (deterministic,
     same discipline as ``similarity.kmeans_lloyd``), then run one Lloyd
@@ -112,19 +128,17 @@ def pq_codebook(
     rounded seed. Returns (j, code, cent: array<double>) — ``m * ksub``
     rows, broadcastable by construction.
     """
-    pts = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
+    pts = corpus.select("vec_id", F.col(vec_col).alias("v"))
     w_seed = Window.orderBy("vec_id")
     seeds = (
         pts.orderBy("vec_id")
-        .limit(ksub)
+        .limit(KSUB)
         .withColumn("code", (F.row_number().over(w_seed) - 1).cast("int"))
     )
-    seed_subs = _subvectors(
-        seeds.select("code", "v"), id_out="code", id_col="code", vec_col="v", m=m, sub_dim=sub_dim
-    ).withColumnRenamed("sub", "cent")
-    corpus_subs = _subvectors(
-        pts, id_out="vec_id", id_col="vec_id", vec_col="v", m=m, sub_dim=sub_dim
+    seed_subs = _subvectors(seeds.select("code", "v"), "code", "v").withColumnRenamed(
+        "sub", "cent"
     )
+    corpus_subs = _subvectors(pts, "vec_id", "v")
     assign0 = _argmin_code(corpus_subs, seed_subs, id_field="vec_id", carry=("sub",))
     refined = (
         assign0
@@ -149,38 +163,17 @@ def pq_codebook(
     )
 
 
-def pq_encode(
-    corpus: DataFrame,
-    codebook: DataFrame,
-    *,
-    m: int = 8,
-    sub_dim: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(corpus: DataFrame, codebook: DataFrame) -> DataFrame:
     """Encode every corpus vector against a trained codebook. Returns
     the long form (vec_id, j, code) — the ADC join shape; at production
     scale this frame is what gets written to storage (8 small ints per
     vector) and the float column is never read again at query time."""
-    subs = _subvectors(
-        corpus, id_out="vec_id", id_col=id_col, vec_col=vec_col, m=m, sub_dim=sub_dim
-    )
+    subs = _subvectors(corpus, "vec_id", "embedding")
     return _argmin_code(subs, codebook, id_field="vec_id")
 
 
 def ivfpq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    *,
-    k: int = 10,
-    nprobe: int = 2,
-    m: int = 8,
-    ksub: int = 16,
-    sub_dim: int = 8,
-    rerank: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "label",
+    queries: DataFrame, corpus: DataFrame, *, nprobe: int = 2, rerank: int = 32
 ) -> DataFrame:
     """IVF-PQ ANN (Jegou et al. 2011 §V, the FAISS ``IVFx,PQy`` index):
     a coarse quantizer partitions the corpus into cells, each vector
@@ -220,16 +213,13 @@ def ivfpq_topk(
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
     from healthcare_etl_spark.operators.similarity import label_centroids
 
-    dim = m * sub_dim
     # The 10-row coarse quantizer is consumed by THREE subtrees (corpus
     # residuals feeding train, corpus residuals feeding encode, query
     # assignment+residual) — checkpoint it so the corpus centroid pass
     # runs once, as part of index BUILD alongside codebook training
     # (the iterative-operator discipline; interleaved sf0.1 A/B:
     # min 4.59 s vs 4.96 s unchecked, identical results).
-    cents = label_centroids(
-        corpus, vec_col=vec_col, cell_col=cell_col, dim=dim
-    ).localCheckpoint()
+    cents = label_centroids(corpus).localCheckpoint()
     # Residual corpus: v - centroid(cell), element-wise, 6dp-stable.
     # At 100 TB this frame is computed once at index-build time and only
     # its 8-byte codes are persisted (bucketed by cell).
@@ -238,9 +228,9 @@ def ivfpq_topk(
     )
     c_res = (
         corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("v"),
-            F.col(cell_col).alias("cell"),
+            F.col("vec_id"),
+            F.col("embedding").alias("v"),
+            F.col("label").alias("cell"),
         )
         .join(F.broadcast(cents), "cell")
         .select("vec_id", "cell", res.alias("rv"))
@@ -249,9 +239,7 @@ def ivfpq_topk(
     # shared-codebook IVF-PQ form; per-cell codebooks multiply codebook
     # size by N_cells for marginal recall). localCheckpoint: two
     # consumers (encode + LUT) must not re-run training.
-    codebook = pq_codebook(
-        c_res, m=m, ksub=ksub, sub_dim=sub_dim, id_col="vec_id", vec_col="rv"
-    ).localCheckpoint()
+    codebook = pq_codebook(c_res, vec_col="rv").localCheckpoint()
     # Subvector expansion with the cell carried in-row (narrow inline;
     # no join back to the residual frame, which would re-run its
     # centroid join and shuffle the corpus a second time).
@@ -259,16 +247,16 @@ def ivfpq_topk(
         *[
             F.struct(
                 F.lit(j).alias("j"),
-                F.slice(F.col("rv"), j * sub_dim + 1, sub_dim).alias("sub"),
+                F.slice(F.col("rv"), j * SUB_DIM + 1, SUB_DIM).alias("sub"),
             )
-            for j in range(m)
+            for j in range(M)
         ]
     )
     corpus_subs = c_res.select("vec_id", "cell", F.inline(c_slices))
     codes = _argmin_code(corpus_subs, codebook, id_field="vec_id", carry=("cell",))
     # Query side: nprobe nearest cells by cosine to the cell centroid
     # (the coarse quantizer), then a PER-CELL residual and LUT.
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
     w_assign = Window.partitionBy("query_id").orderBy(F.desc("cent_cos"), F.asc("cell"))
     q_assign = (
         q.crossJoin(F.broadcast(cents))
@@ -292,12 +280,7 @@ def ivfpq_topk(
         )
     )
     q_subs = _subvectors(
-        q_assign.select(F.struct("query_id", "cell").alias("qc"), "q_res"),
-        id_out="qc",
-        id_col="qc",
-        vec_col="q_res",
-        m=m,
-        sub_dim=sub_dim,
+        q_assign.select(F.struct("query_id", "cell").alias("qc"), "q_res"), "qc", "q_res"
     )
     lut = q_subs.join(F.broadcast(codebook), "j").select(
         F.col("qc.query_id").alias("query_id"),
@@ -321,39 +304,14 @@ def ivfpq_topk(
         .filter(F.col("rn") <= rerank)
         .select("query_id", "neighbor_id")
     )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    rer = (
-        c.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            stable_round(cosine_similarity("q_vec", "c_vec"), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        rer.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _rerank_top10(corpus, cand, q)
 
 
-def pq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    *,
-    k: int = 10,
-    m: int = 8,
-    ksub: int = 16,
-    sub_dim: int = 8,
-    rerank: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_topk(queries: DataFrame, corpus: DataFrame, *, rerank: int = 32) -> DataFrame:
     """PQ-ADC ANN with exact rerank: train codebooks on the corpus,
     encode it, build each query's integer LUT, take the ``rerank``
     best ADC candidates per query, then exact-cosine rerank to the
-    final top-k. Returns (query_id, neighbor_id, cosine, rank) — the
+    final top-10. Returns (query_id, neighbor_id, cosine, rank) — the
     same contract as ``similarity.cosine_topk``, whose exact scan is
     the recall baseline in tests."""
     # Materialize the trained codebook ONCE via localCheckpoint (the
@@ -365,16 +323,10 @@ def pq_topk(
     # the checkpoint on the bench: the extra blocking driver round-trips
     # cost more than the block write. On a real cluster use reliable
     # checkpoint()/a staging table.)
-    codebook = pq_codebook(
-        corpus, m=m, ksub=ksub, sub_dim=sub_dim, id_col=id_col, vec_col=vec_col
-    ).localCheckpoint()
-    codes = pq_encode(
-        corpus, codebook, m=m, sub_dim=sub_dim, id_col=id_col, vec_col=vec_col
-    )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    q_subs = _subvectors(
-        q, id_out="query_id", id_col="query_id", vec_col="q_vec", m=m, sub_dim=sub_dim
-    )
+    codebook = pq_codebook(corpus).localCheckpoint()
+    codes = pq_encode(corpus, codebook)
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
+    q_subs = _subvectors(q, "query_id", "q_vec")
     # Integer micro-unit LUT entries: floor(d*1e6 + 0.5) is bit-identical
     # across engines (round-half behavior differs; floor does not), and
     # integer ADC sums are exact => order-independent.
@@ -397,18 +349,4 @@ def pq_topk(
         .filter(F.col("rn") <= rerank)
         .select("query_id", "neighbor_id")
     )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    rer = (
-        c.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            stable_round(cosine_similarity("q_vec", "c_vec"), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        rer.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _rerank_top10(corpus, cand, q)

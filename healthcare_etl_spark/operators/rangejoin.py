@@ -36,31 +36,28 @@ def banded_range_join(
     left_ts: str = "ts",
     right_ts: str = "ts",
     lower_seconds: float = -3600.0,
-    upper_seconds: float = 0.0,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join ``right`` rows whose ``right_ts`` falls in
-    ``[left.left_ts + lower_seconds, left.left_ts + upper_seconds)`` for the
-    same ``on`` key.
+    """Inner-join ``right`` rows whose ``right_ts`` falls in
+    ``[left.left_ts + lower_seconds, left.left_ts)`` for the same ``on``
+    key.
 
     All timestamp arithmetic is in microseconds (``timeutils.ts_micros``,
     which accepts TIMESTAMP and TIMESTAMP_NTZ alike), matching the
     fixtures' native granularity. Column names must be disjoint apart
     from ``on`` (alias/select beforehand, as with any self-join).
     """
-    if upper_seconds <= lower_seconds:
-        raise ValueError("upper_seconds must be > lower_seconds")
+    if lower_seconds >= 0:
+        raise ValueError("lower_seconds must be < 0")
     if left_ts == right_ts:
         raise ValueError("left_ts and right_ts must be distinct column names (alias before a self-join)")
-    band_us = int((upper_seconds - lower_seconds) * 1_000_000)
     lo_us = int(lower_seconds * 1_000_000)
-    hi_us = int(upper_seconds * 1_000_000)
+    band_us = -lo_us
 
     l_us = ts_micros(left_ts)
     r_us = ts_micros(right_ts)
 
     r_b = right.withColumn("__bucket", F.floor(r_us / band_us))
-    # Buckets overlapped by [l+lo, l+hi): window span == band width, so a
+    # Buckets overlapped by [l+lo, l): window span == band width, so a
     # left window touches at most 2 buckets — the sequence is tiny and
     # constant, never data-dependent explosion.
     l_b = left.withColumn(
@@ -68,43 +65,37 @@ def banded_range_join(
         F.explode(
             F.sequence(
                 F.floor((l_us + F.lit(lo_us)) / band_us),
-                F.floor((l_us + F.lit(hi_us - 1)) / band_us),
+                F.floor((l_us + F.lit(-1)) / band_us),
             )
         ),
     )
-    precise = (r_us >= l_us + F.lit(lo_us)) & (r_us < l_us + F.lit(hi_us))
-    return l_b.join(r_b, on=[on, "__bucket"], how=how).filter(precise).drop("__bucket")
+    precise = (r_us >= l_us + F.lit(lo_us)) & (r_us < l_us + F.lit(0))
+    return l_b.join(r_b, on=[on, "__bucket"]).filter(precise).drop("__bucket")
 
 
 def interval_point_join(
-    intervals: DataFrame,
-    points: DataFrame,
-    *,
-    start: str = "start",
-    end: str = "end",
-    point_ts: str = "ts",
-    bucket_seconds: float = 3600.0,
+    intervals: DataFrame, points: DataFrame, *, point_ts: str = "ts"
 ) -> DataFrame:
     """Overlap-join point rows onto ``[start, end]`` intervals (inclusive)
     without a nested loop — the variable-length generalization of
     ``banded_range_join``.
 
     Each interval explodes to the time buckets it covers (``sequence`` +
-    ``explode`` — length/bucket_seconds rows, data-bounded, not O(n²));
+    ``explode`` — one row per hour covered, data-bounded, not O(n²));
     each point lives in exactly ONE bucket, so the bucket equi-join
     yields every qualifying (interval, point) pair exactly once, then
     the precise containment predicate prunes edge candidates. Inner
     semantics; re-join the interval table for intervals with no points.
 
-    Scale: pick ``bucket_seconds`` near the typical interval length — too
+    Scale: the one-hour bucket should sit near the typical interval length — too
     small multiplies the interval side's rows, too large widens candidate
     lists. Both sides shuffle on the bucket id (time-uniform, naturally
     balanced); a hot bucket (traffic spike) is AQE-skew-split like any
     other key.
     """
-    band_us = int(bucket_seconds * 1_000_000)
-    s_us = ts_micros(start)
-    e_us = ts_micros(end)
+    band_us = 3600 * 1_000_000
+    s_us = ts_micros("start")
+    e_us = ts_micros("end")
     p_us = ts_micros(point_ts)
     i_b = intervals.withColumn(
         "__bucket",

@@ -72,7 +72,6 @@ def top_n_per_group(
     partition_by: list[str],
     order_by: list[Column],
     n: int,
-    rank_col: str = "rn",
 ) -> DataFrame:
     """Top-N per group — the window-function generalization of O1+O2
     (SURVEY.md §2.8): one shuffle on the group key, then a per-partition
@@ -80,9 +79,9 @@ def top_n_per_group(
     """
     w = Window.partitionBy(*partition_by).orderBy(*order_by)
     return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= n)
-        .drop(rank_col)
+        df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= n)
+        .drop("rn")
     )
 
 

@@ -46,21 +46,24 @@ def latest_snapshot(
     )
 
 
+OPEN_END = "9999-12-31 00:00:00"  # effective_to of the current version
+
+
 def scd2_merge(
     dim: DataFrame,
     updates: DataFrame,
     *,
     key: str,
     compare_cols: list[str],
-    effective_col: str = "effective_from",
-    end_col: str = "effective_to",
-    update_ts_col: str = "update_ts",
-    open_end_value: str = "9999-12-31 00:00:00",
 ) -> DataFrame:
     """SCD type-2 merge without a lakehouse MERGE INTO.
 
+    ``dim`` carries the validity columns ``effective_from`` and
+    ``effective_to`` (``OPEN_END`` while current); ``updates`` carries
+    ``update_ts``.
+
     - rows in ``dim`` whose key gets an update with changed
-      ``compare_cols``: closed out (``end_col`` = update time);
+      ``compare_cols``: closed out (``effective_to`` = update time);
     - new version rows appended, open-ended;
     - unchanged rows pass through.
 
@@ -68,22 +71,22 @@ def scd2_merge(
     ``updates`` must contain one row per key (pre-compact with
     ``latest_snapshot`` otherwise).
     """
-    upd_cols = [key, update_ts_col, *compare_cols]
+    upd_cols = [key, "update_ts", *compare_cols]
     upd = updates.select(*upd_cols)
 
     changed_cond = F.lit(False)
     for c in compare_cols:
         changed_cond = changed_cond | ~F.col(f"d.{c}").eqNullSafe(F.col(f"u.{c}"))
 
-    open_rows = dim.filter(F.col(end_col) == open_end_value)
-    closed_rows = dim.filter(F.col(end_col) != open_end_value)
+    open_rows = dim.filter(F.col("effective_to") == OPEN_END)
+    closed_rows = dim.filter(F.col("effective_to") != OPEN_END)
 
     joined = open_rows.alias("d").join(upd.alias("u"), on=key, how="left")
-    unchanged = joined.filter(F.col(f"u.{update_ts_col}").isNull() | ~changed_cond).select("d.*")
+    unchanged = joined.filter(F.col("u.update_ts").isNull() | ~changed_cond).select("d.*")
     closed_out = (
-        joined.filter(F.col(f"u.{update_ts_col}").isNotNull() & changed_cond)
-        .select("d.*", F.col(f"u.{update_ts_col}").alias("__close_ts"))
-        .withColumn(end_col, F.col("__close_ts"))
+        joined.filter(F.col("u.update_ts").isNotNull() & changed_cond)
+        .select("d.*", F.col("u.update_ts").alias("__close_ts"))
+        .withColumn("effective_to", F.col("__close_ts"))
         .drop("__close_ts")
     )
     # New versions take the updated compare_cols from the update row and
@@ -92,16 +95,16 @@ def scd2_merge(
     passthrough = [
         c
         for c in dim.columns
-        if c not in {key, effective_col, end_col, *compare_cols}
+        if c not in {key, "effective_from", "effective_to", *compare_cols}
     ]
     new_versions = (
-        joined.filter(F.col(f"u.{update_ts_col}").isNotNull() & changed_cond)
+        joined.filter(F.col("u.update_ts").isNotNull() & changed_cond)
         .select(
             F.col(f"d.{key}").alias(key),
             *[F.col(f"d.{c}").alias(c) for c in passthrough],
             *[F.col(f"u.{c}").alias(c) for c in compare_cols],
-            F.col(f"u.{update_ts_col}").alias(effective_col),
-            F.lit(open_end_value).alias(end_col),
+            F.col("u.update_ts").alias("effective_from"),
+            F.lit(OPEN_END).alias("effective_to"),
         )
     )
     base_cols = dim.columns

@@ -21,44 +21,31 @@ from healthcare_etl_spark.functions.timeutils import ts_seconds
 from pyspark.sql.window import Window
 
 
-def sessionize(
-    df: DataFrame,
-    *,
-    key: str = "user_id",
-    ts: str = "ts",
-    gap_minutes: float = 30.0,
-    order_tiebreak: str | None = None,
-) -> DataFrame:
-    """Assign ``session_seq`` (1-based per key) to each row.
+def sessionize(df: DataFrame, *, order_tiebreak: str | None = None) -> DataFrame:
+    """Assign ``session_seq`` (1-based per ``user_id``) to each row.
 
-    A new session starts when the gap to the previous event of the same
-    key exceeds ``gap_minutes``. ``order_tiebreak`` (a unique column)
+    A new session starts when the gap to the previous ``ts`` of the same
+    user exceeds 30 minutes. ``order_tiebreak`` (a unique column)
     makes ordering total when timestamps can tie.
     """
-    order: list[Column] = [F.col(ts)]
+    order: list[Column] = [F.col("ts")]
     if order_tiebreak:
         order.append(F.col(order_tiebreak))
-    w = Window.partitionBy(key).orderBy(*order)
-    gap_sec = ts_seconds(ts) - F.lag(ts_seconds(ts)).over(w)
-    is_new = F.when(gap_sec.isNull() | (gap_sec > gap_minutes * 60.0), 1).otherwise(0)
+    w = Window.partitionBy("user_id").orderBy(*order)
+    gap_sec = ts_seconds("ts") - F.lag(ts_seconds("ts")).over(w)
+    is_new = F.when(gap_sec.isNull() | (gap_sec > 1800.0), 1).otherwise(0)
     w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return df.withColumn("session_seq", F.sum(is_new).over(w_run))
 
 
-def session_stats(
-    df: DataFrame,
-    *,
-    key: str = "user_id",
-    ts: str = "ts",
-    gap_minutes: float = 30.0,
-    order_tiebreak: str | None = None,
-) -> DataFrame:
-    """Per-session aggregate: start/end, event count, duration seconds."""
-    s = sessionize(df, key=key, ts=ts, gap_minutes=gap_minutes, order_tiebreak=order_tiebreak)
-    return s.groupBy(key, "session_seq").agg(
-        F.date_format(F.min(ts), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
+def session_stats(df: DataFrame, *, order_tiebreak: str | None = None) -> DataFrame:
+    """Per-session aggregate of ``sessionize``'s sessions: start, event
+    count, duration seconds."""
+    s = sessionize(df, order_tiebreak=order_tiebreak)
+    return s.groupBy("user_id", "session_seq").agg(
+        F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
         F.count(F.lit(1)).alias("n_events"),
-        stable_round(F.max(ts_seconds(ts)) - F.min(ts_seconds(ts)), 3).alias(
+        stable_round(F.max(ts_seconds("ts")) - F.min(ts_seconds("ts")), 3).alias(
             "duration_sec"
         ),
     )

@@ -30,8 +30,6 @@ def cosine_topk(
     corpus: DataFrame,
     *,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k neighbors per query row. Returns
     (query_id, neighbor_id, cosine, rank); ties break on neighbor_id.
@@ -43,10 +41,8 @@ def cosine_topk(
     moves at most ``n_partitions * n_queries * k`` rows instead of
     ``|corpus| * |queries|``. Plan-asserted in tests/test_plans.py.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec"))
     scored = c.crossJoin(F.broadcast(q)).select(
         "query_id",
         "neighbor_id",
@@ -59,14 +55,8 @@ def cosine_topk(
     )
 
 
-def neardup_pairs(
-    df: DataFrame,
-    *,
-    threshold: float = 0.3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """All (a < b) pairs with cosine >= threshold. Exact O(n^2) form —
+def neardup_pairs(df: DataFrame) -> DataFrame:
+    """All (a < b) pairs with cosine >= 0.3. Exact O(n^2) form —
     correct at any n, affordable at fixture scale; swap candidate
     generation to ``lsh_ann_topk``'s bucketing for 100 TB corpora.
 
@@ -78,37 +68,32 @@ def neardup_pairs(
     the probe side cannot be broadcast, this operator is the wrong tool
     by its own contract (use the LSH form).
     """
-    a = df.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("va"))
-    b = df.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("vb"))
+    a = df.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("va"))
+    b = df.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("vb"))
     pairs = F.broadcast(a).join(b, F.col("vec_a") < F.col("vec_b"))
     cos = cosine_similarity("va", "vb")
     return (
         pairs.select("vec_a", "vec_b", stable_round(cos, 6).alias("cosine"))
-        .filter(stable_round(cos, 6) >= threshold)
+        .filter(stable_round(cos, 6) >= 0.3)
     )
 
 
-def _hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
+def _hyperplanes(n_planes: int) -> list[list[float]]:
+    """``n_planes`` random 64-dim hyperplanes from numpy seed 42."""
     import numpy as np
 
-    rng = np.random.RandomState(seed)
-    return rng.normal(size=(n_planes, dim)).tolist()
+    rng = np.random.RandomState(42)
+    return rng.normal(size=(n_planes, 64)).tolist()
 
 
-def lsh_bucket(
-    df: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """Append a random-hyperplane LSH ``bucket`` column (sign-bit key).
+def lsh_bucket(df: DataFrame, *, vec_col: str = "embedding", n_planes: int = 8) -> DataFrame:
+    """Append a random-hyperplane LSH ``bucket`` column (sign-bit key)
+    over 64-dim vectors, planes drawn from seed 42.
 
     The planes are literal arrays in the plan — broadcast by
     construction, evaluated entirely in codegen.
     """
-    planes = _hyperplanes(n_planes, dim, seed)
+    planes = _hyperplanes(n_planes)
     bucket = F.lit(0).cast("long")
     for j, plane in enumerate(planes):
         plane_col = F.array(*[F.lit(float(x)) for x in plane])
@@ -119,36 +104,22 @@ def lsh_bucket(
     return df.withColumn("bucket", bucket)
 
 
-def lsh_ann_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    *,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: score only same-bucket candidates.
+def lsh_ann_topk(queries: DataFrame, corpus: DataFrame, *, n_planes: int = 8) -> DataFrame:
+    """Approximate top-10: score only same-bucket candidates.
 
     The bucket equi-join replaces the cross join — at 100 TB the corpus
     shuffles once on bucket (or is bucketed at write time and never
     shuffles). Recall is tested against ``cosine_topk``.
     """
     qb = lsh_bucket(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")),
+        queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")),
         vec_col="q_vec",
         n_planes=n_planes,
-        dim=dim,
-        seed=seed,
     )
     cb = lsh_bucket(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")),
+        corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")),
         vec_col="c_vec",
         n_planes=n_planes,
-        dim=dim,
-        seed=seed,
     )
     scored = cb.join(F.broadcast(qb), "bucket").select(
         "query_id",
@@ -158,25 +129,20 @@ def lsh_ann_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 10)
     )
 
 
-def label_centroids(
-    corpus: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    cell_col: str = "label",
-    dim: int = 64,
-) -> DataFrame:
-    """(cell, centroid: array<double>) — element-wise mean per cell.
+def label_centroids(corpus: DataFrame) -> DataFrame:
+    """(cell, centroid: array<double>) — element-wise mean ``embedding``
+    per ``label`` cell.
 
     Long-form explode -> groupBy(cell, pos) -> avg -> ordered reassembly.
     Centroid components are stable-rounded to 6dp so both engines (and
     any re-run) agree bit-for-bit on the coarse quantizer.
     """
     exploded = corpus.select(
-        F.col(cell_col).alias("cell"), F.posexplode(vec_col).alias("pos", "val")
+        F.col("label").alias("cell"), F.posexplode("embedding").alias("pos", "val")
     )
     long = exploded.groupBy("cell", "pos").agg(
         stable_round(F.avg(F.col("val").cast("double")), 6).alias("v")
@@ -265,15 +231,7 @@ def kmeans_lloyd(
 
 
 def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    *,
-    k: int = 10,
-    nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "label",
-    dim: int = 64,
+    queries: DataFrame, corpus: DataFrame, *, k: int = 10, nprobe: int = 1
 ) -> DataFrame:
     """IVF-style ANN: assign each query to its ``nprobe`` nearest cell
     centroids, score only those cells' vectors.
@@ -289,8 +247,8 @@ def ivf_topk(
     """
     if nprobe < 1:
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-    cents = label_centroids(corpus, vec_col=vec_col, cell_col=cell_col, dim=dim)
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
+    cents = label_centroids(corpus)
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
     w_assign = Window.partitionBy("query_id").orderBy(
         F.desc("cent_cos"), F.asc("cell")
     )
@@ -307,9 +265,9 @@ def ivf_topk(
         .select("query_id", "q_vec", "cell")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col(cell_col).alias("cell"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        F.col("label").alias("cell"),
     )
     scored = c.join(F.broadcast(assign), "cell").select(
         "query_id",
@@ -324,16 +282,10 @@ def ivf_topk(
 
 
 def semantic_dedup(
-    corpus: DataFrame,
-    *,
-    k: int = 4,
-    n_iter: int = 2,
-    threshold: float = 0.3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    corpus: DataFrame, *, n_iter: int = 2, threshold: float = 0.3
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
-    arXiv:2303.09540): cluster embeddings with spherical k-means, then
+    arXiv:2303.09540): cluster embeddings with spherical k-means (k = 4), then
     drop any vector whose cosine similarity to a LOWER-id vector in the
     SAME cluster reaches ``threshold`` (min-id keeper rule — the paper
     keeps one representative per semantic duplicate group).
@@ -354,8 +306,8 @@ def semantic_dedup(
     determinism, similarity is stable-rounded to 6dp before the
     threshold compare, and the keeper rule is pure min-id.
     """
-    assign = kmeans_lloyd(corpus, k=k, n_iter=n_iter, id_col=id_col, vec_col=vec_col)
-    pts = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
+    assign = kmeans_lloyd(corpus, k=4, n_iter=n_iter)
+    pts = corpus.select(F.col("vec_id"), F.col("embedding").alias("v"))
     clustered = assign.select("vec_id", "cluster").join(pts, "vec_id")
     keep_side = clustered.select(
         F.col("cluster"), F.col("vec_id").alias("keep_id"), F.col("v").alias("kv")
@@ -387,8 +339,6 @@ def mmr_rerank(
     k: int = 5,
     pool: int = 20,
     lam: float = 0.7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein
     1998): greedily pick ``k`` results per query that balance relevance
@@ -413,9 +363,9 @@ def mmr_rerank(
     Returns (query_id, neighbor_id, step, relevance, mmr_score) with
     ``step`` = selection order 1..k.
     """
-    c_vecs = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
+    c_vecs = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec"))
     pool_df = (
-        cosine_topk(queries, corpus, k=pool, id_col=id_col, vec_col=vec_col)
+        cosine_topk(queries, corpus, k=pool)
         .withColumnRenamed("cosine", "relevance")
         .drop("rank")
         .join(c_vecs, "neighbor_id")
@@ -460,21 +410,14 @@ def mmr_rerank(
     return selected.select("query_id", "neighbor_id", "step", "relevance", "mmr_score")
 
 
-def nn_descent_graph(
-    points: DataFrame,
-    *,
-    k: int = 4,
-    rounds: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def nn_descent_graph(points: DataFrame, *, rounds: int = 2) -> DataFrame:
     """k-NN GRAPH construction by NN-Descent (Dong et al., WWW'11) —
     the standard way to build an all-nodes neighbor graph without the
     O(n^2) all-pairs scan: start from an arbitrary neighbor guess and
     iteratively improve it with the observation that *a neighbor of a
     neighbor is likely a neighbor*.
 
-    Deterministic formulation (fixed ``rounds``, no sampling): the
+    Deterministic formulation (k = 4, fixed ``rounds``, no sampling): the
     initial guess for node u is its ``k`` successors in id space
     ((u + j + 1) mod n — ids are assumed dense, the usual contract for
     array-indexed ANN builds); each round forms the co-neighbor
@@ -493,7 +436,8 @@ def nn_descent_graph(
     graph (the _knn_edges_ctes oracle shape) is the recall baseline in
     tests.
     """
-    pts = points.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("v"))
+    k = 4
+    pts = points.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("v"))
     n_df = pts.agg(F.count(F.lit(1)).alias("n"))
     init = (
         pts.select("nid")

@@ -39,9 +39,9 @@ STOPWORD_PROFILES: dict[str, list[str]] = {
 }
 
 
-def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append structural feature columns to each document row."""
-    t = F.col(text_col)
+def text_stats(df: DataFrame) -> DataFrame:
+    """Append structural feature columns of ``text`` to each document row."""
+    t = F.col("text")
     toks = tokens(t)
     n_tok = F.size(toks)
     # counts are long: the SQL-standard width for length/count results,
@@ -59,14 +59,14 @@ def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Composite quality heuristic in [0,1], rounded to 6dp.
+def quality_score(df: DataFrame) -> DataFrame:
+    """Composite quality heuristic of ``text`` in [0,1], rounded to 6dp.
 
     0.35 * min(n_tokens/100, 1)        -- enough content
     0.35 * unique_ratio                -- not degenerate repetition
     0.30 * (1 - punct_density)         -- not symbol soup
     """
-    t = F.col(text_col)
+    t = F.col("text")
     toks = tokens(t)
     n_tok = F.size(toks).cast("double")
     uniq_ratio = F.size(F.array_distinct(toks)) / F.when(n_tok > 0, n_tok).otherwise(1.0)
@@ -83,13 +83,14 @@ def _overlap_score(toks: Column, words: list[str]) -> Column:
     return F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in words])))
 
 
-def language_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
-    """Stopword-overlap language guess; 'und' when no profile matches.
+def language_id(df: DataFrame) -> DataFrame:
+    """Stopword-overlap language guess of ``text`` into ``lang_pred`` (and
+    its overlap count ``lang_pred_score``); 'und' when no profile matches.
 
     Ties break by profile order (en > es > de > fr) via strictly-greater
     comparison — deterministic.
     """
-    toks = F.array_distinct(tokens(F.lower(F.col(text_col))))
+    toks = F.array_distinct(tokens(F.lower(F.col("text"))))
     langs = list(STOPWORD_PROFILES)
     best_lang = F.lit("und")
     best_score = F.lit(0)
@@ -98,22 +99,20 @@ def language_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred
         better = s > best_score
         best_lang = F.when(better, F.lit(lang)).otherwise(best_lang)
         best_score = F.when(better, s).otherwise(best_score)
-    return df.withColumn(out_col, best_lang).withColumn(f"{out_col}_score", best_score)
+    return df.withColumn("lang_pred", best_lang).withColumn("lang_pred_score", best_score)
 
 
-def fingerprint(df: DataFrame, text_col: str = "text", out_col: str = "fingerprint") -> DataFrame:
-    """Deterministic 31-bit rolling-hash fingerprint per document."""
-    return df.withColumn(out_col, char_fingerprint(F.col(text_col)))
+def fingerprint(df: DataFrame) -> DataFrame:
+    """Deterministic 31-bit rolling-hash ``fingerprint`` of each ``text``."""
+    return df.withColumn("fingerprint", char_fingerprint(F.col("text")))
 
 
-def hash_split(
-    df: DataFrame,
-    *,
-    key_col: str,
-    fractions: dict[str, float] | None = None,
-    salt: str = "split-v1",
-) -> DataFrame:
-    """Deterministic dataset split (train/val/test) by content hash.
+SPLIT_FRACTIONS = {"train": 0.8, "val": 0.1, "test": 0.1}
+
+
+def hash_split(df: DataFrame, *, key_col: str, salt: str = "split-v1") -> DataFrame:
+    """Deterministic dataset split (``SPLIT_FRACTIONS``: train/val/test
+    80/10/10) by content hash.
 
     The assignment depends only on (salt, key) — stable across runs,
     engines, partitionings, and cluster sizes, which is what makes
@@ -124,16 +123,15 @@ def hash_split(
     """
     from healthcare_etl_spark.operators.dedup import md5_hash31
 
-    fractions = fractions or {"train": 0.8, "val": 0.1, "test": 0.1}
     bucket = md5_hash31(F.concat(F.lit(salt), F.lit(":"), F.col(key_col).cast("string"))) % 1000
     expr = None
     lo = 0
-    for name, frac in fractions.items():
+    for name, frac in SPLIT_FRACTIONS.items():
         hi = lo + int(round(frac * 1000))
         cond = (bucket >= lo) & (bucket < hi)
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
         lo = hi
-    return df.withColumn("split", expr.otherwise(list(fractions)[0]))
+    return df.withColumn("split", expr.otherwise("train"))
 
 
 # PII patterns chosen to mean the same thing in Java regex (Spark) and
@@ -145,20 +143,16 @@ PII_PATTERNS: tuple[tuple[str, str], ...] = (
 )
 
 
-def redact_pii(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "redacted",
-    patterns: tuple[tuple[str, str], ...] = PII_PATTERNS,
-) -> DataFrame:
-    """Regex-redact PII spans (emails, phone-shaped, SSN-shaped numbers).
+def redact_pii(df: DataFrame) -> DataFrame:
+    """Regex-redact PII spans (emails, phone-shaped, SSN-shaped numbers)
+    of ``text`` into ``redacted``.
 
     A standard pre-training cleaning pass. Chained ``regexp_replace``
     stays inside whole-stage codegen — per-row Python redaction would be
     the classic 100x UDF mistake on a 100 TB corpus. Pattern order
-    matters (SSN before phone would double-match); callers own the list.
+    matters (SSN before phone would double-match).
     """
-    col: Column = F.col(text_col)
-    for pat, tag in patterns:
+    col: Column = F.col("text")
+    for pat, tag in PII_PATTERNS:
         col = F.regexp_replace(col, pat, tag)
-    return df.withColumn(out_col, col)
+    return df.withColumn("redacted", col)

@@ -491,8 +491,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.operators.graph import pagerank
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, threshold=0.5).select("doc_a", "doc_b")
-    return pagerank(pairs, iterations=5).select(
+    pairs = minhash_lsh_pairs(docs).select("doc_a", "doc_b")
+    return pagerank(pairs).select(
         F.col("node").alias("doc_id"), "rank"
     )
 
@@ -539,16 +539,14 @@ def q_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.operators.sessionize import sessionize
 
     ev = load_table(spark, sf_dir, "events")
-    sess = sessionize(ev, key="user_id", ts="ts", gap_minutes=30.0, order_tiebreak="event_id")
+    sess = sessionize(ev, order_tiebreak="event_id")
     s = sess.groupBy("user_id", "session_seq").agg(
         F.min("ts").alias("start"),
         F.max("ts").alias("end"),
         F.count(F.lit(1)).alias("n_events"),
     )
     errors = ev.filter(F.col("event_type") == "error").select(F.col("ts").alias("err_ts"))
-    pairs = interval_point_join(
-        s, errors, start="start", end="end", point_ts="err_ts", bucket_seconds=3600.0
-    )
+    pairs = interval_point_join(s, errors, point_ts="err_ts")
     per = pairs.groupBy("user_id", "session_seq").agg(F.count(F.lit(1)).alias("n_err"))
     return s.join(per, ["user_id", "session_seq"], "left").select(
         "user_id",
@@ -887,12 +885,11 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.operators.graph import bfs_hops
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, threshold=0.5).select("doc_a", "doc_b")
+    pairs = minhash_lsh_pairs(docs).select("doc_a", "doc_b")
     # seed_filter: seeds derive from the checkpointed edge set inside
     # the BFS — the LSH pair pipeline executes once, not twice.
     return bfs_hops(
         pairs,
-        max_iter=20,
         seed_filter=lambda node: (
             F.conv(F.substring(F.md5(node.cast("string")), 1, 8), 16, 10).cast("long")
             % 5

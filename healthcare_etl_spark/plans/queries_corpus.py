@@ -1153,7 +1153,7 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    ranked = pagerank(adj, src="a", dst="b", iterations=5)
+    ranked = pagerank(adj, src="a", dst="b")
     return (
         ranked.select(F.col("node").alias("word"), "rank")
         .orderBy(F.desc("rank"), F.asc("word"))

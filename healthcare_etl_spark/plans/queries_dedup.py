@@ -187,7 +187,7 @@ register(
         "skew-join plus the max_shingle_doc_frac boilerplate guard"
     ),
     tags=("dedup", "extension"),
-)(lambda spark, sf_dir: minhash_lsh_pairs(load_table(spark, sf_dir, "documents"), threshold=0.5))
+)(lambda spark, sf_dir: minhash_lsh_pairs(load_table(spark, sf_dir, "documents")))
 
 
 def _simhash_oracle_sql() -> str:
@@ -293,7 +293,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.operators.graph import dedup_clusters
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, threshold=0.5).select("doc_a", "doc_b")
+    pairs = minhash_lsh_pairs(docs).select("doc_a", "doc_b")
     return dedup_clusters(pairs)
 
 
@@ -317,7 +317,7 @@ def q_dedup_clusters_2phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.operators.graph import connected_components_two_phase
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, threshold=0.5).select("doc_a", "doc_b")
+    pairs = minhash_lsh_pairs(docs).select("doc_a", "doc_b")
     comp = connected_components_two_phase(pairs)
     return comp.select(
         F.col("node").alias("doc_id"),
@@ -378,7 +378,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long")
         % 100
     ) % 10 == 0
-    return cross_pairs_from_band_frames(ba.filter(is_new), ba.filter(~is_new), threshold=0.5)
+    return cross_pairs_from_band_frames(ba.filter(is_new), ba.filter(~is_new))
 
 
 def _source_sig_sql() -> str:
@@ -552,7 +552,7 @@ def q_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.operators.graph import dedup_clusters
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, threshold=0.5).select("doc_a", "doc_b")
+    pairs = minhash_lsh_pairs(docs).select("doc_a", "doc_b")
     clusters = dedup_clusters(pairs)
     joined = docs.select("doc_id", "source").join(clusters, "doc_id", "left")
     return joined.groupBy("source").agg(
@@ -606,7 +606,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, threshold=0.5).select("doc_a", "doc_b")
+    pairs = minhash_lsh_pairs(docs).select("doc_a", "doc_b")
     # The edge list is referenced THREE times (both wedge sides + the
     # closing-edge probe). ReuseExchange only dedupes work BELOW an
     # exchange, and the LSH pipeline's verify joins + exact-Jaccard
@@ -803,7 +803,7 @@ def q_dedup_best_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.operators.text_analysis import quality_score
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, threshold=0.5).select("doc_a", "doc_b")
+    pairs = minhash_lsh_pairs(docs).select("doc_a", "doc_b")
     clusters = dedup_clusters(pairs).select("doc_id", "cluster_id")
     q = quality_score(docs).select("doc_id", F.col("quality_score").alias("score"))
     joined = clusters.join(q, "doc_id")
@@ -873,7 +873,7 @@ def q_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.operators.dedup import minhash_lsh_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    sketch = minhash_lsh_pairs(docs, threshold=0.5).select("doc_a", "doc_b")
+    sketch = minhash_lsh_pairs(docs).select("doc_a", "doc_b")
     exact = jaccard_pairs(docs, threshold=0.5).select(
         F.col("doc_a").alias("e_a"), F.col("doc_b").alias("e_b")
     )
@@ -953,7 +953,7 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.functions.rounding import stable_round
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, threshold=0.5).select("doc_a", "doc_b")
+    pairs = minhash_lsh_pairs(docs).select("doc_a", "doc_b")
     sym = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionAll(
         pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
     )
@@ -1521,7 +1521,7 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.operators.graph import dedup_clusters
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, threshold=0.5).select("doc_a", "doc_b")
+    pairs = minhash_lsh_pairs(docs).select("doc_a", "doc_b")
     comp = dedup_clusters(pairs).select(
         F.col("doc_id").alias("node"), "cluster_id"
     )

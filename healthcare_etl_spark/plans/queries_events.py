@@ -113,9 +113,7 @@ FROM sessions GROUP BY user_id, session_seq
 )
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    return session_stats(
-        ev, key="user_id", ts="ts", gap_minutes=30.0, order_tiebreak="event_id"
-    )
+    return session_stats(ev, order_tiebreak="event_id")
 
 
 @register(
@@ -242,7 +240,6 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             left_ts="p_ts",
             right_ts="c_ts",
             lower_seconds=-3600.0,
-            upper_seconds=0.0,
         )
         .groupBy("purchase_id")
         .agg(F.count(F.lit(1)).alias("n_clicks"))
@@ -1041,7 +1038,7 @@ def q_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.operators.sessionize import sessionize
 
     ev = load_table(spark, sf_dir, "events")
-    sess = sessionize(ev, key="user_id", ts="ts", gap_minutes=30.0, order_tiebreak="event_id")
+    sess = sessionize(ev, order_tiebreak="event_id")
     per_session = sess.groupBy("user_id", "session_seq").agg(
         F.min(F.when(F.col("event_type") == "click", F.unix_micros("ts"))).alias(
             "first_click"
@@ -1098,7 +1095,7 @@ def q_session_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.operators.sessionize import sessionize
 
     ev = load_table(spark, sf_dir, "events")
-    sess = sessionize(ev, key="user_id", ts="ts", gap_minutes=30.0, order_tiebreak="event_id")
+    sess = sessionize(ev, order_tiebreak="event_id")
     types = sess.select("user_id", "session_seq", "event_type").distinct()
     n_sess = sess.select("user_id", "session_seq").distinct().agg(
         F.count(F.lit(1)).alias("total")
@@ -1389,7 +1386,7 @@ def q_session_entry_exit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.operators.sessionize import sessionize
 
     ev = load_table(spark, sf_dir, "events")
-    sess = sessionize(ev, key="user_id", ts="ts", gap_minutes=30.0, order_tiebreak="event_id")
+    sess = sessionize(ev, order_tiebreak="event_id")
     bounds = sess.groupBy("user_id", "session_seq").agg(
         # (user_id, ts) is unique in the fixtures (verified at every SF),
         # so ordering by ts alone is deterministic — and DuckDB's
@@ -1451,9 +1448,7 @@ def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.operators.sessionize import sessionize
 
     ev = load_table(spark, sf_dir, "events")
-    sess = sessionize(
-        ev, key="user_id", ts="ts", gap_minutes=30.0, order_tiebreak="event_id"
-    )
+    sess = sessionize(ev, order_tiebreak="event_id")
     w = Window.partitionBy("user_id", "session_seq").orderBy("ts", "event_id")
     tri = (
         sess.select(

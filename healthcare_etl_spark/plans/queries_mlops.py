@@ -880,7 +880,7 @@ def _register_logistic() -> None:
 
     @register(
         "q_logistic_regression",
-        oracle=irls_oracle_sql(_logistic_features_sql(), rounds=4),
+        oracle=irls_oracle_sql(_logistic_features_sql()),
         description=(
             "In-engine logistic regression by IRLS (4 rounds): "
             "P(conversion) ~ sigmoid(b0 + b1*ln(1+clicks) + "
@@ -926,7 +926,7 @@ def _register_logistic() -> None:
             F.count(F.lit(1)).alias("cnt")
         ).persist()
         try:
-            return logistic_irls(grid, rounds=4, weight="cnt")
+            return logistic_irls(grid, weight="cnt")
         finally:
             # Lazy result: unpersist AFTER the plan is built is safe —
             # blocks are dropped when the caller's action completes.
@@ -1171,9 +1171,7 @@ def _register_association_rules() -> None:
         from healthcare_etl_spark.operators.sessionize import sessionize
 
         ev = load_table(spark, sf_dir, "events")
-        sess = sessionize(
-            ev, key="user_id", ts="ts", gap_minutes=30.0, order_tiebreak="event_id"
-        )
+        sess = sessionize(ev, order_tiebreak="event_id")
         types = sess.select("user_id", "session_seq", "event_type").distinct()
         n_sess = (
             sess.select("user_id", "session_seq")
@@ -1287,9 +1285,7 @@ def _register_shapley() -> None:
         from healthcare_etl_spark.operators.sessionize import sessionize
 
         ev = load_table(spark, sf_dir, "events")
-        sess = sessionize(
-            ev, key="user_id", ts="ts", gap_minutes=30.0, order_tiebreak="event_id"
-        )
+        sess = sessionize(ev, order_tiebreak="event_id")
         has = lambda t: F.max(  # noqa: E731
             F.when(F.col("event_type") == t, 1).otherwise(0)
         )
@@ -1350,7 +1346,7 @@ _register_shapley()
 def _ece_oracle() -> str:
     from healthcare_etl_spark.operators.logistic import irls_beta_ctes
 
-    parts, final = irls_beta_ctes(_logistic_features_sql(), rounds=4)
+    parts, final = irls_beta_ctes(_logistic_features_sql())
     joined = ",\n".join(parts)
     r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
     return f"""WITH {joined},
@@ -1418,7 +1414,7 @@ def _register_calibration_ece() -> None:
             ).alias("y"),
         ).persist()
         try:
-            b0, b1, b2 = logistic_fit(features, rounds=4)
+            b0, b1, b2 = logistic_fit(features)
             eta = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
             p = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
             bins = features.select(
@@ -2337,7 +2333,7 @@ def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _isotonic_oracle() -> str:
     from healthcare_etl_spark.operators.logistic import irls_beta_ctes
 
-    parts, final = irls_beta_ctes(_logistic_features_sql(), rounds=4)
+    parts, final = irls_beta_ctes(_logistic_features_sql())
     joined = ",\n".join(parts)
     r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
     return f"""WITH {joined},
@@ -2410,7 +2406,7 @@ def _register_isotonic() -> None:
             ).alias("y"),
         ).persist()
         try:
-            b0, b1, b2 = logistic_fit(features, rounds=4)
+            b0, b1, b2 = logistic_fit(features)
             eta = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
             p = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
             bins = (
@@ -2732,7 +2728,7 @@ def _register_ppr() -> None:
         seeds = docs.filter(F.col("source") == "src0").select(
             F.col("doc_id").alias("node")
         )
-        return personalized_pagerank(pairs, seeds, iterations=5).select(
+        return personalized_pagerank(pairs, seeds).select(
             F.col("node").alias("doc_id"), F.col("rank").alias("ppr_rank")
         )
 
@@ -2743,7 +2739,7 @@ _register_ppr()
 def _roc_auc_oracle() -> str:
     from healthcare_etl_spark.operators.logistic import irls_beta_ctes
 
-    parts, final = irls_beta_ctes(_logistic_features_sql(), rounds=4)
+    parts, final = irls_beta_ctes(_logistic_features_sql())
     joined = ",\n".join(parts)
     return f"""WITH {joined},
 scored AS (
@@ -2821,7 +2817,7 @@ def _register_roc_auc() -> None:
         try:
             from healthcare_etl_spark.operators.scale import bucketed_prefix
 
-            b0, b1, b2 = logistic_fit(features, rounds=4)
+            b0, b1, b2 = logistic_fit(features)
             eta = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
             # Integer micro-prob key: pm/1e6 is exactly the oracle's
             # 6dp-rounded p (injective), so grouping by pm == grouping

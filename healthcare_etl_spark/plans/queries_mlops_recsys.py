@@ -2663,7 +2663,7 @@ def q_dp_topk_exponential(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _auc_delong_oracle() -> str:
     from healthcare_etl_spark.operators.logistic import irls_beta_ctes
 
-    parts, final = irls_beta_ctes(_logistic_features_sql(), rounds=4)
+    parts, final = irls_beta_ctes(_logistic_features_sql())
     joined = ",\n".join(parts)
     return f"""WITH {joined},
 scored AS (
@@ -2772,7 +2772,7 @@ def _register_auc_delong() -> None:
             ).alias("y"),
         ).persist()
         try:
-            b0, b1, b2 = logistic_fit(features, rounds=4)
+            b0, b1, b2 = logistic_fit(features)
             eta = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
             pm = F.round(
                 (F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))) * 1000000.0

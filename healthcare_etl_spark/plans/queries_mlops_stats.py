@@ -29,7 +29,7 @@ _SWEEP_THRESHOLDS = [i / 20.0 for i in range(1, 20)]
 def _threshold_sweep_oracle() -> str:
     from healthcare_etl_spark.operators.logistic import irls_beta_ctes
 
-    parts, final = irls_beta_ctes(_logistic_features_sql(), rounds=4)
+    parts, final = irls_beta_ctes(_logistic_features_sql())
     joined = ",\n".join(parts)
     thr_list = ", ".join(str(t) for t in _SWEEP_THRESHOLDS)
     r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
@@ -95,7 +95,7 @@ def _register_threshold_sweep() -> None:
             ).alias("y"),
         ).persist()
         try:
-            b0, b1, b2 = logistic_fit(features, rounds=4)
+            b0, b1, b2 = logistic_fit(features)
             eta = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
             p = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
             grid = features.select(
@@ -295,7 +295,7 @@ def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pr_auc_oracle() -> str:
     from healthcare_etl_spark.operators.logistic import irls_beta_ctes
 
-    parts, final = irls_beta_ctes(_logistic_features_sql(), rounds=4)
+    parts, final = irls_beta_ctes(_logistic_features_sql())
     joined = ",\n".join(parts)
     return f"""WITH {joined},
 scored AS (
@@ -376,7 +376,7 @@ def _register_pr_auc() -> None:
             ).alias("y"),
         ).persist()
         try:
-            b0, b1, b2 = logistic_fit(features, rounds=4)
+            b0, b1, b2 = logistic_fit(features)
             eta = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
             # Integer micro-prob key (pm/1e6 == the oracle's 6dp p,
             # injective), grouped once; the descending cumulative rides
@@ -453,7 +453,7 @@ _register_pr_auc()
 def _psm_oracle() -> str:
     from healthcare_etl_spark.operators.logistic import irls_beta_ctes
 
-    parts, final = irls_beta_ctes(_logistic_features_sql(), rounds=4)
+    parts, final = irls_beta_ctes(_logistic_features_sql())
     joined = ",\n".join(parts)
     return f"""WITH {joined},
 feat_u AS (
@@ -555,7 +555,7 @@ def _register_psm_match() -> None:
             .alias("spend_cents"),
         ).persist()
         try:
-            b0, b1, b2 = logistic_fit(feat.select("x1", "x2", "y"), rounds=4)
+            b0, b1, b2 = logistic_fit(feat.select("x1", "x2", "y"))
             eta = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
             scored = feat.select(
                 "user_id",
@@ -882,7 +882,7 @@ _PD_GRID = [0.0, 0.5, 1.0, 1.5, 2.0, 2.5, 3.0, 3.5, 4.0, 4.5]
 def _partial_dependence_oracle() -> str:
     from healthcare_etl_spark.operators.logistic import irls_beta_ctes
 
-    parts, final = irls_beta_ctes(_logistic_features_sql(), rounds=4)
+    parts, final = irls_beta_ctes(_logistic_features_sql())
     joined = ",\n".join(parts)
     grid = ", ".join(str(g) for g in _PD_GRID)
     return f"""WITH {joined},
@@ -941,7 +941,7 @@ def _register_partial_dependence() -> None:
             ).alias("y"),
         ).persist()
         try:
-            b0, b1, b2 = logistic_fit(feat, rounds=4)
+            b0, b1, b2 = logistic_fit(feat)
             grid = local_frame(
                 spark,
                 [(g,) for g in _PD_GRID], "g double"
@@ -969,7 +969,7 @@ _register_partial_dependence()
 def _permutation_importance_oracle() -> str:
     from healthcare_etl_spark.operators.logistic import irls_beta_ctes
 
-    parts, final = irls_beta_ctes(_logistic_features_sql(), rounds=4)
+    parts, final = irls_beta_ctes(_logistic_features_sql())
     joined = ",\n".join(parts)
     return f"""WITH {joined},
 feat_u AS (
@@ -1062,7 +1062,7 @@ def _register_permutation_importance() -> None:
             ).alias("y"),
         ).persist()
         try:
-            b0, b1, b2 = logistic_fit(feat, rounds=4)
+            b0, b1, b2 = logistic_fit(feat)
             h = F.conv(
                 F.substring(
                     F.md5(F.concat(F.lit("pi:"), F.col("user_id").cast("string"))),
@@ -1536,7 +1536,7 @@ _register_wilcoxon()
 def _mcnemar_oracle() -> str:
     from healthcare_etl_spark.operators.logistic import irls_beta_ctes
 
-    parts, final = irls_beta_ctes(_logistic_features_sql(), rounds=4)
+    parts, final = irls_beta_ctes(_logistic_features_sql())
     joined = ",\n".join(parts)
     return f"""WITH {joined},
 scored AS (
@@ -1603,7 +1603,7 @@ def _register_mcnemar() -> None:
             ).alias("y"),
         ).persist()
         try:
-            b0, b1, b2 = logistic_fit(feat, rounds=4)
+            b0, b1, b2 = logistic_fit(feat)
             eta = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
             pm = F.when(
                 F.lit(1.0) / (F.lit(1.0) + F.exp(-eta)) > 0.5, 1
@@ -2476,7 +2476,7 @@ _register_cochran_armitage()
 def _hosmer_lemeshow_oracle() -> str:
     from healthcare_etl_spark.operators.logistic import irls_beta_ctes
 
-    parts, final = irls_beta_ctes(_logistic_features_sql(), rounds=4)
+    parts, final = irls_beta_ctes(_logistic_features_sql())
     joined = ",\n".join(parts)
     return f"""WITH {joined},
 scored AS (
@@ -2549,7 +2549,7 @@ def _register_hosmer_lemeshow() -> None:
             ).alias("y"),
         ).persist()
         try:
-            b0, b1, b2 = logistic_fit(feat, rounds=4)
+            b0, b1, b2 = logistic_fit(feat)
             eta = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
             pq = F.round(
                 (F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))) * 1000000.0
@@ -2587,7 +2587,7 @@ _register_hosmer_lemeshow()
 def _brier_oracle() -> str:
     from healthcare_etl_spark.operators.logistic import irls_beta_ctes
 
-    parts, final = irls_beta_ctes(_logistic_features_sql(), rounds=4)
+    parts, final = irls_beta_ctes(_logistic_features_sql())
     joined = ",\n".join(parts)
     return f"""WITH {joined},
 scored AS (
@@ -2669,7 +2669,7 @@ def _register_brier() -> None:
             ).alias("y"),
         ).persist()
         try:
-            b0, b1, b2 = logistic_fit(feat, rounds=4)
+            b0, b1, b2 = logistic_fit(feat)
             eta = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
             pq = F.round(
                 (F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))) * 1000000.0

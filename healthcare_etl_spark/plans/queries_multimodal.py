@@ -53,7 +53,7 @@ FROM media
 )
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"), kb_per_task=16)
-    media = attach_media(docs, id_col="doc_id", text_col="text")
+    media = attach_media(docs)
     return media.select("media_id", "media_type", "n_bytes", "checksum")
 
 
@@ -85,7 +85,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.functions.rounding import stable_round
 
     docs = spread(load_table(spark, sf_dir, "documents"), kb_per_task=16)
-    media = attach_media(docs, id_col="doc_id", text_col="text")
+    media = attach_media(docs)
     feats = decode_and_featurize(media, decode_stub=True)
     return feats.groupBy("media_type").agg(
         F.count(F.lit(1)).alias("n_items"),
@@ -118,7 +118,7 @@ FROM media GROUP BY media_type
 )
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"), kb_per_task=16)
-    media = attach_media(docs, id_col="doc_id", text_col="text")
+    media = attach_media(docs)
     resized = resize_media(media, target_w=64, target_h=64)
     return resized.groupBy("media_type").agg(
         F.count(F.lit(1)).alias("n_items"),
@@ -161,9 +161,9 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.functions.rounding import stable_round
 
     docs = spread(load_table(spark, sf_dir, "documents"), kb_per_task=16)
-    media = attach_media(docs, id_col="doc_id", text_col="text")
+    media = attach_media(docs)
     vids = media.filter(F.col("media_type") == "video")
-    frames = sample_frames(vids, max_frames=4)
+    frames = sample_frames(vids)
     return frames.select(
         "media_id",
         "frame_idx",

@@ -297,7 +297,7 @@ def q_ktruss_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = knn.select(F.col("s").alias("u"), F.col("d").alias("v")).union(
         knn.select(F.col("d").alias("u"), F.col("s").alias("v"))
     )
-    return ktruss_edges(sym, src="u", dst="v", k=3, rounds=3).orderBy("u", "v")
+    return ktruss_edges(sym, src="u", dst="v", k=3).orderBy("u", "v")
 
 
 def _ransac_hashes(n_cand: int = 16) -> list[tuple[int, int, int]]:

@@ -119,9 +119,6 @@ def q_synthetic_control(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("day_idx")
 
 
-_ADSTOCK_LAMBDAS = [0, 3, 5, 7, 9]  # tenths
-
-
 @register(
     "q_adstock_fit",
     oracle="""
@@ -858,13 +855,12 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.operators.graph import bfs_hops_per_seed
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, threshold=0.5).select("doc_a", "doc_b")
+    pairs = minhash_lsh_pairs(docs).select("doc_a", "doc_b")
     # seed_filter (not a seeds frame built from `pairs`): the probe set
     # derives from the CHECKPOINTED edge set inside the BFS, so the LSH
     # pair pipeline executes once, not twice (r9: 1.4x end-to-end).
     d = bfs_hops_per_seed(
         pairs,
-        max_iter=20,
         seed_filter=lambda node: (
             F.conv(F.substring(F.md5(node.cast("string")), 1, 8), 16, 10).cast("long")
             % 5

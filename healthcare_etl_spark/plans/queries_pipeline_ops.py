@@ -258,7 +258,7 @@ def q_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The near-dup stage reuses the MinHash-LSH CTE chain (generated from
 # the Spark operator's own coefficients) over the filtered `kept` set —
 # the banded candidate-generation scale path, not the quadratic
-# inverted-index join; 8-gram CTEs mirror operators.dedup.shingle_rows.
+# inverted-index join; 8-gram CTEs mirror operators.dedup._shingle_text_rows.
 
 
 def _pipeline_sql() -> str:
@@ -373,9 +373,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # 3. near-dup removal via MinHash-LSH (banded candidate generation,
     # exact-Jaccard verify); drop the higher doc_id of every pair >= 0.5
-    neardup = (
-        minhash_lsh_pairs(kept, threshold=0.5, k=3).select("doc_b").distinct()
-    )
+    neardup = minhash_lsh_pairs(kept).select("doc_b").distinct()
     deduped = kept.join(
         neardup, kept.doc_id == neardup.doc_b, "left_anti"
     )
@@ -390,12 +388,8 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct dedupes them anyway).
     held = docs.filter(_doc_hash() % 10 == 0)
     train = deduped.filter(_doc_hash() % 10 != 0)
-    held_grams = (
-        _pruned_hashed_rows(held, "text", "doc_id", 8, None).select("hsh").distinct()
-    )
-    train_grams = _pruned_hashed_rows(
-        train.select("doc_id", "text"), "text", "doc_id", 8, None
-    )
+    held_grams = _pruned_hashed_rows(held, 8, None).select("hsh").distinct()
+    train_grams = _pruned_hashed_rows(train.select("doc_id", "text"), 8, None)
     contaminated = train_grams.join(held_grams, "hsh").select("doc_id").distinct()
     clean = train.join(contaminated, "doc_id", "left_anti")
 
@@ -1094,4 +1088,4 @@ def q_nb_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.operators.nb import nb_lang_confusion
 
     docs = load_table(spark, sf_dir, "documents")
-    return nb_lang_confusion(docs, test_pct=20, alpha=1.0)
+    return nb_lang_confusion(docs)

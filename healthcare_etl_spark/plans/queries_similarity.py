@@ -70,7 +70,7 @@ WHERE (round({_COS.format(a="a.embedding", b="b.embedding")} * 1000000.0) / 1000
 )
 def q_sim_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return neardup_pairs(emb, threshold=0.3)
+    return neardup_pairs(emb)
 
 
 def _ann_lsh_oracle_sql() -> str:
@@ -80,7 +80,7 @@ def _ann_lsh_oracle_sql() -> str:
     the Spark expressions exactly."""
     from healthcare_etl_spark.operators.similarity import _hyperplanes
 
-    planes = _hyperplanes(8, 64, seed=42)
+    planes = _hyperplanes(8)
 
     def plane_dot(plane: list[float]) -> str:
         lits = ", ".join(repr(x) for x in plane)
@@ -127,7 +127,7 @@ def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     corpus = emb.filter(F.col("vec_id") >= 5)
-    return lsh_ann_topk(queries, corpus, k=10)
+    return lsh_ann_topk(queries, corpus)
 
 
 @register(
@@ -478,7 +478,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.operators.similarity import semantic_dedup
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return semantic_dedup(emb, k=4, n_iter=2, threshold=0.3)
+    return semantic_dedup(emb, n_iter=2, threshold=0.3)
 
 
 # DuckDB mirror of functions.vectors.sign_bit_words (dim=64, 32-bit words):
@@ -805,7 +805,7 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 5)
     corpus = emb.filter(F.col("vec_id") >= 5)
     exact = cosine_topk(queries, corpus, k=10).select("query_id", "neighbor_id")
-    lsh = lsh_ann_topk(queries, corpus, k=10).select(
+    lsh = lsh_ann_topk(queries, corpus).select(
         F.col("query_id").alias("l_q"), F.col("neighbor_id").alias("l_n")
     )
     hits = (
@@ -943,7 +943,7 @@ def q_sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     corpus = emb.filter(F.col("vec_id") >= 5)
-    return pq_topk(queries, corpus, k=10, rerank=32)
+    return pq_topk(queries, corpus, rerank=32)
 
 
 _set_ann_eval_oracle()
@@ -3284,4 +3284,4 @@ def q_knn_graph_nndescent(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_etl_spark.operators.similarity import nn_descent_graph
 
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 256)
-    return nn_descent_graph(emb, k=4, rounds=2)
+    return nn_descent_graph(emb, rounds=2)

@@ -173,4 +173,4 @@ def q_sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     corpus = emb.filter(F.col("vec_id") >= 5)
-    return ivfpq_topk(queries, corpus, k=10, nprobe=2)
+    return ivfpq_topk(queries, corpus, nprobe=2)

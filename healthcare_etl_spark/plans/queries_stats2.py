@@ -1556,9 +1556,7 @@ def _aipw_oracle() -> str:
     from healthcare_etl_spark.operators.logistic import irls_beta_ctes
 
     r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
-    parts, final = irls_beta_ctes(
-        "SELECT x1, x2, t AS y FROM u", rounds=4
-    )
+    parts, final = irls_beta_ctes("SELECT x1, x2, t AS y FROM u")
     irls = ",\n".join(parts)
     sums = []
     for g, tag in ((1, "1"), (0, "0")):
@@ -1674,9 +1672,7 @@ def q_aipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("y"),
     ).persist()
     try:
-        pb0, pb1, pb2 = logistic_fit(
-            u.select("x1", "x2", F.col("t").alias("y")), rounds=4
-        )
+        pb0, pb1, pb2 = logistic_fit(u.select("x1", "x2", F.col("t").alias("y")))
         x1, x2, y, t = F.col("x1"), F.col("x2"), F.col("y"), F.col("t")
         mom_cols = []
         for g, tag in ((1, "1"), (0, "0")):
@@ -1922,7 +1918,7 @@ def _poisson_oracle() -> str:
     from healthcare_etl_spark.operators.logistic import poisson_beta_ctes
 
     r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
-    parts, final = poisson_beta_ctes(_POISSON_FEAT_SQL, rounds=4)
+    parts, final = poisson_beta_ctes(_POISSON_FEAT_SQL)
     joined = ",\n".join(parts)
     return f"""WITH {joined},
 scored AS (
@@ -1983,7 +1979,7 @@ def q_poisson_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("cnt")
     ).persist()
     try:
-        b0, b1, b2 = poisson_fit(feat, rounds=4, weight="cnt")
+        b0, b1, b2 = poisson_fit(feat, weight="cnt")
         mu = F.exp(F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2"))
         y = F.col("y")
         cnt = F.col("cnt")

@@ -106,9 +106,11 @@ def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFr
     return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow_schema), schema)
 
 
-# Per-path cache of the detected epoch granularity for bigint ts columns
-# (one tiny sampling job per distinct file, not per query).
-_EPOCH_UNIT_CACHE: dict[str, int] = {}
+# Cache of the detected epoch granularity for bigint ts columns, keyed on
+# the path and its ``_local_file_sig`` like the relation memo below, so a
+# rewrite of the same path samples again (one tiny sampling job per
+# distinct file version, not per query).
+_EPOCH_UNIT_CACHE: dict[tuple, int] = {}
 
 # Memo of the lazy parquet RELATION HANDLE (the unexecuted DataFrame)
 # per local path. Metadata only — never rows; every action still scans
@@ -205,9 +207,11 @@ def _epoch_to_micros(spark: SparkSession, path: str, df: DataFrame):
     disambiguates unambiguously for any date between 1973 and 2100+
     (epoch seconds ~1e8-9, millis ~1e11-12, micros ~1e14-15, nanos
     ~1e17-18 — three orders of magnitude apart per step). The sampled
-    decision is cached per file path so repeated loads pay nothing.
+    decision is cached per file version (path plus signature) so
+    repeated loads pay nothing and a rewrite is sampled afresh.
     """
-    unit = _EPOCH_UNIT_CACHE.get(path)
+    key = (path, _local_file_sig(path))
+    unit = _EPOCH_UNIT_CACHE.get(key)
     if unit is None:
         sample = df.select(F.abs(F.col("ts")).alias("v")).filter("v IS NOT NULL").first()
         mag = sample["v"] if sample is not None else 10**15
@@ -219,7 +223,7 @@ def _epoch_to_micros(spark: SparkSession, path: str, df: DataFrame):
             unit = -1_000  # millis: multiply up
         else:
             unit = -1_000_000  # seconds
-        _EPOCH_UNIT_CACHE[path] = unit
+        _EPOCH_UNIT_CACHE[key] = unit
     if unit > 1:
         return F.expr(f"ts div {unit}")
     if unit == 1:
@@ -313,25 +317,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _normalize_timestamps(df)
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLE_NAMES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    """Register each fixture table as a temp view for ``spark.sql`` use."""
-    for n, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(n)
-
-
 def read_csv(
     spark: SparkSession,
     path: str,
     schema: T.StructType | None = None,
-    *,
-    header: bool = True,
-    encoding: str = "UTF-8",
 ) -> DataFrame:
-    """CSV scan (S1) mirroring reference ``etl_script.py:49,52``.
+    """UTF-8 CSV-with-header scan (S1) mirroring reference ``etl_script.py:49,52``.
 
     PERMISSIVE mode matches pandas' tolerance of malformed rows; an
     explicit schema replaces the reference's ``dtype={'Facility ID':
@@ -341,8 +332,8 @@ def read_csv(
     """
     _check_local_path(path, what="CSV")
     reader = (
-        spark.read.option("header", header)
-        .option("encoding", encoding)
+        spark.read.option("header", True)
+        .option("encoding", "UTF-8")
         .option("mode", "PERMISSIVE")
     )
     if schema is not None:

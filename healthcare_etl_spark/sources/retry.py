@@ -30,7 +30,6 @@ def with_retry(
     *,
     attempts: int = 5,
     delay_seconds: float = 10.0,
-    retry_on: tuple[type[BaseException], ...] = (Exception,),
     sleep: Callable[[float], None] = time.sleep,
 ) -> T:
     """Call ``fn`` up to ``attempts`` times, sleeping ``delay_seconds``
@@ -45,7 +44,7 @@ def with_retry(
     for attempt in range(1, attempts + 1):
         try:
             return fn()
-        except retry_on as exc:  # noqa: PERF203 - retry loop by design
+        except Exception as exc:  # noqa: PERF203 - retry loop by design
             last = exc
             if attempt < attempts:
                 sleep(delay_seconds)

@@ -156,15 +156,16 @@ def scale_documents(spark, n_docs: int, n_partitions: int = 64):
     )
 
 
-def scale_embeddings(spark, n_vecs: int, n_partitions: int = 64, dim: int = 64):
-    """Lazy fixture-shaped ``embeddings`` frame with ``n_vecs`` rows."""
+def scale_embeddings(spark, n_vecs: int, n_partitions: int = 64):
+    """Lazy fixture-shaped ``embeddings`` frame with ``n_vecs`` rows of
+    64-dim vectors."""
     from pyspark.sql import functions as F
 
     base = spark.range(0, n_vecs, 1, n_partitions).withColumnRenamed("id", "vec_id")
     emb = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
+        F.sequence(F.lit(0), F.lit(63)),
         lambda i: (
-            (F.pmod(F.xxhash64(F.col("vec_id") * dim + i, F.lit(11)), F.lit(2001)) - 1000)
+            (F.pmod(F.xxhash64(F.col("vec_id") * 64 + i, F.lit(11)), F.lit(2001)) - 1000)
             / 1000.0
         ).cast("float"),
     )

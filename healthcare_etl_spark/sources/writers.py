@@ -21,18 +21,18 @@ def write_table(
     *,
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
-    fmt: str = "parquet",
 ) -> None:
-    """Replace-on-load semantics of the reference's ``if_exists='replace'``.
+    """Parquet table with the replace-on-load semantics of the
+    reference's ``if_exists='replace'``.
 
     ``partition_by`` is the 100 TB lever the reference lacks: a fact
     table partitioned by date gives partition pruning on every
     time-bounded query.
     """
-    writer = df.write.mode(mode).format(fmt)
+    writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.save(path)
+    writer.parquet(path)
 
 
 def write_bucketed_table(
@@ -41,14 +41,13 @@ def write_bucketed_table(
     *,
     bucket_cols: list[str],
     num_buckets: int = 32,
-    mode: str = "overwrite",
 ) -> None:
-    """Bucketed managed table: later equi-joins/aggregations on
+    """Bucketed managed table (replaced if it exists): later equi-joins/aggregations on
     ``bucket_cols`` co-locate without a shuffle — the pre-partitioning
     strategy for repeatedly-joined 100 TB fact tables.
     """
     (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .bucketBy(num_buckets, *bucket_cols)
         .sortBy(*bucket_cols)
         .format("parquet")
@@ -56,19 +55,19 @@ def write_bucketed_table(
     )
 
 
-def materialize(df: DataFrame, storage_level: str = "MEMORY_AND_DISK") -> DataFrame:
+def materialize(df: DataFrame) -> DataFrame:
     """Cache/materialize (SURVEY.md §2.1 S5) — the reference memoizes its
     loaded table with ``@st.cache_data`` (reference ``dashboard_app/app.py:28``)
     so dashboard interactions don't re-scan.
 
-    Spark equivalent: ``persist`` + an eager count to populate. Note the
+    Spark equivalent: ``persist(MEMORY_AND_DISK)`` + an eager count to populate. Note the
     local-mode caveat measured in this repo: for cheap-to-recompute
     lineages AQE's ReuseExchange often beats an explicit cache — persist
     only what several *jobs* (not branches of one job) will reuse.
     """
     from pyspark import StorageLevel
 
-    df = df.persist(getattr(StorageLevel, storage_level))
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
     df.count()
     return df
 

@@ -19,43 +19,36 @@ and `maxFilesPerTrigger`/`maxBytesPerTrigger` bound per-run memory.
 
 from __future__ import annotations
 
+import os
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 
 
-def run_incremental_ingest(
+def _drain(
     spark: SparkSession,
     source_dir: str,
     checkpoint_dir: str,
-    sink_table: str,
-    *,
-    schema: str | None = None,
-    transform=None,
+    commit: Callable[[DataFrame], object],
 ) -> int:
-    """Drain unprocessed files from ``source_dir`` into ``sink_table``.
-
-    Returns the number of rows ingested by THIS invocation (0 when the
-    checkpoint is already caught up). ``transform`` optionally maps the
-    streaming DataFrame before the sink; ``schema`` (DDL string) is
-    required on the first run if the directory may be empty.
-    """
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.schema(spark.read.parquet(source_dir).schema)
-    stream = reader.parquet(source_dir)
-    if transform is not None:
-        stream = transform(stream)
-
-    ingested = {"rows": 0}
+    """Drain the parquet files of ``source_dir`` the checkpoint has not
+    seen, with ``trigger(availableNow=True)``, passing each non-empty
+    micro-batch to ``commit``. The stream's schema is read from the
+    files already there. Returns the rows drained by this invocation
+    (0 when the checkpoint is already caught up)."""
+    stream = spark.readStream.schema(spark.read.parquet(source_dir).schema).parquet(source_dir)
+    ingested = 0
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:  # noqa: ARG001
-        # Count once, append once: cache the micro-batch so the count
+        nonlocal ingested
+        # Count once, commit once: cache the micro-batch so the count
         # does not re-read the source files a second time.
         batch_df.persist()
         try:
-            ingested["rows"] += batch_df.count()
-            batch_df.write.mode("append").saveAsTable(sink_table)
+            n = batch_df.count()
+            if n:
+                ingested += n
+                commit(batch_df)
         finally:
             batch_df.unpersist()
 
@@ -66,18 +59,41 @@ def run_incremental_ingest(
         .start()
     )
     q.awaitTermination()
-    return ingested["rows"]
+    return ingested
+
+
+def _table_commit(table_path: str, marker: str, append, write) -> Callable[[DataFrame], object]:
+    """Commit step of a lakehouse table: ``write`` creates the table
+    when ``table_path`` has no ``marker`` metadata directory yet,
+    ``append`` adds one commit to it afterwards."""
+
+    def commit(batch_df: DataFrame):
+        if os.path.isdir(os.path.join(table_path, marker)):
+            return append(batch_df, table_path)
+        return write(batch_df, table_path)
+
+    return commit
+
+
+def run_incremental_ingest(
+    spark: SparkSession, source_dir: str, checkpoint_dir: str, sink_table: str
+) -> int:
+    """Drain unprocessed files from ``source_dir`` into the catalog table
+    ``sink_table`` (one ``saveAsTable`` append per micro-batch).
+
+    Returns the number of rows ingested by THIS invocation (0 when the
+    checkpoint is already caught up).
+    """
+    return _drain(
+        spark,
+        source_dir,
+        checkpoint_dir,
+        lambda batch_df: batch_df.write.mode("append").saveAsTable(sink_table),
+    )
 
 
 def run_delta_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    table_path: str,
-    *,
-    schema: str | None = None,
-    partition_by: list[str] | None = None,
-    transform=None,
+    spark: SparkSession, source_dir: str, checkpoint_dir: str, table_path: str
 ) -> int:
     """Streaming LAKEHOUSE ingestion: drain unprocessed files from
     ``source_dir`` into a Delta table at ``table_path`` (the in-repo
@@ -98,53 +114,16 @@ def run_delta_ingest(
         write_delta_table,
     )
 
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.schema(spark.read.parquet(source_dir).schema)
-    stream = reader.parquet(source_dir)
-    if transform is not None:
-        stream = transform(stream)
-
-    ingested = {"rows": 0}
-    import os as _os
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:  # noqa: ARG001
-        batch_df.persist()
-        try:
-            n = batch_df.count()
-            if n == 0:
-                return
-            ingested["rows"] += n
-            if _os.path.isdir(_os.path.join(table_path, "_delta_log")):
-                append_delta_table(batch_df, table_path)
-            else:
-                write_delta_table(
-                    batch_df, table_path, partition_by=partition_by or []
-                )
-        finally:
-            batch_df.unpersist()
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        spark,
+        source_dir,
+        checkpoint_dir,
+        _table_commit(table_path, "_delta_log", append_delta_table, write_delta_table),
     )
-    q.awaitTermination()
-    return ingested["rows"]
 
 
 def run_iceberg_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    table_path: str,
-    *,
-    schema: str | None = None,
-    partition_by: list | None = None,
-    transform=None,
+    spark: SparkSession, source_dir: str, checkpoint_dir: str, table_path: str
 ) -> int:
     """Streaming ingestion into an Apache Iceberg table
     (``sources.iceberg``): same Trigger.AvailableNow drain as
@@ -158,39 +137,9 @@ def run_iceberg_ingest(
         write_iceberg_table,
     )
 
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.schema(spark.read.parquet(source_dir).schema)
-    stream = reader.parquet(source_dir)
-    if transform is not None:
-        stream = transform(stream)
-
-    ingested = {"rows": 0}
-    import os as _os
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:  # noqa: ARG001
-        batch_df.persist()
-        try:
-            n = batch_df.count()
-            if n == 0:
-                return
-            ingested["rows"] += n
-            if _os.path.isdir(_os.path.join(table_path, "metadata")):
-                append_rows(batch_df, table_path)
-            else:
-                write_iceberg_table(
-                    batch_df, table_path, partition_by=partition_by or []
-                )
-        finally:
-            batch_df.unpersist()
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        spark,
+        source_dir,
+        checkpoint_dir,
+        _table_commit(table_path, "metadata", append_rows, write_iceberg_table),
     )
-    q.awaitTermination()
-    return ingested["rows"]

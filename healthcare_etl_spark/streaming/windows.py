@@ -93,15 +93,14 @@ def run_streaming_tumbling(
     spark: SparkSession,
     sf_dir: str,
     *,
-    window: str = "1 hour",
-    watermark: str = "10 minutes",
     query_name: str = "stream_tumbling",
     output_mode: str = "complete",
     source_opts: dict | None = None,
     progress_sink: list | None = None,
 ) -> DataFrame:
-    """Run the tumbling-window count/sum as a stream to completion and
-    return the materialized result (memory sink; ``complete`` mode for
+    """Run the 1-hour tumbling-window count/sum (10-minute watermark) as a
+    stream to completion and return the materialized result (memory
+    sink; ``complete`` mode for
     the fixture-replay equivalence checks, ``append`` for the
     multi-batch watermark tests — append only emits a window once the
     watermark passes its end, and evicts its state then).
@@ -113,8 +112,8 @@ def run_streaming_tumbling(
     """
     ev = streaming_events(spark, sf_dir, **(source_opts or {}))
     agg = (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        ev.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             stable_round(F.sum("value"), 4).alias("sum_value"),
@@ -145,19 +144,18 @@ def run_streaming_sessionization(
     spark: SparkSession,
     sf_dir: str,
     *,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
     query_name: str = "stream_sessions",
 ) -> DataFrame:
-    """Gap-based sessions via ``session_window`` (merging window state).
+    """30-minute-gap sessions via ``session_window`` (merging window
+    state, 1-hour watermark).
 
     Returns (user_id, session_start, n_events) — comparable to the batch
     ``session_stats`` output for in-order replay.
     """
     ev = streaming_events(spark, sf_dir)
     agg = (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        ev.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
@@ -224,29 +222,37 @@ def run_streaming_dedup(
 
 
 
+def _top3_per_window(counts: DataFrame) -> DataFrame:
+    """The 3 most frequent event types per ``window_start`` (ties by
+    event type), with their ``rank``."""
+    w_rank = Window.partitionBy("window_start").orderBy(
+        F.desc("n_events"), F.asc("event_type")
+    )
+    return (
+        counts.withColumn("rank", F.row_number().over(w_rank).cast("long"))
+        .filter(F.col("rank") <= 3)
+    )
+
+
 def run_streaming_sliding_topk(
     spark: SparkSession,
     sf_dir: str,
     *,
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    k: int = 3,
-    watermark: str = "10 minutes",
     query_name: str = "stream_sliding_topk",
-    source_opts: dict | None = None,
 ) -> DataFrame:
-    """Sliding-window trending top-k: per overlapping (window, slide)
-    frame, the k most frequent event types — the live "what's trending
-    now" tile. The STATEFUL part (sliding windowed counts under a
-    watermark) runs as the stream; the rank-and-truncate runs on the
-    materialized sink frame, exactly where a dashboard query would do
+    """Sliding-window trending top-3: per overlapping 1-hour window
+    sliding by 15 minutes, the 3 most frequent event types — the live
+    "what's trending now" tile. The STATEFUL part (sliding windowed
+    counts under a 10-minute watermark) runs as the stream; the
+    rank-and-truncate runs on the materialized sink frame, exactly
+    where a dashboard query would do
     it — per-key ranking over a streaming aggregate is not an
     incremental operator, and pushing it into the stream would force
     complete-mode recomputation of every window anyway."""
-    ev = streaming_events(spark, sf_dir, **(source_opts or {}))
+    ev = streaming_events(spark, sf_dir)
     agg = (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
+        ev.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.date_format("w.start", _TS_FMT).alias("window_start"),
@@ -264,31 +270,17 @@ def run_streaming_sliding_topk(
         q.processAllAvailable()
     finally:
         q.stop()
-    sink = spark.table(query_name)
-    w_rank = Window.partitionBy("window_start").orderBy(
-        F.desc("n_events"), F.asc("event_type")
-    )
-    return (
-        sink.withColumn("rank", F.row_number().over(w_rank).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top3_per_window(spark.table(query_name))
 
 
-def batch_sliding_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    k: int = 3,
-) -> DataFrame:
+def batch_sliding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of :func:`run_streaming_sliding_topk` (F.window works
     identically on batch frames) — the equivalence anchor."""
     from healthcare_etl_spark.sources import load_table
 
     ev = load_table(spark, sf_dir, "events")
     agg = (
-        ev.groupBy(F.window("ts", window, slide).alias("w"), "event_type")
+        ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.date_format("w.start", _TS_FMT).alias("window_start"),
@@ -296,18 +288,12 @@ def batch_sliding_topk(
             "n_events",
         )
     )
-    w_rank = Window.partitionBy("window_start").orderBy(
-        F.desc("n_events"), F.asc("event_type")
-    )
-    return (
-        agg.withColumn("rank", F.row_number().over(w_rank).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top3_per_window(agg)
 
 
 
 
-def _hll_fold(regs: DataFrame, group_col: str = "window_start") -> DataFrame:
+def _hll_fold(regs: DataFrame) -> DataFrame:
     """Registers -> HLL estimate, shared by the streaming sink frame and
     the batch twin (both are plain DataFrames here). Same integer-
     numerator harmonic fold + linear-counting branch as the oracle-
@@ -319,7 +305,7 @@ def _hll_fold(regs: DataFrame, group_col: str = "window_start") -> DataFrame:
     )
 
     w = 2 ** _HLL_WBITS
-    folded = regs.groupBy(group_col).agg(
+    folded = regs.groupBy("window_start").agg(
         (
             F.sum(F.expr(f"CAST(power(2, {_HLL_WBITS} - m) AS BIGINT)"))
             + (F.lit(_HLL_M) - F.count(F.lit(1))) * F.lit(w)
@@ -334,7 +320,7 @@ def _hll_fold(regs: DataFrame, group_col: str = "window_start") -> DataFrame:
         F.when((raw <= 2.5 * _HLL_M) & (F.col("n_nonzero") < _HLL_M), lin).otherwise(raw),
         2,
     )
-    return folded.select(group_col, "n_nonzero", est.alias("hll_est"))
+    return folded.select("window_start", "n_nonzero", est.alias("hll_est"))
 
 
 def _hll_register_stream_cols(ev: DataFrame) -> DataFrame:
@@ -353,14 +339,12 @@ def run_streaming_hll_distinct(
     spark: SparkSession,
     sf_dir: str,
     *,
-    window: str = "1 day",
-    watermark: str = "2 hours",
     query_name: str = "stream_hll",
-    source_opts: dict | None = None,
 ) -> DataFrame:
-    """Streaming approximate distinct users per day via an incremental
-    HyperLogLog: the streaming STATE is the (window, register) -> max
-    leading-zero rank table — m=64 rows per window, mergeable across
+    """Streaming approximate distinct users per day (2-hour watermark)
+    via an incremental HyperLogLog: the streaming STATE is the
+    (window, register) -> max leading-zero rank table — m=64 rows per
+    window, mergeable across
     micro-batches because register max is commutative/idempotent (the
     same property that makes HLL the cluster-scale distinct synopsis in
     batch q_hll_register_sketch). The estimate fold runs on the
@@ -371,12 +355,12 @@ def run_streaming_hll_distinct(
     """
     from healthcare_etl_spark.plans.queries_patterns import _rho_case_sql, _HLL_WBITS
 
-    ev = streaming_events(spark, sf_dir, **(source_opts or {}))
+    ev = streaming_events(spark, sf_dir)
     hashed = _hll_register_stream_cols(ev)
     rho = F.expr(_rho_case_sql(f"(h % {2 ** _HLL_WBITS})"))
     agg = (
-        hashed.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "idx")
+        hashed.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 day").alias("w"), "idx")
         .agg(F.max(rho).cast("long").alias("m"))
         .select(F.date_format("w.start", _TS_FMT).alias("window_start"), "idx", "m")
     )
@@ -397,12 +381,7 @@ def run_streaming_hll_distinct(
     return _hll_fold(regs.unionByName(merged)).orderBy("window_start")
 
 
-def batch_hll_distinct(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    window: str = "1 day",
-) -> DataFrame:
+def batch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of :func:`run_streaming_hll_distinct` — the
     equivalence anchor (F.window + the shared register/fold code)."""
     from healthcare_etl_spark.plans.queries_patterns import _rho_case_sql, _HLL_WBITS
@@ -412,7 +391,7 @@ def batch_hll_distinct(
     hashed = _hll_register_stream_cols(ev)
     rho = F.expr(_rho_case_sql(f"(h % {2 ** _HLL_WBITS})"))
     regs = (
-        hashed.groupBy(F.window("ts", window).alias("w"), "idx")
+        hashed.groupBy(F.window("ts", "1 day").alias("w"), "idx")
         .agg(F.max(rho).cast("long").alias("m"))
         .select(F.date_format("w.start", _TS_FMT).alias("window_start"), "idx", "m")
     )

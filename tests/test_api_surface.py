@@ -1,0 +1,115 @@
+"""No option without a caller.
+
+Every defaulted parameter of a public top-level function in the operator
+layer (``operators/``, ``functions/``, ``sources/``, ``streaming/``) must be
+passed with a non-default value by some call in the package, ``scripts/``,
+``perfbench/``, ``bench.py``, ``__spark_entry__.py`` or ``tests/``. A
+parameter only ever left at its default is a constant: write it as one.
+Pure AST, no Spark.
+"""
+
+from __future__ import annotations
+
+import ast
+from collections import defaultdict
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
+PKG = REPO / "healthcare_etl_spark"
+OPERATOR_DIRS = ("operators", "functions", "sources", "streaming")
+CALLER_ROOTS = (PKG, REPO / "scripts", REPO / "perfbench", REPO / "tests",
+                REPO / "bench.py", REPO / "__spark_entry__.py")
+# Deployment settings: where the data lives and which environment
+# variables hold the JDBC settings.
+EXEMPT = {
+    ("streaming_events", "glob"),
+    ("streaming_events", "schema_dir"),
+    ("jdbc_config_from_env", "prefix"),
+}
+_UNSET = object()
+
+
+def _files(root: Path):
+    return [root] if root.is_file() else sorted(root.rglob("*.py"))
+
+
+def _literal(node):
+    try:
+        return ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError):
+        return _UNSET
+
+
+def _same(a, b) -> bool:
+    return a is not _UNSET and type(a) is type(b) and a == b
+
+
+def public_defaults():
+    """{function name: [(param, default literal or _UNSET, position or None)]}
+    over the public top-level functions of the operator layer."""
+    out = defaultdict(list)
+    for sub in OPERATOR_DIRS:
+        for path in _files(PKG / sub):
+            for node in ast.parse(path.read_text()).body:
+                if not isinstance(node, ast.FunctionDef) or node.name.startswith("_"):
+                    continue
+                a = node.args
+                pos = a.posonlyargs + a.args
+                for i, (arg, d) in enumerate(zip(pos[len(pos) - len(a.defaults):], a.defaults)):
+                    out[node.name].append((arg.arg, _literal(d), len(pos) - len(a.defaults) + i))
+                for arg, d in zip(a.kwonlyargs, a.kw_defaults):
+                    if d is not None:
+                        out[node.name].append((arg.arg, _literal(d), None))
+    return out
+
+
+def passed_params(defs):
+    """(function, param) pairs that some call passes with a non-default value.
+    Calls match by the called name; ``*args``/``**kwargs`` pass everything."""
+    passed = set()
+    for root in CALLER_ROOTS:
+        for path in _files(root):
+            for node in ast.walk(ast.parse(path.read_text())):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                args, keywords = node.args, node.keywords
+                if name == "partial" and args:  # functools.partial(fn, ...)
+                    f = args[0]
+                    name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                    args = args[1:]
+                if name not in defs:
+                    continue
+                for param, default, pos in defs[name]:
+                    if any(isinstance(x, ast.Starred) for x in args) or any(
+                            k.arg is None for k in keywords):
+                        passed.add((name, param))
+                        continue
+                    value = next((k.value for k in keywords if k.arg == param), None)
+                    if value is None and pos is not None and pos < len(args):
+                        value = args[pos]
+                    if value is not None and not _same(_literal(value), default):
+                        passed.add((name, param))
+    return passed
+
+
+def unused_options():
+    defs = public_defaults()
+    passed = passed_params(defs)
+    return sorted((fn, p) for fn, params in defs.items() for p, _d, _i in params
+                  if (fn, p) not in passed and (fn, p) not in EXEMPT)
+
+
+def test_every_defaulted_parameter_has_a_caller():
+    unused = unused_options()
+    assert not unused, (
+        f"{len(unused)} defaulted parameters are never passed a non-default "
+        "value; make them constants: " + ", ".join(f"{f}({p})" for f, p in unused))
+
+
+def test_scan_sees_the_operator_layer():
+    # The rule is vacuous if the scan finds no definitions or no calls.
+    defs = public_defaults()
+    assert {"minhash_lsh_pairs", "write_table", "run_streaming_tumbling"} <= set(defs)
+    assert ("minhash_lsh_pairs", "max_shingle_doc_frac") in passed_params(defs)

@@ -38,7 +38,7 @@ def test_minhash_lsh_finds_planted_pairs(spark, sf_smoke):
 
     docs = load_table(spark, sf_smoke, "documents")
     exact = {(r.doc_a, r.doc_b) for r in jaccard_pairs(docs, threshold=0.5).collect()}
-    lsh = {(r.doc_a, r.doc_b) for r in minhash_lsh_pairs(docs, threshold=0.5).collect()}
+    lsh = {(r.doc_a, r.doc_b) for r in minhash_lsh_pairs(docs).collect()}
     assert exact, "fixtures should contain planted near-dups"
     assert lsh == exact
 
@@ -73,7 +73,7 @@ def test_minhash_skew_guard_bounds_candidates(spark):
     # the planted pair must survive the guard and verify
     pairs = {
         (r.doc_a, r.doc_b)
-        for r in minhash_lsh_pairs(df, threshold=0.5, max_shingle_doc_frac=0.5).collect()
+        for r in minhash_lsh_pairs(df, max_shingle_doc_frac=0.5).collect()
     }
     assert (100, 101) in pairs
 
@@ -86,7 +86,7 @@ def test_lsh_ann_recall(spark, sf_smoke):
     q = emb.filter(F.col("vec_id") < 10)
     c = emb.filter(F.col("vec_id") >= 10)
     exact = cosine_topk(q, c, k=10).toPandas()
-    ann = lsh_ann_topk(q, c, k=10, n_planes=4).toPandas()
+    ann = lsh_ann_topk(q, c, n_planes=4).toPandas()
     exact_sets = exact.groupby("query_id")["neighbor_id"].apply(set)
     ann_sets = ann.groupby("query_id")["neighbor_id"].apply(set)
     recalls = [
@@ -358,7 +358,7 @@ def test_multimodal_stub_deterministic(spark, sf_smoke):
     from healthcare_etl_spark.sources import load_table
 
     docs = load_table(spark, sf_smoke, "documents").limit(50)
-    media = attach_media(docs, id_col="doc_id", text_col="text")
+    media = attach_media(docs)
     f1 = decode_and_featurize(media).toPandas().sort_values("media_id").reset_index(drop=True)
     f2 = decode_and_featurize(media).toPandas().sort_values("media_id").reset_index(drop=True)
     pd.testing.assert_frame_equal(f1, f2)
@@ -492,7 +492,7 @@ def test_multimodal_null_payloads_pass_through(spark):
     assert bytes(resized[1].payload) == b"abcd" and resized[1].n_bytes_out == 4
     assert resized[2].payload is None and resized[2].n_bytes_out is None
 
-    frames = sample_frames(df, max_frames=4).collect()
+    frames = sample_frames(df).collect()
     null_frames = [r for r in frames if r.media_id == 2]
     assert len(null_frames) == 1
     assert null_frames[0].n_frames == 1
@@ -576,7 +576,7 @@ def test_multimodal_resize_caps_payload(spark, sf_smoke):
     from healthcare_etl_spark.sources import load_table
 
     docs = load_table(spark, sf_smoke, "documents").limit(50)
-    media = attach_media(docs, id_col="doc_id", text_col="text")
+    media = attach_media(docs)
     out = resize_media(media, target_w=8, target_h=8).collect()
     src = {r.media_id: bytes(r.payload) for r in media.collect()}
     assert len(out) == 50
@@ -592,9 +592,9 @@ def test_multimodal_frame_sampling_expands_rows(spark, sf_smoke):
     from healthcare_etl_spark.sources import load_table
 
     docs = load_table(spark, sf_smoke, "documents").limit(60)
-    media = attach_media(docs, id_col="doc_id", text_col="text")
+    media = attach_media(docs)
     src = {r.media_id: bytes(r.payload) for r in media.collect()}
-    frames = sample_frames(media, max_frames=4).collect()
+    frames = sample_frames(media).collect()
 
     by_media: dict[int, list] = {}
     for r in frames:
@@ -971,7 +971,7 @@ def test_semantic_dedup_drops_near_duplicates_within_cluster(spark):
     df = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in rows], ["vec_id", "embedding"]
     )
-    out = {r.vec_id: r for r in semantic_dedup(df, k=4, n_iter=1, threshold=0.9).collect()}
+    out = {r.vec_id: r for r in semantic_dedup(df, n_iter=1, threshold=0.9).collect()}
     assert len(out) == len(rows)
     # seeds keep (min id in their cluster), near-dups drop
     for seed in (0, 1, 2, 3):
@@ -980,7 +980,7 @@ def test_semantic_dedup_drops_near_duplicates_within_cluster(spark):
     assert not out[11].is_kept
     assert out[12].is_kept
     # determinism
-    out2 = {r.vec_id: r for r in semantic_dedup(df, k=4, n_iter=1, threshold=0.9).collect()}
+    out2 = {r.vec_id: r for r in semantic_dedup(df, n_iter=1, threshold=0.9).collect()}
     assert {k: (v.cluster, v.is_kept) for k, v in out.items()} == {
         k: (v.cluster, v.is_kept) for k, v in out2.items()
     }
@@ -1230,7 +1230,7 @@ def test_pagerank_sums_to_one_and_matches_power_iteration(spark):
     edges = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)]
     pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
     got = {
-        r["node"]: r["rank"] for r in pagerank(pairs, iterations=5).collect()
+        r["node"]: r["rank"] for r in pagerank(pairs).collect()
     }
 
     # Driver-side reference with identical arithmetic.
@@ -1284,10 +1284,7 @@ def test_interval_point_join_equals_naive(spark):
     )
     got = sorted(
         (r["iid"], r["pid"])
-        for r in interval_point_join(
-            intervals, points, start="start", end="end", point_ts="pts",
-            bucket_seconds=3600.0,
-        ).collect()
+        for r in interval_point_join(intervals, points, point_ts="pts").collect()
     )
     naive = sorted(
         (r["iid"], r["pid"])
@@ -1757,10 +1754,10 @@ def test_pq_codebook_and_codes_shape(spark, sf_smoke):
 
     corpus = load_table(spark, sf_smoke, "embeddings").filter(F.col("vec_id") >= 5)
     n_corpus = corpus.count()
-    cb = pq_codebook(corpus, m=8, ksub=16)
+    cb = pq_codebook(corpus)
     assert cb.count() == 8 * 16
     assert cb.filter(F.size("cent") != 8).count() == 0
-    codes = pq_encode(corpus, cb, m=8)
+    codes = pq_encode(corpus, cb)
     stats = codes.groupBy().agg(
         F.min("code").alias("lo"),
         F.max("code").alias("hi"),
@@ -1799,8 +1796,8 @@ def test_pq_recall_vs_exact(spark, sf_smoke):
     # Near-random fixture embeddings are PQ's worst case; chance recall
     # for 32 candidates of ~490 is ~0.065. Observed ~0.49 — assert a
     # comfortable margin above chance.
-    assert mean_recall(pq_topk(q, c, k=10, rerank=32).toPandas()) > 0.25
-    assert mean_recall(pq_topk(q, c, k=10, rerank=n_corpus).toPandas()) == 1.0
+    assert mean_recall(pq_topk(q, c, rerank=32).toPandas()) > 0.25
+    assert mean_recall(pq_topk(q, c, rerank=n_corpus).toPandas()) == 1.0
 
 
 def test_ivfpq_recall_structure(spark, sf_smoke):
@@ -1839,11 +1836,11 @@ def test_ivfpq_recall_structure(spark, sf_smoke):
         ]
         return sum(recalls) / len(recalls)
 
-    r_ivfpq = mean_recall(ivfpq_topk(q, c, k=10, nprobe=2, rerank=32).toPandas())
+    r_ivfpq = mean_recall(ivfpq_topk(q, c, nprobe=2, rerank=32).toPandas())
     r_ceiling = mean_recall(ivf_topk(q, c, k=10, nprobe=2).toPandas())
     assert r_ivfpq <= r_ceiling, (r_ivfpq, r_ceiling)
     assert r_ivfpq > 0.15, r_ivfpq
-    full = ivfpq_topk(q, c, k=10, nprobe=n_cells, rerank=n_corpus).toPandas()
+    full = ivfpq_topk(q, c, nprobe=n_cells, rerank=n_corpus).toPandas()
     assert mean_recall(full) == 1.0
 
 
@@ -1870,8 +1867,8 @@ def test_ivfpq_codes_shape(spark, sf_smoke):
         .join(F.broadcast(cents), "cell")
         .select("vec_id", "cell", res.alias("rv"))
     )
-    cb = pq_codebook(c_res, m=8, ksub=16, id_col="vec_id", vec_col="rv").localCheckpoint()
-    subs = _subvectors(c_res, id_out="vec_id", id_col="vec_id", vec_col="rv", m=8, sub_dim=8)
+    cb = pq_codebook(c_res, vec_col="rv").localCheckpoint()
+    subs = _subvectors(c_res, "vec_id", "rv")
     codes = _argmin_code(subs, cb, id_field="vec_id")
     stats = codes.groupBy().agg(
         F.min("code").alias("lo"),
@@ -2368,7 +2365,7 @@ def test_logistic_irls_recovers_decision_boundary(spark):
         "x2",
         F.when(rule != flip, 1).otherwise(0).alias("y"),
     )
-    row = logistic_irls(feats, rounds=4).collect()[0]
+    row = logistic_irls(feats).collect()[0]
     assert row["beta1"] > 0.2, row
     assert row["beta2"] < -0.1, row
     assert row["accuracy"] > 0.85, row
@@ -2392,8 +2389,8 @@ def test_weighted_irls_matches_rowlevel_fit(spark):
         ((F.col("id") % 3) == 0).cast("int").alias("y"),
     )
     grid = rows.groupBy("x1", "x2", "y").agg(F.count(F.lit(1)).alias("cnt"))
-    flat = logistic_irls(rows, rounds=4).collect()[0]
-    comp = logistic_irls(grid, rounds=4, weight="cnt").collect()[0]
+    flat = logistic_irls(rows).collect()[0]
+    comp = logistic_irls(grid, weight="cnt").collect()[0]
     assert flat == comp, (flat, comp)
 
     pois_rows = spark.range(0, 600).select(
@@ -2404,9 +2401,7 @@ def test_weighted_irls_matches_rowlevel_fit(spark):
     pois_grid = pois_rows.groupBy("x1", "x2", "y").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    assert poisson_fit(pois_rows, rounds=4) == poisson_fit(
-        pois_grid, rounds=4, weight="cnt"
-    )
+    assert poisson_fit(pois_rows) == poisson_fit(pois_grid, weight="cnt")
 
 
 def test_isotonic_calibration_is_monotone(spark):
@@ -2983,12 +2978,12 @@ def test_ktruss_is_subgraph_with_min_support(spark):
         + [(3, 7), (7, 8), (8, 9), (9, 7)],
         "u long, v long",
     )
-    out = ktruss_edges(edges, k=4, rounds=3).collect()
+    out = ktruss_edges(edges, k=4).collect()
     got = {(r.u, r.v) for r in out}
     assert got == {(a, b) for a in range(4) for b in range(a + 1, 4)}
     assert all(r.support >= 2 for r in out)
     # k=3 keeps the dangling triangle too, still not the pendant edge
-    out3 = {(r.u, r.v) for r in ktruss_edges(edges, k=3, rounds=3).collect()}
+    out3 = {(r.u, r.v) for r in ktruss_edges(edges, k=3).collect()}
     assert out3 == got | {(7, 8), (8, 9), (7, 9)}
 
 
@@ -3545,7 +3540,7 @@ def test_nn_descent_improves_recall(spark, sf_smoke):
     for rounds in (0, 2):
         got = {
             (r["node"], r["neighbor_id"])
-            for r in nn_descent_graph(emb, k=4, rounds=rounds).collect()
+            for r in nn_descent_graph(emb, rounds=rounds).collect()
         }
         recalls.append(len(got & truth) / len(truth))
     assert recalls[1] >= 3 * recalls[0], recalls
@@ -3605,7 +3600,7 @@ def test_nn_descent_converges_on_clustered_data(spark):
     truth = _exact_knn_truth(pts, k=4)
     got = {
         (r["node"], r["neighbor_id"])
-        for r in nn_descent_graph(pts, k=4, rounds=4).collect()
+        for r in nn_descent_graph(pts, rounds=4).collect()
     }
     recall = len(got & truth) / len(truth)
     assert recall >= 0.95, recall

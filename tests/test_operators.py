@@ -112,7 +112,7 @@ def test_materialize_persists_and_serves_reads(spark, sf_smoke):
 
     n = load_table(spark, sf_smoke, "nation")
     expected = n.count()
-    cached = materialize(n, storage_level="MEMORY_AND_DISK")
+    cached = materialize(n)
     try:
         lvl = cached.storageLevel
         assert lvl.useMemory and lvl.useDisk
@@ -219,7 +219,7 @@ def test_banded_range_join_equals_naive(spark, sf_smoke):
     purchases, clicks = _range_join_inputs(spark, sf_smoke)
     banded = banded_range_join(
         purchases, clicks, on="user_id", left_ts="p_ts", right_ts="c_ts",
-        lower_seconds=-7200.0, upper_seconds=0.0,
+        lower_seconds=-7200.0,
     ).select("purchase_id", "c_ts")
     lo = F.col("p_ts") - F.expr("INTERVAL 2 HOURS")
     naive = (
@@ -239,7 +239,7 @@ def test_banded_range_join_no_nested_loop(spark, sf_smoke):
     purchases, clicks = _range_join_inputs(spark, sf_smoke)
     out = banded_range_join(
         purchases, clicks, on="user_id", left_ts="p_ts", right_ts="c_ts",
-        lower_seconds=-3600.0, upper_seconds=0.0,
+        lower_seconds=-3600.0,
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "NestedLoop" not in plan
@@ -252,7 +252,7 @@ def test_banded_range_join_rejects_bad_args(spark, sf_smoke):
     purchases, clicks = _range_join_inputs(spark, sf_smoke)
     with pytest.raises(ValueError):
         banded_range_join(purchases, clicks, on="user_id", left_ts="p_ts",
-                          right_ts="c_ts", lower_seconds=0.0, upper_seconds=0.0)
+                          right_ts="c_ts", lower_seconds=0.0)
     with pytest.raises(ValueError):
         banded_range_join(purchases, purchases, on="user_id", left_ts="p_ts",
                           right_ts="p_ts")
@@ -277,7 +277,7 @@ def test_event_time_operators_accept_timestamp_ntz(spark):
     ).select("event_id", ntz(F.col("ts_s")).alias("ts"), F.lit(7).alias("user_id"))
     assert dict(ev.dtypes)["ts"] == "timestamp_ntz"
 
-    sessions = sessionize(ev, key="user_id", ts="ts", gap_minutes=30.0)
+    sessions = sessionize(ev)
     got = {r["event_id"]: r["session_seq"] for r in sessions.collect()}
     assert got == {1: 1, 2: 1, 3: 2}
 
@@ -287,7 +287,7 @@ def test_event_time_operators_accept_timestamp_ntz(spark):
     clicks = ev.select("user_id", F.col("ts").alias("c_ts"))
     banded = banded_range_join(
         purchases, clicks, on="user_id", left_ts="p_ts", right_ts="c_ts",
-        lower_seconds=-3600.0 * 3, upper_seconds=0.0,
+        lower_seconds=-3600.0 * 3,
     )
     assert banded.count() == 2  # both 10:00-ish events precede 12:00 within 3h
 

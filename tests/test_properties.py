@@ -385,7 +385,7 @@ def test_ktruss_edges_subset_with_support_floor(spark, pairs):
     from healthcare_etl_spark.operators.graph import ktruss_edges
 
     df = spark.createDataFrame(pairs, "u long, v long")
-    out = ktruss_edges(df, k=3, rounds=3).collect()
+    out = ktruss_edges(df, k=3).collect()
     inset = {(min(a, b), max(a, b)) for a, b in pairs}
     surv = {(r.u, r.v) for r in out}
     assert surv <= inset

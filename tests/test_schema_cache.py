@@ -135,3 +135,20 @@ def test_rewrite_keeping_size_and_mtime_misses_memo(spark, tmp_path):
     after = os.stat(p)
     assert (after.st_size, after.st_mtime_ns) == (before.st_size, before.st_mtime_ns)
     assert load_table(spark, sf_dir, "t").columns == ["b"]
+
+
+def test_epoch_unit_cache_follows_a_rewrite(spark, tmp_path):
+    """The detected epoch granularity of a bigint ``ts`` is cached per
+    file version: rewriting the same path from nanoseconds to
+    milliseconds must be sampled again, not decoded with the stale unit."""
+    sf_dir = str(tmp_path)
+    p = f"{sf_dir}/events.parquet"
+    want = 1_700_000_000 * 1_000_000  # 2023-11-14 22:13:20 UTC in µs
+
+    def ts_micros() -> int:
+        return load_table(spark, sf_dir, "events").select(F.unix_micros("ts")).first()[0]
+
+    pq.write_table(pa.table({"ts": pa.array([1_700_000_000 * 10**9], pa.int64())}), p)
+    assert ts_micros() == want
+    pq.write_table(pa.table({"ts": pa.array([1_700_000_000 * 10**3], pa.int64())}), p)
+    assert ts_micros() == want
