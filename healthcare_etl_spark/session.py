@@ -79,11 +79,18 @@ def configure_session(spark: SparkSession) -> SparkSession:
       write ``TIMESTAMP(NANOS)`` (the pre-round-4 fixture did) — Spark's
       reader rejects nanos outright, so we read them as long and convert
       in ``sources.readers.load_table``.
+
+    This is the one place those confs are set. It also puts the
+    directory holding the ``healthcare_etl_spark`` package first on the
+    Python workers' ``PYTHONPATH``: UDFs and Arrow kernels import the
+    package inside the workers, which otherwise find it only when the
+    process runs from the repo root or its own ``PYTHONPATH`` names it.
     """
-    try:
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:  # pragma: no cover - non-settable conf on some builds
-        pass
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p and p != root]
+    env["PYTHONPATH"] = os.pathsep.join([root, *paths])
     return spark

@@ -19,6 +19,15 @@ is ``lakehouse.to_dataframe`` over such a plan: one parquet scan per
 partition group with an explicit schema, so column pruning, predicate
 pushdown and partition pruning reach the scans unchanged.
 
+One write path: every snapshot comes from ``_replay``, which applies
+checkpoint rows and JSON commit lines through the one action handler
+``_apply``; create, append and compact write data files through
+``_write_files`` (logical->physical projection, ``partitionBy`` on the
+physical partition names, ``add`` actions from
+``lakehouse.written_files``), so OPTIMIZE is one Spark write for all
+rewritten partition groups; both checkpoint writers take their add rows,
+pyarrow schema and deletion-vector guard from ``_checkpoint_rows``.
+
 Honest scope (unsupported features raise, never misread):
 - JSON commits plus CLASSIC checkpoint parquet (``_last_checkpoint`` +
   ``<version>.checkpoint.parquet`` — the standard every-10-commits log
@@ -50,7 +59,7 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import replace
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -181,14 +190,51 @@ def _normalize_pv(pv) -> dict:
     return dict(pv)
 
 
-def _replay(
-    table_path: str, version: int | None = None
-) -> tuple[dict[str, dict], str | None, list[str], dict, int, dict]:
+class _Snapshot(NamedTuple):
+    """A replayed table version: the live ``add`` actions keyed by path,
+    the metaData's schema string, partition columns and configuration,
+    and the protocol."""
+
+    live: dict[str, dict]
+    schema_string: str | None
+    partition_columns: list[str]
+    protocol: dict
+    version: int
+    configuration: dict
+
+
+def _apply(state: dict, action: dict) -> None:
+    """Apply one log action to the replay ``state`` (a dict of the
+    ``_Snapshot`` fields). JSON commit lines and checkpoint rows both
+    land here; a checkpoint row's null columns are dropped first, so
+    each row is the one action it carries. A checkpoint's remove rows
+    are vacuum tombstones for files its add rows do not list, so
+    applying them changes nothing. commitInfo / txn / cdc /
+    checkpointMetadata / sidecar actions carry no file-set state."""
+    if action.get("protocol"):
+        state["protocol"] = {k: v for k, v in action["protocol"].items() if v is not None}
+        _check_protocol(state["protocol"])
+    if action.get("metaData"):
+        md = action["metaData"]
+        provider = (md.get("format") or {}).get("provider") or "parquet"
+        if provider != "parquet":
+            raise NotImplementedError(f"non-parquet Delta format: {md['format']}")
+        state["schema_string"] = md["schemaString"]
+        state["partition_columns"] = list(md.get("partitionColumns") or [])
+        state["configuration"] = _normalize_pv(md.get("configuration"))
+    if action.get("add"):
+        add = dict(action["add"])
+        add["partitionValues"] = _normalize_pv(add.get("partitionValues"))
+        state["live"][add["path"]] = add
+    if action.get("remove"):
+        state["live"].pop(action["remove"]["path"], None)
+
+
+def _replay(table_path: str, version: int | None = None) -> _Snapshot:
     """Checkpoint-aware log replay shared by every entry point (reader,
-    delete_partition, write_checkpoint): newest usable checkpoint parquet
-    first (if any), then the JSON commits after it. Returns
-    ``(live_adds, schema_string, partition_columns, protocol, version,
-    configuration)``.
+    writers, checkpoint writers): the newest usable checkpoint first (if
+    any), then the JSON commits after it, every action through
+    ``_apply``.
 
     Metadata-scale by construction: the checkpoint is read driver-side
     with pyarrow (bounded by file count, not row count), exactly the
@@ -206,75 +252,38 @@ def _replay(
             raise ValueError(f"version {version} not in Delta log (have {have})")
     if not commits and ckpt is None:
         raise FileNotFoundError(f"empty Delta log: {table_path}/{_LOG_DIR}")
-    live: dict[str, dict] = {}
-    schema_string: str | None = None
-    partition_columns: list[str] = []
-    configuration: dict = {}
-    protocol: dict = {"minReaderVersion": 1, "minWriterVersion": 2}
-    resolved_version = ckpt[0] if ckpt is not None else -1
+    state = {
+        "live": {},
+        "schema_string": None,
+        "partition_columns": [],
+        "protocol": {"minReaderVersion": 1, "minWriterVersion": 2},
+        "version": -1,
+        "configuration": {},
+    }
     if ckpt is not None:
-        ckpt_version, ckpt_path, ckpt_kind = ckpt
-
-        def _apply_ckpt_row(d: dict) -> None:
-            nonlocal schema_string, partition_columns, protocol, configuration
-            if d.get("protocol"):
-                protocol = {k: v for k, v in d["protocol"].items() if v is not None}
-                _check_protocol(protocol)
-            if d.get("metaData"):
-                schema_string = d["metaData"]["schemaString"]
-                partition_columns = list(d["metaData"].get("partitionColumns") or [])
-                configuration = _normalize_pv(d["metaData"].get("configuration"))
-            if d.get("add"):
-                add = dict(d["add"])
-                add["partitionValues"] = _normalize_pv(add.get("partitionValues"))
-                live[add["path"]] = add
-            # remove actions in a checkpoint are tombstones for vacuum,
-            # not live-set state: a checkpointed remove's file is already
-            # absent from the checkpoint's add set.
-
         # A checkpoint is the full action state: one row per action with
         # nullable protocol/metaData/add/remove columns (partitionValues
         # is MAP<string,string> per the spec; legacy struct-typed
         # fixtures are normalized too). V2 top-level files additionally
         # carry checkpointMetadata + sidecar actions, with the file
         # actions living in _delta_log/_sidecars/ parquet files.
+        state["version"], ckpt_path, ckpt_kind = ckpt
         if ckpt_kind == "classic":
             import pyarrow.parquet as papq
 
-            for d in papq.read_table(ckpt_path).to_pylist():
-                _apply_ckpt_row(d)
+            rows = papq.read_table(ckpt_path).to_pylist()
         else:
-            for d in _v2_checkpoint_rows(table_path, ckpt_path):
-                _apply_ckpt_row(d)
-        commits = [(v, p) for v, p in commits if v > ckpt_version]
+            rows = _v2_checkpoint_rows(table_path, ckpt_path)
+        for row in rows:
+            _apply(state, {k: v for k, v in row.items() if v is not None})
+        commits = [(v, p) for v, p in commits if v > state["version"]]
     for v, commit_path in commits:
-        resolved_version = v
+        state["version"] = v
         with open(commit_path, encoding="utf-8") as fh:
             for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "protocol" in action:
-                    protocol = action["protocol"]
-                    _check_protocol(protocol)
-                elif "metaData" in action:
-                    md = action["metaData"]
-                    if md.get("format", {}).get("provider", "parquet") != "parquet":
-                        raise NotImplementedError(
-                            f"non-parquet Delta format: {md['format']}"
-                        )
-                    schema_string = md["schemaString"]
-                    partition_columns = list(md.get("partitionColumns", []))
-                    configuration = _normalize_pv(md.get("configuration"))
-                elif "add" in action:
-                    add = dict(action["add"])
-                    add["partitionValues"] = _normalize_pv(add.get("partitionValues"))
-                    live[add["path"]] = add
-                elif "remove" in action:
-                    live.pop(action["remove"]["path"], None)
-                # commitInfo / txn / cdc actions carry no file-set state
-    return live, schema_string, partition_columns, protocol, resolved_version, configuration
+                if line.strip():
+                    _apply(state, json.loads(line))
+    return _Snapshot(**state)
 
 
 def _v2_checkpoint_rows(table_path: str, ckpt_path: str):
@@ -337,35 +346,24 @@ def _mapping_mode(configuration: dict) -> str:
     return mode
 
 
-def _to_physical(df: DataFrame, fields: list[T.StructField], mode: str) -> DataFrame:
-    """Project the logical ``fields`` of ``df`` to their data-file layout."""
-    phys = [(f.name, _physical(f, mode)) for f in fields]
-    return df.select(*[F.col(name).alias(p.name, metadata=p.metadata) for name, p in phys])
-
-
 def _abs(table_path: str, rel: str) -> str:
     return os.path.abspath(os.path.join(table_path, rel))
 
 
-def _scan_plan(
-    table_path: str,
-    adds: list[dict],
-    schema_string: str | None,
-    partition_columns: list[str],
-    configuration: dict,
-) -> lakehouse.ScanPlan:
-    """The ``ScanPlan`` of the live ``adds``: files grouped by their
+def _scan_plan(table_path: str, snap: _Snapshot) -> lakehouse.ScanPlan:
+    """The ``ScanPlan`` of ``snap``'s live files: grouped by their
     partitionValues (keyed by physical name, cast to the declared types
     on read), the physical read schema, and every deletion vector decoded
     into (file, row index) masks. The output carries the logical schema."""
-    if schema_string is None:
+    if snap.schema_string is None:
         raise ValueError(f"Delta log has no metaData action: {table_path}")
-    schema = T.StructType.fromJson(json.loads(schema_string))
-    mode = _mapping_mode(configuration)
+    schema = T.StructType.fromJson(json.loads(snap.schema_string))
+    mode = _mapping_mode(snap.configuration)
     phys = {f.name: _physical(f, mode) for f in schema.fields}
+    adds = [snap.live[p] for p in sorted(snap.live)]
     files = [
         (
-            tuple(add["partitionValues"].get(phys[c].name) for c in partition_columns),
+            tuple(add["partitionValues"].get(phys[c].name) for c in snap.partition_columns),
             0,
             _abs(table_path, add["path"]),
         )
@@ -374,10 +372,10 @@ def _scan_plan(
     return lakehouse.ScanPlan(
         schema=T.StructType([T.StructField(f.name, f.dataType) for f in schema.fields]),
         read_schema=T.StructType(
-            [p for name, p in phys.items() if name not in partition_columns]
+            [p for name, p in phys.items() if name not in snap.partition_columns]
         ),
         groups=lakehouse.group_files(files),
-        partition_columns=list(partition_columns),
+        partition_columns=list(snap.partition_columns),
         physical={name: p.name for name, p in phys.items()},
         positions=[
             (_abs(table_path, add["path"]), pos)
@@ -396,14 +394,7 @@ def read_delta_table(
     DataFrame with the table's declared schema (partition columns
     reconstructed from ``partitionValues`` and cast to their declared
     types, Delta semantics)."""
-    live, schema_string, partition_columns, _protocol, _v, configuration = _replay(
-        table_path, version
-    )
-    plan = _scan_plan(
-        table_path, [live[p] for p in sorted(live)], schema_string, partition_columns,
-        configuration,
-    )
-    return lakehouse.to_dataframe(spark, plan)
+    return lakehouse.to_dataframe(spark, _scan_plan(table_path, _replay(table_path, version)))
 
 
 def _load_dv(table_path: str, dv: dict) -> list[int]:
@@ -478,17 +469,11 @@ def write_delta_table(
     partition_by = partition_by or []
     protocol = {"minReaderVersion": 1, "minWriterVersion": 2}
     configuration: dict = {}
-    schema_json = df.schema.json()
-    physical_partition_by = partition_by
+    fields = df.schema.fields
     mode = {True: "name", False: None}.get(column_mapping, column_mapping)
     if mode not in (None, "name", "id"):
         raise ValueError(f"column_mapping must be False/'name'/'id', got {mode!r}")
     if mode:
-        phys = {
-            f.name: "col-"
-            + str(_uuid.uuid5(_uuid.NAMESPACE_URL, f"hes-delta-col-{f.name}"))[:8]
-            for f in df.schema.fields
-        }
         fields = [
             T.StructField(
                 f.name,
@@ -496,57 +481,75 @@ def write_delta_table(
                 f.nullable,
                 {
                     "delta.columnMapping.id": i + 1,
-                    "delta.columnMapping.physicalName": phys[f.name],
+                    "delta.columnMapping.physicalName": "col-"
+                    + str(_uuid.uuid5(_uuid.NAMESPACE_URL, f"hes-delta-col-{f.name}"))[:8],
                 },
             )
-            for i, f in enumerate(df.schema.fields)
+            for i, f in enumerate(fields)
         ]
-        schema_json = T.StructType(fields).json()
-        df = _to_physical(df, fields, mode)
-        physical_partition_by = [phys[c] for c in partition_by]
         configuration = {
             "delta.columnMapping.mode": mode,
             "delta.columnMapping.maxColumnId": str(len(fields)),
         }
         protocol = {"minReaderVersion": 2, "minWriterVersion": 5}
-    writer = df.write.mode("overwrite")
-    if physical_partition_by:
-        writer = writer.partitionBy(*physical_partition_by)
-    writer.parquet(table_path)
     actions = [
         {"protocol": protocol},
         {
             "metaData": {
                 "id": "00000000-0000-0000-0000-000000000000",
                 "format": {"provider": "parquet", "options": {}},
-                "schemaString": schema_json,
+                "schemaString": T.StructType(fields).json(),
                 "partitionColumns": partition_by,
                 "configuration": configuration,
                 "createdTime": 0,
             }
         },
-        *_add_actions(table_path, table_path, data_change=True),
+        *_write_files(df, table_path, table_path, fields, partition_by, mode or "none"),
     ]
     _write_commit(table_path, 0, actions)
 
 
-def _add_actions(
-    table_path: str, out_dir: str, *, data_change: bool, partition_values: dict | None = None
+def _write_files(
+    df: DataFrame,
+    table_path: str,
+    out_dir: str,
+    fields: list[T.StructField],
+    partition_columns: list[str],
+    mode: str,
+    *,
+    compact: bool = False,
 ) -> list[dict]:
-    """``add`` actions for the parquet files a write left under
-    ``out_dir``, sorted by path; partition values come from the hive
-    directories unless ``partition_values`` is given."""
+    """Write the logical ``fields`` of ``df`` as new data files under
+    ``out_dir`` and return their ``add`` actions — the one data-file
+    writer of create, append and compact. Columns are projected to their
+    data-file layout under column-mapping ``mode`` (physical names, and
+    in 'id' mode parquet field ids), the write is partitioned by the
+    physical partition names, and each file's partitionValues are read
+    back from its hive directories. ``compact`` puts each partition
+    value in one task, so every partition group is one new file
+    (unpartitioned: one file), and marks the adds ``dataChange=false``."""
+    phys = {f.name: _physical(f, mode) for f in fields}
+    out = df.select(
+        *[F.col(f.name).alias(phys[f.name].name, metadata=phys[f.name].metadata) for f in fields]
+    )
+    parts = [phys[c].name for c in partition_columns]
+    if compact:
+        out = out.repartition(*parts) if parts else out.coalesce(1)
+    writer = out.write.mode("overwrite")
+    if parts:
+        writer = writer.partitionBy(*parts)
+    writer.parquet(out_dir)
     return [
         {
             "add": {
                 "path": os.path.relpath(full, table_path).replace(os.sep, "/"),
-                "partitionValues": parsed if partition_values is None else partition_values,
+                "partitionValues": values,
                 "size": os.path.getsize(full),
                 "modificationTime": 0,
-                "dataChange": data_change,
+                "dataChange": not compact,
             }
         }
-        for full, parsed in lakehouse.written_files(out_dir)
+        for full, values in lakehouse.written_files(out_dir)
     ]
 
 
@@ -565,20 +568,102 @@ def delete_partition(table_path: str, column: str, value: str) -> int:
     the schema metadata first (matching on the logical key would
     silently remove nothing — the same fail-silent class the r8 advice
     flagged for the checkpoint replay)."""
-    live, schema_string, _pcols, _protocol, current_version, _conf = _replay(table_path)
+    snap = _replay(table_path)
     pv_key = column
-    if schema_string is not None:
-        for f in T.StructType.fromJson(json.loads(schema_string)).fields:
+    if snap.schema_string is not None:
+        for f in T.StructType.fromJson(json.loads(snap.schema_string)).fields:
             if f.name == column:
                 pv_key = _physical(f, "none").name
     removes = [
         {"remove": {"path": p, "deletionTimestamp": 0, "dataChange": True}}
-        for p, add in sorted(live.items())
+        for p, add in sorted(snap.live.items())
         if add.get("partitionValues", {}).get(pv_key) == value
     ]
-    new_version = current_version + 1
-    _write_commit(table_path, new_version, removes)
-    return new_version
+    _write_commit(table_path, snap.version + 1, removes)
+    return snap.version + 1
+
+
+def _checkpoint_rows(table_path: str):
+    """What both checkpoint writers write: the replayed snapshot, its
+    metaData row, one ``add`` row per live file (``dataChange=false``)
+    and the pyarrow fields of the protocol, metaData and add columns.
+    The spec types add.partitionValues as MAP<string,string>: explicit,
+    because struct inference breaks on unpartitioned tables (an empty
+    struct is unwritable). Fixture-grade: the action fields this reader
+    (and the live-set semantics) need; a production writer also carries
+    txn/commitInfo and stats."""
+    import pyarrow as pa
+
+    # Checkpoint-aware replay: re-checkpointing a table that already has
+    # a checkpoint (with vacuumed older JSON commits) must carry the
+    # checkpointed live set forward, not just the surviving JSON tail.
+    snap = _replay(table_path)
+    if snap.schema_string is None:
+        raise ValueError(f"Delta log has no metaData action: {table_path}")
+    if any(a.get("deletionVector") for a in snap.live.values()):
+        # the checkpoint schema has no DV struct; compacting a DV table
+        # here would silently RESURRECT deleted rows
+        raise NotImplementedError(
+            "checkpointing a table with live deletion vectors is not "
+            "supported by the fixture checkpoint writers"
+        )
+    meta = {
+        "metaData": {
+            "id": "00000000-0000-0000-0000-000000000000",
+            "schemaString": snap.schema_string,
+            "partitionColumns": snap.partition_columns,
+        }
+    }
+    adds = [
+        {
+            "add": {
+                "path": add["path"],
+                # pyarrow map columns take list-of-pairs input
+                "partitionValues": sorted(add.get("partitionValues", {}).items()),
+                "size": add.get("size", 0),
+                "modificationTime": add.get("modificationTime", 0),
+                "dataChange": False,
+            }
+        }
+        for _path, add in sorted(snap.live.items())
+    ]
+    strings = pa.list_(pa.string())
+    fields = {
+        "protocol": [
+            ("minReaderVersion", pa.int32()),
+            ("minWriterVersion", pa.int32()),
+            ("readerFeatures", strings),
+            ("writerFeatures", strings),
+        ],
+        "metaData": [
+            ("id", pa.string()),
+            ("schemaString", pa.string()),
+            ("partitionColumns", strings),
+        ],
+        "add": [
+            ("path", pa.string()),
+            ("partitionValues", pa.map_(pa.string(), pa.string())),
+            ("size", pa.int64()),
+            ("modificationTime", pa.int64()),
+            ("dataChange", pa.bool_()),
+        ],
+    }
+    return snap, meta, adds, {k: pa.field(k, pa.struct(v)) for k, v in fields.items()}
+
+
+def _write_parquet(path: str, rows: list[dict], fields) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    papq.write_table(pa.Table.from_pylist(rows, schema=pa.schema(fields)), path)
+
+
+def _write_last_checkpoint(table_path: str, version: int, size: int) -> int:
+    with open(
+        os.path.join(table_path, _LOG_DIR, "_last_checkpoint"), "w", encoding="utf-8"
+    ) as fh:
+        json.dump({"version": version, "size": size}, fh)
+    return version
 
 
 def write_checkpoint(spark: SparkSession, table_path: str) -> int:
@@ -586,107 +671,24 @@ def write_checkpoint(spark: SparkSession, table_path: str) -> int:
     latest version (+ ``_last_checkpoint`` pointer) — the standard
     every-10-commits Delta maintenance op that bounds log-replay cost.
     After this, readers replay [checkpoint] + [later JSON commits] and
-    the older JSON commits are dead weight (vacuumable). Returns the
-    checkpointed version. Fixture-grade: carries the action fields this
-    reader (and the live-set semantics) need; a production writer also
-    carries txn/commitInfo and stats."""
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    # Checkpoint-aware replay: re-checkpointing a table that already has
-    # a checkpoint (with vacuumed older JSON commits) must carry the
-    # checkpointed live set forward, not just the surviving JSON tail.
-    live, schema_string, partition_columns, protocol, version, _conf = _replay(table_path)
-    if schema_string is None:
-        raise ValueError(f"Delta log has no metaData action: {table_path}")
-    if any(a.get("deletionVector") for a in live.values()):
-        # the fixture checkpoint schema has no DV struct; compacting a
-        # DV table here would silently RESURRECT deleted rows
-        raise NotImplementedError(
-            "checkpointing a table with live deletion vectors is not "
-            "supported by the fixture checkpoint writers"
-        )
-    rows = [
-        {
-            # restrict to the two version ints the explicit struct carries
-            "protocol": {
-                "minReaderVersion": int(protocol.get("minReaderVersion", 1)),
-                "minWriterVersion": int(protocol.get("minWriterVersion", 2)),
-            },
-            "metaData": None,
-            "add": None,
-        },
-        {
-            "protocol": None,
-            "metaData": {
-                "id": "00000000-0000-0000-0000-000000000000",
-                "schemaString": schema_string,
-                "partitionColumns": partition_columns,
-            },
-            "add": None,
-        },
-    ]
-    for path in sorted(live):
-        add = live[path]
-        rows.append(
-            {
-                "protocol": None,
-                "metaData": None,
-                "add": {
-                    "path": add["path"],
-                    # pyarrow map columns take list-of-pairs input
-                    "partitionValues": sorted(
-                        add.get("partitionValues", {}).items()
-                    ),
-                    "size": add.get("size", 0),
-                    "modificationTime": add.get("modificationTime", 0),
-                    "dataChange": False,
-                },
-            }
-        )
-    # Explicit schema: the spec types add.partitionValues as
-    # MAP<string,string> — struct inference breaks on unpartitioned
-    # tables (empty struct is unwritable) and deviates from PROTOCOL.md.
-    ckpt_schema = pa.schema(
-        [
-            pa.field(
-                "protocol",
-                pa.struct(
-                    [("minReaderVersion", pa.int32()), ("minWriterVersion", pa.int32())]
-                ),
-            ),
-            pa.field(
-                "metaData",
-                pa.struct(
-                    [
-                        ("id", pa.string()),
-                        ("schemaString", pa.string()),
-                        ("partitionColumns", pa.list_(pa.string())),
-                    ]
-                ),
-            ),
-            pa.field(
-                "add",
-                pa.struct(
-                    [
-                        ("path", pa.string()),
-                        ("partitionValues", pa.map_(pa.string(), pa.string())),
-                        ("size", pa.int64()),
-                        ("modificationTime", pa.int64()),
-                        ("dataChange", pa.bool_()),
-                    ]
-                ),
-            ),
-        ]
+    the older JSON commits are dead weight (vacuumable). The protocol
+    row keeps the table's reader and writer features (a table-features
+    protocol without its feature lists is unreadable). Returns the
+    checkpointed version."""
+    snap, meta, adds, fields = _checkpoint_rows(table_path)
+    protocol = {
+        "minReaderVersion": int(snap.protocol.get("minReaderVersion", 1)),
+        "minWriterVersion": int(snap.protocol.get("minWriterVersion", 2)),
+        "readerFeatures": snap.protocol.get("readerFeatures"),
+        "writerFeatures": snap.protocol.get("writerFeatures"),
+    }
+    rows = [{"protocol": protocol}, meta, *adds]
+    _write_parquet(
+        os.path.join(table_path, _LOG_DIR, f"{snap.version:020d}.checkpoint.parquet"),
+        rows,
+        [fields["protocol"], fields["metaData"], fields["add"]],
     )
-    log_dir = os.path.join(table_path, _LOG_DIR)
-    papq.write_table(
-        pa.Table.from_pylist(rows, schema=ckpt_schema),
-        os.path.join(log_dir, f"{version:020d}.checkpoint.parquet"),
-    )
-    with open(os.path.join(log_dir, "_last_checkpoint"), "w", encoding="utf-8") as fh:
-        json.dump({"version": version, "size": len(rows)}, fh)
-    return version
+    return _write_last_checkpoint(table_path, snap.version, len(rows))
 
 
 def write_checkpoint_v2(
@@ -705,102 +707,39 @@ def write_checkpoint_v2(
     import uuid
 
     import pyarrow as pa
-    import pyarrow.parquet as papq
 
-    live, schema_string, partition_columns, _protocol, version, _conf = _replay(table_path)
-    if schema_string is None:
-        raise ValueError(f"Delta log has no metaData action: {table_path}")
-    if any(a.get("deletionVector") for a in live.values()):
-        raise NotImplementedError(
-            "checkpointing a table with live deletion vectors is not "
-            "supported by the fixture checkpoint writers"
-        )
-    log_dir = os.path.join(table_path, _LOG_DIR)
-    sidecar_dir = os.path.join(log_dir, "_sidecars")
+    snap, meta, adds, fields = _checkpoint_rows(table_path)
+    sidecar_dir = os.path.join(table_path, _LOG_DIR, "_sidecars")
     os.makedirs(sidecar_dir, exist_ok=True)
-
-    add_field = pa.field(
-        "add",
-        pa.struct(
-            [
-                ("path", pa.string()),
-                ("partitionValues", pa.map_(pa.string(), pa.string())),
-                ("size", pa.int64()),
-                ("modificationTime", pa.int64()),
-                ("dataChange", pa.bool_()),
-            ]
-        ),
-    )
-    sidecar_schema = pa.schema([add_field])
-    add_rows = [
-        {
-            "add": {
-                "path": add["path"],
-                "partitionValues": sorted(add.get("partitionValues", {}).items()),
-                "size": add.get("size", 0),
-                "modificationTime": add.get("modificationTime", 0),
-                "dataChange": False,
-            }
-        }
-        for _path, add in sorted(live.items())
-    ]
-    n_sidecars = max(1, min(n_sidecars, len(add_rows)) if add_rows else 1)
-    chunk = -(-len(add_rows) // n_sidecars) if add_rows else 1
+    n_sidecars = max(1, min(n_sidecars, len(adds)) if adds else 1)
+    chunk = -(-len(adds) // n_sidecars) if adds else 1
     sidecar_actions = []
     # deterministic uuids so fixture writes are reproducible
-    ns = uuid.uuid5(uuid.NAMESPACE_URL, f"{os.path.abspath(table_path)}@{version}")
+    ns = uuid.uuid5(uuid.NAMESPACE_URL, f"{os.path.abspath(table_path)}@{snap.version}")
     for i in range(n_sidecars):
-        rows = add_rows[i * chunk : (i + 1) * chunk]
         name = f"{uuid.uuid5(ns, f'sidecar-{i}')}.parquet"
         full = os.path.join(sidecar_dir, name)
-        papq.write_table(pa.Table.from_pylist(rows, schema=sidecar_schema), full)
+        _write_parquet(full, adds[i * chunk : (i + 1) * chunk], [fields["add"]])
         sidecar_actions.append(
-            {
-                "sidecar": {
-                    "path": name,
-                    "sizeInBytes": os.path.getsize(full),
-                    "modificationTime": 0,
-                }
-            }
+            {"sidecar": {"path": name, "sizeInBytes": os.path.getsize(full), "modificationTime": 0}}
         )
-    top_schema = pa.schema(
-        [
-            pa.field("checkpointMetadata", pa.struct([("version", pa.int64())])),
-            pa.field(
-                "sidecar",
-                pa.struct(
-                    [
-                        ("path", pa.string()),
-                        ("sizeInBytes", pa.int64()),
-                        ("modificationTime", pa.int64()),
-                    ]
-                ),
+    top_fields = [
+        pa.field("checkpointMetadata", pa.struct([("version", pa.int64())])),
+        pa.field(
+            "sidecar",
+            pa.struct(
+                [
+                    ("path", pa.string()),
+                    ("sizeInBytes", pa.int64()),
+                    ("modificationTime", pa.int64()),
+                ]
             ),
-            pa.field(
-                "protocol",
-                pa.struct(
-                    [
-                        ("minReaderVersion", pa.int32()),
-                        ("minWriterVersion", pa.int32()),
-                        ("readerFeatures", pa.list_(pa.string())),
-                        ("writerFeatures", pa.list_(pa.string())),
-                    ]
-                ),
-            ),
-            pa.field(
-                "metaData",
-                pa.struct(
-                    [
-                        ("id", pa.string()),
-                        ("schemaString", pa.string()),
-                        ("partitionColumns", pa.list_(pa.string())),
-                    ]
-                ),
-            ),
-        ]
-    )
+        ),
+        fields["protocol"],
+        fields["metaData"],
+    ]
     top_rows = [
-        {"checkpointMetadata": {"version": version}},
+        {"checkpointMetadata": {"version": snap.version}},
         {
             "protocol": {
                 "minReaderVersion": 3,
@@ -809,23 +748,12 @@ def write_checkpoint_v2(
                 "writerFeatures": ["v2Checkpoint"],
             }
         },
-        {
-            "metaData": {
-                "id": "00000000-0000-0000-0000-000000000000",
-                "schemaString": schema_string,
-                "partitionColumns": partition_columns,
-            }
-        },
+        meta,
         *sidecar_actions,
     ]
-    top_name = f"{version:020d}.checkpoint.{uuid.uuid5(ns, 'top')}.parquet"
-    papq.write_table(
-        pa.Table.from_pylist(top_rows, schema=top_schema),
-        os.path.join(log_dir, top_name),
-    )
-    with open(os.path.join(log_dir, "_last_checkpoint"), "w", encoding="utf-8") as fh:
-        json.dump({"version": version, "size": len(top_rows) + len(add_rows)}, fh)
-    return version
+    top_name = f"{snap.version:020d}.checkpoint.{uuid.uuid5(ns, 'top')}.parquet"
+    _write_parquet(os.path.join(table_path, _LOG_DIR, top_name), top_rows, top_fields)
+    return _write_last_checkpoint(table_path, snap.version, len(top_rows) + len(adds))
 
 
 def _write_commit(table_path: str, version: int, actions: list[dict]) -> None:
@@ -863,24 +791,18 @@ def delete_rows(
 
     from healthcare_etl_spark.sources.roaring import serialize_rbm_array, z85_encode
 
-    live, schema_string, partition_columns, protocol, current_version, conf = _replay(
-        table_path
-    )
-    for path in sorted(live):
-        if live[path].get("deletionVector"):
-            raise NotImplementedError(
-                "fixture delete_rows does not merge with an existing DV"
-            )
-    plan = _scan_plan(
-        table_path, [live[p] for p in sorted(live)], schema_string, partition_columns, conf
-    )
+    snap = _replay(table_path)
+    live = snap.live
+    if any(add.get("deletionVector") for add in live.values()):
+        raise NotImplementedError("fixture delete_rows does not merge with an existing DV")
     # Row-index discovery is ONE distributed scan over ALL live files
     # (the file path attributes each matching row to its file) instead
     # of one driver-sequenced job per file; a real DV writer's
     # touched-file pass is likewise one distributed job. The predicate
     # is written over the logical schema.
     rel_by_path = {_abs(table_path, p): p for p in live}
-    matched = lakehouse.to_dataframe(spark, plan, positions=True).filter(predicate)
+    matched = lakehouse.to_dataframe(spark, _scan_plan(table_path, snap), positions=True)
+    matched = matched.filter(predicate)
     hits_by_file: dict[str, list[int]] = {}
     for path, pos in matched.select(
         lakehouse.path_key(F.col(lakehouse.FILE_PATH)), lakehouse.POS
@@ -932,8 +854,8 @@ def delete_rows(
         new_add["deletionVector"] = descriptor
         new_add["dataChange"] = True
         actions.append({"add": new_add})
-    features = sorted(set(protocol.get("readerFeatures") or []) | {"deletionVectors"})
-    wfeatures = sorted(set(protocol.get("writerFeatures") or []) | {"deletionVectors"})
+    features = sorted(set(snap.protocol.get("readerFeatures") or []) | {"deletionVectors"})
+    wfeatures = sorted(set(snap.protocol.get("writerFeatures") or []) | {"deletionVectors"})
     actions.insert(
         0,
         {
@@ -945,9 +867,8 @@ def delete_rows(
             }
         },
     )
-    new_version = current_version + 1
-    _write_commit(table_path, new_version, actions)
-    return new_version
+    _write_commit(table_path, snap.version + 1, actions)
+    return snap.version + 1
 
 
 def optimize_compact(spark: SparkSession, table_path: str) -> int:
@@ -964,71 +885,46 @@ def optimize_compact(spark: SparkSession, table_path: str) -> int:
     nothing needed compaction.
 
     Sizes and DVs come from the replayed add actions (no file stat).
-    Scale shape: the rewrite is per partition group (one distributed
-    masked scan of the rewrite set + one write each); the commit is
-    metadata. A production OPTIMIZE also caps the output file size; the
-    tiering keeps each rewrite at most half the smallest kept file."""
-    live, schema_string, partition_columns, _protocol, version, configuration = (
-        _replay(table_path)
+    Scale shape: one distributed masked scan of the rewrite files of
+    every group and one partitioned write (each group's rows in one
+    task, so one file per group); the commit is metadata. A production
+    OPTIMIZE also caps the output file size; the tiering keeps each
+    rewrite at most half the smallest kept file."""
+    snap = _replay(table_path)
+    rewrite = sorted(
+        lakehouse.rewrite_set(
+            [
+                (
+                    path,
+                    add["size"],
+                    bool(add.get("deletionVector")),
+                    tuple(sorted(add["partitionValues"].items())),
+                )
+                for path, add in snap.live.items()
+            ]
+        )
     )
-    plan = _scan_plan(
-        table_path, [live[p] for p in sorted(live)], schema_string, partition_columns,
-        configuration,
+    if not rewrite:
+        return snap.version
+    # The rewrite set's rows with their deletion vectors applied,
+    # written back in the data-file layout.
+    rows = lakehouse.to_dataframe(
+        spark, _scan_plan(table_path, snap._replace(live={p: snap.live[p] for p in rewrite}))
     )
-    mode = _mapping_mode(configuration)
-    data_fields = [
-        f
-        for f in T.StructType.fromJson(json.loads(schema_string)).fields
-        if f.name not in partition_columns
+    adds = _write_files(
+        rows,
+        table_path,
+        os.path.join(table_path, f"compact-{snap.version + 1}"),
+        T.StructType.fromJson(json.loads(snap.schema_string)).fields,
+        snap.partition_columns,
+        _mapping_mode(snap.configuration),
+        compact=True,
+    )
+    removes = [
+        {"remove": {"path": p, "deletionTimestamp": 0, "dataChange": False}} for p in rewrite
     ]
-    add_by_path = {_abs(table_path, p): add for p, add in live.items()}
-    new_version = version + 1
-    actions: list[dict] = []
-    n_written = 0
-    for group in plan.groups:
-        rewrite = sorted(
-            lakehouse.rewrite_set(
-                [
-                    (p, add_by_path[p]["size"], bool(add_by_path[p].get("deletionVector")))
-                    for p in group.paths
-                ]
-            )
-        )
-        if not rewrite:
-            continue
-        # The rewrite set's rows with their deletion vectors applied,
-        # written back in the data-file layout (partition values stay in
-        # the log).
-        merged = _to_physical(
-            lakehouse.to_dataframe(
-                spark, replace(plan, groups=[replace(group, paths=rewrite)])
-            ),
-            data_fields,
-            mode,
-        )
-        out_dir = os.path.join(table_path, f"compact-{new_version}", str(n_written))
-        merged.coalesce(1).write.mode("overwrite").parquet(out_dir)
-        actions += _add_actions(
-            table_path,
-            out_dir,
-            data_change=False,
-            partition_values=add_by_path[rewrite[0]]["partitionValues"],
-        )
-        actions += [
-            {
-                "remove": {
-                    "path": add_by_path[p]["path"],
-                    "deletionTimestamp": 0,
-                    "dataChange": False,
-                }
-            }
-            for p in rewrite
-        ]
-        n_written += 1
-    if not actions:
-        return version
-    _write_commit(table_path, new_version, actions)
-    return new_version
+    _write_commit(table_path, snap.version + 1, adds + removes)
+    return snap.version + 1
 
 
 def append_delta_table(df: DataFrame, table_path: str) -> int:
@@ -1040,24 +936,20 @@ def append_delta_table(df: DataFrame, table_path: str) -> int:
     ids), and replay sees old + new files. Returns the new version —
     the primitive under streaming lakehouse ingestion
     (``streaming.incremental.run_delta_ingest``)."""
-    _live, schema_string, partition_columns, _protocol, version, configuration = (
-        _replay(table_path)
-    )
-    if schema_string is None:
+    snap = _replay(table_path)
+    if snap.schema_string is None:
         raise ValueError(f"Delta log has no metaData action: {table_path}")
-    schema = T.StructType.fromJson(json.loads(schema_string))
-    missing = [f.name for f in schema.fields if f.name not in df.columns]
+    fields = T.StructType.fromJson(json.loads(snap.schema_string)).fields
+    missing = [f.name for f in fields if f.name not in df.columns]
     if missing:
         raise ValueError(f"append is missing columns: {missing}")
-    mode = _mapping_mode(configuration)
-    new_version = version + 1
-    out_dir = os.path.join(table_path, f"append-{new_version}")
-    writer = _to_physical(df, schema.fields, mode).write.mode("overwrite")
-    if partition_columns:
-        fields = {f.name: f for f in schema.fields}
-        writer = writer.partitionBy(*[_physical(fields[c], mode).name for c in partition_columns])
-    writer.parquet(out_dir)
-    _write_commit(
-        table_path, new_version, _add_actions(table_path, out_dir, data_change=True)
+    adds = _write_files(
+        df,
+        table_path,
+        os.path.join(table_path, f"append-{snap.version + 1}"),
+        fields,
+        snap.partition_columns,
+        _mapping_mode(snap.configuration),
     )
-    return new_version
+    _write_commit(table_path, snap.version + 1, adds)
+    return snap.version + 1

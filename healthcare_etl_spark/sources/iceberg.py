@@ -56,6 +56,12 @@ files unchanged. The writer is fixture-grade by volume but spec-grade
 by format: data files + manifest + manifest list + metadata JSON that
 a real Iceberg reader can consume, used by the registered scan query,
 the round-trip tests and the time-travel tests.
+
+One write path: every snapshot — create, append, both row-level
+deletes, partition delete and compaction — is made by ``_commit``,
+which numbers it, has the caller's writer produce the new files, and
+carries the unchanged data and delete entries forward as EXISTING (or
+DELETED); data files are written by ``_write_spec_files``.
 """
 
 from __future__ import annotations
@@ -604,34 +610,50 @@ def _parquet_row_count(path: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
-def _write_snapshot(
+def _commit(
     table_path: str,
     meta: dict,
-    entries: list[dict],
-    *,
+    live: tuple[list[dict], list[dict], list[dict]],
     operation: str,
-    delete_entries: list[dict] | None = None,
+    write,
+    *,
+    removed=frozenset(),
+    purge_deletes: bool = False,
 ) -> int:
-    """Append one snapshot (manifests + manifest list + metadata json +
-    version hint): a data manifest holding ``entries`` and, when
-    ``delete_entries`` is given, a DELETE manifest (manifest-list
-    ``content=1``) holding position-delete file entries. Returns the
-    new snapshot id (== new metadata version, deterministic)."""
-    fields = _current_schema(meta)
-    pfields = _partition_fields(meta)
-    version = (
-        max((s["snapshot-id"] for s in meta.get("snapshots", [])), default=0) + 1
-    )
+    """Append one snapshot — the one commit of every write: numbers it
+    (``max(snapshot-id) + 1``, deterministic; also its sequence number
+    base), has ``write(snapshot_id)`` write the new files and return
+    their ADDED entries, carries the ``live`` (data, position-delete,
+    equality-delete) entries of the current snapshot forward as EXISTING
+    — data files whose manifest path is in ``removed``, and with
+    ``purge_deletes`` every delete file, as DELETED — and writes the
+    data manifest, a delete manifest (manifest-list ``content=1``) when
+    there are delete entries, the manifest list, the metadata json and
+    the version hint. Returns the new snapshot id."""
+    data_e, pos_e, eq_e = live
+    version = max((s["snapshot-id"] for s in meta.get("snapshots", [])), default=0) + 1
     seq = meta.get("last-sequence-number", 0) + 1
+    added = write(version)
+    manifest_groups = [
+        (
+            [_carry(e, 2 if e["data_file"]["file_path"] in removed else 0) for e in data_e]
+            + [e for e in added if e["data_file"]["content"] == 0],
+            0,
+            f"manifest-{version}.avro",
+        ),
+        (
+            [_carry(e, 2 if purge_deletes else 0) for e in pos_e + eq_e]
+            + [e for e in added if e["data_file"]["content"] != 0],
+            1,
+            f"manifest-{version}-deletes.avro",
+        ),
+    ]
     meta_dir = os.path.join(table_path, _META_DIR)
-    entry_schema = _manifest_entry_schema(pfields, fields)
+    entry_schema = _manifest_entry_schema(_partition_fields(meta), _current_schema(meta))
     mlist_rows: list[dict] = []
-    manifest_groups = [(entries, 0, f"manifest-{version}.avro")]
-    if delete_entries:
-        manifest_groups.append(
-            (delete_entries, 1, f"manifest-{version}-deletes.avro")
-        )
     for grp, content, fname in manifest_groups:
+        if content and not grp:
+            continue
         for e in grp:
             if e["status"] == 1:  # ADDED inherits this snapshot/sequence
                 e["snapshot_id"] = version
@@ -639,7 +661,10 @@ def _write_snapshot(
                 e["file_sequence_number"] = seq
         manifest_path = os.path.join(meta_dir, fname)
         write_avro_file(manifest_path, entry_schema, grp)
-        live = [e for e in grp if e["status"] != 2]
+        counts = {
+            status: [e["data_file"]["record_count"] for e in grp if e["status"] == status]
+            for status in (0, 1, 2)
+        }
         mlist_rows.append(
             {
                 "manifest_path": "file://" + manifest_path,
@@ -648,22 +673,20 @@ def _write_snapshot(
                 "content": content,
                 "sequence_number": seq,
                 "min_sequence_number": min(
-                    (e["sequence_number"] for e in live if e["sequence_number"]),
+                    (
+                        e["sequence_number"]
+                        for e in grp
+                        if e["status"] != 2 and e["sequence_number"]
+                    ),
                     default=seq,
                 ),
                 "added_snapshot_id": version,
-                "added_files_count": sum(1 for e in grp if e["status"] == 1),
-                "existing_files_count": sum(1 for e in grp if e["status"] == 0),
-                "deleted_files_count": sum(1 for e in grp if e["status"] == 2),
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in grp if e["status"] == 1
-                ),
-                "existing_rows_count": sum(
-                    e["data_file"]["record_count"] for e in grp if e["status"] == 0
-                ),
-                "deleted_rows_count": sum(
-                    e["data_file"]["record_count"] for e in grp if e["status"] == 2
-                ),
+                "added_files_count": len(counts[1]),
+                "existing_files_count": len(counts[0]),
+                "deleted_files_count": len(counts[2]),
+                "added_rows_count": sum(counts[1]),
+                "existing_rows_count": sum(counts[0]),
+                "deleted_rows_count": sum(counts[2]),
             }
         )
     mlist_path = os.path.join(meta_dir, f"snap-{version}-manifest-list.avro")
@@ -768,32 +791,14 @@ def write_iceberg_table(
         "snapshots": [],
         "current-snapshot-id": -1,
     }
-    entries = _write_spec_files(meta, df, os.path.join(table_path, "data"))
     os.makedirs(os.path.join(table_path, _META_DIR), exist_ok=True)
-    return _write_snapshot(table_path, meta, entries, operation="append")
-
-
-def _with_partition_cols(df: DataFrame, specs, ftype, pname_fn):
-    """Attach derived partition columns (truncate as a codegen
-    expression, bucket as the vectorized Murmur3 UDF); identity columns
-    partition as themselves."""
-    out = df
-    part_cols: list[str] = []
-    for c, tr in specs:
-        name = pname_fn(c, tr)
-        part_cols.append(name)
-        if tr == "identity":
-            continue
-        m = _TRANSFORM_RE.match(tr)
-        if tr.startswith("truncate["):
-            w = int(m.group(3))
-            if ftype[c] == "string":
-                out = out.withColumn(name, F.substring(F.col(c), 1, w))
-            else:
-                out = out.withColumn(name, F.col(c) - (((F.col(c) % w) + w) % w))
-        else:  # bucket[N]
-            out = out.withColumn(name, _bucket_column(tr, ftype[c])(F.col(c)))
-    return out, part_cols
+    return _commit(
+        table_path,
+        meta,
+        ([], [], []),
+        "append",
+        lambda _v: _write_spec_files(meta, df, os.path.join(table_path, "data")),
+    )
 
 
 def _added_entries(meta: dict, directory: str, *, content: int = 0, **extra) -> list[dict]:
@@ -834,7 +839,7 @@ def _current_entries(meta: dict, table_path: str) -> tuple[list[dict], list[dict
     return _live_entries(meta, snaps[meta.get("current-snapshot-id")], table_path)
 
 
-def _carry(e: dict, *, status: int) -> dict:
+def _carry(e: dict, status: int) -> dict:
     return {
         "status": status,
         "snapshot_id": e.get("snapshot_id"),
@@ -855,24 +860,13 @@ def delete_partition(table_path: str, column: str, value) -> int:
     pnames = [f["name"] for f in _partition_fields(meta)]
     if column not in pnames:
         raise ValueError(f"{column!r} is not a partition column of {table_path}")
-    data_e, pos_e, eq_e = _current_entries(meta, table_path)
-    del_e = pos_e + eq_e
-    entries = [
-        _carry(
-            e,
-            status=2
-            if (e["data_file"].get("partition") or {}).get(column) == value
-            else 0,
-        )
-        for e in data_e
-    ]
-    return _write_snapshot(
-        table_path,
-        meta,
-        entries,
-        operation="delete",
-        delete_entries=[_carry(e, status=0) for e in del_e] or None,
-    )
+    live = _current_entries(meta, table_path)
+    removed = {
+        e["data_file"]["file_path"]
+        for e in live[0]
+        if (e["data_file"].get("partition") or {}).get(column) == value
+    }
+    return _commit(table_path, meta, live, "delete", lambda _v: [], removed=removed)
 
 
 def delete_rows(spark: SparkSession, table_path: str, predicate: str) -> int:
@@ -892,32 +886,29 @@ def delete_rows(spark: SparkSession, table_path: str, predicate: str) -> int:
     job a real engine runs for copy-on-write planning); nothing is
     collected to the driver."""
     meta = _current_metadata(table_path)
-    data_e, pos_e, eq_e = entries = _current_entries(meta, table_path)
+    live = _current_entries(meta, table_path)
     matched = (
-        lakehouse.to_dataframe(spark, _scan_plan(meta, table_path, entries), positions=True)
+        lakehouse.to_dataframe(spark, _scan_plan(meta, table_path, live), positions=True)
         .filter(predicate)
         .select(
             F.col(lakehouse.FILE_PATH).alias("file_path"),
             F.col(lakehouse.POS).alias("pos"),
         )
     )
-    version = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    del_dir = os.path.join(table_path, "data", f"deletes-{version}")
-    # Spec: position delete files are sorted by file_path then pos. One
-    # partition sorted locally writes that one sorted file without the
-    # sampling job a global sort's range exchange runs; the masked scan
-    # upstream of the exchange keeps its own parallelism.
-    matched.repartition(1).sortWithinPartitions("file_path", "pos").write.mode(
-        "overwrite"
-    ).parquet(del_dir)
-    return _write_snapshot(
-        table_path,
-        meta,
-        [_carry(e, status=0) for e in data_e],
-        operation="delete",
-        delete_entries=[_carry(e, status=0) for e in pos_e + eq_e]
-        + _added_entries(meta, del_dir, content=1),
-    )
+
+    def write(version: int) -> list[dict]:
+        del_dir = os.path.join(table_path, "data", f"deletes-{version}")
+        # Spec: position delete files are sorted by file_path then pos.
+        # One partition sorted locally writes that one sorted file
+        # without the sampling job a global sort's range exchange runs;
+        # the masked scan upstream of the exchange keeps its own
+        # parallelism.
+        matched.repartition(1).sortWithinPartitions("file_path", "pos").write.mode(
+            "overwrite"
+        ).parquet(del_dir)
+        return _added_entries(meta, del_dir, content=1)
+
+    return _commit(table_path, meta, live, "delete", write)
 
 
 def rename_column(table_path: str, old: str, new: str) -> int:
@@ -953,34 +944,38 @@ def _write_spec_files(
     FIELD-ID column resolution, and therefore schema evolution, work on
     read) into ``out_dir``; returns the ADDED manifest entries."""
     fields = _current_schema(meta)
-    pfields = _partition_fields(meta)
     field_by_id = {f["id"]: f for f in fields}
     missing = [f["name"] for f in fields if f["name"] not in df.columns]
     if missing:
         raise ValueError(f"append is missing columns: {missing}")
-    ftype = {f["name"]: f["type"] for f in fields}
-    df = df.select(
+    out = df.select(
         *[
             F.col(f["name"]).alias(f["name"], metadata={"parquet.field.id": f["id"]})
             for f in fields
         ]
     )
-    specs = [
-        (field_by_id[pf["source-id"]]["name"], pf["transform"]) for pf in pfields
-    ]
-    pname_by_spec = {
-        (field_by_id[pf["source-id"]]["name"], pf["transform"]): pf["name"]
-        for pf in pfields
-    }
-    out, part_cols = _with_partition_cols(
-        df, specs, ftype, lambda c, tr: pname_by_spec[(c, tr)]
-    )
-    # Identity partition fields whose name differs from the (possibly
-    # renamed) source column need the partition column materialized
-    # under the PARTITION FIELD name so the hive layout stays uniform.
-    for (c, tr), name in pname_by_spec.items():
-        if tr == "identity" and name != c:
-            out = out.withColumn(name, F.col(c)).drop(c)
+    # Derived partition columns: truncate as a codegen expression, bucket
+    # as the vectorized Murmur3 UDF. Identity fields partition as the
+    # source column, materialized under the PARTITION FIELD name when the
+    # two differ (after a rename) so the hive layout stays uniform.
+    part_cols = [pf["name"] for pf in _partition_fields(meta)]
+    renames = {}
+    for pf, name in zip(_partition_fields(meta), part_cols):
+        src, tr = field_by_id[pf["source-id"]], pf["transform"]
+        c = src["name"]
+        if tr == "identity":
+            if name != c:
+                renames[c] = name
+        elif tr.startswith("truncate["):
+            w = int(_TRANSFORM_RE.match(tr).group(3))
+            if src["type"] == "string":
+                out = out.withColumn(name, F.substring(F.col(c), 1, w))
+            else:
+                out = out.withColumn(name, F.col(c) - (((F.col(c) % w) + w) % w))
+        else:  # bucket[N]
+            out = out.withColumn(name, _bucket_column(tr, src["type"])(F.col(c)))
+    for c, name in renames.items():
+        out = out.withColumn(name, F.col(c)).drop(c)
     if compact:
         # Bin-pack: co-locate each partition value in one task so every
         # group writes one file (unpartitioned tables collapse to one).
@@ -1001,19 +996,12 @@ def append_rows(df: DataFrame, table_path: str) -> int:
     files' parquet field ids keep reads consistent across the rename
     boundary. Returns the new snapshot id."""
     meta = _current_metadata(table_path)
-    data_e, pos_e, eq_e = _current_entries(meta, table_path)
-    del_e = pos_e + eq_e
-
-    version = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    new_entries = _write_spec_files(
-        meta, df, os.path.join(table_path, "data", f"append-{version}")
-    )
-    return _write_snapshot(
+    return _commit(
         table_path,
         meta,
-        [_carry(e, status=0) for e in data_e] + new_entries,
-        operation="append",
-        delete_entries=[_carry(e, status=0) for e in del_e] or None,
+        _current_entries(meta, table_path),
+        "append",
+        lambda v: _write_spec_files(meta, df, os.path.join(table_path, "data", f"append-{v}")),
     )
 
 
@@ -1076,31 +1064,40 @@ def optimize_compact(spark: SparkSession, table_path: str) -> int:
     by_path = {_local_path(e["data_file"]["file_path"], table_path): e for e in data_e}
     touched = _position_delete_targets(pos_e, by_path, table_path)
     eq_seq = max((e.get("sequence_number") or 0 for e in eq_e), default=-1)
-    groups: dict[tuple, list[tuple[str, int, bool]]] = {}
-    for path, e in by_path.items():
-        dfile = e["data_file"]
-        pv = tuple((dfile.get("partition") or {}).get(n) for n in pnames)
-        deleted = path in touched or (e.get("sequence_number") or 0) < eq_seq
-        groups.setdefault(pv, []).append((path, dfile["file_size_in_bytes"], deleted))
-    rewrite = {p for files in groups.values() for p in lakehouse.rewrite_set(files)}
+    rewrite = set(
+        lakehouse.rewrite_set(
+            [
+                (
+                    path,
+                    e["data_file"]["file_size_in_bytes"],
+                    path in touched or (e.get("sequence_number") or 0) < eq_seq,
+                    tuple((e["data_file"].get("partition") or {}).get(n) for n in pnames),
+                )
+                for path, e in by_path.items()
+            ]
+        )
+    )
     if not rewrite and not (pos_e or eq_e):
         return meta["current-snapshot-id"]
-    version = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    new_entries = []
-    if rewrite:
+
+    def write(version: int) -> list[dict]:
+        if not rewrite:
+            return []
         rows = lakehouse.to_dataframe(
             spark,
             _scan_plan(meta, table_path, ([by_path[p] for p in sorted(rewrite)], pos_e, eq_e)),
         )
-        new_entries = _write_spec_files(
-            meta, rows, os.path.join(table_path, "data", f"rewrite-{version}"), compact=True
-        )
-    return _write_snapshot(
+        out_dir = os.path.join(table_path, "data", f"rewrite-{version}")
+        return _write_spec_files(meta, rows, out_dir, compact=True)
+
+    return _commit(
         table_path,
         meta,
-        [_carry(e, status=2 if p in rewrite else 0) for p, e in by_path.items()] + new_entries,
-        operation="replace",
-        delete_entries=[_carry(e, status=2) for e in pos_e + eq_e] or None,
+        (data_e, pos_e, eq_e),
+        "replace",
+        write,
+        removed={by_path[p]["data_file"]["file_path"] for p in rewrite},
+        purge_deletes=True,
     )
 
 
@@ -1125,27 +1122,21 @@ def delete_rows_equality(spark: SparkSession, table_path: str, keys_df: DataFram
     if unknown:
         raise ValueError(f"equality columns not in schema: {unknown}")
     ids = [by_name[c]["id"] for c in keys_df.columns]
-    data_e, pos_e, eq_e = _current_entries(meta, table_path)
 
-    version = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    del_dir = os.path.join(table_path, "data", f"eqdeletes-{version}")
-    (
-        keys_df.select(
-            *[
-                F.col(c).alias(c, metadata={"parquet.field.id": by_name[c]["id"]})
-                for c in keys_df.columns
-            ]
+    def write(version: int) -> list[dict]:
+        del_dir = os.path.join(table_path, "data", f"eqdeletes-{version}")
+        (
+            keys_df.select(
+                *[
+                    F.col(c).alias(c, metadata={"parquet.field.id": by_name[c]["id"]})
+                    for c in keys_df.columns
+                ]
+            )
+            .sort(*keys_df.columns)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(del_dir)
         )
-        .sort(*keys_df.columns)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(del_dir)
-    )
-    return _write_snapshot(
-        table_path,
-        meta,
-        [_carry(e, status=0) for e in data_e],
-        operation="delete",
-        delete_entries=[_carry(e, status=0) for e in pos_e + eq_e]
-        + _added_entries(meta, del_dir, content=2, equality_ids=ids),
-    )
+        return _added_entries(meta, del_dir, content=2, equality_ids=ids)
+
+    return _commit(table_path, meta, _current_entries(meta, table_path), "delete", write)

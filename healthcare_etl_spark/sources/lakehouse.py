@@ -6,11 +6,14 @@ manifests) into a ``ScanPlan``: which data files to read, grouped by
 partition value, with what read schema, and which rows are deleted.
 ``to_dataframe`` is the one place that turns a plan into rows — both
 readers, the row-position discovery of both ``delete_rows`` and both
-``optimize_compact`` rewrites go through it. ``written_files`` is the one
-walker over the parquet files a Spark write just produced.
+``optimize_compact`` rewrites go through it. On the write side,
+``written_files`` is the one walker over the parquet files a Spark write
+just produced: every create, append and compaction of either format
+records its files, and their partition values, through it.
 
-Compaction is size-tiered, one rule for both formats (``rewrite_set``):
-within a partition group, files are walked from the largest down, and
+Compaction is size-tiered, one rule for both formats (``rewrite_set``,
+which is handed every live file with its partition values and groups
+them itself): within a partition group, files are walked from the largest down, and
 each stays in place while it has no deletes against it and is at least
 ``TIER_RATIO`` (2) times the combined size of every smaller file of the
 group; the first file that fails and every file below it are rewritten
@@ -120,25 +123,33 @@ def group_files(files) -> list[FileGroup]:
 
 
 def rewrite_set(files) -> list[str]:
-    """The paths OPTIMIZE rewrites among one partition group's
-    ``(path, size, has_deletes)`` triples, largest first.
+    """The paths OPTIMIZE rewrites among a table's live files, given as
+    ``(path, size, has_deletes)`` triples, or with a fourth element, the
+    file's partition values: files group by that element (one group when
+    it is absent), each group's rewrite set largest first.
 
-    The files are walked by size, descending (path breaks ties); each is
-    kept while it has no deletes against it and its size is at least
-    ``TIER_RATIO`` times the combined size of all smaller files. The
-    first file that fails and everything after it are the rewrite set.
-    The smallest file always passes the size test (nothing is below it),
-    so a one-file set is a file with deletes: a lone file without
-    deletes is never rewritten into itself."""
-    ordered = sorted(files, key=lambda f: (-f[1], f[0]))
-    below = sum(size for _path, size, _deleted in ordered)
-    kept = 0
-    for _path, size, deleted in ordered:
-        below -= size
-        if deleted or size < TIER_RATIO * below:
-            break
-        kept += 1
-    return [path for path, _size, _deleted in ordered[kept:]]
+    Within a group the files are walked by size, descending (path breaks
+    ties); each is kept while it has no deletes against it and its size
+    is at least ``TIER_RATIO`` times the combined size of all smaller
+    files. The first file that fails and everything after it are the
+    rewrite set. The smallest file always passes the size test (nothing
+    is below it), so a one-file set is a file with deletes: a lone file
+    without deletes is never rewritten into itself."""
+    groups: dict[tuple, list[tuple[str, int, bool]]] = {}
+    for path, size, deleted, *values in files:
+        groups.setdefault(tuple(values), []).append((path, size, deleted))
+    out = []
+    for group in groups.values():
+        ordered = sorted(group, key=lambda f: (-f[1], f[0]))
+        below = sum(size for _path, size, _deleted in ordered)
+        kept = 0
+        for _path, size, deleted in ordered:
+            below -= size
+            if deleted or size < TIER_RATIO * below:
+                break
+            kept += 1
+        out += [path for path, _size, _deleted in ordered[kept:]]
+    return out
 
 
 def path_key(col: Column) -> Column:
@@ -246,17 +257,17 @@ def to_dataframe(spark: SparkSession, plan: ScanPlan, *, positions: bool = False
 def written_files(directory: str) -> list[tuple[str, dict]]:
     """Every parquet file under ``directory`` (sorted by path) with the
     partition values of its hive ``key=value`` directories, relative to
-    ``directory``; ``__HIVE_DEFAULT_PARTITION__`` is a null value."""
+    ``directory``. Spark percent-escapes characters such as ':' and '/'
+    in those names; keys and values are unescaped (Spark's
+    ``unescapePathName``), and ``__HIVE_DEFAULT_PARTITION__`` is a null
+    value. Every data file either format creates, appends or compacts is
+    recorded through this walker."""
     out = []
     for root, _dirs, names in os.walk(directory):
         pieces = os.path.relpath(root, directory).split(os.sep)
-        values = dict(p.split("=", 1) for p in pieces if "=" in p)
-        for name in names:
-            if name.endswith(".parquet"):
-                out.append(
-                    (
-                        os.path.join(root, name),
-                        {k: None if v == _HIVE_NULL else v for k, v in values.items()},
-                    )
-                )
+        values = {
+            unquote(k): None if v == _HIVE_NULL else unquote(v)
+            for k, v in (p.split("=", 1) for p in pieces if "=" in p)
+        }
+        out += [(os.path.join(root, n), dict(values)) for n in names if n.endswith(".parquet")]
     return sorted(out, key=lambda pair: pair[0])

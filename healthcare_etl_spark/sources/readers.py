@@ -306,11 +306,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name != "events":
         return _normalize_timestamps(_read_parquet(spark, path))
 
-    try:
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:  # pragma: no cover - non-settable on some builds
-        pass
     df = _read_parquet(spark, path)
     if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(_epoch_to_micros(spark, path, df)))

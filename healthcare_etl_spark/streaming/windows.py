@@ -14,6 +14,7 @@ gap-sessionization with merging state.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -49,17 +50,12 @@ def streaming_events(
     ``schema_dir`` is the probe fallback for a stream directory that has
     no files yet at start time.
     """
-    try:
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:  # pragma: no cover - non-settable on some builds
-        pass
     # Probe the files that will actually be streamed — a synthetic test
     # dir may carry a different physical ts type than the fixture.
     probe_path = f"{str(sf_dir).rstrip('/')}/{glob}"
     try:
         raw_batch = spark.read.parquet(probe_path)
-    except Exception:
+    except AnalysisException:
         probe_path = f"{str(schema_dir or sf_dir).rstrip('/')}/events.parquet"
         raw_batch = spark.read.parquet(probe_path)
     raw_ts_type = dict(raw_batch.dtypes).get("ts")

@@ -113,3 +113,22 @@ def test_scan_sees_the_operator_layer():
     defs = public_defaults()
     assert {"minhash_lsh_pairs", "write_table", "run_streaming_tumbling"} <= set(defs)
     assert ("minhash_lsh_pairs", "max_shingle_doc_frac") in passed_params(defs)
+
+
+def test_perfbench_traces_existing_functions():
+    """perfbench wraps source-layer functions by module and name; a
+    renamed or deleted one would otherwise fail only inside a benchmark
+    run."""
+    import importlib
+
+    from perfbench.tracing import COMMIT_CALLS, SOURCE_CALLS
+
+    calls = [(mod, attr) for mod, attr, _span in SOURCE_CALLS]
+    calls += [(mod, attr) for mod, attrs in COMMIT_CALLS.items() for attr in attrs]
+    assert len(calls) > 10
+    missing = [
+        f"{mod}.{attr}"
+        for mod, attr in calls
+        if not callable(getattr(importlib.import_module(mod), attr, None))
+    ]
+    assert not missing, missing

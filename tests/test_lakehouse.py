@@ -188,3 +188,78 @@ def test_delete_on_a_small_file_keeps_the_large_one(spark, sf_smoke, tmp_path, f
     files_after, deletes = _live(fmt, one)
     assert len(files_after) == 2 and large in files_after and not deletes
     assert sorted(_read(spark, fmt, other).collect()) == expected
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_escaped_partition_values_round_trip(spark, tmp_path, fmt):
+    """Spark percent-escapes ':' and '/' in partition directory names;
+    the table records the values themselves, so they read back as
+    written and an equality filter on the partition column finds its
+    row, after create, append and compaction alike."""
+    path = str(tmp_path / "t")
+    rows = [(1, "a:b"), (2, "c/d"), (3, "e%f")]
+    _WRITE[fmt](spark.createDataFrame(rows[:2], "id long, k string"), path, partition_by=["k"])
+    _APPEND[fmt](spark.createDataFrame(rows[2:], "id long, k string"), path)
+    expected = rows
+    for step in ("write", "compact"):
+        if step == "compact":
+            _MOD[fmt].delete_rows(spark, path, "id = 2")
+            _MOD[fmt].optimize_compact(spark, path)
+            expected = [r for r in rows if r[0] != 2]
+        assert sorted(map(tuple, _read(spark, fmt, path).collect())) == expected, step
+        assert [r.id for r in _read(spark, fmt, path).filter("k = 'a:b'").collect()] == [1]
+
+
+def test_delta_compaction_is_one_write_per_table(spark, tmp_path, monkeypatch):
+    """OPTIMIZE over several rewritten partition groups (typed partition
+    values, one of them null) runs one Spark write; each group becomes
+    one file whose add carries the group's partitionValues strings as
+    the create wrote them, and the rows are unchanged."""
+    import datetime
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(i, i % 3 if i % 7 else None, datetime.date(2024, 1, 1 + i % 2)) for i in range(40)],
+        "id long, k int, d date",
+    )
+    delta.write_delta_table(df.repartition(4), path, partition_by=["k", "d"])
+    before = _live("delta", path)[0]
+    groups = {tuple(sorted(a["partitionValues"].items())) for a in before.values()}
+    assert len(groups) == 8 and len(before) > len(groups)
+    writes = []
+    parquet = DataFrameWriter.parquet
+    monkeypatch.setattr(
+        DataFrameWriter, "parquet", lambda w, *a, **k: writes.append(a) or parquet(w, *a, **k)
+    )
+    v = delta.optimize_compact(spark, path)
+    monkeypatch.undo()
+    assert len(writes) == 1
+    after = _live("delta", path)[0]
+    assert len(after) == len(groups)
+    assert {tuple(sorted(a["partitionValues"].items())) for a in after.values()} == groups
+    assert all(not a["dataChange"] for a in after.values())
+    assert sorted(delta.read_delta_table(spark, path).collect()) == sorted(df.collect())
+    assert sorted(delta.read_delta_table(spark, path, version=v - 1).collect()) == sorted(
+        df.collect()
+    )
+
+
+def test_delta_classic_checkpoint_keeps_table_features(spark, tmp_path):
+    """A row delete moves the protocol to reader features
+    (minReaderVersion 3). Once OPTIMIZE has applied the deletion vectors,
+    a classic checkpoint keeps the feature lists, so the table replays
+    from the checkpoint alone."""
+    import os
+
+    path = str(tmp_path / "t")
+    delta.write_delta_table(spark.createDataFrame([(i,) for i in range(10)], "id long"), path)
+    delta.delete_rows(spark, path, "id < 3")
+    v = delta.optimize_compact(spark, path)
+    assert delta.write_checkpoint(spark, path) == v
+    log = os.path.join(path, "_delta_log")
+    for name in os.listdir(log):
+        if name.endswith(".json"):
+            os.remove(os.path.join(log, name))
+    assert sorted(r.id for r in delta.read_delta_table(spark, path).collect()) == list(range(3, 10))
