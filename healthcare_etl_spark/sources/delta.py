@@ -587,11 +587,12 @@ def _checkpoint_rows(table_path: str):
     """What both checkpoint writers write: the replayed snapshot, its
     metaData row, one ``add`` row per live file (``dataChange=false``)
     and the pyarrow fields of the protocol, metaData and add columns.
-    The spec types add.partitionValues as MAP<string,string>: explicit,
-    because struct inference breaks on unpartitioned tables (an empty
-    struct is unwritable). Fixture-grade: the action fields this reader
-    (and the live-set semantics) need; a production writer also carries
-    txn/commitInfo and stats."""
+    The metaData keeps the table configuration (the column-mapping
+    mode). The spec types add.partitionValues and metaData.configuration
+    as MAP<string,string>: explicit, because struct inference breaks on
+    empty maps (an empty struct is unwritable). Fixture-grade: the
+    action fields this reader (and the live-set semantics) need; a
+    production writer also carries txn/commitInfo and stats."""
     import pyarrow as pa
 
     # Checkpoint-aware replay: re-checkpointing a table that already has
@@ -612,6 +613,7 @@ def _checkpoint_rows(table_path: str):
             "id": "00000000-0000-0000-0000-000000000000",
             "schemaString": snap.schema_string,
             "partitionColumns": snap.partition_columns,
+            "configuration": sorted(snap.configuration.items()),
         }
     }
     adds = [
@@ -639,6 +641,7 @@ def _checkpoint_rows(table_path: str):
             ("id", pa.string()),
             ("schemaString", pa.string()),
             ("partitionColumns", strings),
+            ("configuration", pa.map_(pa.string(), pa.string())),
         ],
         "add": [
             ("path", pa.string()),

@@ -649,6 +649,7 @@ def _commit(
         ),
     ]
     meta_dir = os.path.join(table_path, _META_DIR)
+    os.makedirs(meta_dir, exist_ok=True)
     entry_schema = _manifest_entry_schema(_partition_fields(meta), _current_schema(meta))
     mlist_rows: list[dict] = []
     for grp, content, fname in manifest_groups:
@@ -791,7 +792,6 @@ def write_iceberg_table(
         "snapshots": [],
         "current-snapshot-id": -1,
     }
-    os.makedirs(os.path.join(table_path, _META_DIR), exist_ok=True)
     return _commit(
         table_path,
         meta,

@@ -263,3 +263,16 @@ def test_delta_classic_checkpoint_keeps_table_features(spark, tmp_path):
         if name.endswith(".json"):
             os.remove(os.path.join(log, name))
     assert sorted(r.id for r in delta.read_delta_table(spark, path).collect()) == list(range(3, 10))
+
+
+@pytest.mark.parametrize("checkpoint", ["write_checkpoint", "write_checkpoint_v2"])
+def test_delta_checkpoint_keeps_the_column_mapping_mode(spark, tmp_path, checkpoint):
+    """A checkpoint's metaData carries the table configuration, so an
+    ID-mode table still resolves columns by field id when it replays
+    from the checkpoint."""
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, "a")], "id long, s string")
+    delta.write_delta_table(df, path, column_mapping="id")
+    getattr(delta, checkpoint)(spark, path)
+    assert delta._replay(path)[5]["delta.columnMapping.mode"] == "id"
+    assert delta.read_delta_table(spark, path).collect() == df.collect()
