@@ -152,10 +152,12 @@ def _shared_shingle_counts(df: DataFrame) -> DataFrame:
     """(doc_a, doc_b, na, nb, n_common) for every pair doc_a < doc_b
     sharing at least one hashed 3-shingle: the inverted-index
     self-join on the 8-byte shingle hash, with the shared count folded
-    into the join's immediate ``groupBy``."""
-    inv = hashed_shingle_rows(df)
-    sizes = inv.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inv_sized = inv.join(sizes, "doc_id")
+    into the join's immediate ``groupBy``. Each document's set size
+    ``n_sh`` is a count window over the index, which is already
+    hash-partitioned by doc_id, so it needs no exchange and no join."""
+    inv_sized = hashed_shingle_rows(df).withColumn(
+        "n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
+    )
     return (
         inv_sized.alias("x")
         .join(
@@ -190,22 +192,16 @@ def jaccard_pairs(df: DataFrame, *, threshold: float = 0.5) -> DataFrame:
     MinHash, because here the join output IS the intersection — no
     second verify pass exists to eliminate).
     """
-    # sizes is one row per document — AQE broadcasts it at fixture scale;
-    # at cluster scale this join co-partitions on doc_id (no hard-coded
-    # broadcast: a billion-document sizes frame must be allowed to shuffle).
     # No operator-internal checkpoint/persist (r9): under AQE,
     # localCheckpoint — eager OR lazy — finalizes the plan and EXECUTES
     # its shuffle stages at call time, so plan build on a 100 TB corpus
     # would run a corpus-sized job before any action (measured r8/r9),
     # and persist's columnar re-encode of the big index measured slower
-    # than the recompute it saves (AB_RUNS.jsonl r9-dedup-*). Of the
-    # shingle index, ReuseExchange shares between its consumers (sizes +
-    # both self-join sides) only the bottom doc_id spread exchange of
-    # _shingle_text_rows: its shuffle files are written once (the sizes
-    # broadcast is reused by both join sides too). The distinct has no
-    # shuffle of its own to share (the doc_id partitioning satisfies
-    # it), so the posexplode -> md5 -> distinct pipeline above the
-    # spread runs once per consumer: three times in the executed
+    # than the recompute it saves (AB_RUNS.jsonl r9-dedup-*). The set
+    # sizes are a window over the doc_id-partitioned index, not a third
+    # consumer of it: the posexplode -> md5 -> distinct pipeline runs
+    # once per self-join side (AQE broadcasts one side at fixture scale,
+    # so the sides share only the spread exchange), twice in the executed
     # adaptive plan of q_degree_distribution at sf0.01.
     common = _shared_shingle_counts(df)
     jac = F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
@@ -225,15 +221,14 @@ def hashed_shingle_rows(df: DataFrame) -> DataFrame:
     collisions, which the oracle reproduces exactly (same hash).
 
     Single-exchange: the doc_id partitioning from ``_shingle_text_rows``
-    satisfies both this distinct and the signature ``groupBy(doc_id)``
-    downstream, so scan -> shingle -> distinct -> signatures is one
-    shuffle total. Across the 3-4 consumers (sizes / doc-frequency /
-    ranked join / verify sets) ReuseExchange shares only that bottom
-    spread shuffle; there is no distinct shuffle to share, so the
-    posexplode -> md5 -> distinct pipeline above it runs once per
-    consumer (the executed adaptive plan of q_degree_distribution at
-    sf0.01: two ReusedExchange of the spread, the pipeline in three
-    codegen stages). r9 measured the alternatives and kept this form —
+    satisfies this distinct, the signature ``groupBy(doc_id)`` and the
+    per-document windows downstream, so scan -> shingle -> distinct ->
+    signatures is one shuffle total. Across its consumers (the two
+    sides of the Jaccard self-join; doc-frequency / ranked join /
+    verify sets in the prefix filter) ReuseExchange shares only that
+    bottom spread shuffle; there is no distinct shuffle to share, so
+    the posexplode -> md5 -> distinct pipeline above it runs once per
+    consumer. r9 measured the alternatives and kept this form —
     ``persist`` pays a columnar re-encode of the ~26M-row index
     that exceeds the recompute it saves, an explicit top
     ``repartition`` adds a second full shuffle of the index for no

@@ -654,6 +654,31 @@ def _checkpoint_rows(table_path: str):
     return snap, meta, adds, {k: pa.field(k, pa.struct(v)) for k, v in fields.items()}
 
 
+def _protocol(protocol: dict, feature: str | None = None) -> dict:
+    """The table's replayed ``protocol`` as a protocol action, keeping its
+    reader and writer feature lists (a table-features protocol without
+    them is unreadable). With ``feature``, the protocol moves to table
+    features (3, 7) and lists ``feature`` next to every feature the
+    table already needs; a legacy column-mapping protocol (2, 5) lists
+    its column mapping as ``columnMapping`` there."""
+    mrv = int(protocol.get("minReaderVersion", 1))
+    reader, writer = protocol.get("readerFeatures"), protocol.get("writerFeatures")
+    if feature is None:
+        return {
+            "minReaderVersion": mrv,
+            "minWriterVersion": int(protocol.get("minWriterVersion", 2)),
+            "readerFeatures": reader,
+            "writerFeatures": writer,
+        }
+    added = {feature, "columnMapping"} if mrv == 2 else {feature}
+    return {
+        "minReaderVersion": 3,
+        "minWriterVersion": 7,
+        "readerFeatures": sorted(set(reader or []) | added),
+        "writerFeatures": sorted(set(writer or []) | added),
+    }
+
+
 def _write_parquet(path: str, rows: list[dict], fields) -> None:
     import pyarrow as pa
     import pyarrow.parquet as papq
@@ -679,13 +704,7 @@ def write_checkpoint(spark: SparkSession, table_path: str) -> int:
     protocol without its feature lists is unreadable). Returns the
     checkpointed version."""
     snap, meta, adds, fields = _checkpoint_rows(table_path)
-    protocol = {
-        "minReaderVersion": int(snap.protocol.get("minReaderVersion", 1)),
-        "minWriterVersion": int(snap.protocol.get("minWriterVersion", 2)),
-        "readerFeatures": snap.protocol.get("readerFeatures"),
-        "writerFeatures": snap.protocol.get("writerFeatures"),
-    }
-    rows = [{"protocol": protocol}, meta, *adds]
+    rows = [{"protocol": _protocol(snap.protocol)}, meta, *adds]
     _write_parquet(
         os.path.join(table_path, _LOG_DIR, f"{snap.version:020d}.checkpoint.parquet"),
         rows,
@@ -703,8 +722,9 @@ def write_checkpoint_v2(
     file actions split across ``_delta_log/_sidecars/`` parquet files —
     the layout modern writers emit for very large tables (sidecars are
     readable in parallel and reusable across checkpoints). Upgrades the
-    protocol row to table features (minReaderVersion 3 + readerFeatures
-    [v2Checkpoint]) as the spec requires for a v2-checkpointed table.
+    protocol row to table features, listing v2Checkpoint next to the
+    table's own features, as the spec requires for a v2-checkpointed
+    table.
     Fixture-grade, same caveats as ``write_checkpoint``. Returns the
     checkpointed version."""
     import uuid
@@ -743,14 +763,7 @@ def write_checkpoint_v2(
     ]
     top_rows = [
         {"checkpointMetadata": {"version": snap.version}},
-        {
-            "protocol": {
-                "minReaderVersion": 3,
-                "minWriterVersion": 7,
-                "readerFeatures": ["v2Checkpoint"],
-                "writerFeatures": ["v2Checkpoint"],
-            }
-        },
+        {"protocol": _protocol(snap.protocol, "v2Checkpoint")},
         meta,
         *sidecar_actions,
     ]
@@ -857,19 +870,7 @@ def delete_rows(
         new_add["deletionVector"] = descriptor
         new_add["dataChange"] = True
         actions.append({"add": new_add})
-    features = sorted(set(snap.protocol.get("readerFeatures") or []) | {"deletionVectors"})
-    wfeatures = sorted(set(snap.protocol.get("writerFeatures") or []) | {"deletionVectors"})
-    actions.insert(
-        0,
-        {
-            "protocol": {
-                "minReaderVersion": 3,
-                "minWriterVersion": 7,
-                "readerFeatures": features,
-                "writerFeatures": wfeatures,
-            }
-        },
-    )
+    actions.insert(0, {"protocol": _protocol(snap.protocol, "deletionVectors")})
     _write_commit(table_path, snap.version + 1, actions)
     return snap.version + 1
 

@@ -173,17 +173,11 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     if sig is None:
         return spark.read.parquet(path)
 
-    def conf(k: str) -> str:
-        try:
-            return str(spark.conf.get(k, "?"))
-        except Exception:  # pragma: no cover - conf read denied
-            return "?"
-
     key = (
         path,
         sig,
-        conf("spark.sql.parquet.inferTimestampNTZ.enabled"),
-        conf("spark.sql.legacy.parquet.nanosAsLong"),
+        spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "?"),
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "?"),
     )
     hit = _PARQUET_MEMO.get(key)
     if hit is not None and hit.sparkSession is spark:

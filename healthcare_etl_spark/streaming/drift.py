@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from healthcare_etl_spark.functions.rounding import stable_round
 from healthcare_etl_spark.sources import local_frame
-from healthcare_etl_spark.streaming.windows import streaming_events
+from healthcare_etl_spark.streaming.windows import _memory_run, streaming_events
 
 _REF_CUTOFF = "2024-01-16"
 
@@ -97,21 +97,11 @@ def run_streaming_psi_drift(
     batch ``q_psi_drift`` for a full replay (asserted in tests)."""
     ev = streaming_events(spark, sf_dir, **(source_opts or {}))
     hist = _histogram_counts(ev)
-    q = (
-        hist.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # Re-materialize the grid as a fresh local DataFrame: the memory-sink
     # view cannot self-join (the densify step joins counts against its
     # own distinct types and Spark 4 reports conflicting attributes on
     # MemoryPlan), and the grid is dimension-sized by design, so a
     # driver-side copy is metadata-scale, not data-scale.
-    sunk = spark.table(query_name)
+    sunk = _memory_run(hist, query_name, "complete")
     counts = local_frame(spark, sunk.collect(), sunk.schema)
     return psi_from_counts(spark, counts)

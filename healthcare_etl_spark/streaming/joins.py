@@ -6,7 +6,9 @@ join condition bounds event time, so the state store can expire buffered
 rows — the property that makes stream-stream joins run unbounded.
 
 Replayed over the fixture files this must equal the batch self-join with
-the same predicate (asserted in tests).
+the same predicate (asserted in tests). The streaming and batch funnels
+share one builder (``_funnel``); every stream here runs through the
+memory-sink protocol of ``windows._memory_run``.
 """
 
 from __future__ import annotations
@@ -15,16 +17,36 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from healthcare_etl_spark.sources import load_table
-from healthcare_etl_spark.streaming.windows import streaming_events
-
-_TS_FMT = "yyyy-MM-dd HH:mm:ss"
+from healthcare_etl_spark.streaming.windows import _TS_FMT, _memory_run, streaming_events
 
 
-def _funnel_condition(signups: DataFrame, purchases: DataFrame):
-    return (
+def _funnel(ev: DataFrame, how: str, *, watermarked: bool) -> DataFrame:
+    """Signup->purchase pairs of ``ev`` within 1h, joined ``how``:
+    (signup_id, purchase_id, user_id, signup_ts, purchase_ts). A stream
+    is ``watermarked`` on both sides (2 hours), so its join state can
+    expire."""
+    signups = ev.filter(F.col("event_type") == "signup").select(
+        "user_id", "ts", F.col("event_id").alias("signup_id")
+    )
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("p_user_id"),
+        F.col("ts").alias("p_ts"),
+        F.col("event_id").alias("purchase_id"),
+    )
+    if watermarked:
+        signups = signups.withWatermark("ts", "2 hours")
+        purchases = purchases.withWatermark("p_ts", "2 hours")
+    condition = (
         (signups.user_id == purchases.p_user_id)
         & (purchases.p_ts >= signups.ts)
         & (purchases.p_ts <= signups.ts + F.expr("INTERVAL 1 HOUR"))
+    )
+    return signups.join(purchases, condition, how).select(
+        "signup_id",
+        "purchase_id",
+        "user_id",
+        F.date_format("ts", _TS_FMT).alias("signup_ts"),
+        F.date_format("p_ts", _TS_FMT).alias("purchase_ts"),
     )
 
 
@@ -35,39 +57,8 @@ def run_stream_stream_funnel(
     query_name: str = "stream_funnel",
 ) -> DataFrame:
     """Signup->purchase pairs within 1h, as a stream-stream inner join."""
-    ev = streaming_events(spark, sf_dir)
-    signups = (
-        ev.filter(F.col("event_type") == "signup")
-        .select("user_id", "ts", F.col("event_id").alias("signup_id"))
-        .withWatermark("ts", "2 hours")
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("p_ts"),
-            F.col("event_id").alias("purchase_id"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    joined = signups.join(purchases, _funnel_condition(signups, purchases), "inner").select(
-        "signup_id",
-        "purchase_id",
-        F.col("user_id"),
-        F.date_format("ts", _TS_FMT).alias("signup_ts"),
-        F.date_format("p_ts", _TS_FMT).alias("purchase_ts"),
-    )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
+    joined = _funnel(streaming_events(spark, sf_dir), "inner", watermarked=True)
+    return _memory_run(joined, query_name, "append")
 
 
 def run_stream_stream_funnel_outer(
@@ -89,61 +80,13 @@ def run_stream_stream_funnel_outer(
     provably closed remain buffered — the unit test asserts both the
     no-false-nulls and the closed-window-completeness directions.
     """
-    ev = streaming_events(spark, sf_dir)
-    signups = (
-        ev.filter(F.col("event_type") == "signup")
-        .select("user_id", "ts", F.col("event_id").alias("signup_id"))
-        .withWatermark("ts", "2 hours")
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("p_ts"),
-            F.col("event_id").alias("purchase_id"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    joined = signups.join(
-        purchases, _funnel_condition(signups, purchases), "left_outer"
-    ).select(
-        "signup_id",
-        "purchase_id",
-        F.col("user_id"),
-        F.date_format("ts", _TS_FMT).alias("signup_ts"),
-        F.date_format("p_ts", _TS_FMT).alias("purchase_ts"),
-    )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
+    joined = _funnel(streaming_events(spark, sf_dir), "left_outer", watermarked=True)
+    return _memory_run(joined, query_name, "append")
 
 
 def batch_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The batch-equivalent join (same predicate, no state)."""
-    ev = load_table(spark, sf_dir, "events")
-    signups = ev.filter(F.col("event_type") == "signup").select(
-        "user_id", "ts", F.col("event_id").alias("signup_id")
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user_id"),
-        F.col("ts").alias("p_ts"),
-        F.col("event_id").alias("purchase_id"),
-    )
-    return signups.join(purchases, _funnel_condition(signups, purchases), "inner").select(
-        "signup_id",
-        "purchase_id",
-        "user_id",
-        F.date_format("ts", _TS_FMT).alias("signup_ts"),
-        F.date_format("p_ts", _TS_FMT).alias("purchase_ts"),
-    )
+    return _funnel(load_table(spark, sf_dir, "events"), "inner", watermarked=False)
 
 
 def run_stream_static_enrichment(
@@ -175,18 +118,8 @@ def run_stream_static_enrichment(
         "event_id",
         (F.col("value") * F.col("n_hist")).alias("weighted"),
     )
-    q = (
-        agg_ready.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return (
-        spark.table(query_name)
+        _memory_run(agg_ready, query_name, "append")
         .groupBy("day")
         .agg(
             F.count(F.lit(1)).alias("n_purchases"),

@@ -7,6 +7,9 @@ the state store between triggers.
 
 At scale the state store is partitioned by the grouping key across
 executors; state size is O(distinct users), not O(events).
+
+The job runs through the memory-sink protocol of
+``windows._memory_run`` in ``update`` mode.
 """
 
 from __future__ import annotations
@@ -18,7 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from healthcare_etl_spark.streaming.windows import streaming_events
+from healthcare_etl_spark.streaming.windows import _memory_run, streaming_events
 
 OUTPUT_SCHEMA = "user_id LONG, n_events LONG, total_value DOUBLE, last_seen STRING"
 STATE_SCHEMA = "n LONG, total DOUBLE, last_us LONG"
@@ -73,19 +76,8 @@ def run_stateful_user_profiles(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        profiles.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # update-mode memory sink appends each update; keep the last per user
-    out = spark.table(query_name)
-    out.createOrReplaceTempView(f"{query_name}_raw")
+    _memory_run(profiles, query_name, "update").createOrReplaceTempView(f"{query_name}_raw")
     return spark.sql(
         f"""
         SELECT user_id, n_events, total_value, last_seen FROM (
@@ -109,98 +101,3 @@ def register_stateful_queries() -> None:
         tags=("streaming", "extension", "stateful"),
     )(lambda spark, sf_dir: run_stateful_user_profiles(spark, sf_dir, query_name="q_stateful_sink"))
 
-
-class _UserProfileProcessor:
-    """Spark 4 ``transformWithStateInPandas`` form of the profile fold.
-
-    The successor API to ``applyInPandasWithState``: named state
-    variables (ValueState/ListState/MapState) with per-variable schemas
-    and optional TTL, timers decoupled from state, and initial-state
-    bootstrap — the shape long-running 100 TB streaming jobs want
-    (state-store-partitioned by key, state size O(distinct keys)).
-    Kept alongside the classic form so both APIs stay exercised.
-    """
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("profile", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        (user_id,) = key
-        if self._state.exists():
-            n, total, last_us = self._state.get()
-        else:
-            n, total, last_us = 0, 0.0, 0
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            batch_max_us = int(pdf["ts"].astype("int64").max() // 1000)
-            last_us = max(last_us, batch_max_us)
-        self._state.update((n, total, last_us))
-        last_seen = pd.Timestamp(last_us, unit="us").strftime("%Y-%m-%d %H:%M:%S")
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_events": [n],
-                "total_value": [round(total, 4)],
-                "last_seen": [last_seen],
-            }
-        )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
-
-def run_stateful_user_profiles_tws(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    query_name: str = "stream_user_profiles_tws",
-) -> DataFrame:
-    """``transformWithStateInPandas`` replay of the profile job —
-    same semantics as ``run_stateful_user_profiles``, modern API.
-
-    ENVIRONMENT GATE: Spark's transformWithState Python runner imports
-    ``google.protobuf`` for its state-server protocol; on builds without
-    a working protobuf the stream fails with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE. The equivalence test
-    skips in that case (pytest.importorskip), and this function is NOT
-    registered as a driver query — the classic applyInPandasWithState
-    form (above) carries the driver check on every build.
-    """
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # subclass dynamically so module import works even on builds
-    # without the Spark 4 API (the registry call path guards usage)
-    proc_cls = type("UserProfileProcessor", (StatefulProcessor,), dict(_UserProfileProcessor.__dict__))
-    ev = streaming_events(spark, sf_dir).select("user_id", "ts", "value")
-    profiles = ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=proc_cls(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-    q = (
-        profiles.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = spark.table(query_name)
-    out.createOrReplaceTempView(f"{query_name}_raw")
-    return spark.sql(
-        f"""
-        SELECT user_id, n_events, total_value, last_seen FROM (
-            SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY n_events DESC) AS rn
-            FROM {query_name}_raw
-        ) WHERE rn = 1
-        """
-    )

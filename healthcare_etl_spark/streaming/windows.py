@@ -6,6 +6,12 @@ watermarks. For the fixture replay (file source, one batch,
 ``availableNow`` semantics) the results must equal the batch plans —
 asserted in tests.
 
+Run protocol, shared by every memory-sink job in ``streaming/``
+(``_memory_run``): start the stream on the memory sink under its query
+name and output mode with the default trigger, ``processAllAvailable``,
+stop the query, and read the sink back as a table. Jobs differ only in
+the stream they build and its output mode.
+
 Scale notes: watermark + windowed agg is incremental state in the state
 store, partitioned by (window, key) — the standard unbounded-input
 answer to the batch plans' full-shuffle. ``session_window`` handles
@@ -85,6 +91,23 @@ def streaming_events(
     return stream
 
 
+def _memory_run(
+    stream: DataFrame, name: str, mode: str, progress_sink: list | None = None
+) -> DataFrame:
+    """Run ``stream`` to completion on the memory sink: start it as query
+    ``name`` in output ``mode`` under the default trigger, process all
+    available input, hand ``recentProgress`` to ``progress_sink`` (a
+    list) when given, stop the query, and return the sink table."""
+    q = stream.writeStream.outputMode(mode).format("memory").queryName(name).start()
+    try:
+        q.processAllAvailable()
+        if progress_sink is not None:
+            progress_sink.extend(q.recentProgress)
+    finally:
+        q.stop()
+    return stream.sparkSession.table(name)
+
+
 def run_streaming_tumbling(
     spark: SparkSession,
     sf_dir: str,
@@ -121,19 +144,7 @@ def run_streaming_tumbling(
             "sum_value",
         )
     )
-    q = (
-        agg.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        if progress_sink is not None:
-            progress_sink.extend(q.recentProgress)
-    finally:
-        q.stop()
-    return spark.table(query_name)
+    return _memory_run(agg, query_name, output_mode, progress_sink)
 
 
 def run_streaming_sessionization(
@@ -159,17 +170,7 @@ def run_streaming_sessionization(
             "n_events",
         )
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
+    return _memory_run(agg, query_name, "complete")
 
 
 def run_streaming_dedup(
@@ -197,25 +198,11 @@ def run_streaming_dedup(
     deduped = ev.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["user_id", "event_type"]
     )
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        if progress_sink is not None:
-            progress_sink.extend(q.recentProgress)
-    finally:
-        q.stop()
     return (
-        spark.table(query_name)
+        _memory_run(deduped, query_name, "append", progress_sink)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_unique_users"))
     )
-
-
 
 
 def _top3_per_window(counts: DataFrame) -> DataFrame:
@@ -227,6 +214,19 @@ def _top3_per_window(counts: DataFrame) -> DataFrame:
     return (
         counts.withColumn("rank", F.row_number().over(w_rank).cast("long"))
         .filter(F.col("rank") <= 3)
+    )
+
+
+def _sliding_counts(ev: DataFrame) -> DataFrame:
+    """Event counts per (1-hour window sliding by 15 minutes, event type)."""
+    return (
+        ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            F.date_format("w.start", _TS_FMT).alias("window_start"),
+            "event_type",
+            "n_events",
+        )
     )
 
 
@@ -245,28 +245,8 @@ def run_streaming_sliding_topk(
     it — per-key ranking over a streaming aggregate is not an
     incremental operator, and pushing it into the stream would force
     complete-mode recomputation of every window anyway."""
-    ev = streaming_events(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.date_format("w.start", _TS_FMT).alias("window_start"),
-            "event_type",
-            "n_events",
-        )
-    )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return _top3_per_window(spark.table(query_name))
+    ev = streaming_events(spark, sf_dir).withWatermark("ts", "10 minutes")
+    return _top3_per_window(_memory_run(_sliding_counts(ev), query_name, "complete"))
 
 
 def batch_sliding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,34 +254,47 @@ def batch_sliding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically on batch frames) — the equivalence anchor."""
     from healthcare_etl_spark.sources import load_table
 
-    ev = load_table(spark, sf_dir, "events")
-    agg = (
-        ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.date_format("w.start", _TS_FMT).alias("window_start"),
-            "event_type",
-            "n_events",
-        )
+    return _top3_per_window(_sliding_counts(load_table(spark, sf_dir, "events")))
+
+
+def _hll_registers(ev: DataFrame) -> DataFrame:
+    """(window_start, idx, m): per 1-day window, each HLL register's max
+    leading-zero rank of the hashed user ids — the same register
+    function as the oracle-checked batch q_hll_register_sketch."""
+    from healthcare_etl_spark.operators.dedup import md5_hash31
+    from healthcare_etl_spark.plans.queries_patterns import _HLL_WBITS, _rho_case_sql
+
+    hashed = ev.select(
+        "ts",
+        md5_hash31(
+            F.concat(F.lit("hll:"), F.col("user_id").cast("string"))
+        ).alias("h"),
+    ).withColumn("idx", F.expr(f"h div {2 ** _HLL_WBITS}"))
+    rho = F.expr(_rho_case_sql(f"(h % {2 ** _HLL_WBITS})"))
+    return (
+        hashed.groupBy(F.window("ts", "1 day").alias("w"), "idx")
+        .agg(F.max(rho).cast("long").alias("m"))
+        .select(F.date_format("w.start", _TS_FMT).alias("window_start"), "idx", "m")
     )
-    return _top3_per_window(agg)
-
-
 
 
 def _hll_fold(regs: DataFrame) -> DataFrame:
-    """Registers -> HLL estimate, shared by the streaming sink frame and
-    the batch twin (both are plain DataFrames here). Same integer-
-    numerator harmonic fold + linear-counting branch as the oracle-
-    checked batch q_hll_register_sketch."""
+    """Registers -> HLL estimate per window plus a register-merged ALL
+    row, shared by the streaming sink frame and the batch twin (both
+    are plain DataFrames here). Same integer-numerator harmonic fold +
+    linear-counting branch as the oracle-checked batch
+    q_hll_register_sketch."""
     from healthcare_etl_spark.plans.queries_patterns import (
         _HLL_ALPHA,
         _HLL_M,
         _HLL_WBITS,
     )
 
+    merged = regs.groupBy("idx").agg(F.max("m").cast("long").alias("m")).select(
+        F.lit("ALL").alias("window_start"), "idx", "m"
+    )
     w = 2 ** _HLL_WBITS
-    folded = regs.groupBy("window_start").agg(
+    folded = regs.unionByName(merged).groupBy("window_start").agg(
         (
             F.sum(F.expr(f"CAST(power(2, {_HLL_WBITS} - m) AS BIGINT)"))
             + (F.lit(_HLL_M) - F.count(F.lit(1))) * F.lit(w)
@@ -316,19 +309,10 @@ def _hll_fold(regs: DataFrame) -> DataFrame:
         F.when((raw <= 2.5 * _HLL_M) & (F.col("n_nonzero") < _HLL_M), lin).otherwise(raw),
         2,
     )
-    return folded.select("window_start", "n_nonzero", est.alias("hll_est"))
-
-
-def _hll_register_stream_cols(ev: DataFrame) -> DataFrame:
-    from healthcare_etl_spark.operators.dedup import md5_hash31
-    from healthcare_etl_spark.plans.queries_patterns import _HLL_WBITS
-
-    return ev.select(
-        "ts",
-        md5_hash31(
-            F.concat(F.lit("hll:"), F.col("user_id").cast("string"))
-        ).alias("h"),
-    ).withColumn("idx", F.expr(f"h div {2 ** _HLL_WBITS}"))
+    return (
+        folded.select("window_start", "n_nonzero", est.alias("hll_est"))
+        .orderBy("window_start")
+    )
 
 
 def run_streaming_hll_distinct(
@@ -349,52 +333,16 @@ def run_streaming_hll_distinct(
     equals the batch twin on replay (asserted in tests) because the
     register function and fold are shared code.
     """
-    from healthcare_etl_spark.plans.queries_patterns import _rho_case_sql, _HLL_WBITS
-
-    ev = streaming_events(spark, sf_dir)
-    hashed = _hll_register_stream_cols(ev)
-    rho = F.expr(_rho_case_sql(f"(h % {2 ** _HLL_WBITS})"))
-    agg = (
-        hashed.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 day").alias("w"), "idx")
-        .agg(F.max(rho).cast("long").alias("m"))
-        .select(F.date_format("w.start", _TS_FMT).alias("window_start"), "idx", "m")
-    )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    regs = spark.table(query_name)
-    merged = regs.groupBy("idx").agg(F.max("m").cast("long").alias("m")).select(
-        F.lit("ALL").alias("window_start"), "idx", "m"
-    )
-    return _hll_fold(regs.unionByName(merged)).orderBy("window_start")
+    ev = streaming_events(spark, sf_dir).withWatermark("ts", "2 hours")
+    return _hll_fold(_memory_run(_hll_registers(ev), query_name, "complete"))
 
 
 def batch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of :func:`run_streaming_hll_distinct` — the
     equivalence anchor (F.window + the shared register/fold code)."""
-    from healthcare_etl_spark.plans.queries_patterns import _rho_case_sql, _HLL_WBITS
     from healthcare_etl_spark.sources import load_table
 
-    ev = load_table(spark, sf_dir, "events")
-    hashed = _hll_register_stream_cols(ev)
-    rho = F.expr(_rho_case_sql(f"(h % {2 ** _HLL_WBITS})"))
-    regs = (
-        hashed.groupBy(F.window("ts", "1 day").alias("w"), "idx")
-        .agg(F.max(rho).cast("long").alias("m"))
-        .select(F.date_format("w.start", _TS_FMT).alias("window_start"), "idx", "m")
-    )
-    merged = regs.groupBy("idx").agg(F.max("m").cast("long").alias("m")).select(
-        F.lit("ALL").alias("window_start"), "idx", "m"
-    )
-    return _hll_fold(regs.unionByName(merged)).orderBy("window_start")
+    return _hll_fold(_hll_registers(load_table(spark, sf_dir, "events")))
 
 
 def register_streaming_queries() -> None:

@@ -1,6 +1,6 @@
 """Micro-bench for the Structured Streaming jobs (r10, VERDICT task 10).
 
-The 15 streaming jobs replay the events fixture to completion
+The 14 streaming jobs replay the events fixture to completion
 (Trigger.availableNow semantics, memory/parquet/lakehouse sinks). This
 harness times each job's full replay at the target SF and reports
 wall seconds and rows/s (fixture input rows / wall), plus per-batch
@@ -44,10 +44,7 @@ def main() -> None:
         run_stream_stream_funnel_outer,
     )
     from healthcare_etl_spark.streaming.sinks import run_stream_to_parquet
-    from healthcare_etl_spark.streaming.stateful import (
-        run_stateful_user_profiles,
-        run_stateful_user_profiles_tws,
-    )
+    from healthcare_etl_spark.streaming.stateful import run_stateful_user_profiles
     from healthcare_etl_spark.streaming.windows import (
         run_streaming_dedup,
         run_streaming_hll_distinct,
@@ -77,7 +74,6 @@ def main() -> None:
         "stream_funnel_outer": lambda: run_stream_stream_funnel_outer(spark, sf),
         "stream_enrichment": lambda: run_stream_static_enrichment(spark, sf),
         "stream_user_profiles": lambda: run_stateful_user_profiles(spark, sf),
-        "stream_user_profiles_tws": lambda: run_stateful_user_profiles_tws(spark, sf),
         "stream_to_parquet": lambda: run_stream_to_parquet(
             spark, sf, str(work / "pq_out"), str(work / "pq_ckpt")
         ),

@@ -132,3 +132,57 @@ def test_perfbench_traces_existing_functions():
         if not callable(getattr(importlib.import_module(mod), attr, None))
     ]
     assert not missing, missing
+
+
+def _attr_calls(root: Path, attr: str):
+    """(file, line, call) of every ``.<attr>(...)`` call under ``root``."""
+    return [
+        (path.relative_to(REPO), node.lineno, node)
+        for path in _files(root)
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == attr
+    ]
+
+
+def test_streaming_jobs_share_one_memory_sink_run():
+    """Every memory-sink job runs through ``windows._memory_run``: one
+    ``.format("memory")`` in ``streaming/``, ``processAllAvailable`` only
+    there and in the foreachBatch parquet sink, and one stateful API."""
+    root = PKG / "streaming"
+    memory = [
+        (path, line)
+        for path, line, call in _attr_calls(root, "format")
+        if [_literal(a) for a in call.args] == ["memory"]
+    ]
+    assert len(memory) == 1, memory
+    drains = [(path, line) for path, line, _call in _attr_calls(root, "processAllAvailable")]
+    assert len(drains) <= 2, drains
+    forks = [
+        (path.relative_to(REPO), node.lineno)
+        for path in _files(root)
+        for node in ast.walk(ast.parse(path.read_text()))
+        if "transformWithState" in getattr(node, "attr", getattr(node, "id", ""))
+    ]
+    assert not forks, forks
+
+
+def test_no_broad_except_in_the_package():
+    """Failures raise named errors: no ``except Exception``, ``except
+    BaseException`` or bare ``except`` may swallow one, except in the
+    retry loop of ``sources/retry.py``."""
+    broad = {"Exception", "BaseException"}
+
+    def is_broad(handler: ast.ExceptHandler) -> bool:
+        kinds = handler.type.elts if isinstance(handler.type, ast.Tuple) else [handler.type]
+        return handler.type is None or any(getattr(k, "id", None) in broad for k in kinds)
+
+    found = [
+        f"{path.relative_to(REPO)}:{node.lineno}"
+        for path in _files(PKG)
+        if path != PKG / "sources" / "retry.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.ExceptHandler) and is_broad(node)
+    ]
+    assert not found, found

@@ -1166,30 +1166,6 @@ def test_cms_never_underestimates_and_is_tight(spark, sf_smoke):
     assert est["zzz_absent_token"] >= 0
 
 
-def test_stateful_profiles_tws_equal_batch(spark, sf_smoke):
-    """Spark 4 transformWithStateInPandas form of the profile job must
-    match the batch groupBy — skipped where the runner's protobuf
-    dependency is absent (see run_stateful_user_profiles_tws)."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from healthcare_etl_spark.sources import load_table
-    from healthcare_etl_spark.streaming.stateful import run_stateful_user_profiles_tws
-
-    out = run_stateful_user_profiles_tws(spark, sf_smoke, query_name="t_tws_eq")
-    ev = load_table(spark, sf_smoke, "events")
-    batch = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("bn"), F.round(F.sum("value"), 4).alias("bv")
-    )
-    j = out.join(batch, "user_id")
-    assert out.count() == batch.count()
-    assert (
-        j.filter(
-            (F.col("n_events") != F.col("bn"))
-            | (F.abs(F.col("total_value") - F.col("bv")) > 1e-6)
-        ).count()
-        == 0
-    )
-
-
 def test_bloom_no_false_negatives_and_merges(spark):
     """Every inserted key must probe true (Bloom guarantees no false
     negatives); absent keys mostly probe false at this load factor; and

@@ -265,6 +265,35 @@ def test_delta_classic_checkpoint_keeps_table_features(spark, tmp_path):
     assert sorted(r.id for r in delta.read_delta_table(spark, path).collect()) == list(range(3, 10))
 
 
+@pytest.mark.parametrize(
+    "column_mapping, delete, features",
+    [
+        ("name", False, ["columnMapping", "v2Checkpoint"]),
+        (False, True, ["deletionVectors", "v2Checkpoint"]),
+        ("name", True, ["columnMapping", "deletionVectors", "v2Checkpoint"]),
+    ],
+)
+def test_delta_v2_checkpoint_keeps_the_table_features(
+    spark, tmp_path, column_mapping, delete, features
+):
+    """A V2 checkpoint lists v2Checkpoint next to the features the table
+    already needs: column mapping from a legacy (2, 5) protocol, and
+    deletion vectors once a row delete has upgraded it to (3, 7)."""
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([(i, "a") for i in range(10)], "id long, s string")
+    delta.write_delta_table(df, path, column_mapping=column_mapping)
+    if delete:
+        delta.delete_rows(spark, path, "id < 3")
+        delta.optimize_compact(spark, path)
+    delta.write_checkpoint_v2(spark, path)
+    protocol = delta._replay(path).protocol
+    assert (protocol["minReaderVersion"], protocol["minWriterVersion"]) == (3, 7)
+    assert protocol["readerFeatures"] == protocol["writerFeatures"] == features
+    assert sorted(r.id for r in delta.read_delta_table(spark, path).collect()) == list(
+        range(3 if delete else 0, 10)
+    )
+
+
 @pytest.mark.parametrize("checkpoint", ["write_checkpoint", "write_checkpoint_v2"])
 def test_delta_checkpoint_keeps_the_column_mapping_mode(spark, tmp_path, checkpoint):
     """A checkpoint's metaData carries the table configuration, so an
