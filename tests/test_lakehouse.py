@@ -272,6 +272,7 @@ def test_delta_classic_checkpoint_keeps_table_features(spark, tmp_path):
         (False, True, ["deletionVectors", "v2Checkpoint"]),
         ("name", True, ["columnMapping", "deletionVectors", "v2Checkpoint"]),
     ],
+    ids=["column_mapping", "deletion_vectors", "both"],
 )
 def test_delta_v2_checkpoint_keeps_the_table_features(
     spark, tmp_path, column_mapping, delete, features
