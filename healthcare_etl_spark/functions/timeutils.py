@@ -23,6 +23,10 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# Output format of every formatted timestamp (batch and streaming twins
+# must format identically).
+TS_FMT = "yyyy-MM-dd HH:mm:ss"
+
 
 def ts_micros(col: Column | str) -> Column:
     """Epoch microseconds (BIGINT) from TIMESTAMP / TIMESTAMP_NTZ / DATE."""

@@ -17,10 +17,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from healthcare_etl_spark.functions.rounding import stable_round
+from healthcare_etl_spark.functions.timeutils import TS_FMT
 from healthcare_etl_spark.plans.registry import register
 from healthcare_etl_spark.sources import load_table, local_frame, spread
-
-_TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
 
 @register(
@@ -255,7 +254,7 @@ def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return joined.select(
-        F.date_format("h", _TS_FMT).alias("hour"),
+        F.date_format("h", TS_FMT).alias("hour"),
         "event_type",
         F.col("sum_value").alias("observed"),
         F.coalesce(F.last("sum_value", ignorenulls=True).over(w), F.lit(0.0)).alias(
@@ -551,7 +550,7 @@ def q_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.join(per, ["user_id", "session_seq"], "left").select(
         "user_id",
         "session_seq",
-        F.date_format("start", _TS_FMT).alias("session_start"),
+        F.date_format("start", TS_FMT).alias("session_start"),
         "n_events",
         F.coalesce("n_err", F.lit(0)).alias("n_errors_during"),
     )

@@ -607,19 +607,18 @@ def ridge_2f(
         F.sum(F.col("x2") * F.col("y")).alias("s2y"),
         F.sum(F.col("y") * F.col("y")).alias("syy"),
     )
-    r6 = lambda c: stable_round(c, 6)  # noqa: E731
     cm = m.select(
         "g",
         "n",
-        r6(F.col("s11") - F.col("s1") * F.col("s1") / F.col("n")).alias("c11"),
-        r6(F.col("s12") - F.col("s1") * F.col("s2") / F.col("n")).alias("c12"),
-        r6(F.col("s22") - F.col("s2") * F.col("s2") / F.col("n")).alias("c22"),
-        r6(F.col("s1y") - F.col("s1") * F.col("sy") / F.col("n")).alias("c1y"),
-        r6(F.col("s2y") - F.col("s2") * F.col("sy") / F.col("n")).alias("c2y"),
-        r6(F.col("syy") - F.col("sy") * F.col("sy") / F.col("n")).alias("cyy"),
-        r6(F.col("s1") / F.col("n")).alias("m1"),
-        r6(F.col("s2") / F.col("n")).alias("m2"),
-        r6(F.col("sy") / F.col("n")).alias("my"),
+        stable_round(F.col("s11") - F.col("s1") * F.col("s1") / F.col("n")).alias("c11"),
+        stable_round(F.col("s12") - F.col("s1") * F.col("s2") / F.col("n")).alias("c12"),
+        stable_round(F.col("s22") - F.col("s2") * F.col("s2") / F.col("n")).alias("c22"),
+        stable_round(F.col("s1y") - F.col("s1") * F.col("sy") / F.col("n")).alias("c1y"),
+        stable_round(F.col("s2y") - F.col("s2") * F.col("sy") / F.col("n")).alias("c2y"),
+        stable_round(F.col("syy") - F.col("sy") * F.col("sy") / F.col("n")).alias("cyy"),
+        stable_round(F.col("s1") / F.col("n")).alias("m1"),
+        stable_round(F.col("s2") / F.col("n")).alias("m2"),
+        stable_round(F.col("sy") / F.col("n")).alias("my"),
     )
     det = (F.col("c11") + F.lit(lam)) * (F.col("c22") + F.lit(lam)) - F.col("c12") * F.col("c12")
     b1 = ((F.col("c22") + F.lit(lam)) * F.col("c1y") - F.col("c12") * F.col("c2y")) / det
@@ -632,10 +631,10 @@ def ridge_2f(
     return cm.select(
         F.col("g").alias(group_col),
         "n",
-        r6(b1).alias("beta_x1"),
-        r6(b2).alias("beta_x2"),
-        r6(F.col("my") - b1 * F.col("m1") - b2 * F.col("m2")).alias("intercept"),
-        r6(F.lit(1.0) - sse / F.col("cyy")).alias("r2"),
+        stable_round(b1).alias("beta_x1"),
+        stable_round(b2).alias("beta_x2"),
+        stable_round(F.col("my") - b1 * F.col("m1") - b2 * F.col("m2")).alias("intercept"),
+        stable_round(F.lit(1.0) - sse / F.col("cyy")).alias("r2"),
     )
 
 

@@ -14,10 +14,9 @@ from pyspark.sql import functions as F
 from healthcare_etl_spark.operators.asof import asof_join
 from healthcare_etl_spark.operators.sessionize import session_stats
 from healthcare_etl_spark.functions.rounding import stable_round
+from healthcare_etl_spark.functions.timeutils import TS_FMT
 from healthcare_etl_spark.plans.registry import register
 from healthcare_etl_spark.sources import load_table
-
-_TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
 
 @register(
@@ -44,7 +43,7 @@ def q_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             stable_round(F.avg("value"), 6).alias("avg_value"),
         )
         .select(
-            F.date_format("w.start", _TS_FMT).alias("window_start"),
+            F.date_format("w.start", TS_FMT).alias("window_start"),
             "event_type",
             "n_events",
             "sum_value",
@@ -80,7 +79,7 @@ def q_event_windows_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             stable_round(F.sum("value"), 4).alias("sum_value"),
         )
         .select(
-            F.date_format("w.start", _TS_FMT).alias("window_start"),
+            F.date_format("w.start", TS_FMT).alias("window_start"),
             "n_events",
             "sum_value",
         )
@@ -172,7 +171,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = asof_join(ev, daily, on="ts", value_cols=["rate"])
     return joined.select(
         "event_id",
-        F.date_format("ts", _TS_FMT).alias("ts"),
+        F.date_format("ts", TS_FMT).alias("ts"),
         "rate",
     ).filter(F.col("rate").isNotNull())
 
@@ -287,8 +286,8 @@ def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "user_id",
         "event_type",
-        F.date_format("valid_from", _TS_FMT).alias("valid_from"),
-        F.date_format("valid_to", _TS_FMT).alias("valid_to"),
+        F.date_format("valid_from", TS_FMT).alias("valid_from"),
+        F.date_format("valid_to", TS_FMT).alias("valid_to"),
         "is_current",
     )
 
@@ -480,7 +479,7 @@ def q_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rangeBetween(-240, Window.currentRow)
     )
     return per_min.select(
-        F.date_format("minute", _TS_FMT).alias("minute"),
+        F.date_format("minute", TS_FMT).alias("minute"),
         "n",
         stable_round(F.avg("n").over(w), 6).alias("moving_avg_5m"),
     )
@@ -860,7 +859,7 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return final.filter(F.col("last_op") != "D").select(
         "user_id",
         stable_round(F.col("last_value"), 6).alias("final_value"),
-        F.date_format("last_ts", _TS_FMT).alias("last_change"),
+        F.date_format("last_ts", TS_FMT).alias("last_change"),
         "n_ops",
     )
 

@@ -23,10 +23,18 @@ realizations.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from healthcare_etl_spark.functions.rounding import stable_round
+from healthcare_etl_spark.functions.rounding import stable_round, stable_round_sql
+from healthcare_etl_spark.operators.logistic import (
+    LOGISTIC,
+    irls_beta_ctes,
+    irls_fit,
+    irls_oracle_sql,
+    logistic_irls,
+    logistic_p,
+)
 from healthcare_etl_spark.plans.registry import register
 from healthcare_etl_spark.sources import load_table, local_frame, spread
 
@@ -875,65 +883,42 @@ FROM events GROUP BY user_id
 """.strip()
 
 
-def _register_logistic() -> None:
-    from healthcare_etl_spark.operators.logistic import irls_oracle_sql, logistic_irls
-
-    @register(
-        "q_logistic_regression",
-        oracle=irls_oracle_sql(_logistic_features_sql()),
-        description=(
-            "In-engine logistic regression by IRLS (4 rounds): "
-            "P(conversion) ~ sigmoid(b0 + b1*ln(1+clicks) + "
-            "b2*ln(1+views)) at user level, reporting coefficients, "
-            "final log-likelihood and training accuracy — the "
-            "classification member of the in-plan ML family "
-            "(q_ridge_regression / q_kmeans_clusters / q_pca_projection "
-            "/ q_nb_lang_confusion). Every round is ONE map-side-"
-            "combined moment pass (9 Gram sums + 3 RHS) followed by a "
-            "closed-form 3x3 Cramer solve; the 3-coefficient state "
-            "crosses the driver as rounded doubles, k-means-centroid "
-            "style — nothing data-sized ever leaves the executors. "
-            "Moments and coefficients are 6dp-rounded each round, and "
-            "the oracle unrolls the identical arithmetic per round, so "
-            "both engines step through bit-identical model states."
-        ),
-        tags=("analytics", "extension", "stats", "ml"),
+def _logistic_features(spark: SparkSession, sf_dir: str, *extra: Column) -> DataFrame:
+    """Spark twin of :func:`_logistic_features_sql`, plus ``extra``
+    per-user aggregates."""
+    kind = F.col("event_type")
+    return load_table(spark, sf_dir, "events").groupBy("user_id").agg(
+        F.log(F.lit(1.0) + F.sum(F.when(kind == "click", 1).otherwise(0))).alias("x1"),
+        F.log(F.lit(1.0) + F.sum(F.when(kind == "view", 1).otherwise(0))).alias("x2"),
+        F.max(F.when((kind == "purchase") & (F.col("value") > 150), 1).otherwise(0)).alias("y"),
+        *extra,
     )
-    def q_logistic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = load_table(spark, sf_dir, "events")
-        features = ev.groupBy("user_id").agg(
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            ).alias("x1"),
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-            ).alias("x2"),
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("value") > 150), 1
-                ).otherwise(0)
-            ).alias("y"),
-        )
-        # Sufficient-statistics compression (r10, guide §2.3): x1/x2 are
-        # ln(1+count) of small per-user counts, so the distinct
-        # (x1, x2, y) grid is tiny. The 4 IRLS moment passes and the
-        # final scoring aggregate all run weighted over the grid —
-        # at 100 TB the data is scanned once to build the grid instead
-        # of once per IRLS round.
-        grid = features.groupBy("x1", "x2", "y").agg(
-            F.count(F.lit(1)).alias("cnt")
-        ).persist()
-        try:
-            return logistic_irls(grid, weight="cnt")
-        finally:
-            # Lazy result: unpersist AFTER the plan is built is safe —
-            # blocks are dropped when the caller's action completes.
-            grid.unpersist()
 
 
-_register_logistic()
+
+@register(
+    "q_logistic_regression",
+    oracle=irls_oracle_sql(_logistic_features_sql()),
+    description=(
+        "In-engine logistic regression by IRLS (4 rounds): "
+        "P(conversion) ~ sigmoid(b0 + b1*ln(1+clicks) + "
+        "b2*ln(1+views)) at user level, reporting coefficients, "
+        "final log-likelihood and training accuracy — the "
+        "classification member of the in-plan ML family "
+        "(q_ridge_regression / q_kmeans_clusters / q_pca_projection "
+        "/ q_nb_lang_confusion). Every round is ONE map-side-"
+        "combined moment pass (9 Gram sums + 3 RHS) followed by a "
+        "closed-form 3x3 Cramer solve; the 3-coefficient state "
+        "crosses the driver as rounded doubles, k-means-centroid "
+        "style — nothing data-sized ever leaves the executors. "
+        "Moments and coefficients are 6dp-rounded each round, and "
+        "the oracle unrolls the identical arithmetic per round, so "
+        "both engines step through bit-identical model states."
+    ),
+    tags=("analytics", "extension", "stats", "ml"),
+)
+def q_logistic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return logistic_irls(_logistic_features(spark, sf_dir))
 
 
 @register(
@@ -1018,7 +1003,6 @@ def _markov_oracle_sql(rounds: int = 12) -> str:
     transition matrix CTE, a uniform start vector over observed states,
     and per-round (vector x matrix) folds with 6dp re-rounding so the
     iterate matches the Spark driver-side chain bit-for-bit."""
-    r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
     parts = [
         """pairs AS (
     SELECT event_type AS f,
@@ -1030,19 +1014,19 @@ def _markov_oracle_sql(rounds: int = 12) -> str:
 )""",
         """tot AS (SELECT f, CAST(sum(n) AS BIGINT) AS tn FROM cnt GROUP BY 1)""",
         f"""p AS (
-    SELECT c.f, c.t, {r6('c.n * 1.0 / tot.tn')} AS p FROM cnt c JOIN tot ON c.f = tot.f
+    SELECT c.f, c.t, {stable_round_sql('c.n * 1.0 / tot.tn')} AS p FROM cnt c JOIN tot ON c.f = tot.f
 )""",
         # canonical state set: UNION of sources and targets, so a state
         # seen only as a target (or only as a source) still gets a row
         # on both engines (emitting 0.0 when unreached)
         """states AS (SELECT f AS s FROM cnt UNION SELECT t FROM cnt)""",
         """k AS (SELECT CAST(count(*) AS BIGINT) AS kk FROM states)""",
-        f"""v_0 AS (SELECT s, {r6('1.0 / kk')} AS v FROM states CROSS JOIN k)""",
+        f"""v_0 AS (SELECT s, {stable_round_sql('1.0 / kk')} AS v FROM states CROSS JOIN k)""",
     ]
     for r in range(1, rounds + 1):
         parts.append(
             f"""v_{r} AS (
-    SELECT st.s, {r6('coalesce(sum(v.v * p.p), 0.0)')} AS v
+    SELECT st.s, {stable_round_sql('coalesce(sum(v.v * p.p), 0.0)')} AS v
     FROM states st
     LEFT JOIN p ON p.t = st.s
     LEFT JOIN v_{r - 1} v ON v.s = p.f
@@ -1344,11 +1328,8 @@ _register_shapley()
 
 
 def _ece_oracle() -> str:
-    from healthcare_etl_spark.operators.logistic import irls_beta_ctes
-
-    parts, final = irls_beta_ctes(_logistic_features_sql())
+    parts, final = irls_beta_ctes(_logistic_features_sql(), LOGISTIC)
     joined = ",\n".join(parts)
-    r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
     return f"""WITH {joined},
 scored AS (
     SELECT y, (1.0 / (1.0 + exp(-(b.b0 + b.b1 * x1 + b.b2 * x2)))) AS p
@@ -1359,97 +1340,71 @@ bins AS (
 ),
 stats AS (
     SELECT bin, CAST(count(*) AS BIGINT) AS n,
-           {r6('sum(p) / count(*)')} AS mean_p,
-           {r6('sum(y) * 1.0 / count(*)')} AS conv_rate
+           {stable_round_sql('sum(p) / count(*)')} AS mean_p,
+           {stable_round_sql('sum(y) * 1.0 / count(*)')} AS conv_rate
     FROM bins GROUP BY bin
 ),
 weighted AS (
     SELECT bin, n, mean_p, conv_rate,
-           {r6('abs(conv_rate - mean_p)')} AS gap,
+           {stable_round_sql('abs(conv_rate - mean_p)')} AS gap,
            (n * 1.0 / sum(n) OVER ()) AS wgt
     FROM stats
 )
 SELECT bin, n, mean_p, conv_rate, gap,
-       {r6('sum(wgt * gap) OVER ()')} AS ece
+       {stable_round_sql('sum(wgt * gap) OVER ()')} AS ece
 FROM weighted
 """
 
 
-def _register_calibration_ece() -> None:
-    @register(
-        "q_calibration_ece",
-        oracle=_ece_oracle(),
-        description=(
-            "Reliability diagram + expected calibration error for the "
-            "IRLS logistic model (q_logistic_regression): fitted "
-            "probabilities fall into 10 bins, each bin reports its "
-            "mean predicted p vs its realized conversion rate, and ECE "
-            "folds the bin-weighted gaps — the standard answer to 'is "
-            "0.7 from this model actually 70%?' that accuracy cannot "
-            "give. The fit reuses logistic_fit (4 moment passes); the "
-            "scoring pass is one more scan binned by a fixed literal "
-            "rule; the ECE window rides the 10-row bin table. Gaps and "
-            "ECE are computed from the 6dp-rounded bin statistics, so "
-            "both engines fold identical numbers."
-        ),
-        tags=("analytics", "extension", "stats", "ml"),
+@register(
+    "q_calibration_ece",
+    oracle=_ece_oracle(),
+    description=(
+        "Reliability diagram + expected calibration error for the "
+        "IRLS logistic model (q_logistic_regression): fitted "
+        "probabilities fall into 10 bins, each bin reports its "
+        "mean predicted p vs its realized conversion rate, and ECE "
+        "folds the bin-weighted gaps — the standard answer to 'is "
+        "0.7 from this model actually 70%?' that accuracy cannot "
+        "give. The fit is irls_fit (4 moment passes); the "
+        "scoring pass is one more scan binned by a fixed literal "
+        "rule; the ECE window rides the 10-row bin table. Gaps and "
+        "ECE are computed from the 6dp-rounded bin statistics, so "
+        "both engines fold identical numbers."
+    ),
+    tags=("analytics", "extension", "stats", "ml"),
+)
+def q_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
+    features = _logistic_features(spark, sf_dir)
+    p = logistic_p(irls_fit(features, LOGISTIC))
+    bins = features.select(
+        F.least(F.floor(p * 10.0).cast("long"), F.lit(9)).alias("bin"),
+        p.alias("p"),
+        F.col("y"),
     )
-    def q_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from healthcare_etl_spark.operators.logistic import logistic_fit
-
-        ev = load_table(spark, sf_dir, "events")
-        features = ev.groupBy("user_id").agg(
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            ).alias("x1"),
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-            ).alias("x2"),
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("value") > 150), 1
-                ).otherwise(0)
-            ).alias("y"),
-        ).persist()
-        try:
-            b0, b1, b2 = logistic_fit(features)
-            eta = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
-            p = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
-            bins = features.select(
-                F.least(F.floor(p * 10.0).cast("long"), F.lit(9)).alias("bin"),
-                p.alias("p"),
-                F.col("y"),
-            )
-            stats = bins.groupBy("bin").agg(
-                F.count(F.lit(1)).alias("n"),
-                stable_round(F.sum("p") / F.count(F.lit(1)), 6).alias("mean_p"),
-                stable_round(F.sum("y") * 1.0 / F.count(F.lit(1)), 6).alias("conv_rate"),
-            )
-            w_all = Window.partitionBy()
-            gap = F.abs(F.col("conv_rate") - F.col("mean_p"))
-            weighted = stats.select(
-                "bin",
-                "n",
-                "mean_p",
-                "conv_rate",
-                stable_round(gap, 6).alias("gap"),
-                (F.col("n") * 1.0 / F.sum("n").over(w_all)).alias("wgt"),
-            )
-            return weighted.select(
-                "bin",
-                "n",
-                "mean_p",
-                "conv_rate",
-                "gap",
-                stable_round(F.sum(F.col("wgt") * F.col("gap")).over(w_all), 6).alias("ece"),
-            )
-        finally:
-            features.unpersist()
-
-
-_register_calibration_ece()
+    stats = bins.groupBy("bin").agg(
+        F.count(F.lit(1)).alias("n"),
+        stable_round(F.sum("p") / F.count(F.lit(1)), 6).alias("mean_p"),
+        stable_round(F.sum("y") * 1.0 / F.count(F.lit(1)), 6).alias("conv_rate"),
+    )
+    w_all = Window.partitionBy()
+    gap = F.abs(F.col("conv_rate") - F.col("mean_p"))
+    weighted = stats.select(
+        "bin",
+        "n",
+        "mean_p",
+        "conv_rate",
+        stable_round(gap, 6).alias("gap"),
+        (F.col("n") * 1.0 / F.sum("n").over(w_all)).alias("wgt"),
+    )
+    return weighted.select(
+        "bin",
+        "n",
+        "mean_p",
+        "conv_rate",
+        "gap",
+        stable_round(F.sum(F.col("wgt") * F.col("gap")).over(w_all), 6).alias("ece"),
+    )
 
 
 @register(
@@ -2331,11 +2286,8 @@ def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _isotonic_oracle() -> str:
-    from healthcare_etl_spark.operators.logistic import irls_beta_ctes
-
-    parts, final = irls_beta_ctes(_logistic_features_sql())
+    parts, final = irls_beta_ctes(_logistic_features_sql(), LOGISTIC)
     joined = ",\n".join(parts)
-    r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
     return f"""WITH {joined},
 scored AS (
     SELECT y, (1.0 / (1.0 + exp(-(b.b0 + b.b1 * x1 + b.b2 * x2)))) AS p
@@ -2360,95 +2312,69 @@ inner_ AS (
 ),
 iso AS (SELECT i AS bin, max(mn) AS iso_raw FROM inner_ GROUP BY i)
 SELECT b.bin, b.n,
-       {r6('b.c * 1.0 / b.n')} AS conv_rate,
-       {r6('iso.iso_raw')}     AS iso_rate
+       {stable_round_sql('b.c * 1.0 / b.n')} AS conv_rate,
+       {stable_round_sql('iso.iso_raw')}     AS iso_rate
 FROM bins b JOIN iso ON iso.bin = b.bin
 """
 
 
-def _register_isotonic() -> None:
-    @register(
-        "q_isotonic_calibration",
-        oracle=_isotonic_oracle(),
-        description=(
-            "Isotonic calibration of the IRLS model's probability bins "
-            "— the FIX for what q_calibration_ece diagnoses: the "
-            "monotone-nondecreasing rate curve closest (weighted least "
-            "squares) to the raw per-bin conversion rates, computed by "
-            "the closed-form minimax identity iso_i = max_(j<=i) "
-            "min_(k>=i) mean(conv over bins j..k) — equivalent to "
-            "pool-adjacent-violators but expressible as three joins "
-            "over the <=10-row bin table, no iteration. Interval means "
-            "are single divisions of exact BIGINT sums (identical "
-            "rationals give identical doubles on both engines), so the "
-            "min/max lattice is bit-deterministic. The data-sized work "
-            "is the same fit + one binned scan as the ECE query."
-        ),
-        tags=("analytics", "extension", "stats", "ml"),
+@register(
+    "q_isotonic_calibration",
+    oracle=_isotonic_oracle(),
+    description=(
+        "Isotonic calibration of the IRLS model's probability bins "
+        "— the FIX for what q_calibration_ece diagnoses: the "
+        "monotone-nondecreasing rate curve closest (weighted least "
+        "squares) to the raw per-bin conversion rates, computed by "
+        "the closed-form minimax identity iso_i = max_(j<=i) "
+        "min_(k>=i) mean(conv over bins j..k) — equivalent to "
+        "pool-adjacent-violators but expressible as three joins "
+        "over the <=10-row bin table, no iteration. Interval means "
+        "are single divisions of exact BIGINT sums (identical "
+        "rationals give identical doubles on both engines), so the "
+        "min/max lattice is bit-deterministic. The data-sized work "
+        "is the same fit + one binned scan as the ECE query."
+    ),
+    tags=("analytics", "extension", "stats", "ml"),
+)
+def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    features = _logistic_features(spark, sf_dir)
+    p = logistic_p(irls_fit(features, LOGISTIC))
+    bins = (
+        features.select(
+            F.least(F.floor(p * 10.0).cast("long"), F.lit(9)).alias("bin"),
+            F.col("y"),
+        )
+        .groupBy("bin")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("y").alias("c"))
     )
-    def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from healthcare_etl_spark.operators.logistic import logistic_fit
-
-        ev = load_table(spark, sf_dir, "events")
-        features = ev.groupBy("user_id").agg(
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            ).alias("x1"),
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-            ).alias("x2"),
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("value") > 150), 1
-                ).otherwise(0)
-            ).alias("y"),
-        ).persist()
-        try:
-            b0, b1, b2 = logistic_fit(features)
-            eta = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
-            p = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
-            bins = (
-                features.select(
-                    F.least(F.floor(p * 10.0).cast("long"), F.lit(9)).alias("bin"),
-                    F.col("y"),
-                )
-                .groupBy("bin")
-                .agg(F.count(F.lit(1)).alias("n"), F.sum("y").alias("c"))
-            )
-            j = bins.select(F.col("bin").alias("j"))
-            k = bins.select(F.col("bin").alias("k"))
-            mbl = bins.select(
-                F.col("bin").alias("mb"), F.col("n").alias("mn_"), F.col("c").alias("mc")
-            )
-            iv = (
-                j.join(k, F.col("j") <= F.col("k"))
-                .join(mbl, (F.col("mb") >= F.col("j")) & (F.col("mb") <= F.col("k")))
-                .groupBy("j", "k")
-                .agg((F.sum("mc") * 1.0 / F.sum("mn_")).alias("mean_jk"))
-            )
-            i_tbl = bins.select(F.col("bin").alias("i"))
-            inner = (
-                iv.join(i_tbl, (F.col("j") <= F.col("i")) & (F.col("k") >= F.col("i")))
-                .groupBy("j", "i")
-                .agg(F.min("mean_jk").alias("mn"))
-            )
-            iso = inner.groupBy(F.col("i").alias("bin")).agg(F.max("mn").alias("iso_raw"))
-            return (
-                bins.join(iso, "bin")
-                .select(
-                    "bin",
-                    "n",
-                    stable_round(F.col("c") * 1.0 / F.col("n"), 6).alias("conv_rate"),
-                    stable_round(F.col("iso_raw"), 6).alias("iso_rate"),
-                )
-            )
-        finally:
-            features.unpersist()
-
-
-_register_isotonic()
+    j = bins.select(F.col("bin").alias("j"))
+    k = bins.select(F.col("bin").alias("k"))
+    mbl = bins.select(
+        F.col("bin").alias("mb"), F.col("n").alias("mn_"), F.col("c").alias("mc")
+    )
+    iv = (
+        j.join(k, F.col("j") <= F.col("k"))
+        .join(mbl, (F.col("mb") >= F.col("j")) & (F.col("mb") <= F.col("k")))
+        .groupBy("j", "k")
+        .agg((F.sum("mc") * 1.0 / F.sum("mn_")).alias("mean_jk"))
+    )
+    i_tbl = bins.select(F.col("bin").alias("i"))
+    inner = (
+        iv.join(i_tbl, (F.col("j") <= F.col("i")) & (F.col("k") >= F.col("i")))
+        .groupBy("j", "i")
+        .agg(F.min("mean_jk").alias("mn"))
+    )
+    iso = inner.groupBy(F.col("i").alias("bin")).agg(F.max("mn").alias("iso_raw"))
+    return (
+        bins.join(iso, "bin")
+        .select(
+            "bin",
+            "n",
+            stable_round(F.col("c") * 1.0 / F.col("n"), 6).alias("conv_rate"),
+            stable_round(F.col("iso_raw"), 6).alias("iso_rate"),
+        )
+    )
 
 
 _TRIGRAM_QUERY = "table scan"
@@ -2737,9 +2663,7 @@ _register_ppr()
 
 
 def _roc_auc_oracle() -> str:
-    from healthcare_etl_spark.operators.logistic import irls_beta_ctes
-
-    parts, final = irls_beta_ctes(_logistic_features_sql())
+    parts, final = irls_beta_ctes(_logistic_features_sql(), LOGISTIC)
     joined = ",\n".join(parts)
     return f"""WITH {joined},
 scored AS (
@@ -2774,87 +2698,60 @@ FROM m
 """.strip()
 
 
-def _register_roc_auc() -> None:
-    @register(
-        "q_roc_auc",
-        oracle=_roc_auc_oracle(),
-        description=(
-            "ROC-AUC of the IRLS model via the rank formulation (AUC = "
-            "Mann-Whitney U of the positive class's scores, "
-            "tie-corrected with average ranks) — the threshold-free "
-            "discrimination metric next to q_calibration_ece's "
-            "calibration view; plus the Gini coefficient 2*AUC-1. "
-            "Scores are 6dp-rounded BEFORE ranking so the distinct-"
-            "score table is bounded (<=10^6 keys at any corpus size), "
-            "and even that bounded table never single-partition-sorts: "
-            "the cumulative count rides the two-phase bucketed carry "
-            "(operators/scale.bucketed_prefix over micro-prob div-4096 "
-            "buckets, <=245-row summary prefix); ranks are the "
-            "exact doubled-integer trick from q_mann_whitney, so AUC "
-            "is one rounded division of BIGINTs."
-        ),
-        tags=("analytics", "extension", "stats", "ml"),
+@register(
+    "q_roc_auc",
+    oracle=_roc_auc_oracle(),
+    description=(
+        "ROC-AUC of the IRLS model via the rank formulation (AUC = "
+        "Mann-Whitney U of the positive class's scores, "
+        "tie-corrected with average ranks) — the threshold-free "
+        "discrimination metric next to q_calibration_ece's "
+        "calibration view; plus the Gini coefficient 2*AUC-1. "
+        "Scores are 6dp-rounded BEFORE ranking so the distinct-"
+        "score table is bounded (<=10^6 keys at any corpus size), "
+        "and even that bounded table never single-partition-sorts: "
+        "the cumulative count rides the two-phase bucketed carry "
+        "(operators/scale.bucketed_prefix over micro-prob div-4096 "
+        "buckets, <=245-row summary prefix); ranks are the "
+        "exact doubled-integer trick from q_mann_whitney, so AUC "
+        "is one rounded division of BIGINTs."
+    ),
+    tags=("analytics", "extension", "stats", "ml"),
+)
+def q_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from healthcare_etl_spark.operators.scale import bucketed_prefix
+
+    features = _logistic_features(spark, sf_dir)
+    beta = irls_fit(features, LOGISTIC)
+    # Integer micro-prob key: pm/1e6 is exactly the oracle's
+    # 6dp-rounded p (injective), so grouping by pm == grouping
+    # by p while the bucket key stays integral.
+    pm = F.round(logistic_p(beta) * 1000000.0).cast("long")
+    grp = features.select(pm.alias("pm"), "y").groupBy("pm").agg(
+        F.count(F.lit(1)).alias("t"), F.sum("y").alias("t_pos")
     )
-    def q_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from healthcare_etl_spark.operators.logistic import logistic_fit
-
-        ev = load_table(spark, sf_dir, "events")
-        features = ev.groupBy("user_id").agg(
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            ).alias("x1"),
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-            ).alias("x2"),
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("value") > 150), 1
-                ).otherwise(0)
-            ).alias("y"),
-        ).persist()
-        try:
-            from healthcare_etl_spark.operators.scale import bucketed_prefix
-
-            b0, b1, b2 = logistic_fit(features)
-            eta = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
-            # Integer micro-prob key: pm/1e6 is exactly the oracle's
-            # 6dp-rounded p (injective), so grouping by pm == grouping
-            # by p while the bucket key stays integral.
-            pm = F.round(
-                (F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))) * 1000000.0
-            ).cast("long")
-            grp = features.select(pm.alias("pm"), "y").groupBy("pm").agg(
-                F.count(F.lit(1)).alias("t"), F.sum("y").alias("t_pos")
-            )
-            ranked = bucketed_prefix(
-                grp,
-                buckets=[F.expr("pm div 4096")],
-                order_by=[F.col("pm")],
-                value=F.col("t"),
-                agg="sum",
-                exclusive=True,
-                out_col="cb",
-            ).select("t", "t_pos", F.col("cb").cast("long").alias("cb"))
-            t, tp, cb = F.col("t"), F.col("t_pos"), F.col("cb")
-            m = ranked.agg(
-                F.sum(tp).alias("n_pos"),
-                F.sum(t - tp).alias("n_neg"),
-                F.sum(tp * (2 * cb + t + 1)).alias("rank2_pos"),
-            )
-            npos, nneg = F.col("n_pos"), F.col("n_neg")
-            auc = ((F.col("rank2_pos") - npos * (npos + 1)) / 2.0) / (npos * 1.0 * nneg)
-            return m.select(
-                npos.alias("n_pos"),
-                nneg.alias("n_neg"),
-                stable_round(auc, 6).alias("auc"),
-                stable_round(2.0 * auc - 1.0, 6).alias("gini_coefficient"),
-            )
-        finally:
-            features.unpersist()
-
-
-_register_roc_auc()
+    ranked = bucketed_prefix(
+        grp,
+        buckets=[F.expr("pm div 4096")],
+        order_by=[F.col("pm")],
+        value=F.col("t"),
+        agg="sum",
+        exclusive=True,
+        out_col="cb",
+    ).select("t", "t_pos", F.col("cb").cast("long").alias("cb"))
+    t, tp, cb = F.col("t"), F.col("t_pos"), F.col("cb")
+    m = ranked.agg(
+        F.sum(tp).alias("n_pos"),
+        F.sum(t - tp).alias("n_neg"),
+        F.sum(tp * (2 * cb + t + 1)).alias("rank2_pos"),
+    )
+    npos, nneg = F.col("n_pos"), F.col("n_neg")
+    auc = ((F.col("rank2_pos") - npos * (npos + 1)) / 2.0) / (npos * 1.0 * nneg)
+    return m.select(
+        npos.alias("n_pos"),
+        nneg.alias("n_neg"),
+        stable_round(auc, 6).alias("auc"),
+        stable_round(2.0 * auc - 1.0, 6).alias("gini_coefficient"),
+    )
 
 

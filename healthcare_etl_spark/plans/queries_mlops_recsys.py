@@ -17,11 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from healthcare_etl_spark.functions.rounding import stable_round
+from healthcare_etl_spark.functions.rounding import stable_round, stable_round_sql
+from healthcare_etl_spark.operators.logistic import LOGISTIC, irls_beta_ctes, irls_fit, logistic_p
 from healthcare_etl_spark.plans.registry import register
 from healthcare_etl_spark.sources import load_table, local_frame
 
 from healthcare_etl_spark.plans.queries_mlops import (  # noqa: F401
+    _logistic_features,
     _logistic_features_sql,
     _markov_round6,
 )
@@ -109,7 +111,6 @@ _NB_FEATS = ("click", "view", "error", "signup")
 
 
 def _nb_oracle() -> str:
-    r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
     feat_cols = ",\n           ".join(
         f"CAST(max(CASE WHEN event_type = '{f}' THEN 1 ELSE 0 END) AS BIGINT) AS f_{f}"
         for f in _NB_FEATS
@@ -120,10 +121,10 @@ def _nb_oracle() -> str:
         for f in _NB_FEATS
     )
     w_cols = ",\n           ".join(
-        f"{r6(f'ln((c1_{f} + 1.0) / (n1 + 2.0))')} AS w1_{f},\n"
-        f"           {r6(f'ln(1.0 - (c1_{f} + 1.0) / (n1 + 2.0))')} AS z1_{f},\n"
-        f"           {r6(f'ln((c0_{f} + 1.0) / (n0 + 2.0))')} AS w0_{f},\n"
-        f"           {r6(f'ln(1.0 - (c0_{f} + 1.0) / (n0 + 2.0))')} AS z0_{f}"
+        f"{stable_round_sql(f'ln((c1_{f} + 1.0) / (n1 + 2.0))')} AS w1_{f},\n"
+        f"           {stable_round_sql(f'ln(1.0 - (c1_{f} + 1.0) / (n1 + 2.0))')} AS z1_{f},\n"
+        f"           {stable_round_sql(f'ln((c0_{f} + 1.0) / (n0 + 2.0))')} AS w0_{f},\n"
+        f"           {stable_round_sql(f'ln(1.0 - (c0_{f} + 1.0) / (n0 + 2.0))')} AS z0_{f}"
         for f in _NB_FEATS
     )
     s1 = " + ".join(f"(u.f_{f} * p.w1_{f} + (1 - u.f_{f}) * p.z1_{f})" for f in _NB_FEATS)
@@ -144,8 +145,8 @@ cnt AS (
 ),
 params AS (
     SELECT n, n1, n0,
-           {r6('ln((n1 + 1.0) / (n + 2.0))')} AS lp1,
-           {r6('ln((n0 + 1.0) / (n + 2.0))')} AS lp0,
+           {stable_round_sql('ln((n1 + 1.0) / (n + 2.0))')} AS lp1,
+           {stable_round_sql('ln((n0 + 1.0) / (n + 2.0))')} AS lp0,
            {w_cols}
     FROM cnt
 ),
@@ -159,7 +160,7 @@ SELECT CAST(count(*) AS BIGINT) AS n_users,
        CAST(sum(CASE WHEN pred = 1 AND y = 0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
        CAST(sum(CASE WHEN pred = 0 AND y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
        CAST(sum(CASE WHEN pred = 0 AND y = 0 THEN 1 ELSE 0 END) AS BIGINT) AS tn,
-       {r6('sum(CASE WHEN pred = y THEN 1 ELSE 0 END) * 1.0 / count(*)')} AS accuracy
+       {stable_round_sql('sum(CASE WHEN pred = y THEN 1 ELSE 0 END) * 1.0 / count(*)')} AS accuracy
 FROM scored
 """
 
@@ -391,7 +392,6 @@ st AS MATERIALIZED (
 
 
 def _mk_attrib_oracle(rounds: int = 12) -> str:
-    r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
     parts = [_MK_TRANS_SQL.strip()]
     variants = [("full", None)] + [(f"rm_{c}", c) for c in _MK_CHANNELS]
     for tag, removed in variants:
@@ -403,7 +403,7 @@ def _mk_attrib_oracle(rounds: int = 12) -> str:
             parts.append(
                 f"""{tag}_{r} AS MATERIALIZED (
     SELECT st.s,
-           {r6(f'''coalesce(sum(p.p * (CASE WHEN p.t = 'CONV' THEN 1.0
+           {stable_round_sql(f'''coalesce(sum(p.p * (CASE WHEN p.t = 'CONV' THEN 1.0
                       WHEN p.t = 'NULL' THEN 0.0 {rm}ELSE coalesce(pv.v, 0.0) END)), 0.0)''')} AS v
     FROM st
     LEFT JOIN p ON p.f = st.s
@@ -785,7 +785,6 @@ def q_bias_baseline_recsys(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _entropy_rate_oracle(rounds: int = 12) -> str:
-    r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
     parts = [
         """pairs AS (
     SELECT event_type AS f,
@@ -797,16 +796,16 @@ def _entropy_rate_oracle(rounds: int = 12) -> str:
 )""",
         """tot AS (SELECT f, CAST(sum(n) AS BIGINT) AS tn FROM cnt GROUP BY 1)""",
         f"""p AS MATERIALIZED (
-    SELECT c.f, c.t, {r6('c.n * 1.0 / tot.tn')} AS p FROM cnt c JOIN tot ON c.f = tot.f
+    SELECT c.f, c.t, {stable_round_sql('c.n * 1.0 / tot.tn')} AS p FROM cnt c JOIN tot ON c.f = tot.f
 )""",
         """states AS MATERIALIZED (SELECT f AS s FROM cnt UNION SELECT t FROM cnt)""",
         """k AS (SELECT CAST(count(*) AS BIGINT) AS kk FROM states)""",
-        f"""v_0 AS (SELECT s, {r6('1.0 / kk')} AS v FROM states CROSS JOIN k)""",
+        f"""v_0 AS (SELECT s, {stable_round_sql('1.0 / kk')} AS v FROM states CROSS JOIN k)""",
     ]
     for r in range(1, rounds + 1):
         parts.append(
             f"""v_{r} AS MATERIALIZED (
-    SELECT st.s, {r6('coalesce(sum(v.v * p.p), 0.0)')} AS v
+    SELECT st.s, {stable_round_sql('coalesce(sum(v.v * p.p), 0.0)')} AS v
     FROM states st
     LEFT JOIN p ON p.t = st.s
     LEFT JOIN v_{r - 1} v ON v.s = p.f
@@ -826,9 +825,9 @@ m AS (
     FROM terms
 )
 SELECT k AS n_states,
-       {r6('sq / 1000000000.0')} AS entropy_rate_bits,
-       {r6('log2(k * 1.0)')} AS max_entropy_bits,
-       {r6('(sq / 1000000000.0) / log2(k * 1.0)')} AS efficiency
+       {stable_round_sql('sq / 1000000000.0')} AS entropy_rate_bits,
+       {stable_round_sql('log2(k * 1.0)')} AS max_entropy_bits,
+       {stable_round_sql('(sq / 1000000000.0) / log2(k * 1.0)')} AS efficiency
 FROM m
 """
 
@@ -1564,7 +1563,6 @@ def q_fairness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _nb_margin_oracle() -> str:
-    r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
     feat_cols = ",\n           ".join(
         f"CAST(max(CASE WHEN event_type = '{f}' THEN 1 ELSE 0 END) AS BIGINT) AS f_{f}"
         for f in _NB_FEATS
@@ -1575,10 +1573,10 @@ def _nb_margin_oracle() -> str:
         for f in _NB_FEATS
     )
     w_cols = ",\n           ".join(
-        f"{r6(f'ln((c1_{f} + 1.0) / (n1 + 2.0))')} AS w1_{f},\n"
-        f"           {r6(f'ln(1.0 - (c1_{f} + 1.0) / (n1 + 2.0))')} AS z1_{f},\n"
-        f"           {r6(f'ln((c0_{f} + 1.0) / (n0 + 2.0))')} AS w0_{f},\n"
-        f"           {r6(f'ln(1.0 - (c0_{f} + 1.0) / (n0 + 2.0))')} AS z0_{f}"
+        f"{stable_round_sql(f'ln((c1_{f} + 1.0) / (n1 + 2.0))')} AS w1_{f},\n"
+        f"           {stable_round_sql(f'ln(1.0 - (c1_{f} + 1.0) / (n1 + 2.0))')} AS z1_{f},\n"
+        f"           {stable_round_sql(f'ln((c0_{f} + 1.0) / (n0 + 2.0))')} AS w0_{f},\n"
+        f"           {stable_round_sql(f'ln(1.0 - (c0_{f} + 1.0) / (n0 + 2.0))')} AS z0_{f}"
         for f in _NB_FEATS
     )
     s1 = " + ".join(f"(u.f_{f} * p.w1_{f} + (1 - u.f_{f}) * p.z1_{f})" for f in _NB_FEATS)
@@ -1599,14 +1597,14 @@ cnt AS (
 ),
 params AS (
     SELECT n, n1, n0,
-           {r6('ln((n1 + 1.0) / (n + 2.0))')} AS lp1,
-           {r6('ln((n0 + 1.0) / (n + 2.0))')} AS lp0,
+           {stable_round_sql('ln((n1 + 1.0) / (n + 2.0))')} AS lp1,
+           {stable_round_sql('ln((n0 + 1.0) / (n + 2.0))')} AS lp0,
            {w_cols}
     FROM cnt
 ),
 scored AS (
     SELECT u.user_id,
-           {r6(f'abs((p.lp1 + {s1}) - (p.lp0 + {s0}))')} AS margin
+           {stable_round_sql(f'abs((p.lp1 + {s1}) - (p.lp0 + {s0}))')} AS margin
     FROM u CROSS JOIN params p
 )
 SELECT user_id, margin
@@ -2661,9 +2659,7 @@ def q_dp_topk_exponential(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _auc_delong_oracle() -> str:
-    from healthcare_etl_spark.operators.logistic import irls_beta_ctes
-
-    parts, final = irls_beta_ctes(_logistic_features_sql())
+    parts, final = irls_beta_ctes(_logistic_features_sql(), LOGISTIC)
     joined = ",\n".join(parts)
     return f"""WITH {joined},
 scored AS (
@@ -2729,141 +2725,115 @@ FROM stats
 """.strip()
 
 
-def _register_auc_delong() -> None:
-    @register(
-        "q_auc_delong_ci",
-        oracle=_auc_delong_oracle(),
-        description=(
-            "DeLong (1988) standard error and 95% CI for the IRLS "
-            "model's ROC-AUC via the placement formulation: each "
-            "positive's placement V10 = fraction of negatives scored "
-            "below it (ties half-weighted), each negative's V01 "
-            "symmetric; var(AUC) = S10/m + S01/n — the inference layer "
-            "q_roc_auc's point estimate needs before anyone compares "
-            "two models. Placements are constant within a distinct "
-            "score, so the whole computation lives on the bounded "
-            "distinct-score table: placement numerators are exact "
-            "half-unit integers (2*below + ties), both variance folds "
-            "are HUGEINT/DECIMAL(38) weighted integer moments, and the "
-            "two cumulative counts ride the same bucketed two-phase "
-            "carry as q_roc_auc (micro-prob div-4096 summary — no "
-            "single-partition sort)."
-        ),
-        tags=("analytics", "extension", "stats", "ml"),
+@register(
+    "q_auc_delong_ci",
+    oracle=_auc_delong_oracle(),
+    description=(
+        "DeLong (1988) standard error and 95% CI for the IRLS "
+        "model's ROC-AUC via the placement formulation: each "
+        "positive's placement V10 = fraction of negatives scored "
+        "below it (ties half-weighted), each negative's V01 "
+        "symmetric; var(AUC) = S10/m + S01/n — the inference layer "
+        "q_roc_auc's point estimate needs before anyone compares "
+        "two models. Placements are constant within a distinct "
+        "score, so the whole computation lives on the bounded "
+        "distinct-score table: placement numerators are exact "
+        "half-unit integers (2*below + ties), both variance folds "
+        "are HUGEINT/DECIMAL(38) weighted integer moments, and the "
+        "two cumulative counts ride the same bucketed two-phase "
+        "carry as q_roc_auc (micro-prob div-4096 summary — no "
+        "single-partition sort)."
+    ),
+    tags=("analytics", "extension", "stats", "ml"),
+)
+def q_auc_delong_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from healthcare_etl_spark.operators.scale import bucketed_prefix
+
+    features = _logistic_features(spark, sf_dir)
+    beta = irls_fit(features, LOGISTIC)
+    pm = F.round(logistic_p(beta) * 1000000.0).cast("long")
+    grp = (
+        features.select(pm.alias("pm"), "y")
+        .groupBy("pm")
+        .agg(
+            F.count(F.lit(1)).alias("t"),
+            F.sum("y").cast("long").alias("t_pos"),
+        )
+        .select(
+            "pm",
+            "t_pos",
+            (F.col("t") - F.col("t_pos")).cast("long").alias("t_neg"),
+        )
     )
-    def q_auc_delong_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from healthcare_etl_spark.operators.logistic import logistic_fit
-        from healthcare_etl_spark.operators.scale import bucketed_prefix
-
-        ev = load_table(spark, sf_dir, "events")
-        features = ev.groupBy("user_id").agg(
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            ).alias("x1"),
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-            ).alias("x2"),
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("value") > 150), 1
-                ).otherwise(0)
-            ).alias("y"),
-        ).persist()
-        try:
-            b0, b1, b2 = logistic_fit(features)
-            eta = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
-            pm = F.round(
-                (F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))) * 1000000.0
-            ).cast("long")
-            grp = (
-                features.select(pm.alias("pm"), "y")
-                .groupBy("pm")
-                .agg(
-                    F.count(F.lit(1)).alias("t"),
-                    F.sum("y").cast("long").alias("t_pos"),
-                )
-                .select(
-                    "pm",
-                    "t_pos",
-                    (F.col("t") - F.col("t_pos")).cast("long").alias("t_neg"),
-                )
-            )
-            r1 = bucketed_prefix(
-                grp,
-                buckets=[F.expr("pm div 4096")],
-                order_by=[F.col("pm")],
-                value=F.col("t_neg"),
-                agg="sum",
-                exclusive=True,
-                out_col="cnb",
-            )
-            ranked = bucketed_prefix(
-                r1,
-                buckets=[F.expr("pm div 4096")],
-                order_by=[F.col("pm")],
-                value=F.col("t_pos"),
-                agg="sum",
-                exclusive=True,
-                out_col="cpb",
-            ).select(
-                "t_pos",
-                "t_neg",
-                F.col("cnb").cast("long").alias("cnb"),
-                F.col("cpb").cast("long").alias("cpb"),
-            )
-            tot = grp.agg(
-                F.sum("t_pos").cast("long").alias("m_pos"),
-                F.sum("t_neg").cast("long").alias("n_neg"),
-            )
-            place = ranked.crossJoin(F.broadcast(tot)).select(
-                "t_pos",
-                "t_neg",
-                (2 * F.col("cnb") + F.col("t_neg")).alias("v"),
-                (
-                    2 * (F.col("m_pos") - F.col("cpb") - F.col("t_pos"))
-                    + F.col("t_pos")
-                ).alias("u"),
-                "m_pos",
-                "n_neg",
-            )
-            dec = "decimal(38,0)"
-            mom = place.agg(
-                F.first("m_pos").alias("m_pos"),
-                F.first("n_neg").alias("n_neg"),
-                F.sum(F.col("t_pos") * F.col("v")).cast("long").alias("sv"),
-                F.sum(F.col("t_pos").cast(dec) * F.col("v").cast(dec) * F.col("v").cast(dec)).alias("svv"),
-                F.sum(F.col("t_neg") * F.col("u")).cast("long").alias("su"),
-                F.sum(F.col("t_neg").cast(dec) * F.col("u").cast(dec) * F.col("u").cast(dec)).alias("suu"),
-            )
-            m_pos, n_neg = F.col("m_pos"), F.col("n_neg")
-            auc = F.col("sv") / (2.0 * m_pos * n_neg)
-            s10 = (
-                (F.col("svv").cast("double") - F.col("sv").cast("double") * F.col("sv") / m_pos)
-                / (m_pos - 1.0)
-                / (4.0 * n_neg * n_neg)
-            )
-            s01 = (
-                (F.col("suu").cast("double") - F.col("su").cast("double") * F.col("su") / n_neg)
-                / (n_neg - 1.0)
-                / (4.0 * m_pos * m_pos)
-            )
-            se = F.sqrt(s10 / m_pos + s01 / n_neg)
-            out = mom.select(
-                m_pos.alias("n_pos"),
-                n_neg.alias("n_neg"),
-                stable_round(auc, 6).alias("auc"),
-                stable_round(se, 6).alias("se_delong"),
-                stable_round(F.greatest(F.lit(0.0), auc - 1.959964 * se), 6).alias("ci_lo"),
-                stable_round(F.least(F.lit(1.0), auc + 1.959964 * se), 6).alias("ci_hi"),
-            )
-            return out
-        finally:
-            features.unpersist()
-
-
-_register_auc_delong()
+    r1 = bucketed_prefix(
+        grp,
+        buckets=[F.expr("pm div 4096")],
+        order_by=[F.col("pm")],
+        value=F.col("t_neg"),
+        agg="sum",
+        exclusive=True,
+        out_col="cnb",
+    )
+    ranked = bucketed_prefix(
+        r1,
+        buckets=[F.expr("pm div 4096")],
+        order_by=[F.col("pm")],
+        value=F.col("t_pos"),
+        agg="sum",
+        exclusive=True,
+        out_col="cpb",
+    ).select(
+        "t_pos",
+        "t_neg",
+        F.col("cnb").cast("long").alias("cnb"),
+        F.col("cpb").cast("long").alias("cpb"),
+    )
+    tot = grp.agg(
+        F.sum("t_pos").cast("long").alias("m_pos"),
+        F.sum("t_neg").cast("long").alias("n_neg"),
+    )
+    place = ranked.crossJoin(F.broadcast(tot)).select(
+        "t_pos",
+        "t_neg",
+        (2 * F.col("cnb") + F.col("t_neg")).alias("v"),
+        (
+            2 * (F.col("m_pos") - F.col("cpb") - F.col("t_pos"))
+            + F.col("t_pos")
+        ).alias("u"),
+        "m_pos",
+        "n_neg",
+    )
+    dec = "decimal(38,0)"
+    mom = place.agg(
+        F.first("m_pos").alias("m_pos"),
+        F.first("n_neg").alias("n_neg"),
+        F.sum(F.col("t_pos") * F.col("v")).cast("long").alias("sv"),
+        F.sum(F.col("t_pos").cast(dec) * F.col("v").cast(dec) * F.col("v").cast(dec)).alias("svv"),
+        F.sum(F.col("t_neg") * F.col("u")).cast("long").alias("su"),
+        F.sum(F.col("t_neg").cast(dec) * F.col("u").cast(dec) * F.col("u").cast(dec)).alias("suu"),
+    )
+    m_pos, n_neg = F.col("m_pos"), F.col("n_neg")
+    auc = F.col("sv") / (2.0 * m_pos * n_neg)
+    s10 = (
+        (F.col("svv").cast("double") - F.col("sv").cast("double") * F.col("sv") / m_pos)
+        / (m_pos - 1.0)
+        / (4.0 * n_neg * n_neg)
+    )
+    s01 = (
+        (F.col("suu").cast("double") - F.col("su").cast("double") * F.col("su") / n_neg)
+        / (n_neg - 1.0)
+        / (4.0 * m_pos * m_pos)
+    )
+    se = F.sqrt(s10 / m_pos + s01 / n_neg)
+    out = mom.select(
+        m_pos.alias("n_pos"),
+        n_neg.alias("n_neg"),
+        stable_round(auc, 6).alias("auc"),
+        stable_round(se, 6).alias("se_delong"),
+        stable_round(F.greatest(F.lit(0.0), auc - 1.959964 * se), 6).alias("ci_lo"),
+        stable_round(F.least(F.lit(1.0), auc + 1.959964 * se), 6).alias("ci_hi"),
+    )
+    return out
 
 
 @register(

@@ -16,23 +16,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from healthcare_etl_spark.functions.rounding import stable_round
+from healthcare_etl_spark.functions.rounding import stable_round, stable_round_sql
+from healthcare_etl_spark.operators.logistic import LOGISTIC, irls_beta_ctes, irls_fit, logistic_p
+from healthcare_etl_spark.plans.queries_mlops import _logistic_features, _logistic_features_sql
 from healthcare_etl_spark.plans.registry import register
 from healthcare_etl_spark.sources import load_table, local_frame
 
-from healthcare_etl_spark.plans.queries_mlops import (  # noqa: F401
-    _logistic_features_sql,
-)
 _SWEEP_THRESHOLDS = [i / 20.0 for i in range(1, 20)]
 
 
 def _threshold_sweep_oracle() -> str:
-    from healthcare_etl_spark.operators.logistic import irls_beta_ctes
-
-    parts, final = irls_beta_ctes(_logistic_features_sql())
+    parts, final = irls_beta_ctes(_logistic_features_sql(), LOGISTIC)
     joined = ",\n".join(parts)
     thr_list = ", ".join(str(t) for t in _SWEEP_THRESHOLDS)
-    r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
     return f"""WITH {joined},
 scored AS (
     SELECT y, (1.0 / (1.0 + exp(-(b.b0 + b.b1 * x1 + b.b2 * x2)))) AS p
@@ -52,82 +48,56 @@ counts AS (
     FROM grid GROUP BY thr
 )
 SELECT thr, tp, fp, fn, tn,
-       {r6('2.0 * tp / (2.0 * tp + fp + fn)')}                        AS f1,
-       {r6('tp * 1.0 / (tp + fn) + tn * 1.0 / (tn + fp) - 1.0')}      AS youden_j
+       {stable_round_sql('2.0 * tp / (2.0 * tp + fp + fn)')}                        AS f1,
+       {stable_round_sql('tp * 1.0 / (tp + fn) + tn * 1.0 / (tn + fp) - 1.0')}      AS youden_j
 FROM counts
 """.strip()
 
 
-def _register_threshold_sweep() -> None:
-    @register(
-        "q_threshold_sweep",
-        oracle=_threshold_sweep_oracle(),
-        description=(
-            "Classification threshold sweep for the IRLS model: the "
-            "confusion matrix, F1 and Youden's J at 19 evenly-spaced "
-            "cutoffs — the operating-point selection step between "
-            "q_roc_auc (threshold-free discrimination) and deployment "
-            "(one threshold must be picked). All counts are exact "
-            "integers from ONE partial-aggregated pass over the "
-            "users x 19 grid (the thresholds are literal doubles "
-            "identical on both engines); the metrics are fixed rational "
-            "expressions of those counts."
-        ),
-        tags=("analytics", "extension", "stats", "ml"),
+@register(
+    "q_threshold_sweep",
+    oracle=_threshold_sweep_oracle(),
+    description=(
+        "Classification threshold sweep for the IRLS model: the "
+        "confusion matrix, F1 and Youden's J at 19 evenly-spaced "
+        "cutoffs — the operating-point selection step between "
+        "q_roc_auc (threshold-free discrimination) and deployment "
+        "(one threshold must be picked). All counts are exact "
+        "integers from ONE partial-aggregated pass over the "
+        "users x 19 grid (the thresholds are literal doubles "
+        "identical on both engines); the metrics are fixed rational "
+        "expressions of those counts."
+    ),
+    tags=("analytics", "extension", "stats", "ml"),
+)
+def q_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    features = _logistic_features(spark, sf_dir)
+    p = logistic_p(irls_fit(features, LOGISTIC))
+    grid = features.select(
+        "y",
+        p.alias("p"),
+        F.explode(F.array(*[F.lit(t) for t in _SWEEP_THRESHOLDS])).alias("thr"),
     )
-    def q_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from healthcare_etl_spark.operators.logistic import logistic_fit
-
-        ev = load_table(spark, sf_dir, "events")
-        features = ev.groupBy("user_id").agg(
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            ).alias("x1"),
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-            ).alias("x2"),
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("value") > 150), 1
-                ).otherwise(0)
-            ).alias("y"),
-        ).persist()
-        try:
-            b0, b1, b2 = logistic_fit(features)
-            eta = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
-            p = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
-            grid = features.select(
-                "y",
-                p.alias("p"),
-                F.explode(F.array(*[F.lit(t) for t in _SWEEP_THRESHOLDS])).alias("thr"),
-            )
-            pos = F.col("p") > F.col("thr")
-            y1 = F.col("y") == 1
-            counts = grid.groupBy("thr").agg(
-                F.sum(F.when(pos & y1, 1).otherwise(0)).alias("tp"),
-                F.sum(F.when(pos & ~y1, 1).otherwise(0)).alias("fp"),
-                F.sum(F.when(~pos & y1, 1).otherwise(0)).alias("fn"),
-                F.sum(F.when(~pos & ~y1, 1).otherwise(0)).alias("tn"),
-            )
-            tp, fp, fn, tn = F.col("tp"), F.col("fp"), F.col("fn"), F.col("tn")
-            return counts.select(
-                "thr",
-                "tp",
-                "fp",
-                "fn",
-                "tn",
-                stable_round(2.0 * tp / (2.0 * tp + fp + fn), 6).alias("f1"),
-                stable_round(
-                    tp * 1.0 / (tp + fn) + tn * 1.0 / (tn + fp) - 1.0, 6
-                ).alias("youden_j"),
-            )
-        finally:
-            features.unpersist()
-
-
-_register_threshold_sweep()
+    pos = F.col("p") > F.col("thr")
+    y1 = F.col("y") == 1
+    counts = grid.groupBy("thr").agg(
+        F.sum(F.when(pos & y1, 1).otherwise(0)).alias("tp"),
+        F.sum(F.when(pos & ~y1, 1).otherwise(0)).alias("fp"),
+        F.sum(F.when(~pos & y1, 1).otherwise(0)).alias("fn"),
+        F.sum(F.when(~pos & ~y1, 1).otherwise(0)).alias("tn"),
+    )
+    tp, fp, fn, tn = F.col("tp"), F.col("fp"), F.col("fn"), F.col("tn")
+    return counts.select(
+        "thr",
+        "tp",
+        "fp",
+        "fn",
+        "tn",
+        stable_round(2.0 * tp / (2.0 * tp + fp + fn), 6).alias("f1"),
+        stable_round(
+            tp * 1.0 / (tp + fn) + tn * 1.0 / (tn + fp) - 1.0, 6
+        ).alias("youden_j"),
+    )
 
 
 @register(
@@ -293,9 +263,7 @@ def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pr_auc_oracle() -> str:
-    from healthcare_etl_spark.operators.logistic import irls_beta_ctes
-
-    parts, final = irls_beta_ctes(_logistic_features_sql())
+    parts, final = irls_beta_ctes(_logistic_features_sql(), LOGISTIC)
     joined = ",\n".join(parts)
     return f"""WITH {joined},
 scored AS (
@@ -334,126 +302,97 @@ FROM m CROSS JOIN tot
 """.strip()
 
 
-def _register_pr_auc() -> None:
-    @register(
-        "q_pr_auc",
-        oracle=_pr_auc_oracle(),
-        description=(
-            "Precision-recall AUC (average precision, tie-grouped step "
-            "form) of the IRLS model: AP = sum over descending score "
-            "groups of tp_g * precision-at-group-end / n_pos — the "
-            "metric that stays honest under class imbalance where "
-            "q_roc_auc saturates (a 0.1% positive rate makes almost "
-            "any ranker look ROC-great; AP compares against the "
-            "prevalence baseline reported alongside). Scores are "
-            "6dp-rounded BEFORE grouping so the distinct-score table "
-            "is bounded, and the descending cumulative rides the "
-            "two-phase bucketed carry ((-pm) div 4096 buckets — no "
-            "single-partition sort even over the bounded table); "
-            "precisions are exact BIGINT ratios, and per-group terms "
-            "are quantized to BIGINT at 1e-10 before the final sum — "
-            "no float accumulation order anywhere."
-        ),
-        tags=("analytics", "extension", "stats", "ml", "evaluation"),
+@register(
+    "q_pr_auc",
+    oracle=_pr_auc_oracle(),
+    description=(
+        "Precision-recall AUC (average precision, tie-grouped step "
+        "form) of the IRLS model: AP = sum over descending score "
+        "groups of tp_g * precision-at-group-end / n_pos — the "
+        "metric that stays honest under class imbalance where "
+        "q_roc_auc saturates (a 0.1% positive rate makes almost "
+        "any ranker look ROC-great; AP compares against the "
+        "prevalence baseline reported alongside). Scores are "
+        "6dp-rounded BEFORE grouping so the distinct-score table "
+        "is bounded, and the descending cumulative rides the "
+        "two-phase bucketed carry ((-pm) div 4096 buckets — no "
+        "single-partition sort even over the bounded table); "
+        "precisions are exact BIGINT ratios, and per-group terms "
+        "are quantized to BIGINT at 1e-10 before the final sum — "
+        "no float accumulation order anywhere."
+    ),
+    tags=("analytics", "extension", "stats", "ml", "evaluation"),
+)
+def q_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    features = _logistic_features(spark, sf_dir)
+    beta = irls_fit(features, LOGISTIC)
+    # Integer micro-prob key (pm/1e6 == the oracle's 6dp p,
+    # injective), grouped once; the descending cumulative rides
+    # the two-phase bucketed carry: (-pm) div 4096 is a monotone
+    # coarsening of pm DESC (truncating div is monotone), so
+    # in-bucket inclusive windows are fully partitioned and the
+    # keyless prefix only ever sees the <=245-row bucket summary.
+    pm = F.round(logistic_p(beta) * 1000000.0).cast("long")
+    scored = features.select(pm.alias("pm"), "y")
+    grp = scored.groupBy("pm").agg(
+        F.count(F.lit(1)).alias("t"), F.sum("y").alias("tp")
     )
-    def q_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from healthcare_etl_spark.operators.logistic import logistic_fit
-
-        ev = load_table(spark, sf_dir, "events")
-        features = ev.groupBy("user_id").agg(
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            ).alias("x1"),
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-            ).alias("x2"),
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("value") > 150), 1
-                ).otherwise(0)
-            ).alias("y"),
-        ).persist()
-        try:
-            b0, b1, b2 = logistic_fit(features)
-            eta = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
-            # Integer micro-prob key (pm/1e6 == the oracle's 6dp p,
-            # injective), grouped once; the descending cumulative rides
-            # the two-phase bucketed carry: (-pm) div 4096 is a monotone
-            # coarsening of pm DESC (truncating div is monotone), so
-            # in-bucket inclusive windows are fully partitioned and the
-            # keyless prefix only ever sees the <=245-row bucket summary.
-            pm = F.round(
-                (F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))) * 1000000.0
-            ).cast("long")
-            scored = features.select(pm.alias("pm"), "y")
-            grp = scored.groupBy("pm").agg(
-                F.count(F.lit(1)).alias("t"), F.sum("y").alias("tp")
-            )
-            bkt = grp.withColumn("bkt", F.expr("(-pm) div 4096"))
-            w_in = (
-                Window.partitionBy("bkt")
-                .orderBy(F.desc("pm"))
-                .rowsBetween(Window.unboundedPreceding, 0)
-            )
-            rows = bkt.withColumn("cin_n", F.sum("t").over(w_in)).withColumn(
-                "cin_tp", F.sum("tp").over(w_in)
-            )
-            btot = bkt.groupBy("bkt").agg(
-                F.sum("t").alias("bv_n"), F.sum("tp").alias("bv_tp")
-            )
-            w_b = Window.orderBy("bkt").rowsBetween(
-                Window.unboundedPreceding, -1
-            )
-            bprev = btot.select(
-                "bkt",
-                F.sum("bv_n").over(w_b).alias("prev_n"),
-                F.sum("bv_tp").over(w_b).alias("prev_tp"),
-            )
-            cum = rows.join(F.broadcast(bprev), "bkt").select(
-                "tp",
-                (F.col("cin_n") + F.coalesce(F.col("prev_n"), F.lit(0)))
-                .cast("long")
-                .alias("cum_n"),
-                (F.col("cin_tp") + F.coalesce(F.col("prev_tp"), F.lit(0)))
-                .cast("long")
-                .alias("cum_tp"),
-            )
-            terms = cum.select(
-                "tp",
-                F.round(
-                    F.col("tp") * F.col("cum_tp") * 10000000000.0 / F.col("cum_n")
-                )
-                .cast("long")
-                .alias("tq"),
-            )
-            n_all = scored.count()
-            m = terms.agg(
-                F.sum("tp").cast("long").alias("n_pos"),
-                F.sum("tq").cast("long").alias("ap_q"),
-            )
-            return m.select(
-                F.col("n_pos"),
-                (F.lit(n_all) - F.col("n_pos")).cast("long").alias("n_neg"),
-                stable_round(
-                    F.col("ap_q") / 10000000000.0 / F.col("n_pos"), 6
-                ).alias("average_precision"),
-                stable_round(F.col("n_pos") * 1.0 / F.lit(n_all), 6).alias(
-                    "prevalence"
-                ),
-            )
-        finally:
-            features.unpersist()
-
-
-_register_pr_auc()
+    bkt = grp.withColumn("bkt", F.expr("(-pm) div 4096"))
+    w_in = (
+        Window.partitionBy("bkt")
+        .orderBy(F.desc("pm"))
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    rows = bkt.withColumn("cin_n", F.sum("t").over(w_in)).withColumn(
+        "cin_tp", F.sum("tp").over(w_in)
+    )
+    btot = bkt.groupBy("bkt").agg(
+        F.sum("t").alias("bv_n"), F.sum("tp").alias("bv_tp")
+    )
+    w_b = Window.orderBy("bkt").rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    bprev = btot.select(
+        "bkt",
+        F.sum("bv_n").over(w_b).alias("prev_n"),
+        F.sum("bv_tp").over(w_b).alias("prev_tp"),
+    )
+    cum = rows.join(F.broadcast(bprev), "bkt").select(
+        "tp",
+        (F.col("cin_n") + F.coalesce(F.col("prev_n"), F.lit(0)))
+        .cast("long")
+        .alias("cum_n"),
+        (F.col("cin_tp") + F.coalesce(F.col("prev_tp"), F.lit(0)))
+        .cast("long")
+        .alias("cum_tp"),
+    )
+    terms = cum.select(
+        "tp",
+        F.round(
+            F.col("tp") * F.col("cum_tp") * 10000000000.0 / F.col("cum_n")
+        )
+        .cast("long")
+        .alias("tq"),
+    )
+    n_all = scored.count()
+    m = terms.agg(
+        F.sum("tp").cast("long").alias("n_pos"),
+        F.sum("tq").cast("long").alias("ap_q"),
+    )
+    return m.select(
+        F.col("n_pos"),
+        (F.lit(n_all) - F.col("n_pos")).cast("long").alias("n_neg"),
+        stable_round(
+            F.col("ap_q") / 10000000000.0 / F.col("n_pos"), 6
+        ).alias("average_precision"),
+        stable_round(F.col("n_pos") * 1.0 / F.lit(n_all), 6).alias(
+            "prevalence"
+        ),
+    )
 
 
 def _psm_oracle() -> str:
-    from healthcare_etl_spark.operators.logistic import irls_beta_ctes
-
-    parts, final = irls_beta_ctes(_logistic_features_sql())
+    parts, final = irls_beta_ctes(_logistic_features_sql(), LOGISTIC)
     joined = ",\n".join(parts)
     return f"""WITH {joined},
 feat_u AS (
@@ -504,122 +443,95 @@ GROUP BY n_treated
 """.strip()
 
 
-def _register_psm_match() -> None:
-    @register(
-        "q_psm_match",
-        oracle=_psm_oracle(),
-        description=(
-            "Propensity-score matching ATT: treated users (any "
-            "purchase > 150) match their nearest-propensity control "
-            "within a 0.02 caliper (with replacement, ties to the "
-            "smallest user id), estimating the treatment effect on "
-            "total spend — the observational-causal complement to the "
-            "randomized q_ab_test_ztest/q_cuped_adjustment family, for "
-            "when assignment wasn't randomized. Propensity is the IRLS "
-            "model's 6dp score; candidate generation is a BANDED "
-            "equi-join on floor(p/0.02) buckets +-1 (bucket width = "
-            "caliper, so the 3-bucket probe provably covers the "
-            "caliper) — never treated x control; with-replacement "
-            "matching keeps every match decision independent, so the "
-            "argmin is one rank-limit window, fully parallel. Outcomes "
-            "stay exact integer cents until the final rounded "
-            "divisions."
-        ),
-        tags=("analytics", "extension", "stats", "ml"),
+@register(
+    "q_psm_match",
+    oracle=_psm_oracle(),
+    description=(
+        "Propensity-score matching ATT: treated users (any "
+        "purchase > 150) match their nearest-propensity control "
+        "within a 0.02 caliper (with replacement, ties to the "
+        "smallest user id), estimating the treatment effect on "
+        "total spend — the observational-causal complement to the "
+        "randomized q_ab_test_ztest/q_cuped_adjustment family, for "
+        "when assignment wasn't randomized. Propensity is the IRLS "
+        "model's 6dp score; candidate generation is a BANDED "
+        "equi-join on floor(p/0.02) buckets +-1 (bucket width = "
+        "caliper, so the 3-bucket probe provably covers the "
+        "caliper) — never treated x control; with-replacement "
+        "matching keeps every match decision independent, so the "
+        "argmin is one rank-limit window, fully parallel. Outcomes "
+        "stay exact integer cents until the final rounded "
+        "divisions."
+    ),
+    tags=("analytics", "extension", "stats", "ml"),
+)
+def q_psm_match(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spend_cents = F.sum(
+        F.when(
+            F.col("event_type") == "purchase",
+            F.round(F.col("value") * 100).cast("long"),
+        ).otherwise(0)
     )
-    def q_psm_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from healthcare_etl_spark.operators.logistic import logistic_fit
-
-        ev = load_table(spark, sf_dir, "events")
-        feat = ev.groupBy("user_id").agg(
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            ).alias("x1"),
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-            ).alias("x2"),
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("value") > 150), 1
-                ).otherwise(0)
-            ).alias("y"),
-            F.sum(
-                F.when(
-                    F.col("event_type") == "purchase",
-                    F.round(F.col("value") * 100).cast("long"),
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("spend_cents"),
-        ).persist()
-        try:
-            b0, b1, b2 = logistic_fit(feat.select("x1", "x2", "y"))
-            eta = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
-            scored = feat.select(
-                "user_id",
-                "y",
-                "spend_cents",
-                stable_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-eta)), 6).alias("p"),
-            ).withColumn("bkt", F.floor(F.col("p") / 0.02).cast("long"))
-            t = scored.filter(F.col("y") == 1).select(
-                F.col("user_id").alias("t_id"),
-                F.col("p").alias("tp"),
-                F.col("spend_cents").alias("t_spend"),
-                F.col("bkt").alias("t_bkt"),
-            )
-            c = scored.filter(F.col("y") == 0).select(
-                F.col("user_id").alias("c_id"),
-                F.col("p").alias("cp"),
-                F.col("spend_cents").alias("c_spend"),
-                F.col("bkt").alias("c_bkt"),
-            )
-            offs = spark.range(-1, 2).select(F.col("id").cast("long").alias("off"))
-            cand = (
-                t.crossJoin(F.broadcast(offs))
-                .join(
-                    c,
-                    (F.col("c_bkt") == F.col("t_bkt") + F.col("off"))
-                    & (F.abs(F.col("cp") - F.col("tp")) <= 0.02),
-                )
-                .select(
-                    "t_id",
-                    "t_spend",
-                    "c_id",
-                    "c_spend",
-                    F.abs(F.col("cp") - F.col("tp")).alias("dist"),
-                )
-            )
-            wm = Window.partitionBy("t_id").orderBy(F.asc("dist"), F.asc("c_id"))
-            best = cand.withColumn("rn", F.row_number().over(wm)).filter(
-                F.col("rn") == 1
-            )
-            n_treated = t.count()
-            m = best.agg(
-                F.count(F.lit(1)).cast("long").alias("n_matched"),
-                F.sum(F.col("t_spend") - F.col("c_spend")).alias("d_cents"),
-                F.sum("t_spend").alias("ts"),
-                F.sum("c_spend").alias("cs"),
-            )
-            return m.select(
-                F.lit(n_treated).cast("long").alias("n_treated"),
-                "n_matched",
-                stable_round(
-                    F.col("d_cents") / 100.0 / F.col("n_matched"), 6
-                ).alias("att_dollars"),
-                stable_round(F.col("ts") / 100.0 / F.col("n_matched"), 6).alias(
-                    "matched_treated_mean"
-                ),
-                stable_round(F.col("cs") / 100.0 / F.col("n_matched"), 6).alias(
-                    "matched_control_mean"
-                ),
-            )
-        finally:
-            feat.unpersist()
-
-
-_register_psm_match()
+    feat = _logistic_features(spark, sf_dir, spend_cents.cast("long").alias("spend_cents"))
+    beta = irls_fit(feat, LOGISTIC)
+    scored = feat.select(
+        "user_id",
+        "y",
+        "spend_cents",
+        stable_round(logistic_p(beta), 6).alias("p"),
+    ).withColumn("bkt", F.floor(F.col("p") / 0.02).cast("long"))
+    t = scored.filter(F.col("y") == 1).select(
+        F.col("user_id").alias("t_id"),
+        F.col("p").alias("tp"),
+        F.col("spend_cents").alias("t_spend"),
+        F.col("bkt").alias("t_bkt"),
+    )
+    c = scored.filter(F.col("y") == 0).select(
+        F.col("user_id").alias("c_id"),
+        F.col("p").alias("cp"),
+        F.col("spend_cents").alias("c_spend"),
+        F.col("bkt").alias("c_bkt"),
+    )
+    offs = spark.range(-1, 2).select(F.col("id").cast("long").alias("off"))
+    cand = (
+        t.crossJoin(F.broadcast(offs))
+        .join(
+            c,
+            (F.col("c_bkt") == F.col("t_bkt") + F.col("off"))
+            & (F.abs(F.col("cp") - F.col("tp")) <= 0.02),
+        )
+        .select(
+            "t_id",
+            "t_spend",
+            "c_id",
+            "c_spend",
+            F.abs(F.col("cp") - F.col("tp")).alias("dist"),
+        )
+    )
+    wm = Window.partitionBy("t_id").orderBy(F.asc("dist"), F.asc("c_id"))
+    best = cand.withColumn("rn", F.row_number().over(wm)).filter(
+        F.col("rn") == 1
+    )
+    n_treated = t.count()
+    m = best.agg(
+        F.count(F.lit(1)).cast("long").alias("n_matched"),
+        F.sum(F.col("t_spend") - F.col("c_spend")).alias("d_cents"),
+        F.sum("t_spend").alias("ts"),
+        F.sum("c_spend").alias("cs"),
+    )
+    return m.select(
+        F.lit(n_treated).cast("long").alias("n_treated"),
+        "n_matched",
+        stable_round(
+            F.col("d_cents") / 100.0 / F.col("n_matched"), 6
+        ).alias("att_dollars"),
+        stable_round(F.col("ts") / 100.0 / F.col("n_matched"), 6).alias(
+            "matched_treated_mean"
+        ),
+        stable_round(F.col("cs") / 100.0 / F.col("n_matched"), 6).alias(
+            "matched_control_mean"
+        ),
+    )
 
 
 def _register_dp_histogram() -> None:
@@ -880,9 +792,7 @@ _PD_GRID = [0.0, 0.5, 1.0, 1.5, 2.0, 2.5, 3.0, 3.5, 4.0, 4.5]
 
 
 def _partial_dependence_oracle() -> str:
-    from healthcare_etl_spark.operators.logistic import irls_beta_ctes
-
-    parts, final = irls_beta_ctes(_logistic_features_sql())
+    parts, final = irls_beta_ctes(_logistic_features_sql(), LOGISTIC)
     joined = ",\n".join(parts)
     grid = ", ".join(str(g) for g in _PD_GRID)
     return f"""WITH {joined},
@@ -901,75 +811,46 @@ FROM pd GROUP BY g
 """.strip()
 
 
-def _register_partial_dependence() -> None:
-    @register(
-        "q_partial_dependence",
-        oracle=_partial_dependence_oracle(),
-        description=(
-            "Partial-dependence curve of the IRLS model on "
-            "x1=ln(1+clicks): for each of 10 grid values, x1 is forced "
-            "to the grid point for EVERY user profile (x2 kept as "
-            "observed) and the predicted conversion probability is "
-            "averaged — the model-explainability view that shows what "
-            "the classifier actually learned about click volume, "
-            "marginalized over the real covariate distribution "
-            "(q_shapley_attribution explains channels; this explains "
-            "the model). One users x 10 grid cross join, partial-"
-            "aggregated per grid point; per-profile sigmoids quantize "
-            "to BIGINT at 1e-10 before the mean, so no float sum "
-            "order exists on either engine."
-        ),
-        tags=("analytics", "extension", "ml", "evaluation"),
+@register(
+    "q_partial_dependence",
+    oracle=_partial_dependence_oracle(),
+    description=(
+        "Partial-dependence curve of the IRLS model on "
+        "x1=ln(1+clicks): for each of 10 grid values, x1 is forced "
+        "to the grid point for EVERY user profile (x2 kept as "
+        "observed) and the predicted conversion probability is "
+        "averaged — the model-explainability view that shows what "
+        "the classifier actually learned about click volume, "
+        "marginalized over the real covariate distribution "
+        "(q_shapley_attribution explains channels; this explains "
+        "the model). One users x 10 grid cross join, partial-"
+        "aggregated per grid point; per-profile sigmoids quantize "
+        "to BIGINT at 1e-10 before the mean, so no float sum "
+        "order exists on either engine."
+    ),
+    tags=("analytics", "extension", "ml", "evaluation"),
+)
+def q_partial_dependence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    feat = _logistic_features(spark, sf_dir)
+    beta = irls_fit(feat, LOGISTIC)
+    grid = local_frame(
+        spark,
+        [(g,) for g in _PD_GRID], "g double"
     )
-    def q_partial_dependence(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from healthcare_etl_spark.operators.logistic import logistic_fit
-
-        ev = load_table(spark, sf_dir, "events")
-        feat = ev.groupBy("user_id").agg(
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            ).alias("x1"),
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-            ).alias("x2"),
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("value") > 150), 1
-                ).otherwise(0)
-            ).alias("y"),
-        ).persist()
-        try:
-            b0, b1, b2 = logistic_fit(feat)
-            grid = local_frame(
-                spark,
-                [(g,) for g in _PD_GRID], "g double"
-            )
-            eta = F.lit(b0) + F.lit(b1) * F.col("g") + F.lit(b2) * F.col("x2")
-            pq = F.round(
-                (F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))) * 10000000000.0
-            ).cast("long")
-            pd = feat.crossJoin(F.broadcast(grid)).select(
-                F.col("g"), pq.alias("pq")
-            )
-            return pd.groupBy(F.col("g").alias("x1_log_clicks")).agg(
-                F.count(F.lit(1)).cast("long").alias("n_profiles"),
-                stable_round(
-                    F.sum("pq").cast("long") / 10000000000.0 / F.count(F.lit(1)), 6
-                ).alias("mean_p"),
-            )
-        finally:
-            feat.unpersist()
-
-
-_register_partial_dependence()
+    pq = F.round(logistic_p(beta, x1="g") * 10000000000.0).cast("long")
+    pd = feat.crossJoin(F.broadcast(grid)).select(
+        F.col("g"), pq.alias("pq")
+    )
+    return pd.groupBy(F.col("g").alias("x1_log_clicks")).agg(
+        F.count(F.lit(1)).cast("long").alias("n_profiles"),
+        stable_round(
+            F.sum("pq").cast("long") / 10000000000.0 / F.count(F.lit(1)), 6
+        ).alias("mean_p"),
+    )
 
 
 def _permutation_importance_oracle() -> str:
-    from healthcare_etl_spark.operators.logistic import irls_beta_ctes
-
-    parts, final = irls_beta_ctes(_logistic_features_sql())
+    parts, final = irls_beta_ctes(_logistic_features_sql(), LOGISTIC)
     joined = ",\n".join(parts)
     return f"""WITH {joined},
 feat_u AS (
@@ -1021,114 +902,86 @@ SELECT f AS feature, base_acc, perm_acc, importance FROM (
 """.strip()
 
 
-def _register_permutation_importance() -> None:
-    @register(
-        "q_permutation_importance",
-        oracle=_permutation_importance_oracle(),
-        description=(
-            "Permutation feature importance for the IRLS model: each "
-            "feature column is permuted by a deterministic md5-keyed "
-            "cyclic shift (rank users by content hash, take the next "
-            "user's value — a true permutation, reproducible on any "
-            "engine/partitioning, no RNG state) and the drop in "
-            "training accuracy is the importance — the model-agnostic "
-            "'which signals does the model actually lean on' readout "
-            "next to q_partial_dependence's shape view. Accuracy "
-            "deltas are exact BIGINT hit-counts from ONE pass over "
-            "the shifted frame; the shift itself is a two-phase "
-            "bucketed global rank (bucketed_rank — no single-partition "
-            "sort) plus an equi-join on adjacent ranks, fully "
-            "distributed over the users-sized aggregate."
+@register(
+    "q_permutation_importance",
+    oracle=_permutation_importance_oracle(),
+    description=(
+        "Permutation feature importance for the IRLS model: each "
+        "feature column is permuted by a deterministic md5-keyed "
+        "cyclic shift (rank users by content hash, take the next "
+        "user's value — a true permutation, reproducible on any "
+        "engine/partitioning, no RNG state) and the drop in "
+        "training accuracy is the importance — the model-agnostic "
+        "'which signals does the model actually lean on' readout "
+        "next to q_partial_dependence's shape view. Accuracy "
+        "deltas are exact BIGINT hit-counts from ONE pass over "
+        "the shifted frame; the shift itself is a two-phase "
+        "bucketed global rank (bucketed_rank — no single-partition "
+        "sort) plus an equi-join on adjacent ranks, fully "
+        "distributed over the users-sized aggregate."
+    ),
+    tags=("analytics", "extension", "ml", "evaluation"),
+)
+def q_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    feat = _logistic_features(spark, sf_dir)
+    beta = irls_fit(feat, LOGISTIC)
+    h = F.conv(
+        F.substring(
+            F.md5(F.concat(F.lit("pi:"), F.col("user_id").cast("string"))),
+            1,
+            8,
         ),
-        tags=("analytics", "extension", "ml", "evaluation"),
+        16,
+        10,
+    ).cast("long")
+    from healthcare_etl_spark.operators.scale import bucketed_rank
+
+    n_users = feat.count()
+    # two-phase bucketed global rank over (hash, user_id) — the
+    # permutation pairing needs a total order but never a
+    # single-partition sort; hash div 2^20 coarsens the order
+    keyed = bucketed_rank(
+        feat.select("user_id", "x1", "x2", "y", h.alias("hk")),
+        buckets=[F.expr("hk div 1048576")],
+        order_by=[F.asc("hk"), F.asc("user_id")],
+        out_col="rk",
+    ).withColumn("n", F.lit(n_users).cast("long"))
+    nxt = keyed.select(
+        F.col("rk").alias("rk_b"),
+        F.col("x1").alias("x1_perm"),
+        F.col("x2").alias("x2_perm"),
     )
-    def q_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from healthcare_etl_spark.operators.logistic import logistic_fit
+    shuf = keyed.join(
+        nxt, F.col("rk_b") == (F.col("rk") % F.col("n")) + 1
+    )
 
-        ev = load_table(spark, sf_dir, "events")
-        feat = ev.groupBy("user_id").agg(
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            ).alias("x1"),
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-            ).alias("x2"),
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("value") > 150), 1
-                ).otherwise(0)
-            ).alias("y"),
-        ).persist()
-        try:
-            b0, b1, b2 = logistic_fit(feat)
-            h = F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("pi:"), F.col("user_id").cast("string"))),
-                    1,
-                    8,
+    def hits(x1, x2):
+        pred = F.when(logistic_p(beta, x1, x2) > 0.5, 1).otherwise(0)
+        return F.sum(F.when(pred == F.col("y"), 1).otherwise(0)).cast("long")
+
+    acc = shuf.agg(
+        hits("x1", "x2").alias("base_ok"),
+        hits("x1_perm", "x2").alias("x1_ok"),
+        hits("x1", "x2_perm").alias("x2_ok"),
+        F.count(F.lit(1)).cast("long").alias("n"),
+    )
+    rows = []
+    for fname, okc in [("x1_log_clicks", "x1_ok"), ("x2_log_views", "x2_ok")]:
+        rows.append(
+            acc.select(
+                F.lit(fname).alias("feature"),
+                stable_round(F.col("base_ok") * 1.0 / F.col("n"), 6).alias(
+                    "base_acc"
                 ),
-                16,
-                10,
-            ).cast("long")
-            from healthcare_etl_spark.operators.scale import bucketed_rank
-
-            n_users = feat.count()
-            # two-phase bucketed global rank over (hash, user_id) — the
-            # permutation pairing needs a total order but never a
-            # single-partition sort; hash div 2^20 coarsens the order
-            keyed = bucketed_rank(
-                feat.select("user_id", "x1", "x2", "y", h.alias("hk")),
-                buckets=[F.expr("hk div 1048576")],
-                order_by=[F.asc("hk"), F.asc("user_id")],
-                out_col="rk",
-            ).withColumn("n", F.lit(n_users).cast("long"))
-            nxt = keyed.select(
-                F.col("rk").alias("rk_b"),
-                F.col("x1").alias("x1_perm"),
-                F.col("x2").alias("x2_perm"),
+                stable_round(F.col(okc) * 1.0 / F.col("n"), 6).alias(
+                    "perm_acc"
+                ),
+                stable_round(
+                    (F.col("base_ok") - F.col(okc)) * 1.0 / F.col("n"), 6
+                ).alias("importance"),
             )
-            shuf = keyed.join(
-                nxt, F.col("rk_b") == (F.col("rk") % F.col("n")) + 1
-            )
-
-            def sig(x1c, x2c):
-                eta = F.lit(b0) + F.lit(b1) * x1c + F.lit(b2) * x2c
-                return F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
-
-            def hits(x1c, x2c):
-                pred = F.when(sig(x1c, x2c) > 0.5, 1).otherwise(0)
-                return F.sum(F.when(pred == F.col("y"), 1).otherwise(0)).cast("long")
-
-            acc = shuf.agg(
-                hits(F.col("x1"), F.col("x2")).alias("base_ok"),
-                hits(F.col("x1_perm"), F.col("x2")).alias("x1_ok"),
-                hits(F.col("x1"), F.col("x2_perm")).alias("x2_ok"),
-                F.count(F.lit(1)).cast("long").alias("n"),
-            )
-            rows = []
-            for fname, okc in [("x1_log_clicks", "x1_ok"), ("x2_log_views", "x2_ok")]:
-                rows.append(
-                    acc.select(
-                        F.lit(fname).alias("feature"),
-                        stable_round(F.col("base_ok") * 1.0 / F.col("n"), 6).alias(
-                            "base_acc"
-                        ),
-                        stable_round(F.col(okc) * 1.0 / F.col("n"), 6).alias(
-                            "perm_acc"
-                        ),
-                        stable_round(
-                            (F.col("base_ok") - F.col(okc)) * 1.0 / F.col("n"), 6
-                        ).alias("importance"),
-                    )
-                )
-            return rows[0].unionAll(rows[1])
-        finally:
-            feat.unpersist()
-
-
-_register_permutation_importance()
+        )
+    return rows[0].unionAll(rows[1])
 
 
 def _register_mahalanobis() -> None:
@@ -1534,9 +1387,7 @@ _register_wilcoxon()
 
 
 def _mcnemar_oracle() -> str:
-    from healthcare_etl_spark.operators.logistic import irls_beta_ctes
-
-    parts, final = irls_beta_ctes(_logistic_features_sql())
+    parts, final = irls_beta_ctes(_logistic_features_sql(), LOGISTIC)
     joined = ",\n".join(parts)
     return f"""WITH {joined},
 scored AS (
@@ -1564,81 +1415,54 @@ FROM cells WHERE b + c > 0
 """.strip()
 
 
-def _register_mcnemar() -> None:
-    @register(
-        "q_mcnemar_test",
-        oracle=_mcnemar_oracle(),
-        description=(
-            "McNemar's test (continuity-corrected) comparing the IRLS "
-            "model against the naive click-volume baseline "
-            "(ln(1+clicks) > 2) on the SAME users: only the discordant "
-            "cells — users exactly one classifier gets right — carry "
-            "information about which model is better, which is why "
-            "comparing two accuracies with a two-proportion z-test "
-            "(q_ab_test_ztest's machinery) is wrong for paired "
-            "predictions (it ignores the pairing and wastes the "
-            "concordant mass). The model-comparison member of the "
-            "testing family: chi2 = (|b-c|-1)^2/(b+c) from four exact "
-            "BIGINT cells out of ONE partial-aggregated scoring pass."
-        ),
-        tags=("analytics", "extension", "stats", "ml", "evaluation"),
+@register(
+    "q_mcnemar_test",
+    oracle=_mcnemar_oracle(),
+    description=(
+        "McNemar's test (continuity-corrected) comparing the IRLS "
+        "model against the naive click-volume baseline "
+        "(ln(1+clicks) > 2) on the SAME users: only the discordant "
+        "cells — users exactly one classifier gets right — carry "
+        "information about which model is better, which is why "
+        "comparing two accuracies with a two-proportion z-test "
+        "(q_ab_test_ztest's machinery) is wrong for paired "
+        "predictions (it ignores the pairing and wastes the "
+        "concordant mass). The model-comparison member of the "
+        "testing family: chi2 = (|b-c|-1)^2/(b+c) from four exact "
+        "BIGINT cells out of ONE partial-aggregated scoring pass."
+    ),
+    tags=("analytics", "extension", "stats", "ml", "evaluation"),
+)
+def q_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+    feat = _logistic_features(spark, sf_dir)
+    beta = irls_fit(feat, LOGISTIC)
+    pm = F.when(logistic_p(beta) > 0.5, 1).otherwise(0)
+    pb = F.when(F.col("x1") > 2.0, 1).otherwise(0)
+    scored = feat.select("y", pm.alias("pm"), pb.alias("pb"))
+    y, m, bl = F.col("y"), F.col("pm"), F.col("pb")
+    cells = scored.agg(
+        F.sum(F.when((m == y) & (bl != y), 1).otherwise(0))
+        .cast("long")
+        .alias("b"),
+        F.sum(F.when((m != y) & (bl == y), 1).otherwise(0))
+        .cast("long")
+        .alias("c"),
+        F.sum(F.when((m == y) & (bl == y), 1).otherwise(0))
+        .cast("long")
+        .alias("both_right"),
+        F.sum(F.when((m != y) & (bl != y), 1).otherwise(0))
+        .cast("long")
+        .alias("both_wrong"),
     )
-    def q_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from healthcare_etl_spark.operators.logistic import logistic_fit
-
-        ev = load_table(spark, sf_dir, "events")
-        feat = ev.groupBy("user_id").agg(
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            ).alias("x1"),
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-            ).alias("x2"),
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("value") > 150), 1
-                ).otherwise(0)
-            ).alias("y"),
-        ).persist()
-        try:
-            b0, b1, b2 = logistic_fit(feat)
-            eta = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
-            pm = F.when(
-                F.lit(1.0) / (F.lit(1.0) + F.exp(-eta)) > 0.5, 1
-            ).otherwise(0)
-            pb = F.when(F.col("x1") > 2.0, 1).otherwise(0)
-            scored = feat.select("y", pm.alias("pm"), pb.alias("pb"))
-            y, m, bl = F.col("y"), F.col("pm"), F.col("pb")
-            cells = scored.agg(
-                F.sum(F.when((m == y) & (bl != y), 1).otherwise(0))
-                .cast("long")
-                .alias("b"),
-                F.sum(F.when((m != y) & (bl == y), 1).otherwise(0))
-                .cast("long")
-                .alias("c"),
-                F.sum(F.when((m == y) & (bl == y), 1).otherwise(0))
-                .cast("long")
-                .alias("both_right"),
-                F.sum(F.when((m != y) & (bl != y), 1).otherwise(0))
-                .cast("long")
-                .alias("both_wrong"),
-            )
-            b, c = F.col("b"), F.col("c")
-            chi2 = (F.abs(b - c) - 1.0) * (F.abs(b - c) - 1.0) / (b + c)
-            return cells.filter(b + c > 0).select(
-                b.alias("model_only_right"),
-                c.alias("baseline_only_right"),
-                "both_right",
-                "both_wrong",
-                stable_round(chi2, 6).alias("mcnemar_chi2"),
-            )
-        finally:
-            feat.unpersist()
-
-
-_register_mcnemar()
+    b, c = F.col("b"), F.col("c")
+    chi2 = (F.abs(b - c) - 1.0) * (F.abs(b - c) - 1.0) / (b + c)
+    return cells.filter(b + c > 0).select(
+        b.alias("model_only_right"),
+        c.alias("baseline_only_right"),
+        "both_right",
+        "both_wrong",
+        stable_round(chi2, 6).alias("mcnemar_chi2"),
+    )
 
 
 def _register_logrank() -> None:
@@ -2474,9 +2298,7 @@ _register_cochran_armitage()
 
 
 def _hosmer_lemeshow_oracle() -> str:
-    from healthcare_etl_spark.operators.logistic import irls_beta_ctes
-
-    parts, final = irls_beta_ctes(_logistic_features_sql())
+    parts, final = irls_beta_ctes(_logistic_features_sql(), LOGISTIC)
     joined = ",\n".join(parts)
     return f"""WITH {joined},
 scored AS (
@@ -2510,84 +2332,55 @@ FROM terms
 """.strip()
 
 
-def _register_hosmer_lemeshow() -> None:
-    @register(
-        "q_hosmer_lemeshow",
-        oracle=_hosmer_lemeshow_oracle(),
-        description=(
-            "Hosmer-Lemeshow goodness-of-fit for the IRLS model: "
-            "chi2 over 10 fixed probability bins comparing observed "
-            "vs expected conversions (both classes), dof = bins - 2 — "
-            "the FORMAL calibration test beside q_calibration_ece's "
-            "summary number and q_isotonic_calibration's fix (ECE "
-            "says how far off; HL says whether the miscalibration "
-            "exceeds chance). Scores quantize to integer 1e-6 units "
-            "BEFORE binning and summing, so expected counts are "
-            "exact-BIGINT sums, and per-bin chi2 terms quantize at "
-            "1e-12 before the final fold — no float crosses rows "
-            "anywhere."
-        ),
-        tags=("analytics", "extension", "stats", "ml", "evaluation"),
+@register(
+    "q_hosmer_lemeshow",
+    oracle=_hosmer_lemeshow_oracle(),
+    description=(
+        "Hosmer-Lemeshow goodness-of-fit for the IRLS model: "
+        "chi2 over 10 fixed probability bins comparing observed "
+        "vs expected conversions (both classes), dof = bins - 2 — "
+        "the FORMAL calibration test beside q_calibration_ece's "
+        "summary number and q_isotonic_calibration's fix (ECE "
+        "says how far off; HL says whether the miscalibration "
+        "exceeds chance). Scores quantize to integer 1e-6 units "
+        "BEFORE binning and summing, so expected counts are "
+        "exact-BIGINT sums, and per-bin chi2 terms quantize at "
+        "1e-12 before the final fold — no float crosses rows "
+        "anywhere."
+    ),
+    tags=("analytics", "extension", "stats", "ml", "evaluation"),
+)
+def q_hosmer_lemeshow(spark: SparkSession, sf_dir: str) -> DataFrame:
+    feat = _logistic_features(spark, sf_dir)
+    beta = irls_fit(feat, LOGISTIC)
+    pq = F.round(logistic_p(beta) * 1000000.0).cast("long")
+    scored = feat.select("y", pq.alias("pq"))
+    bins = scored.groupBy(
+        F.least(F.floor(F.col("pq") / 100000), F.lit(9)).cast("long").alias(
+            "bin"
+        )
+    ).agg(
+        F.count(F.lit(1)).cast("long").alias("n_g"),
+        F.sum("y").cast("long").alias("o1"),
+        F.sum("pq").cast("long").alias("e1q"),
     )
-    def q_hosmer_lemeshow(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from healthcare_etl_spark.operators.logistic import logistic_fit
-
-        ev = load_table(spark, sf_dir, "events")
-        feat = ev.groupBy("user_id").agg(
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            ).alias("x1"),
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-            ).alias("x2"),
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("value") > 150), 1
-                ).otherwise(0)
-            ).alias("y"),
-        ).persist()
-        try:
-            b0, b1, b2 = logistic_fit(feat)
-            eta = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
-            pq = F.round(
-                (F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))) * 1000000.0
-            ).cast("long")
-            scored = feat.select("y", pq.alias("pq"))
-            bins = scored.groupBy(
-                F.least(F.floor(F.col("pq") / 100000), F.lit(9)).cast("long").alias(
-                    "bin"
-                )
-            ).agg(
-                F.count(F.lit(1)).cast("long").alias("n_g"),
-                F.sum("y").cast("long").alias("o1"),
-                F.sum("pq").cast("long").alias("e1q"),
-            )
-            n_g, o1 = F.col("n_g"), F.col("o1")
-            e1 = F.col("e1q") / 1000000.0
-            term = (o1 - e1) * (o1 - e1) / e1 + ((n_g - o1) - (n_g - e1)) * (
-                (n_g - o1) - (n_g - e1)
-            ) / (n_g - e1)
-            terms = bins.filter(
-                (F.col("e1q") > 0) & (n_g * 1000000 > F.col("e1q"))
-            ).select(F.round(term * 1e12).cast("long").alias("hq"))
-            return terms.agg(
-                F.count(F.lit(1)).cast("long").alias("n_bins"),
-                stable_round(F.sum("hq").cast("long") / 1e12, 6).alias("hl_chi2"),
-                (F.count(F.lit(1)) - 2).cast("long").alias("dof"),
-            )
-        finally:
-            feat.unpersist()
-
-
-_register_hosmer_lemeshow()
+    n_g, o1 = F.col("n_g"), F.col("o1")
+    e1 = F.col("e1q") / 1000000.0
+    term = (o1 - e1) * (o1 - e1) / e1 + ((n_g - o1) - (n_g - e1)) * (
+        (n_g - o1) - (n_g - e1)
+    ) / (n_g - e1)
+    terms = bins.filter(
+        (F.col("e1q") > 0) & (n_g * 1000000 > F.col("e1q"))
+    ).select(F.round(term * 1e12).cast("long").alias("hq"))
+    return terms.agg(
+        F.count(F.lit(1)).cast("long").alias("n_bins"),
+        stable_round(F.sum("hq").cast("long") / 1e12, 6).alias("hl_chi2"),
+        (F.count(F.lit(1)) - 2).cast("long").alias("dof"),
+    )
 
 
 def _brier_oracle() -> str:
-    from healthcare_etl_spark.operators.logistic import irls_beta_ctes
-
-    parts, final = irls_beta_ctes(_logistic_features_sql())
+    parts, final = irls_beta_ctes(_logistic_features_sql(), LOGISTIC)
     joined = ",\n".join(parts)
     return f"""WITH {joined},
 scored AS (
@@ -2630,104 +2423,76 @@ FROM decomp
 """.strip()
 
 
-def _register_brier() -> None:
-    @register(
-        "q_brier_score",
-        oracle=_brier_oracle(),
-        description=(
-            "Brier score with the Murphy decomposition (reliability - "
-            "resolution + uncertainty, over the 10 probability bins): "
-            "the strictly-proper scoring rule that grades probability "
-            "forecasts as forecasts, completing the calibration "
-            "toolkit — ECE summarizes miscalibration, Hosmer-Lemeshow "
-            "tests it, Brier PRICES it together with discrimination "
-            "(a model can ace HL yet have zero resolution; the "
-            "decomposition separates the two). Scores are integer "
-            "1e-6 units, so the per-user squared errors are exact "
-            "BIGINTs and the per-bin decomposition terms quantize at "
-            "1e-12 before their folds."
-        ),
-        tags=("analytics", "extension", "stats", "ml", "evaluation"),
+@register(
+    "q_brier_score",
+    oracle=_brier_oracle(),
+    description=(
+        "Brier score with the Murphy decomposition (reliability - "
+        "resolution + uncertainty, over the 10 probability bins): "
+        "the strictly-proper scoring rule that grades probability "
+        "forecasts as forecasts, completing the calibration "
+        "toolkit — ECE summarizes miscalibration, Hosmer-Lemeshow "
+        "tests it, Brier PRICES it together with discrimination "
+        "(a model can ace HL yet have zero resolution; the "
+        "decomposition separates the two). Scores are integer "
+        "1e-6 units, so the per-user squared errors are exact "
+        "BIGINTs and the per-bin decomposition terms quantize at "
+        "1e-12 before their folds."
+    ),
+    tags=("analytics", "extension", "stats", "ml", "evaluation"),
+)
+def q_brier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    feat = _logistic_features(spark, sf_dir)
+    beta = irls_fit(feat, LOGISTIC)
+    pq = F.round(logistic_p(beta) * 1000000.0).cast("long")
+    scored = feat.select("y", pq.alias("pq"))
+    brier = scored.agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("y").cast("long").alias("pos"),
+        F.sum(
+            (F.col("pq") - F.col("y") * 1000000)
+            * (F.col("pq") - F.col("y") * 1000000)
+        )
+        .cast("long")
+        .alias("bq"),
     )
-    def q_brier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from healthcare_etl_spark.operators.logistic import logistic_fit
-
-        ev = load_table(spark, sf_dir, "events")
-        feat = ev.groupBy("user_id").agg(
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            ).alias("x1"),
-            F.log(
-                F.lit(1.0)
-                + F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-            ).alias("x2"),
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("value") > 150), 1
-                ).otherwise(0)
-            ).alias("y"),
-        ).persist()
-        try:
-            b0, b1, b2 = logistic_fit(feat)
-            eta = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
-            pq = F.round(
-                (F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))) * 1000000.0
-            ).cast("long")
-            scored = feat.select("y", pq.alias("pq")).persist()
-            brier = scored.agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("y").cast("long").alias("pos"),
-                F.sum(
-                    (F.col("pq") - F.col("y") * 1000000)
-                    * (F.col("pq") - F.col("y") * 1000000)
-                )
-                .cast("long")
-                .alias("bq"),
-            )
-            bins = scored.groupBy(
-                F.least(F.floor(F.col("pq") / 100000), F.lit(9)).cast("long").alias(
-                    "bin"
-                )
-            ).agg(
-                F.count(F.lit(1)).cast("long").alias("n_g"),
-                F.sum("y").cast("long").alias("o_g"),
-                F.sum("pq").cast("long").alias("pq_g"),
-            )
-            j = bins.crossJoin(F.broadcast(brier))
-            n_g, o_g, pq_g = F.col("n_g"), F.col("o_g"), F.col("pq_g")
-            pbar_g = pq_g * 1.0 / n_g / 1000000.0
-            obar_g = o_g * 1.0 / n_g
-            obar = F.col("pos") * 1.0 / F.col("n")
-            rel_t = F.round(n_g * (pbar_g - obar_g) * (pbar_g - obar_g) * 1e12).cast(
-                "long"
-            )
-            res_t = F.round(n_g * (obar_g - obar) * (obar_g - obar) * 1e12).cast(
-                "long"
-            )
-            decomp = j.agg(
-                F.sum(rel_t).cast("long").alias("rel_q"),
-                F.sum(res_t).cast("long").alias("res_q"),
-                F.max("n").alias("n"),
-                F.max("pos").alias("pos"),
-                F.max("bq").alias("bq"),
-            )
-            n, pos = F.col("n"), F.col("pos")
-            return decomp.select(
-                n.alias("n_users"),
-                stable_round(F.col("bq") / 1e12 / n, 6).alias("brier_score"),
-                stable_round(F.col("rel_q") / 1e12 / n, 6).alias("reliability"),
-                stable_round(F.col("res_q") / 1e12 / n, 6).alias("resolution"),
-                stable_round(
-                    (pos * 1.0 / n) * (F.lit(1.0) - pos * 1.0 / n), 6
-                ).alias("uncertainty"),
-            )
-        finally:
-            scored.unpersist()
-            feat.unpersist()
-
-
-_register_brier()
+    bins = scored.groupBy(
+        F.least(F.floor(F.col("pq") / 100000), F.lit(9)).cast("long").alias(
+            "bin"
+        )
+    ).agg(
+        F.count(F.lit(1)).cast("long").alias("n_g"),
+        F.sum("y").cast("long").alias("o_g"),
+        F.sum("pq").cast("long").alias("pq_g"),
+    )
+    j = bins.crossJoin(F.broadcast(brier))
+    n_g, o_g, pq_g = F.col("n_g"), F.col("o_g"), F.col("pq_g")
+    pbar_g = pq_g * 1.0 / n_g / 1000000.0
+    obar_g = o_g * 1.0 / n_g
+    obar = F.col("pos") * 1.0 / F.col("n")
+    rel_t = F.round(n_g * (pbar_g - obar_g) * (pbar_g - obar_g) * 1e12).cast(
+        "long"
+    )
+    res_t = F.round(n_g * (obar_g - obar) * (obar_g - obar) * 1e12).cast(
+        "long"
+    )
+    decomp = j.agg(
+        F.sum(rel_t).cast("long").alias("rel_q"),
+        F.sum(res_t).cast("long").alias("res_q"),
+        F.max("n").alias("n"),
+        F.max("pos").alias("pos"),
+        F.max("bq").alias("bq"),
+    )
+    n, pos = F.col("n"), F.col("pos")
+    return decomp.select(
+        n.alias("n_users"),
+        stable_round(F.col("bq") / 1e12 / n, 6).alias("brier_score"),
+        stable_round(F.col("rel_q") / 1e12 / n, 6).alias("reliability"),
+        stable_round(F.col("res_q") / 1e12 / n, 6).alias("resolution"),
+        stable_round(
+            (pos * 1.0 / n) * (F.lit(1.0) - pos * 1.0 / n), 6
+        ).alias("uncertainty"),
+    )
 
 
 def _register_wasserstein() -> None:

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from healthcare_etl_spark.functions.rounding import stable_round_sql
 from healthcare_etl_spark.operators.similarity import cosine_topk, lsh_ann_topk, neardup_pairs
 from healthcare_etl_spark.plans.registry import register
 from healthcare_etl_spark.sources import load_table, local_frame
@@ -26,6 +27,15 @@ _NORM = (
     "list_transform({v}, x -> x::DOUBLE * x::DOUBLE)), (acc, x) -> acc + x))"
 )
 _COS = f"({_DOT} / ({_NORM.format(v='{a}')} * {_NORM.format(v='{b}')}))"
+# Squared L2 distance, mirroring functions.vectors.l2_sq (elements cast
+# to double before subtracting; bit-identical doubles, so argmin
+# orderings agree with no rounding).
+_L2SQ = (
+    "list_reduce(list_prepend(0.0::DOUBLE, "
+    "list_transform(list_zip({a}, {b}), "
+    "s -> (s[1]::DOUBLE - s[2]::DOUBLE) * (s[1]::DOUBLE - s[2]::DOUBLE))), "
+    "(acc, x) -> acc + x)"
+)
 
 
 @register(
@@ -831,15 +841,6 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-
-# DuckDB mirror of functions.vectors.l2_sq (fixed left-to-right fold;
-# bit-identical doubles, so argmin orderings agree with no rounding).
-_L2SQ = (
-    "list_reduce(list_prepend(0.0::DOUBLE, "
-    "list_transform(list_zip({a}, {b}), "
-    "s -> (s[1]::DOUBLE - s[2]::DOUBLE) * (s[1]::DOUBLE - s[2]::DOUBLE))), "
-    "(acc, x) -> acc + x)"
-)
 
 
 @register(
@@ -1885,22 +1886,12 @@ FROM sil GROUP BY cluster
 _register_cluster_silhouette()
 
 
-# Squared L2 distance fragment mirroring the Spark zip_with fold below
-# (strict left-to-right, elements cast to double before subtracting).
-_D2 = (
-    "list_reduce(list_prepend(0.0::DOUBLE, "
-    "list_transform(list_zip({a}, {b}), "
-    "s -> (s[1]::DOUBLE - s[2]::DOUBLE) * (s[1]::DOUBLE - s[2]::DOUBLE))), "
-    "(acc, x) -> acc + x)"
-)
-
 
 def _geomedian_oracle(rounds: int = 2) -> str:
-    r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
     parts = [
         "pts AS (SELECT vec_id, embedding AS v FROM embeddings)",
         f"""m0 AS (
-    SELECT i AS pos, {r6('avg(v[i + 1]::DOUBLE)')} AS m
+    SELECT i AS pos, {stable_round_sql('avg(v[i + 1]::DOUBLE)')} AS m
     FROM pts CROSS JOIN range(64) t(i) GROUP BY i
 )""",
     ]
@@ -1912,7 +1903,7 @@ def _geomedian_oracle(rounds: int = 2) -> str:
         parts.append(
             f"""w{r} AS (
     SELECT p.vec_id,
-           1.0 / greatest({r6('sqrt(' + _D2.format(a='p.v', b='c.mv') + ')')},
+           1.0 / greatest({stable_round_sql('sqrt(' + _L2SQ.format(a='p.v', b='c.mv') + ')')},
                           0.000001) AS w
     FROM pts p CROSS JOIN {prev}v c
 )"""
@@ -1920,7 +1911,7 @@ def _geomedian_oracle(rounds: int = 2) -> str:
         parts.append(
             f"""m{r} AS (
     SELECT i AS pos,
-           {r6('sum(w.w * p.v[i + 1]::DOUBLE) / sum(w.w)')} AS m
+           {stable_round_sql('sum(w.w * p.v[i + 1]::DOUBLE) / sum(w.w)')} AS m
     FROM pts p JOIN w{r} w ON p.vec_id = w.vec_id
     CROSS JOIN range(64) t(i)
     GROUP BY i
@@ -2135,13 +2126,6 @@ def q_cluster_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MMD_D2 = (
-    "list_reduce(list_prepend(0.0::DOUBLE, "
-    "list_transform(list_zip({a}, {b}), "
-    "s -> (s[1]::DOUBLE - s[2]::DOUBLE) * (s[1]::DOUBLE - s[2]::DOUBLE))), "
-    "(acc, x) -> acc + x)"
-)
-
 
 @register(
     "q_mmd_drift",
@@ -2154,7 +2138,7 @@ WITH r AS (
 s AS (SELECT vec_id, label, embedding FROM r WHERE rk <= 150),
 pm AS (
     SELECT x.label AS lx, y.label AS ly,
-           CAST(round(exp(-({_MMD_D2.format(a="x.embedding", b="y.embedding")})
+           CAST(round(exp(-({_L2SQ.format(a="x.embedding", b="y.embedding")})
                           / 64.0) * 1000000000.0) AS BIGINT) AS kq
     FROM s x CROSS JOIN s y
 ),
@@ -2264,7 +2248,7 @@ def _kcenter_oracle_sql(k: int = 8) -> str:
     """Unrolled Gonzalez maximin greedy: round i's candidate distances
     ride a MATERIALIZED CTE (DuckDB would otherwise inline the shared
     point base into every round and plan exponentially)."""
-    d2 = _MMD_D2.format(a="p.embedding", b="c.embedding")
+    d2 = _L2SQ.format(a="p.embedding", b="c.embedding")
     dq = f"CAST(round(({d2}) * 1000000.0) AS BIGINT)"
     parts = [
         "pts AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings)",

@@ -16,27 +16,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from healthcare_etl_spark.plans.queries_similarity import _COS, _L2SQ
 from healthcare_etl_spark.plans.registry import register
 from healthcare_etl_spark.sources import load_table
 
-# DuckDB fragments mirroring functions.vectors (fold order preserved) —
-# same definitions as queries_similarity.py (kept textually identical).
-_DOT = (
-    "list_reduce(list_prepend(0.0::DOUBLE, "
-    "list_transform(list_zip({a}, {b}), s -> s[1]::DOUBLE * s[2]::DOUBLE)), "
-    "(acc, x) -> acc + x)"
-)
-_NORM = (
-    "sqrt(list_reduce(list_prepend(0.0::DOUBLE, "
-    "list_transform({v}, x -> x::DOUBLE * x::DOUBLE)), (acc, x) -> acc + x))"
-)
-_COS = f"({_DOT} / ({_NORM.format(v='{a}')} * {_NORM.format(v='{b}')}))"
-_L2SQ = (
-    "list_reduce(list_prepend(0.0::DOUBLE, "
-    "list_transform(list_zip({a}, {b}), "
-    "s -> (s[1]::DOUBLE - s[2]::DOUBLE) * (s[1]::DOUBLE - s[2]::DOUBLE))), "
-    "(acc, x) -> acc + x)"
-)
 # Element-wise residual (a - b), 6dp-stable (mirror of the Spark
 # zip_with + stable_round form in operators.pq.ivfpq_topk).
 _RESID = (

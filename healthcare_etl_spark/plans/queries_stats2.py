@@ -19,7 +19,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from healthcare_etl_spark.functions.rounding import stable_round
+from healthcare_etl_spark.functions.rounding import stable_round, stable_round_sql
+from healthcare_etl_spark.operators.logistic import (
+    LOGISTIC,
+    POISSON,
+    cramer3_sql,
+    irls_beta_ctes,
+    irls_fit,
+    logistic_p,
+)
 from healthcare_etl_spark.plans.registry import register
 from healthcare_etl_spark.sources import load_table, local_frame
 
@@ -1343,23 +1351,7 @@ def q_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _granger_oracle() -> str:
-    r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
-    det3 = (
-        "(a00 * (a11 * a22 - a12 * a12) - a01 * (a01 * a22 - a12 * a02)"
-        " + a02 * (a01 * a12 - a11 * a02))"
-    )
-    d0 = (
-        "(r0 * (a11 * a22 - a12 * a12) - a01 * (r1 * a22 - a12 * r2)"
-        " + a02 * (r1 * a12 - a11 * r2))"
-    )
-    d1 = (
-        "(a00 * (r1 * a22 - a12 * r2) - r0 * (a01 * a22 - a12 * a02)"
-        " + a02 * (a01 * r2 - r1 * a02))"
-    )
-    d2 = (
-        "(a00 * (a11 * r2 - r1 * a12) - a01 * (a01 * r2 - r1 * a02)"
-        " + r0 * (a01 * a12 - a11 * a02))"
-    )
+    b0, b1, b2 = cramer3_sql("a00", "a01", "a02", "a11", "a12", "a22", "r0", "r1", "r2")
     return f"""
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS day,
@@ -1378,35 +1370,35 @@ lagged AS (
 pts AS (SELECT y, x1, x2 FROM lagged WHERE x1 IS NOT NULL),
 m AS (
     SELECT CAST(count(*) AS BIGINT) AS n,
-           {r6('sum(x1)')} AS a01, {r6('sum(x2)')} AS a02,
-           {r6('sum(x1 * x1)')} AS a11, {r6('sum(x1 * x2)')} AS a12,
-           {r6('sum(x2 * x2)')} AS a22,
-           {r6('sum(y)')} AS r0, {r6('sum(y * x1)')} AS r1,
-           {r6('sum(y * x2)')} AS r2
+           {stable_round_sql('sum(x1)')} AS a01, {stable_round_sql('sum(x2)')} AS a02,
+           {stable_round_sql('sum(x1 * x1)')} AS a11, {stable_round_sql('sum(x1 * x2)')} AS a12,
+           {stable_round_sql('sum(x2 * x2)')} AS a22,
+           {stable_round_sql('sum(y)')} AS r0, {stable_round_sql('sum(y * x1)')} AS r1,
+           {stable_round_sql('sum(y * x2)')} AS r2
     FROM pts
 ),
 beta1 AS (
     SELECT n, a01, r0,
-           {r6('(n * r1 - a01 * r0) / (n * a11 - a01 * a01)')} AS c1,
-           {r6(f'{d0} / {det3}')} AS b0,
-           {r6(f'{d1} / {det3}')} AS b1,
-           {r6(f'{d2} / {det3}')} AS b2
+           {stable_round_sql('(n * r1 - a01 * r0) / (n * a11 - a01 * a01)')} AS c1,
+           {stable_round_sql(b0)} AS b0,
+           {stable_round_sql(b1)} AS b1,
+           {stable_round_sql(b2)} AS b2
     FROM (SELECT n * 1.0 AS a00, n, a01, a02, a11, a12, a22, r0, r1, r2 FROM m)
 ),
 beta AS (
-    SELECT n, c1, {r6('(r0 - c1 * a01) / n')} AS c0, b0, b1, b2 FROM beta1
+    SELECT n, c1, {stable_round_sql('(r0 - c1 * a01) / n')} AS c0, b0, b1, b2 FROM beta1
 ),
 rss AS (
     SELECT max(b.n) AS n, max(b.b2) AS b2,
-           {r6('sum((p.y - b.c0 - b.c1 * p.x1) * (p.y - b.c0 - b.c1 * p.x1))')}
+           {stable_round_sql('sum((p.y - b.c0 - b.c1 * p.x1) * (p.y - b.c0 - b.c1 * p.x1))')}
                AS rss_r,
-           {r6('sum((p.y - b.b0 - b.b1 * p.x1 - b.b2 * p.x2)'
+           {stable_round_sql('sum((p.y - b.b0 - b.b1 * p.x1 - b.b2 * p.x2)'
                 ' * (p.y - b.b0 - b.b1 * p.x1 - b.b2 * p.x2))')} AS rss_u
     FROM pts p CROSS JOIN beta b
 )
 SELECT n AS n_days_used, b2 AS beta_click_lag,
        rss_r, rss_u,
-       {r6('((rss_r - rss_u) / 1.0) / (rss_u / (n - 3))')} AS f_stat
+       {stable_round_sql('((rss_r - rss_u) / 1.0) / (rss_u / (n - 3))')} AS f_stat
 FROM rss
 """.strip()
 
@@ -1419,7 +1411,7 @@ FROM rss
         "predict today's purchase revenue beyond what yesterday's "
         "revenue already does? Restricted OLS pv_t ~ 1 + pv_(t-1) "
         "(closed-form 2x2) vs unrestricted pv_t ~ 1 + pv_(t-1) + "
-        "ck_(t-1) (the _solve3 Cramer form shared with the IRLS "
+        "ck_(t-1) (the cramer3_sql solve shared with the IRLS "
         "family), F = (RSS_r - RSS_u) / (RSS_u / (n-3)) with 1 "
         "restriction. The leading-indicator diagnostic for metric "
         "forecasting/alert routing. Scale shape: ONE data pass to the "
@@ -1432,8 +1424,6 @@ FROM rss
     tags=("analytics", "extension", "timeseries", "stats"),
 )
 def q_granger_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from healthcare_etl_spark.operators.logistic import _solve3
-
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
@@ -1457,87 +1447,54 @@ def q_granger_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.lag("ck").over(w) * 1.0).alias("x2"),
         )
         .filter(F.col("x1").isNotNull())
-        .persist()
     )
-    try:
-        x1, x2, y = F.col("x1"), F.col("x2"), F.col("y")
-        m = pts.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            stable_round(F.sum(x1), 6).alias("a01"),
-            stable_round(F.sum(x2), 6).alias("a02"),
-            stable_round(F.sum(x1 * x1), 6).alias("a11"),
-            stable_round(F.sum(x1 * x2), 6).alias("a12"),
-            stable_round(F.sum(x2 * x2), 6).alias("a22"),
-            stable_round(F.sum(y), 6).alias("r0"),
-            stable_round(F.sum(y * x1), 6).alias("r1"),
-            stable_round(F.sum(y * x2), 6).alias("r2"),
-        )
-        n = F.col("n")
-        a00 = n * 1.0
-        c1 = (n * F.col("r1") - F.col("a01") * F.col("r0")) / (
-            n * F.col("a11") - F.col("a01") * F.col("a01")
-        )
-        b0e, b1e, b2e = _solve3(
-            a00, F.col("a01"), F.col("a02"),
-            F.col("a11"), F.col("a12"), F.col("a22"),
-            F.col("r0"), F.col("r1"), F.col("r2"),
-        )
-        beta = m.select(
-            n,
-            stable_round(c1, 6).alias("c1"),
-            stable_round((F.col("r0") - stable_round(c1, 6) * F.col("a01")) / n, 6).alias(
-                "c0"
-            ),
-            stable_round(b0e, 6).alias("b0"),
-            stable_round(b1e, 6).alias("b1"),
-            stable_round(b2e, 6).alias("b2"),
-        )
-        res_r = y - F.col("c0") - F.col("c1") * x1
-        res_u = y - F.col("b0") - F.col("b1") * x1 - F.col("b2") * x2
-        rss = pts.crossJoin(F.broadcast(beta)).agg(
-            F.max("n").alias("n"),
-            F.max("b2").alias("b2"),
-            stable_round(F.sum(res_r * res_r), 6).alias("rss_r"),
-            stable_round(F.sum(res_u * res_u), 6).alias("rss_u"),
-        )
-        rr, ru = F.col("rss_r"), F.col("rss_u")
-        return rss.select(
-            F.col("n").alias("n_days_used"),
-            F.col("b2").alias("beta_click_lag"),
-            rr.alias("rss_r"),
-            ru.alias("rss_u"),
-            stable_round(((rr - ru) / 1.0) / (ru / (F.col("n") - 3)), 6).alias(
-                "f_stat"
-            ),
-        )
-    finally:
-        pts.unpersist()
-
-
-def _solve3_sql(a00, a01, a02, a11, a12, a22, r0, r1, r2):
-    """Textual clone of operators.logistic._solve3 (Cramer 3x3) over the
-    given moment-column SQL names; returns the three solution exprs."""
-    det = (
-        f"({a00} * ({a11} * {a22} - {a12} * {a12})"
-        f" - {a01} * ({a01} * {a22} - {a12} * {a02})"
-        f" + {a02} * ({a01} * {a12} - {a11} * {a02}))"
+    x1, x2, y = F.col("x1"), F.col("x2"), F.col("y")
+    m = pts.agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        stable_round(F.sum(x1), 6).alias("a01"),
+        stable_round(F.sum(x2), 6).alias("a02"),
+        stable_round(F.sum(x1 * x1), 6).alias("a11"),
+        stable_round(F.sum(x1 * x2), 6).alias("a12"),
+        stable_round(F.sum(x2 * x2), 6).alias("a22"),
+        stable_round(F.sum(y), 6).alias("r0"),
+        stable_round(F.sum(y * x1), 6).alias("r1"),
+        stable_round(F.sum(y * x2), 6).alias("r2"),
     )
-    d0 = (
-        f"({r0} * ({a11} * {a22} - {a12} * {a12})"
-        f" - {a01} * ({r1} * {a22} - {a12} * {r2})"
-        f" + {a02} * ({r1} * {a12} - {a11} * {r2}))"
+    n = F.col("n")
+    c1 = (n * F.col("r1") - F.col("a01") * F.col("r0")) / (
+        n * F.col("a11") - F.col("a01") * F.col("a01")
     )
-    d1 = (
-        f"({a00} * ({r1} * {a22} - {a12} * {r2})"
-        f" - {r0} * ({a01} * {a22} - {a12} * {a02})"
-        f" + {a02} * ({a01} * {r2} - {r1} * {a02}))"
+    b0e, b1e, b2e = (F.expr(e) for e in cramer3_sql(
+        "(n * 1.0D)", "a01", "a02", "a11", "a12", "a22", "r0", "r1", "r2"
+    ))
+    beta = m.select(
+        n,
+        stable_round(c1, 6).alias("c1"),
+        stable_round((F.col("r0") - stable_round(c1, 6) * F.col("a01")) / n, 6).alias(
+            "c0"
+        ),
+        stable_round(b0e, 6).alias("b0"),
+        stable_round(b1e, 6).alias("b1"),
+        stable_round(b2e, 6).alias("b2"),
     )
-    d2 = (
-        f"({a00} * ({a11} * {r2} - {r1} * {a12})"
-        f" - {a01} * ({a01} * {r2} - {r1} * {a02})"
-        f" + {r0} * ({a01} * {a12} - {a11} * {a02}))"
+    res_r = y - F.col("c0") - F.col("c1") * x1
+    res_u = y - F.col("b0") - F.col("b1") * x1 - F.col("b2") * x2
+    rss = pts.crossJoin(F.broadcast(beta)).agg(
+        F.max("n").alias("n"),
+        F.max("b2").alias("b2"),
+        stable_round(F.sum(res_r * res_r), 6).alias("rss_r"),
+        stable_round(F.sum(res_u * res_u), 6).alias("rss_u"),
     )
-    return f"({d0} / {det})", f"({d1} / {det})", f"({d2} / {det})"
+    rr, ru = F.col("rss_r"), F.col("rss_u")
+    return rss.select(
+        F.col("n").alias("n_days_used"),
+        F.col("b2").alias("beta_click_lag"),
+        rr.alias("rss_r"),
+        ru.alias("rss_u"),
+        stable_round(((rr - ru) / 1.0) / (ru / (F.col("n") - 3)), 6).alias(
+            "f_stat"
+        ),
+    )
 
 
 _AIPW_USER_CTE = """
@@ -1553,38 +1510,35 @@ FROM events GROUP BY user_id
 
 
 def _aipw_oracle() -> str:
-    from healthcare_etl_spark.operators.logistic import irls_beta_ctes
-
-    r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
-    parts, final = irls_beta_ctes("SELECT x1, x2, t AS y FROM u")
+    parts, final = irls_beta_ctes("SELECT x1, x2, t AS y FROM u", LOGISTIC)
     irls = ",\n".join(parts)
     sums = []
     for g, tag in ((1, "1"), (0, "0")):
         c = f"CASE WHEN t = {g} THEN"
         sums += [
             f"CAST(sum(CASE WHEN t = {g} THEN 1 ELSE 0 END) AS BIGINT) AS n{tag}",
-            f"{r6(f'sum({c} x1 ELSE 0.0 END)')} AS sx1_{tag}",
-            f"{r6(f'sum({c} x2 ELSE 0.0 END)')} AS sx2_{tag}",
-            f"{r6(f'sum({c} x1 * x1 ELSE 0.0 END)')} AS s11_{tag}",
-            f"{r6(f'sum({c} x1 * x2 ELSE 0.0 END)')} AS s12_{tag}",
-            f"{r6(f'sum({c} x2 * x2 ELSE 0.0 END)')} AS s22_{tag}",
-            f"{r6(f'sum({c} y ELSE 0.0 END)')} AS sy_{tag}",
-            f"{r6(f'sum({c} y * x1 ELSE 0.0 END)')} AS sy1_{tag}",
-            f"{r6(f'sum({c} y * x2 ELSE 0.0 END)')} AS sy2_{tag}",
+            f"{stable_round_sql(f'sum({c} x1 ELSE 0.0 END)')} AS sx1_{tag}",
+            f"{stable_round_sql(f'sum({c} x2 ELSE 0.0 END)')} AS sx2_{tag}",
+            f"{stable_round_sql(f'sum({c} x1 * x1 ELSE 0.0 END)')} AS s11_{tag}",
+            f"{stable_round_sql(f'sum({c} x1 * x2 ELSE 0.0 END)')} AS s12_{tag}",
+            f"{stable_round_sql(f'sum({c} x2 * x2 ELSE 0.0 END)')} AS s22_{tag}",
+            f"{stable_round_sql(f'sum({c} y ELSE 0.0 END)')} AS sy_{tag}",
+            f"{stable_round_sql(f'sum({c} y * x1 ELSE 0.0 END)')} AS sy1_{tag}",
+            f"{stable_round_sql(f'sum({c} y * x2 ELSE 0.0 END)')} AS sy2_{tag}",
         ]
     coefs = []
     for tag in ("1", "0"):
-        s0, s1, s2 = _solve3_sql(
+        s0, s1, s2 = cramer3_sql(
             f"(n{tag} * 1.0)", f"sx1_{tag}", f"sx2_{tag}",
             f"s11_{tag}", f"s12_{tag}", f"s22_{tag}",
             f"sy_{tag}", f"sy1_{tag}", f"sy2_{tag}",
         )
         coefs += [
-            f"{r6(s0)} AS m{tag}_0",
-            f"{r6(s1)} AS m{tag}_1",
-            f"{r6(s2)} AS m{tag}_2",
+            f"{stable_round_sql(s0)} AS m{tag}_0",
+            f"{stable_round_sql(s1)} AS m{tag}_1",
+            f"{stable_round_sql(s2)} AS m{tag}_2",
         ]
-    e6 = r6(
+    e6 = stable_round_sql(
         "least(greatest(1.0 / (1.0 + exp(-(b.b0 + b.b1 * u.x1 + b.b2 * u.x2))),"
         " 0.01), 0.99)"
     )
@@ -1610,13 +1564,13 @@ scored AS (
 agg AS (
     SELECT CAST(count(*) AS BIGINT) AS n,
            CAST(sum(t) AS BIGINT) AS n_treated,
-           {r6('sum(psi)')} AS sp,
-           {r6('sum(psi * psi)')} AS spp
+           {stable_round_sql('sum(psi)')} AS sp,
+           {stable_round_sql('sum(psi * psi)')} AS spp
     FROM scored
 )
 SELECT n AS n_users, n_treated,
-       {r6('sp / n')} AS ate_dollars,
-       {r6('sqrt(((n * spp - sp * sp) / (n * 1.0 * (n - 1))) / n)')} AS se_dollars
+       {stable_round_sql('sp / n')} AS ate_dollars,
+       {stable_round_sql('sqrt(((n * spp - sp * sp) / (n * 1.0 * (n - 1))) / n)')} AS se_dollars
 FROM agg
 """.strip()
 
@@ -1628,7 +1582,7 @@ FROM agg
         "Doubly-robust average treatment effect (AIPW): effect of a "
         "high-error experience (>=14 error events) on user spend, "
         "combining an IRLS propensity "
-        "model e(x) (the logistic_fit machinery, 4 rounds, clipped to "
+        "model e(x) (the irls_fit machinery, 4 rounds, clipped to "
         "[0.01, 0.99]) with per-arm OLS outcome models mu1/mu0 "
         "(closed-form Cramer solves on one conditional-moment pass) "
         "into the augmented-IPW score mu1 - mu0 + t(y-mu1)/e - "
@@ -1644,8 +1598,6 @@ FROM agg
     tags=("analytics", "extension", "stats", "causal", "ml"),
 )
 def q_aipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from healthcare_etl_spark.operators.logistic import _solve3, logistic_fit
-
     ev = load_table(spark, sf_dir, "events")
     u = ev.groupBy("user_id").agg(
         F.log(
@@ -1670,78 +1622,61 @@ def q_aipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             / 100.0
         ).alias("y"),
-    ).persist()
-    try:
-        pb0, pb1, pb2 = logistic_fit(u.select("x1", "x2", F.col("t").alias("y")))
-        x1, x2, y, t = F.col("x1"), F.col("x2"), F.col("y"), F.col("t")
-        mom_cols = []
-        for g, tag in ((1, "1"), (0, "0")):
-            is_g = t == g
-            mom_cols += [
-                F.sum(F.when(is_g, 1).otherwise(0)).cast("long").alias(f"n{tag}"),
-                stable_round(F.sum(F.when(is_g, x1).otherwise(0.0)), 6).alias(f"sx1_{tag}"),
-                stable_round(F.sum(F.when(is_g, x2).otherwise(0.0)), 6).alias(f"sx2_{tag}"),
-                stable_round(F.sum(F.when(is_g, x1 * x1).otherwise(0.0)), 6).alias(f"s11_{tag}"),
-                stable_round(F.sum(F.when(is_g, x1 * x2).otherwise(0.0)), 6).alias(f"s12_{tag}"),
-                stable_round(F.sum(F.when(is_g, x2 * x2).otherwise(0.0)), 6).alias(f"s22_{tag}"),
-                stable_round(F.sum(F.when(is_g, y).otherwise(0.0)), 6).alias(f"sy_{tag}"),
-                stable_round(F.sum(F.when(is_g, y * x1).otherwise(0.0)), 6).alias(f"sy1_{tag}"),
-                stable_round(F.sum(F.when(is_g, y * x2).otherwise(0.0)), 6).alias(f"sy2_{tag}"),
-            ]
-        mom = u.agg(*mom_cols)
-        coef_cols = []
-        for tag in ("1", "0"):
-            s0, s1, s2 = _solve3(
-                F.col(f"n{tag}") * 1.0,
-                F.col(f"sx1_{tag}"), F.col(f"sx2_{tag}"),
-                F.col(f"s11_{tag}"), F.col(f"s12_{tag}"), F.col(f"s22_{tag}"),
-                F.col(f"sy_{tag}"), F.col(f"sy1_{tag}"), F.col(f"sy2_{tag}"),
-            )
-            coef_cols += [
-                stable_round(s0, 6).alias(f"m{tag}_0"),
-                stable_round(s1, 6).alias(f"m{tag}_1"),
-                stable_round(s2, 6).alias(f"m{tag}_2"),
-            ]
-        coef = mom.select("n1", "n0", *coef_cols)
-        e6 = stable_round(
-            F.least(
-                F.greatest(
-                    F.lit(1.0)
-                    / (
-                        F.lit(1.0)
-                        + F.exp(-(F.lit(pb0) + F.lit(pb1) * x1 + F.lit(pb2) * x2))
-                    ),
-                    F.lit(0.01),
-                ),
-                F.lit(0.99),
-            ),
-            6,
-        )
-        mu1 = F.col("m1_0") + F.col("m1_1") * x1 + F.col("m1_2") * x2
-        mu0 = F.col("m0_0") + F.col("m0_1") * x1 + F.col("m0_2") * x2
-        psi = (
-            mu1 - mu0
-            + t * (y - mu1) / e6
-            - (F.lit(1) - t) * (y - mu0) / (F.lit(1.0) - e6)
-        )
-        scored = u.crossJoin(F.broadcast(coef)).select(t.alias("t"), psi.alias("psi"))
-        agg = scored.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("t").cast("long").alias("n_treated"),
-            stable_round(F.sum("psi"), 6).alias("sp"),
-            stable_round(F.sum(F.col("psi") * F.col("psi")), 6).alias("spp"),
-        )
-        n, sp, spp = F.col("n"), F.col("sp"), F.col("spp")
-        return agg.select(
-            n.alias("n_users"),
-            F.col("n_treated"),
-            stable_round(sp / n, 6).alias("ate_dollars"),
-            stable_round(
-                F.sqrt(((n * spp - sp * sp) / (n * 1.0 * (n - 1))) / n), 6
-            ).alias("se_dollars"),
-        )
-    finally:
-        u.unpersist()
+    )
+    beta = irls_fit(u.select("x1", "x2", F.col("t").alias("y")), LOGISTIC)
+    x1, x2, y, t = F.col("x1"), F.col("x2"), F.col("y"), F.col("t")
+    mom_cols = []
+    for g, tag in ((1, "1"), (0, "0")):
+        is_g = t == g
+        mom_cols += [
+            F.sum(F.when(is_g, 1).otherwise(0)).cast("long").alias(f"n{tag}"),
+            stable_round(F.sum(F.when(is_g, x1).otherwise(0.0)), 6).alias(f"sx1_{tag}"),
+            stable_round(F.sum(F.when(is_g, x2).otherwise(0.0)), 6).alias(f"sx2_{tag}"),
+            stable_round(F.sum(F.when(is_g, x1 * x1).otherwise(0.0)), 6).alias(f"s11_{tag}"),
+            stable_round(F.sum(F.when(is_g, x1 * x2).otherwise(0.0)), 6).alias(f"s12_{tag}"),
+            stable_round(F.sum(F.when(is_g, x2 * x2).otherwise(0.0)), 6).alias(f"s22_{tag}"),
+            stable_round(F.sum(F.when(is_g, y).otherwise(0.0)), 6).alias(f"sy_{tag}"),
+            stable_round(F.sum(F.when(is_g, y * x1).otherwise(0.0)), 6).alias(f"sy1_{tag}"),
+            stable_round(F.sum(F.when(is_g, y * x2).otherwise(0.0)), 6).alias(f"sy2_{tag}"),
+        ]
+    mom = u.agg(*mom_cols)
+    coef_cols = []
+    for tag in ("1", "0"):
+        s0, s1, s2 = (F.expr(e) for e in cramer3_sql(
+            f"(n{tag} * 1.0D)", f"sx1_{tag}", f"sx2_{tag}",
+            f"s11_{tag}", f"s12_{tag}", f"s22_{tag}",
+            f"sy_{tag}", f"sy1_{tag}", f"sy2_{tag}",
+        ))
+        coef_cols += [
+            stable_round(s0, 6).alias(f"m{tag}_0"),
+            stable_round(s1, 6).alias(f"m{tag}_1"),
+            stable_round(s2, 6).alias(f"m{tag}_2"),
+        ]
+    coef = mom.select("n1", "n0", *coef_cols)
+    e6 = stable_round(F.least(F.greatest(logistic_p(beta), F.lit(0.01)), F.lit(0.99)), 6)
+    mu1 = F.col("m1_0") + F.col("m1_1") * x1 + F.col("m1_2") * x2
+    mu0 = F.col("m0_0") + F.col("m0_1") * x1 + F.col("m0_2") * x2
+    psi = (
+        mu1 - mu0
+        + t * (y - mu1) / e6
+        - (F.lit(1) - t) * (y - mu0) / (F.lit(1.0) - e6)
+    )
+    scored = u.crossJoin(F.broadcast(coef)).select(t.alias("t"), psi.alias("psi"))
+    agg = scored.agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("t").cast("long").alias("n_treated"),
+        stable_round(F.sum("psi"), 6).alias("sp"),
+        stable_round(F.sum(F.col("psi") * F.col("psi")), 6).alias("spp"),
+    )
+    n, sp, spp = F.col("n"), F.col("sp"), F.col("spp")
+    return agg.select(
+        n.alias("n_users"),
+        F.col("n_treated"),
+        stable_round(sp / n, 6).alias("ate_dollars"),
+        stable_round(
+            F.sqrt(((n * spp - sp * sp) / (n * 1.0 * (n - 1))) / n), 6
+        ).alias("se_dollars"),
+    )
 
 
 _COX_SUBJ_CTE = """
@@ -1757,7 +1692,6 @@ FROM events GROUP BY user_id
 
 
 def _cox_oracle(rounds: int = 3) -> str:
-    r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
     parts = [
         f"subj AS ({_COX_SUBJ_CTE})",
         "b_0 AS (SELECT 0.0 AS b)",
@@ -1771,7 +1705,7 @@ def _cox_oracle(rounds: int = 3) -> str:
            CAST(round(sum(x * exp(b.b * x)) * 1000000.0) AS BIGINT) AS q1,
            CAST(round(sum(x * x * exp(b.b * x)) * 1000000.0) AS BIGINT) AS q2,
            CAST(sum(d) AS BIGINT) AS dt,
-           {r6('sum(d * x)')} AS sx
+           {stable_round_sql('sum(d * x)')} AS sx
     FROM subj CROSS JOIN {prev} b GROUP BY dur
 )"""
         )
@@ -1789,13 +1723,13 @@ def _cox_oracle(rounds: int = 3) -> str:
         )
         parts.append(
             f"""ui_{r} AS (
-    SELECT {r6('sum(sx - dt * (c1 * 1.0 / c0))')} AS u,
-           {r6('sum(dt * (c2 * 1.0 / c0 - (c1 * 1.0 / c0) * (c1 * 1.0 / c0)))')} AS i
+    SELECT {stable_round_sql('sum(sx - dt * (c1 * 1.0 / c0))')} AS u,
+           {stable_round_sql('sum(dt * (c2 * 1.0 / c0 - (c1 * 1.0 / c0) * (c1 * 1.0 / c0)))')} AS i
     FROM s_{r} WHERE dt > 0
 )"""
         )
         parts.append(
-            f"b_{r} AS (SELECT {r6('b.b + u.u / u.i')} AS b, u.i AS i "
+            f"b_{r} AS (SELECT {stable_round_sql('b.b + u.u / u.i')} AS b, u.i AS i "
             f"FROM {prev} b CROSS JOIN ui_{r} u)"
         )
     joined = ",\n".join(parts)
@@ -1807,8 +1741,8 @@ m AS (
 )
 SELECT m.n_subjects, m.n_events,
        b.b AS beta,
-       {r6('exp(b.b)')} AS hazard_ratio,
-       {r6('1.0 / sqrt(b.i)')} AS se_beta
+       {stable_round_sql('exp(b.b)')} AS hazard_ratio,
+       {stable_round_sql('1.0 / sqrt(b.i)')} AS se_beta
 FROM m CROSS JOIN b_{rounds} b
 """
 
@@ -1915,10 +1849,7 @@ FROM events GROUP BY user_id
 
 
 def _poisson_oracle() -> str:
-    from healthcare_etl_spark.operators.logistic import poisson_beta_ctes
-
-    r6 = lambda e: f"(round(({e}) * 1000000.0) / 1000000.0)"  # noqa: E731
-    parts, final = poisson_beta_ctes(_POISSON_FEAT_SQL)
+    parts, final = irls_beta_ctes(_POISSON_FEAT_SQL, POISSON)
     joined = ",\n".join(parts)
     return f"""WITH {joined},
 scored AS (
@@ -1927,9 +1858,9 @@ scored AS (
 )
 SELECT CAST(count(*) AS BIGINT) AS n_users,
        max(b0) AS beta0, max(b1) AS beta1, max(b2) AS beta2,
-       {r6("sum(2.0 * (CASE WHEN y = 0 THEN mu ELSE y * ln(y * 1.0 / mu) - (y - mu) END))")}
+       {stable_round_sql("sum(2.0 * (CASE WHEN y = 0 THEN mu ELSE y * ln(y * 1.0 / mu) - (y - mu) END))")}
            AS deviance,
-       {r6("sum((y - mu) * (y - mu) / mu) / (count(*) - 3)")} AS dispersion
+       {stable_round_sql("sum((y - mu) * (y - mu) / mu) / (count(*) - 3)")} AS dispersion
 FROM scored
 """
 
@@ -1954,8 +1885,6 @@ FROM scored
     tags=("analytics", "extension", "stats", "ml"),
 )
 def q_poisson_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from healthcare_etl_spark.operators.logistic import poisson_fit
-
     ev = load_table(spark, sf_dir, "events")
     feat = ev.groupBy("user_id").agg(
         F.log(
@@ -1970,35 +1899,19 @@ def q_poisson_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("y"),
     )
-    # Sufficient-statistics compression (r10, guide §2.3): x1/x2 are
-    # ln(1+count) of small per-user counts and y is a small purchase
-    # count, so the distinct (x1, x2, y) grid is tiny. All 4 IRLS moment
-    # passes and the final deviance/dispersion aggregate run weighted
-    # over the grid — one users-scale pass total instead of one per round.
-    feat = feat.groupBy("x1", "x2", "y").agg(
-        F.count(F.lit(1)).alias("cnt")
-    ).persist()
-    try:
-        b0, b1, b2 = poisson_fit(feat, weight="cnt")
-        mu = F.exp(F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2"))
-        y = F.col("y")
-        cnt = F.col("cnt")
-        n = F.sum(cnt)
-        dev_term = F.lit(2.0) * F.when(y == 0, mu).otherwise(
-            y * F.log(y * 1.0 / mu) - (y - mu)
-        )
-        return feat.agg(
-            n.cast("long").alias("n_users"),
-            F.lit(float(b0)).alias("beta0"),
-            F.lit(float(b1)).alias("beta1"),
-            F.lit(float(b2)).alias("beta2"),
-            stable_round(F.sum(dev_term * cnt), 6).alias("deviance"),
-            stable_round(
-                F.sum((y - mu) * (y - mu) / mu * cnt) / (n - 3), 6
-            ).alias("dispersion"),
-        )
-    finally:
-        feat.unpersist()
+    beta = irls_fit(feat, POISSON)
+    mu = F.exp(F.lit(beta[0]) + F.lit(beta[1]) * F.col("x1") + F.lit(beta[2]) * F.col("x2"))
+    y = F.col("y")
+    n = F.count(F.lit(1))
+    dev_term = F.lit(2.0) * F.when(y == 0, mu).otherwise(
+        y * F.log(y * 1.0 / mu) - (y - mu)
+    )
+    return feat.agg(
+        n.cast("long").alias("n_users"),
+        *(F.lit(float(b)).alias(f"beta{i}") for i, b in enumerate(beta)),
+        stable_round(F.sum(dev_term), 6).alias("deviance"),
+        stable_round(F.sum((y - mu) * (y - mu) / mu) / (n - 3), 6).alias("dispersion"),
+    )
 
 
 @register(

@@ -22,10 +22,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from healthcare_etl_spark.functions.rounding import stable_round
+from healthcare_etl_spark.plans.queries_stats2 import _ARM_A_SQL
+from healthcare_etl_spark.plans.queries_stats3 import _DEC
 from healthcare_etl_spark.plans.registry import register
 from healthcare_etl_spark.sources import load_table, local_frame
-
-_DEC = "decimal(38,0)"
 
 # ---------------------------------------------------------------------------
 # q_periodogram
@@ -537,10 +537,6 @@ def q_fixed_effects_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_event_study
 
 _ES_TREAT_DATE = "2024-01-15"
-_ES_ARM_SQL = (
-    "(('0x' || substring(md5('ab-v1:' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT"
-    " % 2 = 0)"
-)
 
 
 def _es_arm_col():
@@ -565,7 +561,7 @@ def _es_arm_col():
 WITH pts AS (
     SELECT CAST(floor(date_diff('day', DATE '{_ES_TREAT_DATE}', CAST(ts AS DATE))
                       / 7.0) AS BIGINT) AS rel_week,
-           {_ES_ARM_SQL} AS treated,
+           {_ARM_A_SQL} AS treated,
            CAST(round(value * 100) AS BIGINT) AS v
     FROM events
 ),

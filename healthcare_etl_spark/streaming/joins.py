@@ -16,8 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from healthcare_etl_spark.functions.timeutils import TS_FMT
 from healthcare_etl_spark.sources import load_table
-from healthcare_etl_spark.streaming.windows import _TS_FMT, _memory_run, streaming_events
+from healthcare_etl_spark.streaming.windows import _memory_run, streaming_events
 
 
 def _funnel(ev: DataFrame, how: str, *, watermarked: bool) -> DataFrame:
@@ -45,8 +46,8 @@ def _funnel(ev: DataFrame, how: str, *, watermarked: bool) -> DataFrame:
         "signup_id",
         "purchase_id",
         "user_id",
-        F.date_format("ts", _TS_FMT).alias("signup_ts"),
-        F.date_format("p_ts", _TS_FMT).alias("purchase_ts"),
+        F.date_format("ts", TS_FMT).alias("signup_ts"),
+        F.date_format("p_ts", TS_FMT).alias("purchase_ts"),
     )
 
 

@@ -26,8 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from healthcare_etl_spark.functions.rounding import stable_round
-
-_TS_FMT = "yyyy-MM-dd HH:mm:ss"
+from healthcare_etl_spark.functions.timeutils import TS_FMT
 
 
 def streaming_events(
@@ -138,7 +137,7 @@ def run_streaming_tumbling(
             stable_round(F.sum("value"), 4).alias("sum_value"),
         )
         .select(
-            F.date_format("w.start", _TS_FMT).alias("window_start"),
+            F.date_format("w.start", TS_FMT).alias("window_start"),
             "event_type",
             "n_events",
             "sum_value",
@@ -166,7 +165,7 @@ def run_streaming_sessionization(
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
-            F.date_format("w.start", _TS_FMT).alias("session_start"),
+            F.date_format("w.start", TS_FMT).alias("session_start"),
             "n_events",
         )
     )
@@ -223,7 +222,7 @@ def _sliding_counts(ev: DataFrame) -> DataFrame:
         ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
-            F.date_format("w.start", _TS_FMT).alias("window_start"),
+            F.date_format("w.start", TS_FMT).alias("window_start"),
             "event_type",
             "n_events",
         )
@@ -274,7 +273,7 @@ def _hll_registers(ev: DataFrame) -> DataFrame:
     return (
         hashed.groupBy(F.window("ts", "1 day").alias("w"), "idx")
         .agg(F.max(rho).cast("long").alias("m"))
-        .select(F.date_format("w.start", _TS_FMT).alias("window_start"), "idx", "m")
+        .select(F.date_format("w.start", TS_FMT).alias("window_start"), "idx", "m")
     )
 
 

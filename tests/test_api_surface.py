@@ -186,3 +186,37 @@ def test_no_broad_except_in_the_package():
         if isinstance(node, ast.ExceptHandler) and is_broad(node)
     ]
     assert not found, found
+
+
+def _string_constants():
+    """(module, name, value) of every top-level name the package binds
+    to a string literal."""
+    out = []
+    for path in _files(PKG):
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign):
+                targets = [node.target]
+            else:
+                continue
+            value = node.value
+            if isinstance(value, ast.Constant) and isinstance(value.value, str):
+                out += [(str(path.relative_to(REPO)), t.id, value.value)
+                        for t in targets if isinstance(t, ast.Name)]
+    return out
+
+
+def test_shared_string_constants_are_bound_once():
+    """A format string or SQL fragment that two places share is bound in
+    one module and imported by the others: no top-level string constant
+    is bound in two package modules under one name, and no string longer
+    than 15 characters is bound twice under any name."""
+    modules, sites = defaultdict(set), defaultdict(list)
+    for module, name, value in _string_constants():
+        modules[name].add(module)
+        if len(value) > 15:
+            sites[value].append(f"{module}:{name}")
+    copies = [f"{name} in {sorted(mods)}" for name, mods in modules.items() if len(mods) > 1]
+    copies += [" = ".join(s) for s in sites.values() if len(s) > 1]
+    assert not copies, copies

@@ -2348,36 +2348,53 @@ def test_logistic_irls_recovers_decision_boundary(spark):
     assert row["log_likelihood"] < 0.0
 
 
-def test_weighted_irls_matches_rowlevel_fit(spark):
-    """Sufficient-statistics compression (r10): fitting over the distinct
-    (x1, x2, y) grid with per-combo counts must reproduce the row-level
-    fit — coefficients, log-likelihood, accuracy and n all ride through
-    the same 6dp rounding discipline."""
-    import pyspark.sql.functions as F
+def test_grid_irls_fit_matches_rowlevel_oracle(spark):
+    """The Spark fit runs over the distinct (x1, x2, y) grid with per-
+    combination counts, DuckDB's unrolled IRLS sums row by row: over 600
+    heavily duplicated rows (discrete features like the ln(1+count)
+    event features of the GLM queries) both reach the same rounded
+    coefficients, for both families."""
+    import duckdb
 
-    from healthcare_etl_spark.operators.logistic import logistic_irls, poisson_fit
+    from healthcare_etl_spark.operators.logistic import LOGISTIC, POISSON, irls_beta_ctes, irls_fit
 
-    # Discrete features with heavy duplication, like the ln(1+count)
-    # event features the GLM queries use.
-    rows = spark.range(0, 600).select(
-        F.log(F.lit(1.0) + (F.col("id") % 7)).alias("x1"),
-        F.log(F.lit(1.0) + (F.col("id") % 5)).alias("x2"),
-        ((F.col("id") % 3) == 0).cast("int").alias("y"),
-    )
-    grid = rows.groupBy("x1", "x2", "y").agg(F.count(F.lit(1)).alias("cnt"))
-    flat = logistic_irls(rows).collect()[0]
-    comp = logistic_irls(grid, weight="cnt").collect()[0]
-    assert flat == comp, (flat, comp)
+    for family, y_col, y_sql in [
+        (LOGISTIC, ((F.col("id") % 3) == 0).cast("int"), "CAST(id % 3 = 0 AS INTEGER)"),
+        (POISSON, F.col("id") % 4, "id % 4"),
+    ]:
+        rows = spark.range(0, 600).select(
+            F.log(F.lit(1.0) + (F.col("id") % 7)).alias("x1"),
+            F.log(F.lit(1.0) + (F.col("id") % 5)).alias("x2"),
+            y_col.alias("y"),
+        )
+        parts, final = irls_beta_ctes(
+            "SELECT CAST(ln(1.0 + (id % 7)) AS DOUBLE) AS x1, "
+            f"CAST(ln(1.0 + (id % 5)) AS DOUBLE) AS x2, {y_sql} AS y FROM range(600) t(id)",
+            family,
+        )
+        oracle = duckdb.sql(f"WITH {', '.join(parts)} SELECT b0, b1, b2 FROM {final}").fetchone()
+        fit = irls_fit(rows, family)
+        assert fit == oracle, (family.name, fit, oracle)
+        assert all(b != 0.0 for b in fit), fit
 
-    pois_rows = spark.range(0, 600).select(
-        F.log(F.lit(1.0) + (F.col("id") % 7)).alias("x1"),
-        F.log(F.lit(1.0) + (F.col("id") % 5)).alias("x2"),
-        (F.col("id") % 4).cast("long").alias("y"),
-    )
-    pois_grid = pois_rows.groupBy("x1", "x2", "y").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    assert poisson_fit(pois_rows) == poisson_fit(pois_grid, weight="cnt")
+
+_IRLS_QUERIES = [
+    "q_logistic_regression", "q_calibration_ece", "q_isotonic_calibration", "q_roc_auc",
+    "q_threshold_sweep", "q_pr_auc", "q_psm_match", "q_partial_dependence",
+    "q_permutation_importance", "q_mcnemar_test", "q_hosmer_lemeshow", "q_brier_score",
+    "q_auc_delong_ci", "q_aipw_ate", "q_poisson_regression",
+]
+
+
+@pytest.mark.parametrize("name", _IRLS_QUERIES)
+def test_irls_query_build_leaves_no_cache(spark, sf_smoke, name):
+    """The fit persists its feature grid and unpersists it after the
+    last round: building a GLM query leaves the cache as it found it."""
+    from healthcare_etl_spark.plans.registry import get_registry
+
+    spark.catalog.clearCache()
+    get_registry()[name].fn(spark, sf_smoke)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_isotonic_calibration_is_monotone(spark):
