@@ -18,6 +18,13 @@ from pyspark.sql import functions as F
 
 from healthcare_etl_spark.functions.rounding import stable_round
 from healthcare_etl_spark.functions.timeutils import TS_FMT
+from healthcare_etl_spark.plans.power_iteration import (
+    PAGERANK_ROUNDS,
+    PAIR_COUNTS_SQL,
+    event_pairs,
+    pagerank_oracle_sql,
+    transitions,
+)
 from healthcare_etl_spark.plans.registry import register
 from healthcare_etl_spark.sources import load_table, local_frame, spread
 
@@ -124,19 +131,11 @@ def q_higher_order_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_event_transitions",
-    oracle="""
-WITH pairs AS (
-    SELECT event_type AS from_type,
-           lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type
-    FROM events
-),
-counts AS (
-    SELECT from_type, to_type, count(*) AS n
-    FROM pairs WHERE to_type IS NOT NULL GROUP BY 1, 2
-)
-SELECT from_type, to_type, n,
-       (round((n / sum(n) OVER (PARTITION BY from_type)) * 1000000.0) / 1000000.0) AS p
-FROM counts
+    oracle=f"""
+WITH {PAIR_COUNTS_SQL}
+SELECT f AS from_type, t AS to_type, n,
+       (round((n / sum(n) OVER (PARTITION BY f)) * 1000000.0) / 1000000.0) AS p
+FROM cnt
 """,
     description=(
         "First-order Markov transition matrix over per-user event "
@@ -148,19 +147,8 @@ FROM counts
     tags=("events", "extension", "parity"),
 )
 def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = ev.select(
-        F.col("event_type").alias("from_type"),
-        F.lead("event_type").over(w).alias("to_type"),
-    ).filter(F.col("to_type").isNotNull())
-    counts = pairs.groupBy("from_type", "to_type").agg(F.count(F.lit(1)).alias("n"))
-    wf = Window.partitionBy("from_type")
-    return counts.select(
-        "from_type",
-        "to_type",
-        "n",
-        stable_round(F.col("n") / F.sum("n").over(wf), 6).alias("p"),
+    return transitions(event_pairs(load_table(spark, sf_dir, "events"))).select(
+        F.col("f").alias("from_type"), F.col("t").alias("to_type"), "n", "p"
     )
 
 
@@ -435,40 +423,18 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pagerank_oracle() -> str:
     from healthcare_etl_spark.plans.queries_dedup import _lsh_jpairs_ctes
 
-    parts = [
-        f"WITH {_lsh_jpairs_ctes()},",
-        """
-pedges AS (
+    graph = f"""{_lsh_jpairs_ctes()},
+edges AS (
     SELECT doc_a AS u, doc_b AS v FROM jpairs
     WHERE (round(jac * 1000000.0) / 1000000.0) >= 0.5
     UNION
     SELECT doc_b AS u, doc_a AS v FROM jpairs
     WHERE (round(jac * 1000000.0) / 1000000.0) >= 0.5
 ),
-deg AS (SELECT u, count(*) AS d FROM pedges GROUP BY u),
-nn AS (SELECT count(*) AS n FROM deg),
-r0 AS (
-    SELECT u AS node, d,
-           (round((1.0 / n) * 10000000000.0) / 10000000000.0) AS rank
-    FROM deg, nn
-),""",
-    ]
-    for t in range(1, 6):
-        parts.append(
-            f"""
-c{t} AS (
-    SELECT e.v AS node, sum(r.rank / r.d) AS s
-    FROM pedges e JOIN r{t - 1} r ON r.node = e.u GROUP BY e.v
-),
-r{t} AS (
-    SELECT b.node, b.d,
-           (round((0.15 / n + 0.85 * coalesce(c{t}.s, 0.0)) * 10000000000.0)
-            / 10000000000.0) AS rank
-    FROM r0 b LEFT JOIN c{t} USING (node), nn
-),"""
-        )
-    body = "".join(parts).rstrip(",\n") + "\n"
-    return body + "SELECT node AS doc_id, rank FROM r5"
+deg AS (SELECT u, count(*) AS d FROM edges GROUP BY u),
+base AS (SELECT u AS node, d, n FROM deg, (SELECT count(*) AS n FROM deg) nn)"""
+    ranks = pagerank_oracle_sql(graph, "1.0 / b.n", "0.15 / b.n")
+    return f"{ranks}\nSELECT node AS doc_id, rank FROM r{PAGERANK_ROUNDS}"
 
 
 @register(

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from healthcare_etl_spark.plans.power_iteration import PAGERANK_ROUNDS, pagerank_oracle_sql
 from healthcare_etl_spark.plans.registry import register
 from healthcare_etl_spark.sources import load_table, local_frame, spread
 
@@ -1069,9 +1070,8 @@ def q_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _textrank_oracle(rounds: int = 5) -> str:
-    parts = [
-        """WITH tok AS (
+def _textrank_oracle() -> str:
+    graph = """tok AS (
     SELECT doc_id, string_split(text, ' ') AS t FROM documents
 ),
 adj AS (
@@ -1083,38 +1083,21 @@ adj AS (
     )
     WHERE pair[1] <> pair[2]
 ),
-tedges AS (
+edges AS (
     SELECT a AS u, b AS v FROM adj UNION SELECT b AS u, a AS v FROM adj
 ),
-deg AS (SELECT u, count(*) AS d FROM tedges GROUP BY u),
-nn AS (SELECT count(*) AS n FROM deg),
-r0 AS (
-    SELECT u AS node, d,
-           (round((1.0 / n) * 10000000000.0) / 10000000000.0) AS rank
-    FROM deg, nn
-),""",
-    ]
-    for t in range(1, rounds + 1):
-        parts.append(
-            f"""
-c{t} AS (
-    SELECT e.v AS node, sum(r.rank / r.d) AS s
-    FROM tedges e JOIN r{t - 1} r ON r.node = e.u GROUP BY e.v
-),
-r{t} AS (
-    SELECT b.node, b.d,
-           (round((0.15 / n + 0.85 * coalesce(c{t}.s, 0.0)) * 10000000000.0)
-            / 10000000000.0) AS rank
-    FROM r0 b LEFT JOIN c{t} USING (node), nn
-),"""
-        )
-    body = "".join(parts).rstrip(",\n") + "\n"
-    return body + f"SELECT node AS word, rank FROM r{rounds} ORDER BY rank DESC, word LIMIT 15"
+deg AS (SELECT u, count(*) AS d FROM edges GROUP BY u),
+base AS (SELECT u AS node, d, n FROM deg, (SELECT count(*) AS n FROM deg) nn)"""
+    ranks = pagerank_oracle_sql(graph, "1.0 / b.n", "0.15 / b.n")
+    return (
+        f"{ranks}\nSELECT node AS word, rank FROM r{PAGERANK_ROUNDS} "
+        "ORDER BY rank DESC, word LIMIT 15"
+    )
 
 
 @register(
     "q_textrank_keywords",
-    oracle=_textrank_oracle(5),
+    oracle=_textrank_oracle(),
     description=(
         "TextRank keyword extraction (Mihalcea & Tarau 2004): PageRank "
         "(5 damped rounds, d=0.85) over the corpus-wide word-adjacency "

@@ -35,6 +35,15 @@ from healthcare_etl_spark.operators.logistic import (
     logistic_irls,
     logistic_p,
 )
+from healthcare_etl_spark.plans.power_iteration import (
+    CHAIN_ROUNDS,
+    PAGERANK_ROUNDS,
+    event_pairs,
+    pagerank_oracle_sql,
+    stationary_chain,
+    stationary_oracle_sql,
+    transitions,
+)
 from healthcare_etl_spark.plans.registry import register
 from healthcare_etl_spark.sources import load_table, local_frame, spread
 
@@ -998,58 +1007,11 @@ def q_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _markov_oracle_sql(rounds: int = 12) -> str:
-    """Unrolled power-iteration mirror of q_markov_stationary: the
-    transition matrix CTE, a uniform start vector over observed states,
-    and per-round (vector x matrix) folds with 6dp re-rounding so the
-    iterate matches the Spark driver-side chain bit-for-bit."""
-    parts = [
-        """pairs AS (
-    SELECT event_type AS f,
-           lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS t
-    FROM events
-)""",
-        """cnt AS (
-    SELECT f, t, CAST(count(*) AS BIGINT) AS n FROM pairs WHERE t IS NOT NULL GROUP BY 1, 2
-)""",
-        """tot AS (SELECT f, CAST(sum(n) AS BIGINT) AS tn FROM cnt GROUP BY 1)""",
-        f"""p AS (
-    SELECT c.f, c.t, {stable_round_sql('c.n * 1.0 / tot.tn')} AS p FROM cnt c JOIN tot ON c.f = tot.f
-)""",
-        # canonical state set: UNION of sources and targets, so a state
-        # seen only as a target (or only as a source) still gets a row
-        # on both engines (emitting 0.0 when unreached)
-        """states AS (SELECT f AS s FROM cnt UNION SELECT t FROM cnt)""",
-        """k AS (SELECT CAST(count(*) AS BIGINT) AS kk FROM states)""",
-        f"""v_0 AS (SELECT s, {stable_round_sql('1.0 / kk')} AS v FROM states CROSS JOIN k)""",
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(
-            f"""v_{r} AS (
-    SELECT st.s, {stable_round_sql('coalesce(sum(v.v * p.p), 0.0)')} AS v
-    FROM states st
-    LEFT JOIN p ON p.t = st.s
-    LEFT JOIN v_{r - 1} v ON v.s = p.f
-    GROUP BY st.s
-)"""
-        )
-    joined = ",\n".join(parts)
-    return f"""WITH {joined}
-SELECT s AS state, v AS stationary_p FROM v_{rounds}
-"""
-
-
-def _markov_round6(x: float) -> float:
-    """Half-away-from-zero 6dp rounding matching stable_round / DuckDB
-    round() (Python's built-in round is banker's and would diverge)."""
-    import math
-
-    return math.copysign(math.floor(abs(x) * 1000000.0 + 0.5), x) / 1000000.0
-
-
 @register(
     "q_markov_stationary",
-    oracle=_markov_oracle_sql(12),
+    oracle=f"""{stationary_oracle_sql()}
+SELECT s AS state, v AS stationary_p FROM v_{CHAIN_ROUNDS}
+""",
     description=(
         "Stationary distribution of the event-type Markov chain (where "
         "does a user's session flow settle?) by 12 power-iteration "
@@ -1066,39 +1028,8 @@ def _markov_round6(x: float) -> float:
 )
 def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = ev.select(
-        F.col("event_type").alias("f"),
-        F.lead("event_type").over(w).alias("t"),
-    ).filter(F.col("t").isNotNull())
-    cnt = pairs.groupBy("f", "t").agg(F.count(F.lit(1)).alias("n"))
-    tot = cnt.groupBy("f").agg(F.sum("n").alias("tn"))
-    prob = (
-        cnt.join(tot, "f")
-        .select("f", "t", stable_round(F.col("n") * 1.0 / F.col("tn"), 6).alias("p"))
-    )
-    # |types|^2 matrix: collecting it is metadata-scale, like k-means
-    # centroids; the power iteration never touches the data again.
-    # States = UNION of sources and targets (same canonical set as the
-    # oracle), so sink-only states get a 0.0 row instead of vanishing.
-    mat: dict[str, dict[str, float]] = {}
-    seen: set[str] = set()
-    for r in prob.collect():
-        mat.setdefault(r["f"], {})[r["t"]] = r["p"]
-        seen.add(r["f"])
-        seen.add(r["t"])
-    states = sorted(seen)
-    v = {s: _markov_round6(1.0 / len(states)) for s in states}
-    for _ in range(12):
-        nxt: dict[str, float] = {}
-        for s in states:
-            acc = 0.0
-            for f in states:
-                acc += v.get(f, 0.0) * mat.get(f, {}).get(s, 0.0)
-            nxt[s] = _markov_round6(acc)
-        v = nxt
-    out = [(s, float(v[s])) for s in states]
-    return local_frame(spark, out, "state string, stationary_p double")
+    _mat, v = stationary_chain(transitions(event_pairs(ev)))
+    return local_frame(spark, list(v.items()), "state string, stationary_p double")
 
 
 def _association_rules_cte() -> str:
@@ -2581,22 +2512,19 @@ def q_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ppr_oracle(rounds: int = 5) -> str:
+def _ppr_oracle() -> str:
     from healthcare_etl_spark.plans.queries_dedup import _jaccard_pairs_ctes
 
-    r10 = lambda e: f"(round(({e}) * 10000000000.0) / 10000000000.0)"  # noqa: E731
     tel = "CASE WHEN b.is_seed AND b.ns > 0 THEN 1.0 / b.ns ELSE 0.0 END"
-    parts = [
-        f"WITH {_jaccard_pairs_ctes()},",
-        f"""
-pedges AS (
+    graph = f"""{_jaccard_pairs_ctes()},
+edges AS (
     SELECT doc_a AS u, doc_b AS v FROM jpairs
     WHERE (round(jac * 1000000.0) / 1000000.0) >= 0.5
     UNION
     SELECT doc_b AS u, doc_a AS v FROM jpairs
     WHERE (round(jac * 1000000.0) / 1000000.0) >= 0.5
 ),
-deg AS (SELECT u, CAST(count(*) AS BIGINT) AS d FROM pedges GROUP BY u),
+deg AS (SELECT u, CAST(count(*) AS BIGINT) AS d FROM edges GROUP BY u),
 marked AS (
     SELECT deg.u AS node, deg.d,
            (dd.source = 'src0') AS is_seed
@@ -2605,32 +2533,15 @@ marked AS (
 nsz AS (
     SELECT CAST(sum(CASE WHEN is_seed THEN 1 ELSE 0 END) AS BIGINT) AS ns FROM marked
 ),
-base AS (SELECT m.node, m.d, m.is_seed, nsz.ns FROM marked m CROSS JOIN nsz),
-r0 AS (
-    SELECT b.node, b.d, {r10(tel)} AS rank FROM base b
-),""",
-    ]
-    for t in range(1, rounds + 1):
-        parts.append(
-            f"""
-c{t} AS (
-    SELECT e.v AS node, sum(r.rank / r.d) AS s
-    FROM pedges e JOIN r{t - 1} r ON r.node = e.u GROUP BY e.v
-),
-r{t} AS (
-    SELECT b.node, b.d,
-           {r10(f"0.15 * ({tel}) + 0.85 * coalesce(c{t}.s, 0.0)")} AS rank
-    FROM base b LEFT JOIN c{t} USING (node)
-),"""
-        )
-    body = "".join(parts).rstrip(",\n") + "\n"
-    return body + f"SELECT node AS doc_id, rank AS ppr_rank FROM r{rounds}"
+base AS (SELECT m.node, m.d, m.is_seed, nsz.ns FROM marked m CROSS JOIN nsz)"""
+    ranks = pagerank_oracle_sql(graph, tel, f"0.15 * ({tel})")
+    return f"{ranks}\nSELECT node AS doc_id, rank AS ppr_rank FROM r{PAGERANK_ROUNDS}"
 
 
 def _register_ppr() -> None:
     @register(
         "q_personalized_pagerank",
-        oracle=_ppr_oracle(5),
+        oracle=_ppr_oracle(),
         description=(
             "Personalized PageRank over the near-dup graph, teleporting "
             "to the src0 seed documents (5 damped rounds, d=0.85): rank "

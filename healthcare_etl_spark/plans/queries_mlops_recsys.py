@@ -17,15 +17,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from healthcare_etl_spark.functions.rounding import stable_round, stable_round_sql
+from healthcare_etl_spark.functions.rounding import half_away, stable_round, stable_round_py, stable_round_sql
 from healthcare_etl_spark.operators.logistic import LOGISTIC, irls_beta_ctes, irls_fit, logistic_p
+from healthcare_etl_spark.plans.power_iteration import (
+    CHAIN_ROUNDS,
+    event_pairs,
+    stationary_chain,
+    stationary_oracle_sql,
+    transitions,
+)
 from healthcare_etl_spark.plans.registry import register
 from healthcare_etl_spark.sources import load_table, local_frame
 
 from healthcare_etl_spark.plans.queries_mlops import (  # noqa: F401
     _logistic_features,
     _logistic_features_sql,
-    _markov_round6,
 )
 from healthcare_etl_spark.plans.queries_mlops_stats import (  # noqa: F401
     _register_wasserstein,
@@ -509,14 +515,9 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    cnt = edges.groupBy("f", "t").agg(F.count(F.lit(1)).alias("n"))
-    tot = cnt.groupBy("f").agg(F.sum("n").alias("tn"))
-    prob = cnt.join(tot, "f").select(
-        "f", "t", stable_round(F.col("n") * 1.0 / F.col("tn"), 6).alias("p")
-    )
     # |states|^2 transition matrix: metadata-scale, like q_markov_stationary.
     mat: dict[str, list[tuple[str, float]]] = {}
-    for r in prob.collect():
+    for r in transitions(edges).collect():
         mat.setdefault(r["f"], []).append((r["t"], r["p"]))
     states = ["START", *_MK_CHANNELS]
 
@@ -533,14 +534,14 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                         pass
                     else:
                         acc += pp * v.get(t, 0.0)
-                nxt[s] = _markov_round6(acc)
+                nxt[s] = stable_round_py(acc, 6)
             v = nxt
         return v["START"]
 
     p_full = absorb(None)
     rows = []
     effs = {
-        c: _markov_round6(1.0 - absorb(c) / p_full) for c in _MK_CHANNELS
+        c: stable_round_py(1.0 - absorb(c) / p_full, 6) for c in _MK_CHANNELS
     }
     tot_eff = sum(max(effs[c], 0.0) for c in sorted(_MK_CHANNELS))
     for c in _MK_CHANNELS:
@@ -550,7 +551,7 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 float(p_full),
                 float(absorb(c)),
                 float(effs[c]),
-                float(_markov_round6(max(effs[c], 0.0) / tot_eff)),
+                float(stable_round_py(max(effs[c], 0.0) / tot_eff, 6)),
             )
         )
     return local_frame(
@@ -784,39 +785,11 @@ def q_bias_baseline_recsys(spark: SparkSession, sf_dir: str) -> DataFrame:
         r.unpersist()
 
 
-def _entropy_rate_oracle(rounds: int = 12) -> str:
-    parts = [
-        """pairs AS (
-    SELECT event_type AS f,
-           lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS t
-    FROM events
-)""",
-        """cnt AS (
-    SELECT f, t, CAST(count(*) AS BIGINT) AS n FROM pairs WHERE t IS NOT NULL GROUP BY 1, 2
-)""",
-        """tot AS (SELECT f, CAST(sum(n) AS BIGINT) AS tn FROM cnt GROUP BY 1)""",
-        f"""p AS MATERIALIZED (
-    SELECT c.f, c.t, {stable_round_sql('c.n * 1.0 / tot.tn')} AS p FROM cnt c JOIN tot ON c.f = tot.f
-)""",
-        """states AS MATERIALIZED (SELECT f AS s FROM cnt UNION SELECT t FROM cnt)""",
-        """k AS (SELECT CAST(count(*) AS BIGINT) AS kk FROM states)""",
-        f"""v_0 AS (SELECT s, {stable_round_sql('1.0 / kk')} AS v FROM states CROSS JOIN k)""",
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(
-            f"""v_{r} AS MATERIALIZED (
-    SELECT st.s, {stable_round_sql('coalesce(sum(v.v * p.p), 0.0)')} AS v
-    FROM states st
-    LEFT JOIN p ON p.t = st.s
-    LEFT JOIN v_{r - 1} v ON v.s = p.f
-    GROUP BY st.s
-)"""
-        )
-    joined = ",\n".join(parts)
-    return f"""WITH {joined},
+def _entropy_rate_oracle() -> str:
+    return f"""{stationary_oracle_sql()},
 terms AS (
     SELECT CAST(round(pi.v * p.p * (-log2(p.p)) * 1000000000.0) AS BIGINT) AS q
-    FROM p JOIN v_{rounds} pi ON pi.s = p.f
+    FROM p JOIN v_{CHAIN_ROUNDS} pi ON pi.s = p.f
     WHERE p.p > 0
 ),
 m AS (
@@ -834,7 +807,7 @@ FROM m
 
 @register(
     "q_entropy_rate",
-    oracle=_entropy_rate_oracle(12),
+    oracle=_entropy_rate_oracle(),
     description=(
         "Entropy rate of the event-type Markov chain: H = -sum_s "
         "pi(s) sum_t p(s,t) log2 p(s,t) bits/event, with pi the "
@@ -854,57 +827,24 @@ FROM m
 def q_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
-    from healthcare_etl_spark.plans.queries_mlops import _markov_round6  # noqa: PLW0406
-
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = ev.select(
-        F.col("event_type").alias("f"),
-        F.lead("event_type").over(w).alias("t"),
-    ).filter(F.col("t").isNotNull())
-    cnt = pairs.groupBy("f", "t").agg(F.count(F.lit(1)).alias("n"))
-    tot = cnt.groupBy("f").agg(F.sum("n").alias("tn"))
-    prob = cnt.join(tot, "f").select(
-        "f", "t", stable_round(F.col("n") * 1.0 / F.col("tn"), 6).alias("p")
+    mat, v = stationary_chain(transitions(event_pairs(ev)))
+    sq = sum(
+        int(half_away(v[f] * pp * (-math.log2(pp)), 1000000000.0))
+        for f, row in mat.items()
+        for pp in row.values()
+        if pp > 0
     )
-    mat: dict[str, dict[str, float]] = {}
-    seen: set[str] = set()
-    for r in prob.collect():
-        mat.setdefault(r["f"], {})[r["t"]] = r["p"]
-        seen.add(r["f"])
-        seen.add(r["t"])
-    states = sorted(seen)
-    v = {s: _markov_round6(1.0 / len(states)) for s in states}
-    for _ in range(12):
-        nxt = {}
-        for s in states:
-            acc = 0.0
-            for f in states:
-                acc += v.get(f, 0.0) * mat.get(f, {}).get(s, 0.0)
-            nxt[s] = _markov_round6(acc)
-        v = nxt
-    sq = 0
-    for f in states:
-        for t, pp in sorted(mat.get(f, {}).items()):
-            if pp > 0:
-                sq += int(
-                    math.copysign(
-                        math.floor(
-                            abs(v[f] * pp * (-math.log2(pp)) * 1000000000.0) + 0.5
-                        ),
-                        1.0,
-                    )
-                )
-    k = len(states)
-    h = _markov_round6(sq / 1000000000.0)
+    k = len(v)
+    h = stable_round_py(sq / 1000000000.0, 6)
     return local_frame(
         spark,
         [
             (
                 k,
                 float(h),
-                float(_markov_round6(math.log2(k * 1.0))),
-                float(_markov_round6((sq / 1000000000.0) / math.log2(k * 1.0))),
+                float(stable_round_py(math.log2(k * 1.0), 6)),
+                float(stable_round_py((sq / 1000000000.0) / math.log2(k * 1.0), 6)),
             )
         ],
         "n_states long, entropy_rate_bits double, max_entropy_bits double, "

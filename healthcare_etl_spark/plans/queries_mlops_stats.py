@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from healthcare_etl_spark.functions.rounding import stable_round, stable_round_sql
+from healthcare_etl_spark.functions.rounding import half_away, stable_round, stable_round_sql
 from healthcare_etl_spark.operators.logistic import LOGISTIC, irls_beta_ctes, irls_fit, logistic_p
 from healthcare_etl_spark.plans.queries_mlops import _logistic_features, _logistic_features_sql
 from healthcare_etl_spark.plans.registry import register
@@ -358,6 +358,7 @@ def q_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("bv_tp").over(w_b).alias("prev_tp"),
     )
     cum = rows.join(F.broadcast(bprev), "bkt").select(
+        "t",
         "tp",
         (F.col("cin_n") + F.coalesce(F.col("prev_n"), F.lit(0)))
         .cast("long")
@@ -367,6 +368,7 @@ def q_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cum_tp"),
     )
     terms = cum.select(
+        "t",
         "tp",
         F.round(
             F.col("tp") * F.col("cum_tp") * 10000000000.0 / F.col("cum_n")
@@ -374,18 +376,19 @@ def q_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("tq"),
     )
-    n_all = scored.count()
+    # every score group survives the bucket join, so sum(t) counts all users
     m = terms.agg(
+        F.sum("t").cast("long").alias("n_all"),
         F.sum("tp").cast("long").alias("n_pos"),
         F.sum("tq").cast("long").alias("ap_q"),
     )
     return m.select(
         F.col("n_pos"),
-        (F.lit(n_all) - F.col("n_pos")).cast("long").alias("n_neg"),
+        (F.col("n_all") - F.col("n_pos")).cast("long").alias("n_neg"),
         stable_round(
             F.col("ap_q") / 10000000000.0 / F.col("n_pos"), 6
         ).alias("average_precision"),
-        stable_round(F.col("n_pos") * 1.0 / F.lit(n_all), 6).alias(
+        stable_round(F.col("n_pos") * 1.0 / F.col("n_all"), 6).alias(
             "prevalence"
         ),
     )
@@ -512,15 +515,14 @@ def q_psm_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     best = cand.withColumn("rn", F.row_number().over(wm)).filter(
         F.col("rn") == 1
     )
-    n_treated = t.count()
     m = best.agg(
         F.count(F.lit(1)).cast("long").alias("n_matched"),
         F.sum(F.col("t_spend") - F.col("c_spend")).alias("d_cents"),
         F.sum("t_spend").alias("ts"),
         F.sum("c_spend").alias("cs"),
-    )
+    ).crossJoin(F.broadcast(t.agg(F.count(F.lit(1)).cast("long").alias("n_treated"))))
     return m.select(
-        F.lit(n_treated).cast("long").alias("n_treated"),
+        "n_treated",
         "n_matched",
         stable_round(
             F.col("d_cents") / 100.0 / F.col("n_matched"), 6
@@ -936,7 +938,6 @@ def q_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     from healthcare_etl_spark.operators.scale import bucketed_rank
 
-    n_users = feat.count()
     # two-phase bucketed global rank over (hash, user_id) — the
     # permutation pairing needs a total order but never a
     # single-partition sort; hash div 2^20 coarsens the order
@@ -945,7 +946,7 @@ def q_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         buckets=[F.expr("hk div 1048576")],
         order_by=[F.asc("hk"), F.asc("user_id")],
         out_col="rk",
-    ).withColumn("n", F.lit(n_users).cast("long"))
+    ).crossJoin(F.broadcast(feat.agg(F.count(F.lit(1)).cast("long").alias("n"))))
     nxt = keyed.select(
         F.col("rk").alias("rk_b"),
         F.col("x1").alias("x1_perm"),
@@ -1195,21 +1196,16 @@ def _register_raking() -> None:
         aq = {k: n * 1000000 for k, n in cells.items()}
         # Fixed expression per half-step, identical to the oracle:
         # round((aq/1e6) * target / (margin/1e6) * 1e6) -> BIGINT.
-        import math
-
-        def rnd(x: float) -> int:
-            return int(math.copysign(math.floor(abs(x) + 0.5), x))
-
         for _ in range(_RAKE_ROUNDS):
             row_q: dict = {}
             for (et, wd), v in aq.items():
                 row_q[et] = row_q.get(et, 0) + v
             aq = {
-                (et, wd): rnd(
-                    (v * 1.0 / 1000000.0)
-                    * row_target[et]
-                    / (row_q[et] / 1000000.0)
-                    * 1000000.0
+                (et, wd): int(
+                    half_away(
+                        (v * 1.0 / 1000000.0) * row_target[et] / (row_q[et] / 1000000.0),
+                        1000000.0,
+                    )
                 )
                 for (et, wd), v in aq.items()
             }
@@ -1217,11 +1213,11 @@ def _register_raking() -> None:
             for (et, wd), v in aq.items():
                 col_q[wd] = col_q.get(wd, 0) + v
             aq = {
-                (et, wd): rnd(
-                    (v * 1.0 / 1000000.0)
-                    * col_target
-                    / (col_q[wd] / 1000000.0)
-                    * 1000000.0
+                (et, wd): int(
+                    half_away(
+                        (v * 1.0 / 1000000.0) * col_target / (col_q[wd] / 1000000.0),
+                        1000000.0,
+                    )
                 )
                 for (et, wd), v in aq.items()
             }

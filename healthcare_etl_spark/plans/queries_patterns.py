@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from healthcare_etl_spark.functions.rounding import stable_round
+from healthcare_etl_spark.plans.power_iteration import PAIR_COUNTS_SQL, event_pairs, transitions
 from healthcare_etl_spark.plans.registry import register
 from healthcare_etl_spark.sources import load_table, local_frame, spread
 from healthcare_etl_spark.plans.queries_dedup import _MD5H, _shingles_sql
@@ -1670,34 +1671,22 @@ _ABS_TRANSIENT = ["click", "signup", "view"]
 _ABS_TARGET = "purchase"
 
 
-def _absorb_mat_sql(idiv: str = '//') -> str:
-    """Pivoted nano-quantized transition row: for each transient state
-    s, p_{s}_{t} = round-half-up(n_st * 1e9 / n_s) as BIGINT nanos —
-    integer arithmetic only ((2*n*1e9 + d) // (2*d)), so both engines
-    hold bit-identical probabilities."""
+def _absorb_mat_sql(counts: str, idiv: str) -> str:
+    """``mat``: the pivoted nano-quantized transition row over ``counts``
+    (f, t, n). For each transient state s, p_{s}_{t} = round-half-up(n_st
+    * 1e9 / n_s) as BIGINT nanos — integer arithmetic only ((2*n*1e9 + d)
+    ``idiv`` (2*d)), so both engines hold bit-identical probabilities."""
     cols = []
     for s in _ABS_TRANSIENT:
         si = s[0]
         for t in _ABS_TRANSIENT + [_ABS_TARGET]:
             cols.append(
-                f"CAST((2 * coalesce(sum(CASE WHEN from_type = '{s}' AND to_type = '{t}' "
-                f"THEN n END), 0) * 1000000000 + sum(CASE WHEN from_type = '{s}' THEN n ELSE 0 END)) "
-                f"{idiv} (2 * sum(CASE WHEN from_type = '{s}' THEN n ELSE 0 END)) AS BIGINT) "
+                f"CAST((2 * coalesce(sum(CASE WHEN f = '{s}' AND t = '{t}' "
+                f"THEN n END), 0) * 1000000000 + sum(CASE WHEN f = '{s}' THEN n ELSE 0 END)) "
+                f"{idiv} (2 * sum(CASE WHEN f = '{s}' THEN n ELSE 0 END)) AS BIGINT) "
                 f"AS p_{si}_{t[0]}"
             )
-    return (
-        """pairs AS (
-    SELECT event_type AS from_type,
-           lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type
-    FROM events),
-counts AS (
-    SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-    FROM pairs WHERE to_type IS NOT NULL GROUP BY 1, 2),
-mat AS (
-    SELECT """
-        + ",\n           ".join(cols)
-        + "\n    FROM counts)"
-    )
+    return "mat AS (\n    SELECT " + ",\n           ".join(cols) + f"\n    FROM {counts})"
 
 
 def _absorb_rec_sql(mat: str, rounds: int = 12) -> str:
@@ -1732,9 +1721,7 @@ ORDER BY state
 
 @register(
     "q_absorbing_markov",
-    oracle="WITH RECURSIVE "
-    + _absorb_mat_sql()
-    + ","
+    oracle=f"WITH RECURSIVE {PAIR_COUNTS_SQL},\n{_absorb_mat_sql('cnt', '//')},"
     + _absorb_rec_sql("mat"),
     description=(
         "Absorbing-chain conversion probability: treating purchase and "
@@ -1754,29 +1741,10 @@ ORDER BY state
     tags=("analytics", "extension", "markov", "recursive"),
 )
 def q_absorbing_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = ev.select(
-        F.col("event_type").alias("from_type"),
-        F.lead("event_type").over(w).alias("to_type"),
-    ).filter(F.col("to_type").isNotNull())
-    counts = pairs.groupBy("from_type", "to_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    counts.createOrReplaceTempView("v_absorb_counts")
-    mat_sql = _absorb_mat_sql(idiv="div").replace(
-        """pairs AS (
-    SELECT event_type AS from_type,
-           lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type
-    FROM events),
-counts AS (
-    SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-    FROM pairs WHERE to_type IS NOT NULL GROUP BY 1, 2),
-mat AS (""",
-        "mat AS (",
-    ).replace("FROM counts)", "FROM v_absorb_counts)")
+    counts = transitions(event_pairs(load_table(spark, sf_dir, "events")))
     return spark.sql(
-        "WITH RECURSIVE " + mat_sql + "," + _absorb_rec_sql("mat")
+        f"WITH RECURSIVE {_absorb_mat_sql('{counts}', 'div')}," + _absorb_rec_sql("mat"),
+        counts=counts,
     )
 
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from healthcare_etl_spark.functions.rounding import stable_round_sql
+from healthcare_etl_spark.functions.rounding import half_away, stable_round_py, stable_round_sql
 from healthcare_etl_spark.operators.similarity import cosine_topk, lsh_ann_topk, neardup_pairs
 from healthcare_etl_spark.plans.registry import register
 from healthcare_etl_spark.sources import load_table, local_frame
@@ -2093,32 +2093,29 @@ def q_cluster_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         max(r["n"] for r in rows if r["cluster"] == c) for c in row_m
     )
 
-    def q9(x: float) -> int:
-        return int(math.copysign(math.floor(abs(x) * 1e9 + 0.5), x))
-
     mi_q = sum(
-        q9((r["n"] / nn) * math.log(r["n"] * nn / (row_m[r["cluster"]] * col_m[r["label"]])))
+        int(half_away(
+            (r["n"] / nn) * math.log(r["n"] * nn / (row_m[r["cluster"]] * col_m[r["label"]])),
+            1e9,
+        ))
         for r in sorted(rows, key=lambda r: (r["cluster"], r["label"]))
     )
-    hc_q = sum(q9(-(a / nn) * math.log(a / nn)) for a in row_m.values())
-    hl_q = sum(q9(-(b / nn) * math.log(b / nn)) for b in col_m.values())
+    hc_q = sum(int(half_away(-(a / nn) * math.log(a / nn), 1e9)) for a in row_m.values())
+    hl_q = sum(int(half_away(-(b / nn) * math.log(b / nn), 1e9)) for b in col_m.values())
     s_ij = sum(r["n"] * (r["n"] - 1) // 2 for r in rows)
     s_a = sum(a * (a - 1) // 2 for a in row_m.values())
     s_b = sum(b * (b - 1) // 2 for b in col_m.values())
     s_n = nn * (nn - 1) // 2
 
-    def r6(x: float) -> float:
-        return math.copysign(math.floor(abs(x) * 1e6 + 0.5), x) / 1e6
-
     exp = s_a * 1.0 * s_b / s_n
-    ari = r6((s_ij - exp) / ((s_a + s_b) / 2.0 - exp))
+    ari = stable_round_py((s_ij - exp) / ((s_a + s_b) / 2.0 - exp), 6)
     return local_frame(
         spark,
         [
             (
                 nn,
-                r6(hit * 1.0 / nn),
-                r6(mi_q / math.sqrt(hc_q * 1.0 * hl_q)),
+                stable_round_py(hit * 1.0 / nn, 6),
+                stable_round_py(mi_q / math.sqrt(hc_q * 1.0 * hl_q), 6),
                 ari,
             )
         ],

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from healthcare_etl_spark.functions.rounding import stable_round, stable_round_sql
+from healthcare_etl_spark.functions.rounding import stable_round, stable_round_py, stable_round_sql
 from healthcare_etl_spark.operators.logistic import (
     LOGISTIC,
     POISSON,
@@ -2908,10 +2908,6 @@ def q_regression_discontinuity(spark: SparkSession, sf_dir: str) -> DataFrame:
         fit.unpersist()
     ab = rows_ab[0] if rows_ab else None
     be = rows_be[0] if rows_be else None
-    import math
-
-    def r6(v: float) -> float:
-        return math.copysign(math.floor(abs(v) * 1e6 + 0.5), v) / 1e6
 
     def g(row, col, scale=1.0):
         return None if row is None or row[col] is None else row[col] / scale
@@ -2919,7 +2915,7 @@ def q_regression_discontinuity(spark: SparkSession, sf_dir: str) -> DataFrame:
     eff = (
         None
         if ab is None or be is None
-        else r6((ab["intercept_at_cutoff"] - be["intercept_at_cutoff"]) / 100.0)
+        else stable_round_py((ab["intercept_at_cutoff"] - be["intercept_at_cutoff"]) / 100.0, 6)
     )
     return local_frame(
         u.sparkSession,

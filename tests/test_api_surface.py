@@ -220,3 +220,32 @@ def test_shared_string_constants_are_bound_once():
     copies = [f"{name} in {sorted(mods)}" for name, mods in modules.items() if len(mods) > 1]
     copies += [" = ".join(s) for s in sites.values() if len(s) > 1]
     assert not copies, copies
+
+
+def _is_half_away_round(node) -> bool:
+    """``math.floor(abs(...) ... + 0.5)``: Python's half-away-from-zero
+    rounding written out by hand."""
+    if not (isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "floor"
+            and node.args and isinstance(node.args[0], ast.BinOp)
+            and isinstance(node.args[0].op, ast.Add)):
+        return False
+    arg = node.args[0]
+    return _literal(arg.right) == 0.5 and any(
+        isinstance(n, ast.Call) and getattr(n.func, "id", None) == "abs"
+        for n in ast.walk(arg.left))
+
+
+def test_python_half_away_rounding_has_one_site():
+    """Driver-side rounding that must agree with ``stable_round`` calls
+    ``functions/rounding.half_away`` / ``stable_round_py``; no other module
+    writes ``math.floor(abs(x) * scale + 0.5)`` itself."""
+    found = [
+        f"{path.relative_to(REPO)}:{node.lineno}"
+        for path in _files(PKG)
+        if path != PKG / "functions" / "rounding.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if _is_half_away_round(node)
+    ]
+    assert not found, found
+    rounding = ast.parse((PKG / "functions" / "rounding.py").read_text())
+    assert sum(map(_is_half_away_round, ast.walk(rounding))) == 1

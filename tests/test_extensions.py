@@ -3183,6 +3183,46 @@ def test_absorbing_markov_probabilities_bounded(spark, sf_smoke):
         assert 0.0 <= rows[s] <= 1.0
 
 
+def test_absorbing_markov_build_leaves_catalog_unchanged(spark, sf_smoke):
+    """Building q_absorbing_markov registers no view: its pair counts reach
+    the recursive SQL as a DataFrame argument of ``spark.sql``."""
+    from healthcare_etl_spark.plans.registry import get_registry
+
+    # Start from no temporary views, so a view an earlier build left
+    # behind under the same name cannot hide a new one.
+    for t in spark.catalog.listTables():
+        if t.isTemporary:
+            spark.catalog.dropTempView(t.name)
+    before = sorted(t.name for t in spark.catalog.listTables())
+    df = get_registry()["q_absorbing_markov"].fn(spark, sf_smoke)
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    assert df.count() == 5
+
+
+def test_python_rounding_twin_matches_duckdb():
+    """``stable_round_py`` is bit-equal to the oracle's ``round(x *
+    1000000.0) / 1000000.0`` on half-boundary inputs of both signs,
+    including the sign of a zero result."""
+    import math
+
+    import duckdb
+
+    from healthcare_etl_spark.functions.rounding import stable_round_py
+
+    xs = [2.5e-06, -2.5e-06, 0.1234565, -0.1234565, 1.0000005, -4e-07]
+    con = duckdb.connect()
+    try:
+        for x in xs:
+            (want,) = con.execute(
+                "SELECT round(CAST(? AS DOUBLE) * 1000000.0) / 1000000.0", [x]
+            ).fetchone()
+            got = stable_round_py(x, 6)
+            assert got.hex() == want.hex(), (x, got, want)
+            assert math.copysign(1.0, got) == math.copysign(1.0, want), x
+    finally:
+        con.close()
+
+
 def test_rbo_identity_and_disjoint_bounds(spark):
     """RBO of a ranking with itself is the truncated-sum maximum;
     disjoint rankings give exactly 0 — checked through the registered
